@@ -296,9 +296,8 @@ object BsonBinary {
             s"field '$name': ObjectId must be 12 bytes, got ${x.length}")
           header(0x07); out.write(x, 0, x.length)
         } else {
-          val subtype = if (meta.contains(graft.schema.MSchema.BinarySubtypeKey))
-            meta.getLong(graft.schema.MSchema.BinarySubtypeKey).toInt else 0
-          header(0x05); writeInt(out, x.length); out.write(subtype); out.write(x, 0, x.length)
+          header(0x05); writeInt(out, x.length)
+          out.write(graft.schema.MSchema.binarySubtype(meta)); out.write(x, 0, x.length)
         }
       case x: Row =>
         val st = dt.asInstanceOf[StructType]

@@ -1897,6 +1897,20 @@ case class CollationKeyExpr(left: Expression, right: Expression)
 }
 
 object GraftFunctions {
+  /** Loud validation of an argument that must be an integer literal: a
+    * non-foldable or non-int argument from SQL would otherwise die in
+    * an opaque ClassCastException at plan time. */
+  private def intArg(fn: String, x: Expression, pos: String): Int = {
+    if (!x.foldable) throw new IllegalArgumentException(
+      s"$fn: $pos argument must be a foldable integer literal, got $x")
+    x.eval() match {
+      case i: Int => i
+      case l: Long if l.isValidInt => l.toInt
+      case other => throw new IllegalArgumentException(
+        s"$fn: $pos argument must be an INT literal, got $other")
+    }
+  }
+
   /** The engine's SQL function surface, name → expression builder —
     * single source of truth for BOTH registration paths (the
     * imperative per-session `register` the operators call lazily, and
@@ -1907,28 +1921,16 @@ object GraftFunctions {
     "index_of_bytes" -> ((e: Seq[Expression]) => IndexOfBytes(e(0), e(1), e(2), e(3))),
     "exp_moving_avg" -> ((e: Seq[Expression]) => ExpMovingAvgWin(e(0), e(1))),
     "objectid_to_timestamp" -> ((e: Seq[Expression]) => ObjectIdToTimestamp(e.head)),
-    "word_shingles" -> ((e: Seq[Expression]) => WordShingles(e.head, e(1))),
-    "hashed_shingles" -> ((e: Seq[Expression]) => HashedShingles(e.head, e(1))),
+    "word_shingles" -> ((e: Seq[Expression]) =>
+      WordShingles(e.head, Literal(intArg("word_shingles", e(1), "width")))),
+    "hashed_shingles" -> ((e: Seq[Expression]) =>
+      HashedShingles(e.head, Literal(intArg("hashed_shingles", e(1), "width")))),
     "dot_d" -> ((e: Seq[Expression]) => DotDouble(e.head, e(1))),
     "jaccard_sim" -> ((e: Seq[Expression]) => JaccardSim(e.head, e(1))),
     "jaccard_sim_long" -> ((e: Seq[Expression]) => JaccardSimLong(e.head, e(1))),
-    "minhash_bands" -> ((e: Seq[Expression]) => {
-      // loud arg validation: a non-foldable or non-int literal from SQL
-      // would otherwise die in an opaque ClassCastException at plan time
-      def intArg(x: Expression, pos: String): Int = {
-        if (!x.foldable) throw new IllegalArgumentException(
-          s"minhash_bands: $pos argument must be a foldable integer " +
-            s"literal, got $x")
-        x.eval() match {
-          case i: Int => i
-          case l: Long if l.isValidInt => l.toInt
-          case other => throw new IllegalArgumentException(
-            s"minhash_bands: $pos argument must be an INT literal, " +
-              s"got $other")
-        }
-      }
-      MinhashBands(e.head, intArg(e(1), "numHashes"), intArg(e(2), "bands"))
-    }),
+    "minhash_bands" -> ((e: Seq[Expression]) => MinhashBands(e.head,
+      intArg("minhash_bands", e(1), "numHashes"),
+      intArg("minhash_bands", e(2), "bands"))),
     "deflate_ratio" -> ((e: Seq[Expression]) => DeflateRatio(e.head)),
     "graft_top_k" -> ((e: Seq[Expression]) => BoundedTopK(e(0), e(1), e(2), e(3))),
     "graft_object_to_array" -> ((e: Seq[Expression]) => ObjectToArray(e.head)),

@@ -273,12 +273,9 @@ object Decode {
               GROUP BY c_mktsegment ORDER BY c_mktsegment""")),
 
     // zstd OP_COMPRESSED (compressor id 3): the connection negotiates
-    // zstd via hello and every post-handshake message crosses as
-    // RFC 8878 STORE-MODE frames — legal zstd any conforming peer
-    // decodes (raw blocks; mongod's own fallback shape for
-    // incompressible data). A server offering ONLY zstd no longer
-    // drops to uncompressed; compressed-BLOCK frames still refuse
-    // loudly (spec-pinned). Oracle replays the predicate.
+    // zstd via hello and every post-handshake message crosses as a
+    // zstd-jni frame (level 3) in both directions. Oracle replays the
+    // predicate.
     QueryDef("q_wire_opmsg_zstd",
       (s, dir) => {
         val store = new graft.sinks.DocStore(s,

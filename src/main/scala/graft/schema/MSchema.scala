@@ -45,6 +45,11 @@ object MSchema {
     StructField(name, BinaryType,
       metadata = new MetadataBuilder().putString(BsonTypeKey, "objectId").build())
 
+  /** The Binary subtype a field's metadata declares (0, generic, when
+    * untagged) — what both document encoders write. */
+  def binarySubtype(meta: Metadata): Int =
+    if (meta.contains(BinarySubtypeKey)) meta.getLong(BinarySubtypeKey).toInt else 0
+
   def binaryField(name: String, subtype: Int): StructField =
     StructField(name, BinaryType,
       metadata = new MetadataBuilder()

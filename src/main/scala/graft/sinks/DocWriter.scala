@@ -67,8 +67,11 @@ object DocWriter {
     schema.fields.foreach(f => check(f.dataType, f.name))
   }
 
-  /** One value → extended-JSON fragment (reverse of DocDecoder). */
-  private def jsonValue(v: Any, dt: DataType, sb: java.lang.StringBuilder): Unit = (v, dt) match {
+  /** One value → extended-JSON fragment (reverse of DocDecoder).
+    * `meta` is the enclosing field's metadata (array elements inherit
+    * it, as in BsonBinary); it carries the Binary subtype tag. */
+  private def jsonValue(v: Any, dt: DataType, meta: Metadata,
+                        sb: java.lang.StringBuilder): Unit = (v, dt) match {
     case (null, _) => sb.append("null")
     case (x: Int, _) => sb.append(x)
     case (x: Long, _) => sb.append("{\"$numberLong\": \"").append(x).append("\"}")
@@ -101,14 +104,15 @@ object DocWriter {
     case (x: Array[Byte], _) =>
       sb.append("{\"$binary\": {\"base64\": \"")
         .append(java.util.Base64.getEncoder.encodeToString(x))
-        .append("\", \"subType\": \"00\"}}")
+        .append("\", \"subType\": \"")
+        .append(f"${graft.schema.MSchema.binarySubtype(meta)}%02x").append("\"}}")
     case (x: Row, st: StructType) => encodeRow(x, st, sb)
     case (x: scala.collection.Seq[_], ArrayType(et, _)) =>
       sb.append('[')
       var first = true
       x.foreach { e =>
         if (!first) sb.append(", "); first = false
-        jsonValue(e, et, sb)
+        jsonValue(e, et, meta, sb)
       }
       sb.append(']')
     case (other, t) => throw new IllegalArgumentException(
@@ -149,7 +153,8 @@ object DocWriter {
         if (!first) sb.append(", "); first = false
         appendEscaped(f.name, sb)
         sb.append(": ")
-        jsonValue(if (r.isNullAt(i)) null else r.get(i), f.dataType, sb)
+        jsonValue(if (r.isNullAt(i)) null else r.get(i), f.dataType,
+          f.metadata, sb)
       }
     }
     sb.append('}')

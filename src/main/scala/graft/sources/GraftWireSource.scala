@@ -43,13 +43,13 @@ import graft.mql.FilterTranslator
   *  - COLUMNAR DECODE: each task lands its cursor's raw BSON batches
   *    and streams them through the direct bytes→vectors reader
   *    ([[BsonColumnarReader]]) — no row materialization, no tree.
-  *  - The transport options compose: SCRAM credentials, TLS, zlib or
-  *    snappy compression, CRC-32C checksums, exhaust streaming.
+  *  - The transport options compose: SCRAM credentials, TLS, zlib,
+  *    snappy or zstd compression, CRC-32C checksums, exhaust streaming.
   *
   * Options: host (required), collection (required), port (required),
   * database (default "graft"), batchSize (default 1000), splitKey +
   * numSplits (parallel cursors; omit for one cursor), user + password,
-  * tlsKeystore + tlsPassword, compressor ("zlib"/"snappy" — enables
+  * tlsKeystore + tlsPassword, compressor ("zlib"/"snappy"/"zstd" — enables
   * compression), checksum (bool), exhaust (bool), inferDocs (schema
   * sample size, default 500), pipeline (a JSON aggregation pipeline —
   * the server runs it and the scan reads its OUTPUT, the reference's

@@ -19,12 +19,13 @@ import graft.mql.{FilterCompiler, FilterTranslator}
   * `{cursor: {...}, ok: 1.0}`, errors `{ok: 0.0, errmsg, code}`), plus
   * the optional wire features a production driver negotiates: SCRAM-
   * SHA-256 auth (with SASLprep), TLS with endpoint identification,
-  * OP_COMPRESSED zlib (negotiated via `hello`, handshake/auth commands
-  * never compressed), exhaust cursor streaming (`exhaustAllowed` /
-  * `moreToCome` flag bits), `killCursors` with CursorNotFound (code
-  * 43) semantics, and idle-cursor timeout eviction. The only thing
-  * this connector has never seen is an actual mongod (zero egress, no
-  * mongod binary in the sandbox).
+  * OP_COMPRESSED with zlib (JDK), snappy (snappy-java) or zstd
+  * (zstd-jni) — the two jars Spark ships — negotiated via `hello`,
+  * handshake/auth commands never compressed, exhaust cursor streaming
+  * (`exhaustAllowed` / `moreToCome` flag bits), `killCursors` with
+  * CursorNotFound (code 43) semantics, and idle-cursor timeout
+  * eviction. The only thing this connector has never seen is an
+  * actual mongod (zero egress, no mongod binary in the sandbox).
   *
   * Batch documents cross the wire as raw BSON and are NEVER tree-parsed
   * client-side: [[parseCursorReply]] slices each `firstBatch`/
@@ -67,16 +68,10 @@ object OpMsg {
   }
 
   // OP_COMPRESSED compressor ids (wire spec): 0 noop, 1 snappy,
-  // 2 zlib, 3 zstd. noop, zlib (JDK Deflater), snappy (the
-  // block-format codec in [[Snappy]] — mongod's DEFAULT compressor),
-  // and zstd ([[Zstd]] — a COMPLETE RFC 8878 codec: the decoder covers
-  // Huffman literals, FSE sequences, repeat offsets and checksum
-  // verification, so frames from a real mongod/driver decode; outbound
-  // runs the from-scratch compressed-block encoder (Zstd.compressFrame:
-  // LZ77 + predefined-FSE sequences + canonical Huffman literals, with
-  // a per-block Raw fallback for incompressible data) — every emitted
-  // frame is legal zstd) are spoken, so zstd-only peers interoperate
-  // in both directions.
+  // 2 zlib, 3 zstd. zlib runs on the JDK's Deflater/Inflater; snappy
+  // (mongod's default) and zstd run on snappy-java and zstd-jni, the
+  // codecs Spark itself ships. Dictionaries are never negotiated on
+  // the wire, so a zstd frame naming one refuses.
   private[sources] val CompressorNoop = 0
   private[sources] val CompressorSnappy = 1
   private[sources] val CompressorZlib = 2
@@ -270,9 +265,83 @@ object OpMsg {
                    doc: Array[Byte]): Unit =
     writeFrame(out, requestId, responseTo, doc, flags = 0, compress = false)
 
-  /** Write one frame, optionally with flag bits and OP_COMPRESSED zlib
+  private val ZstdLevel = 3
+
+  /** The OP_COMPRESSED payload of `raw` under compressor `id`. */
+  private def compressPayload(id: Int, raw: Array[Byte]): Array[Byte] = id match {
+    case CompressorZlib =>
+      val deflater = new java.util.zip.Deflater()
+      try {
+        deflater.setInput(raw); deflater.finish()
+        val buf = new Array[Byte](raw.length + 64)
+        val acc = new ByteArrayOutputStream(raw.length / 2 + 64)
+        while (!deflater.finished())
+          acc.write(buf, 0, deflater.deflate(buf))
+        acc.toByteArray
+      } finally deflater.end()
+    case CompressorSnappy => org.xerial.snappy.Snappy.compress(raw)
+    case CompressorZstd => com.github.luben.zstd.Zstd.compress(raw, ZstdLevel)
+    case CompressorNoop => raw
+    case other => throw new IllegalArgumentException(
+      s"OP_COMPRESSED: cannot emit compressorId $other")
+  }
+
+  /** Decompress an OP_COMPRESSED payload to exactly `size` bytes (the
+    * envelope's uncompressedSize, already capped at MaxMessage). Never
+    * allocates more than `size`: snappy's own length preamble is
+    * checked before the output exists, zlib and zstd decode into a
+    * buffer of the declared size. Every codec failure refuses as an
+    * `OP_COMPRESSED: <codec> …` IllegalArgumentException. */
+  private[sources] def decompressPayload(id: Int, payload: Array[Byte],
+                                         size: Int): Array[Byte] = {
+    def sized(codec: String, n: Int): Unit =
+      if (n != size) throw new IllegalArgumentException(
+        s"OP_COMPRESSED: $codec inflated to $n bytes, declared $size")
+    def corrupt(codec: String, e: Exception): Nothing =
+      throw new IllegalArgumentException(
+        s"OP_COMPRESSED: corrupt $codec payload: ${e.getMessage}")
+    id match {
+      case CompressorNoop =>
+        sized("noop", payload.length)
+        payload
+      case CompressorZlib =>
+        val out = new Array[Byte](size)
+        val inflater = new java.util.zip.Inflater()
+        try {
+          inflater.setInput(payload)
+          val n = try inflater.inflate(out)
+            catch { case e: java.util.zip.DataFormatException => corrupt("zlib", e) }
+          sized("zlib", n)
+          if (!inflater.finished()) throw new IllegalArgumentException(
+            s"OP_COMPRESSED: zlib inflated past the declared $size bytes")
+        } finally inflater.end()
+        out
+      case CompressorSnappy =>
+        // snappy-java writes as many bytes as the stream's own preamble
+        // names, so the preamble must match `size` before `out` exists
+        try {
+          sized("snappy", org.xerial.snappy.Snappy.uncompressedLength(payload))
+          val out = new Array[Byte](size)
+          sized("snappy", org.xerial.snappy.Snappy.uncompress(
+            payload, 0, payload.length, out, 0))
+          out
+        } catch { case e: java.io.IOException => corrupt("snappy", e) }
+      case CompressorZstd =>
+        val out = new Array[Byte](size)
+        val n = try com.github.luben.zstd.Zstd.decompressByteArray(
+            out, 0, size, payload, 0, payload.length)
+          catch { case e: com.github.luben.zstd.ZstdException => corrupt("zstd", e) }
+        sized("zstd", n.toInt)
+        out
+      case other => throw new IllegalArgumentException(
+        s"OP_COMPRESSED: unknown compressorId $other")
+    }
+  }
+
+  /** Write one frame, optionally with flag bits and an OP_COMPRESSED
     * envelope (originalOpcode + uncompressedSize + compressorId +
-    * deflated flagBits-and-sections — wire spec layout). */
+    * the flagBits-and-sections compressed by zlib, snappy or zstd —
+    * wire spec layout). */
   def writeFrame(out: OutputStream, requestId: Int, responseTo: Int,
                  doc: Array[Byte], flags: Int, compress: Boolean,
                  checksum: Boolean = false,
@@ -310,22 +379,7 @@ object OpMsg {
       inner.writeTo(msg)
     } else {
       val raw = inner.toByteArray
-      val packed: Array[Byte] = compressor match {
-        case CompressorZlib =>
-          val deflater = new java.util.zip.Deflater()
-          deflater.setInput(raw); deflater.finish()
-          val buf = new Array[Byte](raw.length + 64)
-          val acc = new ByteArrayOutputStream(raw.length / 2 + 64)
-          while (!deflater.finished())
-            acc.write(buf, 0, deflater.deflate(buf))
-          deflater.end()
-          acc.toByteArray
-        case CompressorSnappy => Snappy.compress(raw)
-        case CompressorZstd => Zstd.encodeWire(raw)
-        case CompressorNoop => raw
-        case other => throw new IllegalArgumentException(
-          s"OP_COMPRESSED: cannot emit compressorId $other")
-      }
+      val packed = compressPayload(compressor, raw)
       writeInt(msg, 16 + 4 + 4 + 1 + packed.length)
       writeInt(msg, requestId); writeInt(msg, responseTo)
       writeInt(msg, OpCompressedCode)
@@ -350,9 +404,9 @@ object OpMsg {
     }
 
   /** Read one frame. Accepts OP_MSG (2013) and OP_COMPRESSED (2012,
-    * noop or zlib — the inflated bytes must be an OP_MSG body of
-    * exactly the declared uncompressedSize). Refuses other opcodes,
-    * oversized frames, unknown flag bits, checksums, unknown
+    * noop, snappy, zlib or zstd — the inflated bytes must be an OP_MSG
+    * body of exactly the declared uncompressedSize). Refuses other
+    * opcodes, oversized frames, unknown flag bits, checksums, unknown
     * compressors, and non-kind-0 sections. */
   def readFrame(in: InputStream): Option[Frame] = {
     val head = new Array[Byte](16)
@@ -391,55 +445,8 @@ object OpMsg {
           s"OP_COMPRESSED: bad uncompressedSize $uncompressedSize")
       val id = body(8) & 0xFF
       arrivedCompressorId = id
-      val payload = java.util.Arrays.copyOfRange(body, 9, body.length)
-      body = id match {
-        case CompressorNoop =>
-          if (payload.length != uncompressedSize)
-            throw new IllegalArgumentException(
-              "OP_COMPRESSED: noop payload length does not match " +
-                s"uncompressedSize ($uncompressedSize)")
-          payload
-        case CompressorZlib =>
-          val inflater = new java.util.zip.Inflater()
-          inflater.setInput(payload)
-          val outBytes = new Array[Byte](uncompressedSize)
-          val n =
-            try inflater.inflate(outBytes)
-            catch { case e: java.util.zip.DataFormatException =>
-              throw new IllegalArgumentException(
-                s"OP_COMPRESSED: corrupt zlib payload: ${e.getMessage}") }
-          val leftover = !inflater.finished()
-          inflater.end()
-          if (n != uncompressedSize || leftover)
-            throw new IllegalArgumentException(
-              s"OP_COMPRESSED: inflated to $n bytes, " +
-                s"declared $uncompressedSize")
-          outBytes
-        case CompressorSnappy =>
-          val outBytes =
-            try Snappy.uncompress(payload)
-            catch { case e: IllegalArgumentException =>
-              throw new IllegalArgumentException(
-                s"OP_COMPRESSED: corrupt snappy payload: ${e.getMessage}") }
-          if (outBytes.length != uncompressedSize)
-            throw new IllegalArgumentException(
-              s"OP_COMPRESSED: snappy inflated to ${outBytes.length} " +
-                s"bytes, declared $uncompressedSize")
-          outBytes
-        case CompressorZstd =>
-          val outBytes =
-            try Zstd.uncompress(payload)
-            catch { case e: IllegalArgumentException =>
-              throw new IllegalArgumentException(
-                s"OP_COMPRESSED: zstd payload: ${e.getMessage}") }
-          if (outBytes.length != uncompressedSize)
-            throw new IllegalArgumentException(
-              s"OP_COMPRESSED: zstd inflated to ${outBytes.length} " +
-                s"bytes, declared $uncompressedSize")
-          outBytes
-        case other => throw new IllegalArgumentException(
-          s"OP_COMPRESSED: unknown compressorId $other")
-      }
+      body = decompressPayload(id,
+        java.util.Arrays.copyOfRange(body, 9, body.length), uncompressedSize)
     }
     var flags = readIntLE(body, 0)
     if ((flags & ~KnownFlags) != 0) throw new IllegalArgumentException(

@@ -58,4 +58,27 @@ class HashedShinglesSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("shingle widths: an int-range BIGINT literal is accepted, a " +
+       "non-foldable width fails loudly") {
+    GraftFunctions.register(spark)
+    val df = Seq((1, "a b c d"), (2, "x y")).toDF("w", "text")
+    val asInt = df.select(call_function("hashed_shingles", col("text"), lit(3)))
+      .collect().map(_.getSeq[Long](0))
+    val asLong = df.select(call_function("hashed_shingles", col("text"), lit(3L)))
+      .collect().map(_.getSeq[Long](0))
+    assert(asLong.toSeq == asInt.toSeq)
+    assert(spark.sql("SELECT word_shingles(array('a','b','c'), 2L) AS s")
+      .head.getSeq[String](0) == Seq("a b", "b c"))
+    for (fn <- Seq("hashed_shingles", "word_shingles")) {
+      val arg = if (fn == "hashed_shingles") col("text")
+        else split(col("text"), " ")
+      val e = intercept[Exception](
+        df.select(call_function(fn, arg, col("w"))).collect())
+      val iae = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case x: IllegalArgumentException => x }
+      assert(iae.exists(_.getMessage.contains(
+        s"$fn: width argument must be a foldable integer literal")), e.toString)
+    }
+  }
 }

@@ -103,4 +103,23 @@ class DocWriterSpec extends AnyFunSuite {
       .getLines().next()
     assert(line.contains(s""""$$date": ${19792L * 86400000L}"""))
   }
+
+  test("a Binary subtype tag survives DocStore.write: the column reads " +
+       "back under its own declared schema") {
+    val schema = StructType(Seq(StructField("id", LongType),
+      graft.schema.MSchema.binaryField("u", 4),
+      StructField("s", StructType(Seq(graft.schema.MSchema.binaryField("v", 0x80))))))
+    val rows = (0 until 20).map(i => org.apache.spark.sql.Row(i.toLong,
+      Array.fill[Byte](16)(i.toByte), org.apache.spark.sql.Row(Array[Byte](1, i.toByte))))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+    val store = new DocStore(spark, tmpDir(), "graftdocs")
+    store.write(df, "tagged")
+    val back = spark.read.format("graftdocs").schema(schema)
+      .load(store.path("tagged")).orderBy("id").collect()
+    assert(back.length == 20)
+    back.zipWithIndex.foreach { case (r, i) =>
+      assert(r.getAs[Array[Byte]]("u").toSeq == Seq.fill(16)(i.toByte))
+      assert(r.getStruct(2).getAs[Array[Byte]]("v").toSeq == Seq[Byte](1, i.toByte))
+    }
+  }
 }

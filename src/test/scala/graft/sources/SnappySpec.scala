@@ -1,28 +1,39 @@
 package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
+import CompressFixture._
 
-/** Snappy block-format conformance: hand-built vectors straight from
-  * the published format description (so the DECODER is pinned against
-  * the format, not against our own encoder), round-trip properties for
-  * the encoder, and the strict-decoder refusal matrix. */
+/** OP_COMPRESSED snappy (compressor id 1) on snappy-java: hand-built
+  * vectors straight from the published block format (so the wire's
+  * decompression step is pinned against the format, not against an
+  * encoder), round-trips through `writeFrame`/`readFrame` whose
+  * payloads snappy-java decodes, and the strict refusal matrix — every
+  * failure an `OP_COMPRESSED: … snappy …` refusal that never allocates
+  * past the declared size. */
 class SnappySpec extends AnyFunSuite {
 
   private def bytes(xs: Int*): Array[Byte] = xs.map(_.toByte).toArray
+  private def unsnappy(in: Array[Byte], size: Int): Array[Byte] =
+    OpMsg.decompressPayload(OpMsg.CompressorSnappy, in, size)
+  private def refusal(in: Array[Byte], size: Int): String = {
+    val m = intercept[IllegalArgumentException](unsnappy(in, size)).getMessage
+    assert(m.startsWith("OP_COMPRESSED: ") && m.contains("snappy"), m)
+    m
+  }
 
   // ---- decoder vs hand-built format vectors --------------------------------
 
   test("literal-only stream") {
     // varint len 5; literal tag (5-1)<<2 = 0x10; "hello"
     val in = bytes(0x05, 0x10) ++ "hello".getBytes("UTF-8")
-    assert(new String(Snappy.uncompress(in), "UTF-8") == "hello")
+    assert(new String(unsnappy(in, 5), "UTF-8") == "hello")
   }
 
   test("overlapping copy extends a run (the RLE trick)") {
     // "aaaaaaaaaa": varint 10; literal 'a'; copy-1 len 9 offset 1
     // copy-1 tag: ((9-4) << 2) | 1 = 0x15; offset byte 0x01
     val in = bytes(0x0A, 0x00, 'a'.toInt, 0x15, 0x01)
-    assert(new String(Snappy.uncompress(in), "UTF-8") == "a" * 10)
+    assert(new String(unsnappy(in, 10), "UTF-8") == "a" * 10)
   }
 
   test("two-byte-offset copy") {
@@ -30,13 +41,13 @@ class SnappySpec extends AnyFunSuite {
     // offset 4 → tag ((4-1)<<2)|2 = 0x0E, offset LE 04 00
     val in = bytes(0x08, 0x0C) ++ "abcd".getBytes("UTF-8") ++
       bytes(0x0E, 0x04, 0x00)
-    assert(new String(Snappy.uncompress(in), "UTF-8") == "abcdabcd")
+    assert(new String(unsnappy(in, 8), "UTF-8") == "abcdabcd")
   }
 
   test("four-byte-offset copy") {
     val in = bytes(0x08, 0x0C) ++ "wxyz".getBytes("UTF-8") ++
       bytes(0x0F, 0x04, 0x00, 0x00, 0x00)
-    assert(new String(Snappy.uncompress(in), "UTF-8") == "wxyzwxyz")
+    assert(new String(unsnappy(in, 8), "UTF-8") == "wxyzwxyz")
   }
 
   test("long literal with extra length bytes") {
@@ -44,48 +55,44 @@ class SnappySpec extends AnyFunSuite {
     // tag 61<<2 = 0xF4: two LE extra bytes holding len-1 = 299 = 0x012B
     val in = bytes(0xAC, 0x02) /* varint 300 */ ++
       bytes(0xF4, 0x2B, 0x01) ++ payload
-    assert(java.util.Arrays.equals(Snappy.uncompress(in), payload))
+    assert(java.util.Arrays.equals(unsnappy(in, 300), payload))
   }
 
   // ---- strict-decoder refusals ----------------------------------------------
 
   test("refusals: bad offset, truncation, declared-size lies") {
     // copy before any output
-    assert(intercept[IllegalArgumentException](
-      Snappy.uncompress(bytes(0x04, 0x15, 0x01)))
-      .getMessage.contains("offset"))
+    refusal(bytes(0x04, 0x15, 0x01), 4)
     // literal runs past the input
-    assert(intercept[IllegalArgumentException](
-      Snappy.uncompress(bytes(0x05, 0x10, 'a'.toInt)))
-      .getMessage.contains("past the input"))
-    // stream produces fewer bytes than declared
-    assert(intercept[IllegalArgumentException](
-      Snappy.uncompress(bytes(0x07, 0x10) ++ "hello".getBytes("UTF-8")))
-      .getMessage.contains("declared"))
-    // stream produces more bytes than declared
-    assert(intercept[IllegalArgumentException](
-      Snappy.uncompress(bytes(0x03, 0x10) ++ "hello".getBytes("UTF-8")))
-      .getMessage.contains("declared"))
-    // truncated varint
-    assert(intercept[IllegalArgumentException](
-      Snappy.uncompress(bytes(0x80)))
-      .getMessage.contains("preamble"))
+    refusal(bytes(0x05, 0x10, 'a'.toInt), 5)
+    // stream produces fewer bytes than its preamble declares
+    refusal(bytes(0x07, 0x10) ++ "hello".getBytes("UTF-8"), 7)
+    // stream produces more bytes than its preamble declares
+    refusal(bytes(0x03, 0x10) ++ "hello".getBytes("UTF-8"), 3)
+    // truncated varint preamble
+    refusal(bytes(0x80), 5)
+    // a sound stream whose preamble disagrees with the envelope, both
+    // ways (a longer one must refuse before it writes past the buffer)
+    val hello = bytes(0x05, 0x10) ++ "hello".getBytes("UTF-8")
+    assert(refusal(hello, 6).contains("inflated to 5 bytes, declared 6"))
+    assert(refusal(hello, 3).contains("inflated to 5 bytes, declared 3"))
   }
 
   test("refusal: 4-extra-byte literal length near Int.MaxValue refuses " +
     "cleanly (no Int-overflow escape to arraycopy)") {
     // tag 0xFC: len field 63 → 64 > 60 → 4 extra LE bytes follow,
-    // here encoding l = 0x7FFFFF00, so the pre-fix Int math
-    // len = l + 1 stayed positive while p + len wrapped negative and
-    // slipped past both bounds checks, surfacing as an uncaught
-    // IndexOutOfBoundsException from System.arraycopy
+    // here encoding l = 0x7FFFFF00: a literal far past both the input
+    // and the declared 10 bytes
     val in = bytes(0x0A) /* declared 10 */ ++
       bytes(0xFC, 0x00, 0xFF, 0xFF, 0x7F) ++ "abc".getBytes("UTF-8")
-    assert(intercept[IllegalArgumentException](Snappy.uncompress(in))
-      .getMessage.contains("literal length"))
+    assert(allocated(refusal(in, 10): Unit) < (1 << 20))
+    // a preamble claiming Int.MaxValue bytes refuses before any output
+    // buffer exists
+    val huge = bytes(0xFF, 0xFF, 0xFF, 0xFF, 0x07, 0x08) ++ "abc".getBytes("UTF-8")
+    assert(allocated(refusal(huge, 10): Unit) < (1 << 20))
   }
 
-  // ---- encoder round-trip properties ----------------------------------------
+  // ---- wire round-trip properties -------------------------------------------
 
   test("round-trip: empty, tiny, repetitive, random, and BSON-shaped") {
     val rnd = new scala.util.Random(42)
@@ -106,13 +113,19 @@ class SnappySpec extends AnyFunSuite {
       Array.fill((n / base.length) + 1)(base).flatten.take(n)
     }
     for ((c, i) <- cases.zipWithIndex) {
-      val packed = Snappy.compress(c)
-      assert(java.util.Arrays.equals(Snappy.uncompress(packed), c),
+      val doc = binDoc(c)
+      val f = frame(OpMsg.CompressorSnappy, doc)
+      assert(java.util.Arrays.equals(read(f).doc, doc),
         s"case $i (len ${c.length}) failed round-trip")
+      // snappy-java reads what the wire wrote
+      assert(java.util.Arrays.equals(
+        org.xerial.snappy.Snappy.uncompress(payload(f)).drop(BodyHead), doc),
+        s"case $i (len ${c.length}) is not a snappy-java stream")
     }
     // repetitive input actually shrinks
     val rep = ("na" * 4000).getBytes
-    assert(Snappy.compress(rep).length < rep.length / 10)
+    assert(payload(frame(OpMsg.CompressorSnappy, binDoc(rep))).length <
+      rep.length / 10)
   }
 
   // ---- wire integration ------------------------------------------------------

@@ -1,15 +1,15 @@
 package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
+import CompressFixture._
 
-/** RFC 8878 zstd: the from-scratch FULL decoder (Huffman literals +
-  * FSE sequences + repeat offsets + checksum) validated against real
-  * frames from zstd-jni and the zstd CLI across levels, sizes, and
-  * data shapes; store-mode frame conformance for the encoder; XXH64
-  * pinned to the spec vector and cross-checked against Spark's
-  * implementation; and the refusal matrix — dictionaries, checksum
-  * mismatches, reserved bits, truncation, size lies — all refusing
-  * with clear messages (never a silent mis-parse). */
+/** OP_COMPRESSED zstd (compressor id 3) on zstd-jni: real frames from
+  * zstd-jni and the zstd CLI across levels, sizes and data shapes
+  * decode through the wire's decompression step; frames `writeFrame`
+  * emits decode with libzstd and the CLI; and the refusal matrix —
+  * dictionaries, checksum mismatches, reserved bits, truncation, size
+  * lies — refuses as `OP_COMPRESSED: … zstd …`, never a silent
+  * mis-parse. */
 class ZstdSpec extends AnyFunSuite {
 
   private def bytes(xs: Int*): Array[Byte] = xs.map(_.toByte).toArray
@@ -19,86 +19,92 @@ class ZstdSpec extends AnyFunSuite {
     ctx.setLevel(level); ctx.setChecksum(checksum)
     try ctx.compress(data) finally ctx.close()
   }
-
-  test("store-mode frame bytes: magic, descriptor, FCS, raw block") {
-    val payload = "hello zstd".getBytes("UTF-8")
-    val f = Zstd.compress(payload)
-    // magic 0xFD2FB528 little-endian
-    assert((f(0) & 0xFF) == 0x28 && (f(1) & 0xFF) == 0xB5 &&
-      (f(2) & 0xFF) == 0x2F && (f(3) & 0xFF) == 0xFD)
-    // descriptor: FCS flag 0 (1-byte via single-segment), bit 5 set,
-    // no dict/checksum/reserved
-    assert((f(4) & 0xFF) == 0x20)
-    assert((f(5) & 0xFF) == payload.length) // 1-byte FCS
-    // block header: last=1, type=Raw(0), size=payload.length
-    val h = (f(6) & 0xFF) | ((f(7) & 0xFF) << 8) | ((f(8) & 0xFF) << 16)
-    assert((h & 1) == 1 && ((h >>> 1) & 3) == 0 && (h >>> 3) == payload.length)
-    assert(java.util.Arrays.equals(
-      java.util.Arrays.copyOfRange(f, 9, f.length), payload))
+  private def unzstd(frame: Array[Byte], size: Int): Array[Byte] =
+    OpMsg.decompressPayload(OpMsg.CompressorZstd, frame, size)
+  /** The zstd CLI on PATH, if any. */
+  private lazy val cli: Option[java.io.File] =
+    sys.env.getOrElse("PATH", "").split(java.io.File.pathSeparator)
+      .map(new java.io.File(_, "zstd")).find(_.canExecute)
+  private def runCli(args: String*): Unit = {
+    val pr = new ProcessBuilder((cli.get.getAbsolutePath +: args): _*)
+      .redirectErrorStream(true).start()
+    assert(pr.waitFor() == 0, s"zstd ${args.mkString(" ")}")
   }
 
-  test("store-mode round-trip: empty, tiny, 2-byte-FCS, multi-block, random") {
+  /** `n` bytes of one of five shapes: random, word text, long runs, a
+    * four-symbol alphabet, or a 251-byte period. */
+  private def shaped(seed: Int, n: Int): Array[Byte] = {
+    val words = Array("the", "of", "and", "zstd", "compression", "entropy",
+      "a", "data", "block", "sequence", "offset", "match")
+    val rnd = new scala.util.Random(seed)
+    val d = new Array[Byte](n)
+    (seed % 5) match {
+      case 0 => rnd.nextBytes(d) // incompressible → raw blocks
+      case 1 => // natural text → huffman literals + matches
+        val sb = new StringBuilder
+        while (sb.length < n) {
+          sb.append(words(rnd.nextInt(words.length))).append(' '): Unit
+        }
+        System.arraycopy(sb.toString.getBytes("UTF-8"), 0, d, 0, n)
+      case 2 => // long runs → RLE literals, rep offsets, big match lens
+        var i = 0
+        while (i < n) { d(i) = (i / (1 + rnd.nextInt(300))).toByte; i += 1 }
+      case 3 => // tiny alphabet → skewed FSE distributions
+        var i = 0
+        while (i < n) { d(i) = rnd.nextInt(4).toByte; i += 1 }
+      case _ => // periodic → repeat-offset heavy
+        var i = 0
+        while (i < n) { d(i) = (i % 251).toByte; i += 1 }
+    }
+    d
+  }
+
+  /** A single-segment frame holding `payload` in one raw last block. */
+  private def rawFrame(payload: Array[Byte]): Array[Byte] = {
+    require(payload.length < 256)
+    val h = (payload.length << 3) | 1
+    bytes(0x28, 0xB5, 0x2F, 0xFD, 0x20, payload.length,
+      h & 0xFF, (h >>> 8) & 0xFF, 0) ++ payload
+  }
+
+  test("wire round-trip through writeFrame/readFrame: empty, tiny, " +
+       "300 B, 70 KB, multi-block, random") {
     val rnd = new scala.util.Random(20260816)
     val cases = Seq(
       Array.empty[Byte],
       bytes(0),
       "x".getBytes("UTF-8"),
-      Array.fill[Byte](300)(7),              // 2-byte FCS form (size-256)
-      Array.fill[Byte](70000)(3),            // 4-byte FCS
+      Array.fill[Byte](300)(7),
+      Array.fill[Byte](70000)(3),
       Array.fill[Byte](128 * 1024 + 17)(1),  // crosses Block_Maximum_Size
       Array.fill[Byte](512)(rnd.nextInt().toByte))
     cases.foreach { c =>
-      val rt = Zstd.uncompress(Zstd.compress(c))
-      assert(java.util.Arrays.equals(rt, c), s"round-trip ${c.length} bytes")
+      val doc = binDoc(c)
+      val f = read(frame(OpMsg.CompressorZstd, doc))
+      assert(f.wasCompressed && f.compressorId == OpMsg.CompressorZstd)
+      assert(java.util.Arrays.equals(f.doc, doc), s"round-trip ${c.length} bytes")
     }
-    // multi-block frames really emit >1 block (3 headers for 2 blocks)
-    val big = Array.fill[Byte](MaxBlockProbe)(5)
-    val f = Zstd.compress(big)
-    assert(f.length >= big.length + 4 + 1 + 4 + 6, "expected two block headers")
   }
-  private val MaxBlockProbe = 128 * 1024 + 1
 
   test("RLE blocks decode (a foreign encoder's run-length form)") {
     // hand-built: magic, single-segment FCS=8, one last RLE block of 8×'A'
     val f = bytes(0x28, 0xB5, 0x2F, 0xFD, 0x20, 8) ++
       bytes(0x43, 0x00, 0x00) ++ // last=1, type=RLE(1), size=8
       bytes('A'.toInt)
-    assert(new String(Zstd.uncompress(f), "UTF-8") == "AAAAAAAA")
+    assert(new String(unzstd(f, 8), "UTF-8") == "AAAAAAAA")
   }
 
   test("compressed blocks from a REAL encoder decode: levels × shapes × " +
        "sizes, checksum on and off (Huffman 1/4-stream, FSE predefined/" +
        "compressed/RLE/repeat modes, treeless literals, repeat offsets)") {
-    val words = Array("the", "of", "and", "zstd", "compression", "entropy",
-      "a", "data", "block", "sequence", "offset", "match")
     val sizes = Array(0, 1, 37, 1000, 5000, 40000, 131072, 131073, 300000, 17)
     var covered = 0
     for (seed <- 0 until 30) {
-      val rnd = new scala.util.Random(seed)
       val n = sizes(seed % sizes.length)
-      val d = new Array[Byte](n)
-      (seed % 5) match {
-        case 0 => rnd.nextBytes(d) // incompressible → raw blocks
-        case 1 => // natural text → huffman literals + matches
-          val sb = new StringBuilder
-          while (sb.length < n) {
-            sb.append(words(rnd.nextInt(words.length))).append(' '): Unit
-          }
-          System.arraycopy(sb.toString.getBytes("UTF-8"), 0, d, 0, n)
-        case 2 => // long runs → RLE literals, rep offsets, big match lens
-          var i = 0
-          while (i < n) { d(i) = (i / (1 + rnd.nextInt(300))).toByte; i += 1 }
-        case 3 => // tiny alphabet → skewed FSE distributions
-          var i = 0
-          while (i < n) { d(i) = rnd.nextInt(4).toByte; i += 1 }
-        case _ => // periodic → repeat-offset heavy
-          var i = 0
-          while (i < n) { d(i) = (i % 251).toByte; i += 1 }
-      }
+      val d = shaped(seed, n)
       for (level <- Seq(1, 3, 7, 13, 19, 22)) {
         val frame = jni(d, level, checksum = seed % 2 == 0)
-        val out = Zstd.uncompress(frame)
-        assert(java.util.Arrays.equals(out, d),
+        assert(java.util.Arrays.equals(unzstd(frame, n), d),
           s"seed=$seed level=$level n=$n")
         covered += 1
       }
@@ -106,143 +112,50 @@ class ZstdSpec extends AnyFunSuite {
     assert(covered == 180)
   }
 
-  test("from-scratch ENCODER: compressFrame round-trips through our " +
-       "decoder AND the real libzstd (jni + CLI), emits Compressed " +
-       "blocks that genuinely shrink, falls back to Raw when not") {
-    val words = Array("the", "of", "and", "zstd", "compression", "entropy",
-      "a", "data", "block", "sequence", "offset", "match")
+  test("outbound: writeFrame's zstd payloads decode with libzstd (jni + " +
+       "CLI) and shrink compressible input") {
     val sizes = Array(0, 1, 31, 32, 100, 1000, 5000, 40000, 131072,
       131073, 300000, 17)
     for (seed <- 0 until 30) {
-      val rnd = new scala.util.Random(seed)
       val n = sizes(seed % sizes.length)
-      val d = new Array[Byte](n)
-      (seed % 5) match {
-        case 0 => rnd.nextBytes(d)
-        case 1 =>
-          val sb = new StringBuilder
-          while (sb.length < n) {
-            sb.append(words(rnd.nextInt(words.length))).append(' '): Unit
-          }
-          System.arraycopy(sb.toString.getBytes("UTF-8"), 0, d, 0, n)
-        case 2 =>
-          var i = 0
-          while (i < n) { d(i) = (i / (1 + rnd.nextInt(300))).toByte; i += 1 }
-        case 3 =>
-          var i = 0
-          while (i < n) { d(i) = rnd.nextInt(4).toByte; i += 1 }
-        case _ =>
-          var i = 0
-          while (i < n) { d(i) = (i % 251).toByte; i += 1 }
-      }
-      val frame = Zstd.compressFrame(d)
-      assert(java.util.Arrays.equals(Zstd.uncompress(frame), d),
-        s"self round-trip seed=$seed n=$n")
-      // the REAL decoder accepts our frames (interop, outbound side)
-      if (n > 0)
-        assert(java.util.Arrays.equals(
-          com.github.luben.zstd.Zstd.decompress(frame, n), d),
-          s"libzstd round-trip seed=$seed n=$n")
+      val doc = binDoc(shaped(seed, n))
+      val body = com.github.luben.zstd.Zstd.decompress(
+        payload(frame(OpMsg.CompressorZstd, doc)), BodyHead + doc.length)
+      assert(java.util.Arrays.equals(body.drop(BodyHead), doc),
+        s"libzstd round-trip seed=$seed n=$n")
     }
-    // compressible text shrinks through Compressed (type-2) blocks;
-    // random bytes fall back to Raw blocks and never inflate past the
-    // store-mode envelope
+    // compressible text shrinks; random bytes never inflate past a
+    // frame and block header
     val text = ("FSE and Huffman walk into a bitstream. " * 3000)
       .getBytes("UTF-8")
-    val cf = Zstd.compressFrame(text)
-    assert(cf.length < text.length / 3, s"ratio ${cf.length}/${text.length}")
-    val fcsBytes = ((cf(4) & 0xFF) >>> 6) match {
-      case 0 => 1; case 1 => 2; case 2 => 4; case _ => 8
-    }
-    val bh = 5 + fcsBytes
-    val bt = (((cf(bh) & 0xFF) | ((cf(bh + 1) & 0xFF) << 8) |
-      ((cf(bh + 2) & 0xFF) << 16)) >>> 1) & 3
-    assert(bt == 2, "expected a Compressed block")
+    val tf = frame(OpMsg.CompressorZstd, binDoc(text))
+    assert(payload(tf).length < text.length / 3,
+      s"ratio ${payload(tf).length}/${text.length}")
     val rndb = new Array[Byte](50000)
     new scala.util.Random(3).nextBytes(rndb)
-    assert(Zstd.compressFrame(rndb).length <= rndb.length + 16)
-    // the zstd CLI decodes our frames byte-exactly
-    val cli = new java.io.File("/root/miniconda/bin/zstd")
-    assume(cli.canExecute, "zstd CLI not present")
+    val rf = frame(OpMsg.CompressorZstd, binDoc(rndb))
+    assert(payload(rf).length <= BodyHead + binDoc(rndb).length + 16)
+    // the zstd CLI decodes the wire payload byte-exactly
+    assume(cli.isDefined, "zstd CLI not on PATH")
     val src = java.nio.file.Files.createTempFile("graft_enc", ".zst")
     val dst = java.nio.file.Files.createTempFile("graft_enc", ".out")
-    java.nio.file.Files.write(src, cf)
-    val pr = new ProcessBuilder(cli.getAbsolutePath, "-d", "-f",
-      "-o", dst.toString, src.toString).redirectErrorStream(true).start()
-    assert(pr.waitFor() == 0)
-    assert(java.util.Arrays.equals(java.nio.file.Files.readAllBytes(dst),
-      text))
+    java.nio.file.Files.write(src, payload(tf))
+    runCli("-d", "-f", "-o", dst.toString, src.toString)
+    assert(java.util.Arrays.equals(
+      java.nio.file.Files.readAllBytes(dst).drop(BodyHead), binDoc(text)))
     java.nio.file.Files.delete(src); java.nio.file.Files.delete(dst)
   }
 
-  test("encoder depth (round 11): FSE-compressed Huffman weights lift " +
-       "the 127-symbol ceiling, matches span blocks, fitted sequence " +
-       "tables close the ratio to within 1.15× of libzstd-3 on text") {
-    // (a) >127-symbol literal alphabet: every byte value present and
-    // skewed — only the FSE weight form can describe this tree; the
-    // block must come out Compressed (not Raw-literal fallback)
-    val rnd = new scala.util.Random(11)
-    val hi = new Array[Byte](60000)
-    var i = 0
-    while (i < hi.length) {
-      // skewed over the FULL byte range (incl. >0x7F)
-      hi(i) = (128 + (math.abs(rnd.nextGaussian()) * 40).toInt.min(127)).toByte
-      i += 1
-    }
-    val hiF = Zstd.compressFrame(hi)
-    // ~6.4-bit entropy source: anything under 90% proves the entropy
-    // stage ran (the pre-round-11 encoder emitted this input RAW —
-    // 100% — because the direct weight form cannot name byte 0xFF)
-    assert(hiF.length < hi.length * 9 / 10,
-      s"high-alphabet input did not compress: ${hiF.length}/${hi.length}")
-    locally { // block type must be Compressed, not Raw
-      val fcsBytes = ((hiF(4) & 0xFF) >>> 6) match {
-        case 0 => 1; case 1 => 2; case 2 => 4; case _ => 8
-      }
-      val bh = 5 + fcsBytes
-      val bt = (((hiF(bh) & 0xFF) | ((hiF(bh + 1) & 0xFF) << 8) |
-        ((hiF(bh + 2) & 0xFF) << 16)) >>> 1) & 3
-      assert(bt == 2, "expected a Compressed block for the >127 alphabet")
-    }
-    assert(java.util.Arrays.equals(Zstd.uncompress(hiF), hi))
-    assert(java.util.Arrays.equals(
-      com.github.luben.zstd.Zstd.decompress(hiF, hi.length), hi))
-    // (b) cross-block window: a 200 KiB page repeated once lands the
-    // second copy in a LATER block whose matches reach back across the
-    // boundary — the frame must shrink far below one copy's size
-    val page = new Array[Byte](200 * 1024)
-    rnd.nextBytes(page)
-    val doubled = page ++ page
-    val xb = Zstd.compressFrame(doubled)
-    assert(xb.length < page.length * 11 / 10,
-      s"no cross-block matches: ${xb.length} vs one copy ${page.length}")
-    assert(java.util.Arrays.equals(
-      com.github.luben.zstd.Zstd.decompress(xb, doubled.length), doubled))
-    // (c) text ratio vs libzstd level 3 (the verdict's envelope)
-    val text = java.nio.file.Files.readAllBytes(
-      java.nio.file.Path.of("/root/repo/SURVEY.md"))
-    val bos = new java.io.ByteArrayOutputStream()
-    (0 until 6).foreach(_ => bos.write(text))
-    val big = bos.toByteArray
-    val mine = Zstd.compressFrame(big).length.toDouble
-    val lib = com.github.luben.zstd.Zstd.compress(big, 3).length.toDouble
-    assert(mine / lib <= 1.15, f"text ratio ${mine / lib}%.3f vs libzstd-3")
-  }
-
   test("zstd CLI frames decode (including --long window frames)") {
-    val cli = new java.io.File("/root/miniconda/bin/zstd")
-    assume(cli.canExecute, "zstd CLI not present")
+    assume(cli.isDefined, "zstd CLI not on PATH")
     val src = java.nio.file.Files.createTempFile("graft_zstd", ".txt")
     val data = ("FSE and Huffman walk into a bitstream. " * 4000).getBytes("UTF-8")
     java.nio.file.Files.write(src, data)
     for (args <- Seq(Seq("-19"), Seq("-3", "--long=27"))) {
       val dst = java.nio.file.Files.createTempFile("graft_zstd", ".zst")
-      val cmd = Seq(cli.getAbsolutePath) ++ args ++
-        Seq("-f", "-o", dst.toString, src.toString)
-      val pr = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
-      assert(pr.waitFor() == 0)
+      runCli(args ++ Seq("-f", "-o", dst.toString, src.toString): _*)
       val frame = java.nio.file.Files.readAllBytes(dst)
-      assert(java.util.Arrays.equals(Zstd.uncompress(frame), data),
+      assert(java.util.Arrays.equals(unzstd(frame, data.length), data),
         s"CLI args $args")
       java.nio.file.Files.delete(dst)
     }
@@ -268,71 +181,78 @@ class ZstdSpec extends AnyFunSuite {
         val i = rnd.nextInt(m.length)
         m(i) = (m(i) ^ (1 << rnd.nextInt(8))).toByte
       }
-      try { Zstd.uncompress(m): Unit; decoded += 1 }
-      catch { case _: IllegalArgumentException => refused += 1 }
-      // any OTHER throwable (AIOOBE, NegativeArraySize, OOM...) fails
-      // the test by escaping the catch
+      try { unzstd(m, 200000): Unit; decoded += 1 }
+      catch { case e: IllegalArgumentException =>
+        assert(e.getMessage.startsWith("OP_COMPRESSED: "), e.getMessage)
+        refused += 1 }
+      // any OTHER throwable (ZstdException, AIOOBE, OOM...) fails the
+      // test by escaping the catch
     }
     assert(refused + decoded == 2000)
     assert(refused > 0, "mutations never tripped a check?")
   }
 
-  test("XXH64: spec vector + cross-check against Spark's implementation") {
-    // the published xxHash64 vector: empty input, seed 0
-    assert(Zstd.xxh64(Array.empty[Byte], 0, 0L) == 0xEF46DB3751D8E999L)
-    val rnd = new scala.util.Random(99)
-    for (len <- Seq(0, 1, 3, 4, 7, 8, 15, 16, 31, 32, 33, 63, 100, 1000);
-         seed <- Seq(0L, 1L, 0x9E3779B185EBCA87L)) {
-      val d = new Array[Byte](len); rnd.nextBytes(d)
-      val ours = Zstd.xxh64(d, len, seed)
-      val sparks = org.apache.spark.sql.catalyst.expressions.XXH64
-        .hashUnsafeBytes(d, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET,
-          len, seed)
-      assert(ours == sparks, s"len=$len seed=$seed")
-    }
-  }
-
   test("refusals: dict, checksum mismatch, reserved, truncation, " +
        "size lies, trailing bytes, negative FCS") {
-    def bad(f: Array[Byte]): String =
-      intercept[IllegalArgumentException](Zstd.uncompress(f)).getMessage
-    val good = Zstd.compress("payload!".getBytes("UTF-8"))
-    // dictionary frame (flag set, a real dictionary id present)
+    def bad(f: Array[Byte], size: Int = 8): String = {
+      val m = intercept[IllegalArgumentException](unzstd(f, size)).getMessage
+      assert(m.startsWith("OP_COMPRESSED: ") && m.contains("zstd"), m)
+      m
+    }
+    val good = rawFrame("payload!".getBytes("UTF-8"))
+    assert(new String(unzstd(good, 8), "UTF-8") == "payload!")
+    // dictionary frame (flag set, a real dictionary id present): the
+    // wire never negotiates dictionaries
     val dict = bytes(0x28, 0xB5, 0x2F, 0xFD, 0x21, 0x07, 0x08) ++ good.drop(6)
-    assert(bad(dict).contains("dictionary"))
-    // checksum MISMATCH refuses naming both values
+    assert(bad(dict).toLowerCase.contains("dictionary"))
+    // ... and a frame libzstd itself wrote against a trained dictionary
+    def sample(i: Int): Array[Byte] =
+      (s"""{"user": "user_$i", "event": "click", "ts": ${1700000000 +
+        i}, "path": "/products/${i % 7}/detail/${i % 31}"}""").getBytes("UTF-8")
+    val trainer = new com.github.luben.zstd.ZstdDictTrainer(1 << 22, 16 * 1024)
+    (0 until 2000).foreach(i => trainer.addSample(sample(i)))
+    val cctx = new com.github.luben.zstd.ZstdCompressCtx()
+    val input = sample(987654)
+    val dictFrame =
+      try { cctx.setLevel(3); cctx.loadDict(trainer.trainSamples()): Unit
+        cctx.compress(input) }
+      finally cctx.close()
+    assert(bad(dictFrame, input.length).toLowerCase.contains("dictionary"))
+    // checksum MISMATCH refuses
     val ck = jni("check me".getBytes("UTF-8"), 3, checksum = true)
     ck(ck.length - 1) = (ck(ck.length - 1) ^ 1).toByte
-    assert(bad(ck).contains("checksum mismatch"))
+    assert(bad(ck).contains("checksum"))
     // reserved descriptor bit
     val rz = good.clone(); rz(4) = (rz(4) | 0x08).toByte
-    assert(bad(rz).contains("reserved"))
+    bad(rz)
     // bad magic
     val mg = good.clone(); mg(0) = 0x29
-    assert(bad(mg).contains("magic"))
+    bad(mg)
     // truncated payload
-    assert(bad(good.dropRight(3)).toLowerCase.contains("past the input"))
-    // content-size lie
+    bad(good.dropRight(3))
+    // frame content-size lie
     val lie = good.clone(); lie(5) = (lie(5) + 1).toByte
-    assert(bad(lie).contains("declared"))
+    bad(lie)
+    // envelope size lies, both ways
+    assert(bad(good, 9).contains("inflated to 8 bytes, declared 9"))
+    bad(good, 7)
     // trailing garbage after the last block
-    assert(bad(good :+ 0x00.toByte).contains("trailing"))
+    bad(good :+ 0x00.toByte)
     // reserved block type
     val rb = good.clone(); rb(6) = (rb(6) | 0x06).toByte
-    assert(bad(rb).contains("reserved block"))
-    // 8-byte FCS with the top bit set must fail the size gate, not
-    // bypass the declared-size verification
+    bad(rb)
+    // 8-byte FCS with the top bit set must fail, not bypass the
+    // declared-size verification
     val neg = bytes(0x28, 0xB5, 0x2F, 0xFD, 0xE0,
       0, 0, 0, 0, 0, 0, 0, 0x80, 0x01, 0x00, 0x00)
-    assert(bad(neg).contains("out of range"))
+    bad(neg)
   }
 
   test("OP_COMPRESSED id 3: negotiated zstd find ≡ local scan, with real " +
        "compressed-block frames on the wire in both directions") {
-    // this environment has the native encoder: the wire hops below
-    // really carry Compressed (type-2) blocks through our decoder
-    val probe = Zstd.encodeWire(
-      ("compressible " * 400).getBytes("UTF-8"))
+    // the wire encoder emits Compressed (type-2) blocks, not raw ones
+    val probe = payload(frame(OpMsg.CompressorZstd,
+      binDoc(("compressible " * 400).getBytes("UTF-8"))))
     val desc = probe(4) & 0xFF
     val single = (desc & 0x20) != 0
     val fcsBytes = ((desc >>> 6) & 3) match {
@@ -364,80 +284,5 @@ class ZstdSpec extends AnyFunSuite {
         local.orderBy("event_id").collect().map(_.json).toSeq)
       assert(wire.count() > 50, "fixture too small to compress getMores")
     } finally server.stop()
-  }
-
-  test("dictionary frames (round 11): a libzstd-TRAINED dictionary " +
-       "parses (magic, id, entropy tables, rep offsets, content) and " +
-       "round-trips BOTH directions against the real libzstd and the " +
-       "CLI; the prefix-match ratio win on short similar inputs is " +
-       "real; raw-content dictionaries window-prefix; refusals name " +
-       "the ids") {
-    // train on templated JSON-ish lines — the short-similar-records
-    // shape dictionaries exist for
-    def sample(i: Int): Array[Byte] =
-      (s"""{"user": "user_$i", "event": "click", "ts": ${1700000000 +
-        i}, "path": "/products/${i % 7}/detail/${i % 31}", """ +
-        s""""session": "sess_${i % 13}", "ok": true}""").getBytes("UTF-8")
-    val trainer = new com.github.luben.zstd.ZstdDictTrainer(
-      1 << 22, 16 * 1024)
-    (0 until 2000).foreach(i => trainer.addSample(sample(i)))
-    val dictBytes = trainer.trainSamples()
-    val dict = Zstd.parseDictionary(dictBytes)
-    assert(dict.id != 0L && dict.contentLength > 0)
-    val input = sample(987654)
-    // libzstd-with-dict -> our decoder
-    val cctx = new com.github.luben.zstd.ZstdCompressCtx()
-    cctx.setLevel(3)
-    cctx.loadDict(dictBytes): Unit
-    val libFrame = cctx.compress(input)
-    assert(java.util.Arrays.equals(Zstd.uncompress(libFrame, dict), input))
-    // our encoder-with-dict -> libzstd (and our own decoder)
-    val ourFrame = Zstd.compressFrame(input, dict)
-    val dctx = new com.github.luben.zstd.ZstdDecompressCtx()
-    dctx.loadDict(dictBytes): Unit
-    assert(java.util.Arrays.equals(
-      dctx.decompress(ourFrame, input.length), input))
-    assert(java.util.Arrays.equals(Zstd.uncompress(ourFrame, dict), input))
-    // the dictionary is WHY this wins: the whole input should match
-    // into the prefix, beating the dict-less frame clearly
-    assert(ourFrame.length < Zstd.compressFrame(input).length,
-      s"no prefix-match win: ${ourFrame.length} with dict vs " +
-        s"${Zstd.compressFrame(input).length} without")
-    // CLI -D: their dict frames decode here; our dict frames decode there
-    val cli = new java.io.File("/root/miniconda/bin/zstd")
-    assume(cli.canExecute, "zstd CLI not present")
-    val dir = java.nio.file.Files.createTempDirectory("graft_zdict")
-    val dictF = dir.resolve("dict"); val inF = dir.resolve("in")
-    val zF = dir.resolve("in.zst"); val outF = dir.resolve("out")
-    java.nio.file.Files.write(dictF, dictBytes)
-    java.nio.file.Files.write(inF, input)
-    def run(args: String*): Unit = {
-      val pr = new ProcessBuilder((Seq(cli.getAbsolutePath) ++ args): _*)
-        .redirectErrorStream(true).start()
-      assert(pr.waitFor() == 0, s"zstd ${args.mkString(" ")}")
-    }
-    run("-3", "-D", dictF.toString, "-f", "-o", zF.toString, inF.toString)
-    assert(java.util.Arrays.equals(Zstd.uncompress(
-      java.nio.file.Files.readAllBytes(zF), dict), input))
-    java.nio.file.Files.write(zF, ourFrame)
-    run("-d", "-D", dictF.toString, "-f", "-o", outF.toString, zF.toString)
-    assert(java.util.Arrays.equals(
-      java.nio.file.Files.readAllBytes(outF), input))
-    // raw-content dictionary: no magic, pure window prefix, id 0 (no
-    // header id either direction)
-    val raw = Zstd.parseDictionary(
-      ("common prefix material: " * 40).getBytes("UTF-8"))
-    assert(raw.id == 0L)
-    val rawIn = ("common prefix material: uncommon tail").getBytes("UTF-8")
-    val rawFrame = Zstd.compressFrame(rawIn, raw)
-    assert(java.util.Arrays.equals(Zstd.uncompress(rawFrame, raw), rawIn))
-    assert(rawFrame.length < Zstd.compressFrame(rawIn).length)
-    // refusal matrix
-    val e1 = intercept[IllegalArgumentException](Zstd.uncompress(libFrame))
-    assert(e1.getMessage.contains(s"dictionary id ${dict.id}") &&
-      e1.getMessage.contains("none was provided"))
-    val e2 = intercept[IllegalArgumentException](
-      Zstd.uncompress(libFrame, raw))
-    assert(e2.getMessage.contains("dictionary 0 was provided"))
   }
 }
