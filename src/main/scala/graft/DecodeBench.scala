@@ -9,13 +9,18 @@ import org.apache.spark.sql.{SparkSession, functions => F}
   * and a nested document shape. Prints one JSON line of median seconds
   * per (shape, format, path).
   *
-  * Measured (sf0.1×10 = 1.5M docs, 8 files, local[32], median of 5 after
-  * a warmup sweep): nested bson direct 0.25s vs tree 0.69s (2.7×);
-  * nested jsonl direct 1.01s vs tree 1.27s (1.26×, 1.34× vs row); flat
-  * bson direct 0.28s vs tree 0.36s (1.3×); flat jsonl neutral (~1.0s
-  * all paths — Jackson lexing dominates and a 6-field tree is cheap;
-  * the token path's win is the per-doc tree it stops allocating, so it
-  * grows with document width/nesting).
+  * Measured on a 4-vCPU VM (sf0.1×10 = 1.5M docs, 8 files, local[4],
+  * median of 5 after a warmup sweep; the middle of three runs per
+  * reader): the jsonl rows, from the per-byte `BufferedInputStream.read()`
+  * line reader to the 64 KiB chunked one (`JsonlRawLines`): flat direct
+  * 3.39 → 1.20 s, tree 3.57 → 1.46, row 3.84 → 1.58; nested direct
+  * 4.39 → 1.41, tree 4.81 → 2.32, row 5.09 → 2.70. With the per-byte
+  * reader every flat jsonl path took the same ~3.4 s: the byte reads,
+  * not Jackson lexing, set that time. bson (reader unchanged, same six
+  * runs): flat direct 0.55–0.85 s vs tree 0.85–1.12; nested direct
+  * 0.69–0.79 vs tree 1.49–1.79 (about 2.2×). The token path's win is
+  * the per-doc tree it stops allocating, so it grows with document
+  * width/nesting.
   *
   * Usage: runMain graft.DecodeBench <sfDir> [reps]
   */

@@ -113,11 +113,12 @@ object SchemaInference {
     })
 
   /** Fold one ordered document stream into a type tree — the exact
-    * per-partition fold [[inferNodes]] runs. Exposed so an appender can
-    * maintain a per-file inference sidecar incrementally (each appended
-    * batch file's tree computed once, driver-side, from the bytes
-    * already in hand) instead of re-running a distributed inference job
-    * over every file on read-back.
+    * per-partition fold [[inferNodes]] runs. Exposed so a per-file
+    * inference sidecar can stand in for the distributed inference job.
+    * It has two users: the DocStore appender (each appended batch
+    * file's tree computed once, driver-side, from the bytes already in
+    * hand) and the OP_MSG wire client (each landed cursor batch file's
+    * tree, folded before the frame is loaded — `OpMsg.loadLanded`).
     * NullType seed: the first non-null-typed document wins (an empty
     * StructType seed would swallow scalar top-level values). */
   def typeTree(docs: Iterator[JsonNode]): DataType =

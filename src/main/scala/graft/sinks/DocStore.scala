@@ -3,6 +3,7 @@ package graft.sinks
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.mql.MqlException
+import graft.sources.GraftDocSource
 
 /** A flat collection store over a directory — the write target for the
   * `$out`/`$merge` pipeline tails ([[graft.mql.WriteStages]]) and the
@@ -537,22 +538,14 @@ final class DocStore(val spark: SparkSession, val dir: String,
   // and the reader falls back to the distributed inference.
 
   private def inferSidecarPath(name: String): Path =
-    new Path(path(name), DocStore.InferSidecarName)
+    new Path(path(name), GraftDocSource.InferSidecarName)
 
   private def readInferSidecar(name: String): Map[String, String] = {
     val p = inferSidecarPath(name)
     val f = fs
     if (!f.exists(p)) return Map.empty
     val in = f.open(p)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-               finally in.close()
-    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(text)
-    val files = node.get("files")
-    if (files == null) Map.empty
-    else {
-      import scala.jdk.CollectionConverters._
-      files.properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap
-    }
+    try GraftDocSource.readInferSidecar(in) finally in.close()
   }
 
   // in-memory twin of each collection's sidecar, seeded from disk on
@@ -591,13 +584,8 @@ final class DocStore(val spark: SparkSession, val dir: String,
       if (inferDirty.remove(name)) try {
         val entries = inferState.get(name)
         if (entries != null && exists(name)) {
-          val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-          val root = mapper.createObjectNode()
-          val files = root.putObject("files")
-          entries.toSeq.sortBy(_._1)
-            .foreach { case (k, v) => files.put(k, v): Unit }
           val out = fs.create(inferSidecarPath(name), true)
-          try out.write(mapper.writeValueAsString(root).getBytes("UTF-8"))
+          try GraftDocSource.writeInferSidecar(out, entries)
           finally out.close()
         }
       } catch {
@@ -612,10 +600,8 @@ final class DocStore(val spark: SparkSession, val dir: String,
   /** The appended batch's type tree, as DataType json (driver-side fold
     * over the bytes already in hand). */
   private def batchTree(docs: Array[Byte], from: Int = 0): String =
-    graft.bson.SchemaInference.typeTree(
-      graft.bson.BsonBinary.documents(
-        new java.io.ByteArrayInputStream(docs, from, docs.length - from))
-        .map(identity[com.fasterxml.jackson.databind.JsonNode])).json
+    GraftDocSource.bsonTree(
+      new java.io.ByteArrayInputStream(docs, from, docs.length - from))
 
   /** Enforce the cap after an append: drop whole head files while they
     * are fully past-budget, then rewrite at most one straddling file
@@ -1414,11 +1400,6 @@ object DocStore {
     * served at journal time. */
   final case class DdlEvent(op: String, coll: String, to: Option[String],
                             txnVersion: Long, at: Long)
-
-  /** Per-file inference sidecar maintained by [[DocStore.appendRaw]] and
-    * consumed by the graftdocs reader's schema inference (the name is
-    * shared, not the code — the reader works on any directory). */
-  val InferSidecarName = "_graft_infer.json"
 
   /** The store's FileSystem for metadata/append/commit operations. For
     * `file:` paths this is the RAW local filesystem: Hadoop's default

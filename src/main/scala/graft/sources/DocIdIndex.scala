@@ -159,26 +159,19 @@ object DocIdIndex {
         override def next(): Row = { val r = nextDoc; advance(); r }
       }
     } else {
-      // jsonl: byte-accurate line offsets; a line of zero bytes is not
-      // a row (the same criterion the scan's line iterator applies)
-      val buf = new java.io.BufferedInputStream(in, 1 << 16)
+      // jsonl: the scan's own line reader over the whole file — byte-
+      // accurate line offsets, and a line of zero bytes is not a row
+      val lines = new JsonlRawLines(in, 0L, fileLen)
       val mapper = graft.bson.DocDecoder.newMapper()
-      var offset = 0L
       new Iterator[Row] {
         private var nextDoc: Row = _
         private def advance(): Unit = {
-          var lineStart = offset
-          val bytes = new java.io.ByteArrayOutputStream(256)
-          var b = buf.read()
-          while (b == '\n') { lineStart += 1; b = buf.read() } // skip empties
-          if (b < 0) { nextDoc = null; in.close(); return }
-          while (b != -1 && b != '\n') { bytes.write(b); b = buf.read() }
-          val len = bytes.size()
-          val node = mapper.readTree(bytes.toByteArray)
+          val len = lines.nextNonEmpty()
+          if (len < 0) { nextDoc = null; lines.close(); return }
+          val node = mapper.readTree(lines.buffer, 0, len)
           val id = graft.bson.DocDecoder.convert(node.get(idCol), idField,
             strict = true)
-          nextDoc = Row(render(id), path, lineStart, len, fileLen, part)
-          offset = lineStart + len + (if (b == '\n') 1 else 0)
+          nextDoc = Row(render(id), path, lines.lineStart, len, fileLen, part)
         }
         advance()
         override def hasNext: Boolean = nextDoc != null

@@ -180,14 +180,46 @@ object GraftDocSource {
     }
   }
 
+  /** The per-file inference sidecar beside a directory's batch files:
+    * `{"files": {file name → type tree as DataType json}}`. Two writers
+    * keep one: [[graft.sinks.DocStore]]'s append paths (one tree per
+    * batch file, folded as the batch is appended) and the OP_MSG
+    * client's cursor landings ([[OpMsg.loadLanded]]). Both go through
+    * [[writeInferSidecar]]; [[sidecarSchema]] is the one reader. */
+  val InferSidecarName = "_graft_infer.json"
+
+  /** One BSON batch stream's type tree, as DataType json: the per-file
+    * fold the inference job runs ([[graft.bson.SchemaInference.typeTree]]
+    * over [[BsonBinary.documents]]). Raises what the job would raise on
+    * a malformed stream. */
+  private[graft] def bsonTree(in: java.io.InputStream): String =
+    graft.bson.SchemaInference.typeTree(BsonBinary.documents(in)).json
+
+  /** The sidecar's {file name → tree json} entries. */
+  private[graft] def readInferSidecar(in: java.io.InputStream): Map[String, String] = {
+    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(in)
+    Option(node.get("files")).toSeq
+      .flatMap(_.properties().asScala.map(e => e.getKey -> e.getValue.asText()))
+      .toMap
+  }
+
+  /** Write the sidecar format (entries sorted by file name) to `out`. */
+  private[graft] def writeInferSidecar(out: java.io.OutputStream,
+                                       trees: Map[String, String]): Unit = {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val root = mapper.createObjectNode()
+    val files = root.putObject("files")
+    trees.toSeq.sortBy(_._1).foreach { case (k, v) => files.put(k, v): Unit }
+    out.write(mapper.writeValueAsBytes(root))
+  }
+
   /** Some(schema) when ALL resolved files are .bson siblings in one
     * flat directory covered exactly by that directory's
-    * `_graft_infer.json` (maintained by DocStore.appendRaw: one type
-    * tree per batch file, folded driver-side from the bytes at append
-    * time). Merging the stored trees in file order is the same fold the
-    * distributed inference performs with one file per partition, so the
-    * result is byte-identical — this only short-circuits the job. Any
-    * structural mismatch returns None and the caller runs the job. */
+    * [[InferSidecarName]] sidecar. Merging the stored trees in file
+    * order is the same fold the distributed inference performs with one
+    * file per partition, so the result is byte-identical — this only
+    * short-circuits the job. Any structural mismatch returns None and
+    * the caller runs the job. */
   private[sources] def sidecarSchema(files: Seq[FileRef]): Option[StructType] =
     try {
       if (files.isEmpty || !files.forall(_.isBson)) return None
@@ -197,16 +229,10 @@ object GraftDocSource {
         return None
       if (DocPartitions.partitionCols(files).nonEmpty) return None
       val fs = parent.getFileSystem(activeHadoopConf())
-      val side = new Path(parent, graft.sinks.DocStore.InferSidecarName)
+      val side = new Path(parent, InferSidecarName)
       if (!fs.exists(side)) return None
       val in = fs.open(side)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-                 finally in.close()
-      val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(text)
-      val fNode = node.get("files")
-      if (fNode == null) return None
-      val entries = fNode.properties().asScala
-        .map(e => e.getKey -> e.getValue.asText()).toMap
+      val entries = try readInferSidecar(in) finally in.close()
       val names = paths.map(_.getName)
       if (entries.keySet != names.toSet) return None
       val trees = names.map(n =>
@@ -247,15 +273,16 @@ class GraftDocSource extends TableProvider with DataSourceRegister {
     val maxDocs = options.getLong("infermaxdocs", Long.MaxValue)
     if (maxDocs <= 0) throw new IllegalArgumentException(
       s"graftdocs: inferMaxDocs must be positive, got $maxDocs")
-    // append-maintained inference sidecar (DocStore.appendRaw keeps a
-    // per-FILE type tree beside the batch files): when every resolved
-    // file is covered, merging the stored trees in file order is
-    // byte-identical to the distributed fold below (same per-file
-    // trees, same merge, same order — one task per file means partition
-    // index = file order), so the read-back of an append-built
-    // collection skips the inference job entirely (guide §6). Any
-    // mismatch (extra/missing entries, hive layouts, jsonl, an
-    // inferMaxDocs sample bound, parse failure) falls through.
+    // inference sidecar (DocStore's appends and the OP_MSG client's
+    // cursor landings keep a per-FILE type tree beside the batch
+    // files): when every resolved file is covered, merging the stored
+    // trees in file order is byte-identical to the distributed fold
+    // below (same per-file trees, same merge, same order — one task per
+    // file means partition index = file order), so the read-back of an
+    // append-built collection or a wire frame skips the inference job
+    // entirely (guide §6). Any mismatch (extra/missing entries, hive
+    // layouts, jsonl, an inferMaxDocs sample bound, parse failure)
+    // falls through.
     if (maxDocs == Long.MaxValue) GraftDocSource.sidecarSchema(files) match {
       case Some(st) => return st
       case None => ()
@@ -698,7 +725,7 @@ private[sources] class GraftAggReaderFactory(aggs: Seq[PushedAgg],
 
   /** O(1) probe: does this file contain at least one document? (.bson: a
     * length prefix needs ≥5 bytes; .jsonl: any byte besides newlines —
-    * the exact row criterion countJsonlLines uses.) An empty batch
+    * the exact row criterion of JsonlRawLines.nextNonEmpty.) An empty batch
     * file's directory value is not a row and must not enter min/max. */
   private def hasDocs(p: GraftFilePartition): Boolean = {
     if (p.path.endsWith(".bson")) return p.end - p.start >= 5
@@ -802,7 +829,13 @@ private[sources] class GraftAggReaderFactory(aggs: Seq[PushedAgg],
           val fsIn = path.getFileSystem(conf.value).open(path)
           try {
             if (p.path.endsWith(".bson")) countBson(fsIn)
-            else countJsonlLines(fsIn, p.start, p.end)
+            else {
+              // the scan's own row set: every non-empty owned line
+              val lines = new JsonlRawLines(fsIn, p.start, p.end)
+              var n = 0L
+              while (lines.nextNonEmpty() >= 0) n += 1
+              n
+            }
           } finally fsIn.close()
         }
         // With pushed GROUP BY, a zero-row split must usually emit
@@ -872,35 +905,6 @@ private[sources] class GraftAggReaderFactory(aggs: Seq[PushedAgg],
         n += 1
       }
     }
-    n
-  }
-
-  /** Count NON-EMPTY lines whose first byte lies in [start, end) —
-    * the exact row set JsonlLineIterator would decode. */
-  private def countJsonlLines(fsIn: org.apache.hadoop.fs.FSDataInputStream,
-                              start: Long, end: Long): Long = {
-    var pos = if (start > 0) start - 1 else 0L
-    if (pos > 0) fsIn.seek(pos)
-    val in = new java.io.BufferedInputStream(fsIn, 1 << 16)
-    if (start > 0) { // discard through the split-leading newline
-      var b = in.read()
-      while (b != -1 && b != '\n') { pos += 1; b = in.read() }
-      if (b != -1) pos += 1
-    }
-    var n = 0L
-    var lineHasBytes = false
-    var lineStart = pos
-    var b = in.read()
-    while (b != -1 && lineStart < end) {
-      if (b == '\n') {
-        if (lineHasBytes) n += 1
-        pos += 1; lineStart = pos; lineHasBytes = false
-      } else {
-        pos += 1; lineHasBytes = true
-      }
-      b = in.read()
-    }
-    if (lineHasBytes && lineStart < end) n += 1 // unterminated final line
     n
   }
 }
@@ -2187,50 +2191,76 @@ private[sources] class PartitionFilledBatchReader(
   }
 }
 
-/** Newline-aligned split reader over a seekable stream: owns every line
-  * whose FIRST byte lies in [start, end). Seeks to start-1 and discards
-  * through the first newline: when the byte at start-1 IS a newline, the
-  * line beginning exactly at start is preserved (reading from start
-  * would wrongly discard it — no split would ever emit it); otherwise
-  * start landed mid-line and that line belongs to the previous split. */
-/** Byte-range line reader for split `.jsonl` files: the standard
-  * text-split contract (skip the partial first line unless at offset 0;
-  * own every line whose first byte precedes `end`, reading past `end` to
-  * finish the last owned line). Lines surface as raw UTF-8 bytes in a
-  * reused buffer — the direct token decoder parses them without a String
-  * alloc; the tree path wraps them into JsonNodes. */
+/** Byte-range line reader for split `.jsonl` files, under the standard
+  * text-split contract: skip the partial first line unless `start == 0`,
+  * own every line whose FIRST byte lies before `end`, and read past `end`
+  * to finish the last owned line. The skip seeks to `start - 1` and
+  * discards through the first newline, so a line beginning exactly at
+  * `start` (the byte before it IS a newline) stays with this split.
+  * The stream is read in [[JsonlRawLines.ChunkBytes]] chunks with
+  * `read(byte[])`; an array loop finds each `'\n'` and the line is
+  * copied out with `System.arraycopy` into a reused buffer as raw UTF-8
+  * — the direct token decoder parses it without a String alloc, the
+  * tree path wraps it into a JsonNode. Closing closes `fsIn`. */
 private[sources] final class JsonlRawLines(
     fsIn: org.apache.hadoop.fs.FSDataInputStream, start: Long, end: Long) {
+  private val chunk = new Array[Byte](JsonlRawLines.ChunkBytes)
+  private var chunkPos = 0 // next unread byte of chunk
+  private var chunkLen = 0 // valid bytes in chunk
+  // file offset of chunk(chunkPos): where the next line starts
   private var pos = if (start > 0) start - 1 else 0L
-  private val in = {
-    if (pos > 0) fsIn.seek(pos)
-    val buffered = new java.io.BufferedInputStream(fsIn, 1 << 16)
-    if (start > 0) {
-      var b = buffered.read()
-      while (b != -1 && b != '\n') { pos += 1; b = buffered.read() }
-      if (b != -1) pos += 1
-    }
-    buffered
-  }
+  private var lineAt = -1L
   private var buf = new Array[Byte](1 << 12)
+
+  if (pos > 0) fsIn.seek(pos)
+  if (start > 0) {
+    var skipping = true
+    while (skipping) {
+      val nl = newlineFrom(chunkPos)
+      pos += nl - chunkPos
+      if (nl < chunkLen) { chunkPos = nl + 1; pos += 1; skipping = false }
+      else { chunkPos = chunkLen; skipping = fill() }
+    }
+  }
+
+  /** Index of the first `'\n'` in chunk at or after `from`, else chunkLen. */
+  private def newlineFrom(from: Int): Int = {
+    var i = from
+    while (i < chunkLen && chunk(i) != '\n') i += 1
+    i
+  }
+
+  /** Refill the chunk; false at end of stream. */
+  private def fill(): Boolean = {
+    chunkPos = 0
+    chunkLen = math.max(fsIn.read(chunk, 0, chunk.length), 0)
+    chunkLen > 0
+  }
 
   /** Reused line buffer; valid for the length the last next*() returned. */
   def buffer: Array[Byte] = buf
+
+  /** File offset of the first byte of the line the last next*() returned. */
+  def lineStart: Long = lineAt
 
   /** Read the next owned line into [[buffer]]; returns its byte length,
     * or -1 when the split is exhausted (empty lines return 0). */
   def next(): Int = {
     if (pos >= end) return -1
-    var b = in.read()
-    if (b == -1) return -1
+    if (chunkPos == chunkLen && !fill()) return -1
+    lineAt = pos
     var n = 0
-    while (b != -1 && b != '\n') {
-      if (n == buf.length) buf = java.util.Arrays.copyOf(buf, buf.length * 2)
-      buf(n) = b.toByte
-      n += 1; pos += 1
-      b = in.read()
+    var more = true
+    while (more) {
+      val nl = newlineFrom(chunkPos)
+      val len = nl - chunkPos
+      if (n + len > buf.length)
+        buf = java.util.Arrays.copyOf(buf, math.max(buf.length * 2, n + len))
+      System.arraycopy(chunk, chunkPos, buf, n, len)
+      n += len; pos += len
+      if (nl < chunkLen) { chunkPos = nl + 1; pos += 1; more = false }
+      else { chunkPos = chunkLen; more = fill() }
     }
-    if (b != -1) pos += 1
     n
   }
 
@@ -2241,7 +2271,11 @@ private[sources] final class JsonlRawLines(
     n
   }
 
-  def close(): Unit = in.close()
+  def close(): Unit = fsIn.close()
+}
+
+private[sources] object JsonlRawLines {
+  val ChunkBytes: Int = 1 << 16
 }
 
 private[sources] class JsonlLineIterator(

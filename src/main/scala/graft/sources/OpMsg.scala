@@ -3749,7 +3749,9 @@ object OpMsg {
     * find → getMore cursor loop on ONE connection, land every batch's
     * raw documents in a batch file, decode through the normal graftdocs
     * scan, re-apply residuals client-side (limit rides the wire only
-    * with zero residuals — the containment contract OpMsgSpec pins). */
+    * with zero residuals — the containment contract OpMsgSpec pins).
+    * The frame's schema is folded from the landed documents before the
+    * load ([[loadLanded]]), so returning it runs no Spark job. */
   def find(spark: SparkSession, host: String, port: Int, db: String,
            coll: String, filters: Seq[Filter] = Seq.empty,
            limit: Option[Int] = None, batchSize: Int = 101,
@@ -3776,7 +3778,7 @@ object OpMsg {
         // nothing to infer from: an empty frame with no columns (the
         // caller filters produced no rows — same shape as an empty find)
         spark.emptyDataFrame
-      } else spark.read.format("graftdocs").load(dir.toString)
+      } else loadLanded(spark, dir)
     val filtered = residual.foldLeft(decoded)((df, f) =>
       df.where(filterToColumn(f)))
     if (serverLimit.isEmpty) limit.map(filtered.limit).getOrElse(filtered)
@@ -3787,7 +3789,8 @@ object OpMsg {
     * (aggregate_raw_batches, api.py:252): the pipeline document crosses
     * as BSON inside the aggregate command, the server runs it through
     * the engine's own PipelineCompiler, and the result documents come
-    * back through the same cursor loop and raw-batch decode. */
+    * back through the same cursor loop and raw-batch decode, the
+    * schema folded from the landed documents as for [[find]]. */
   def aggregate(spark: SparkSession, host: String, port: Int, db: String,
                 coll: String, pipelineJson: String, batchSize: Int = 101,
                 credentials: Option[(String, String)] = None,
@@ -3811,14 +3814,15 @@ object OpMsg {
         compress = compress, exhaust = exhaust, checksum = checksum,
         compressor = compressor)
     if (total == 0) spark.emptyDataFrame
-    else spark.read.format("graftdocs").load(dir.toString)
+    else loadLanded(spark, dir)
   }
 
   /** `$changeStream` over the wire — the watch entry point: opens a
     * TAILABLE change cursor via `aggregate([{$changeStream: {...}},
     * ...rest])`, drives getMore until the server reports caught-up (an
     * empty `nextBatch`), kills the cursor, and decodes the landed
-    * change documents through the normal graftdocs scan. Returns the
+    * change documents through the normal graftdocs scan (schema folded
+    * from the landed documents, as for [[find]]). Returns the
     * frame plus the final `postBatchResumeToken` — persist it and pass
     * it back as `resumeAfter` to continue past this point with no loss
     * or duplication (OpMsgWatchSpec pins the mid-stream-kill replay).
@@ -3842,7 +3846,7 @@ object OpMsg {
       startAfter, tokenFormat)
     val df =
       if (total == 0) { deleteDir(dir); spark.emptyDataFrame }
-      else spark.read.format("graftdocs").load(dir.toString)
+      else loadLanded(spark, dir)
     (df, token)
   }
 
@@ -4293,9 +4297,10 @@ object OpMsg {
     * half-open key ranges from server-side quantiles (splitVector),
     * drive ONE full find → getMore cursor per range concurrently, land
     * every range's batches in one directory, decode through a single
-    * graftdocs scan (one Spark partition per landed batch file), and
-    * re-apply residuals client-side. Ranges share endpoints, so their
-    * union is exactly the filtered collection. */
+    * graftdocs scan (one Spark partition per landed batch file; the
+    * schema folded per file, as for [[find]]), and re-apply residuals
+    * client-side. Ranges share endpoints, so their union is exactly the
+    * filtered collection. */
   def findParallel(spark: SparkSession, host: String, port: Int, db: String,
                    coll: String, splitKey: String, numSplits: Int,
                    filters: Seq[Filter] = Seq.empty,
@@ -4364,7 +4369,7 @@ object OpMsg {
     } finally pool.shutdown()
     val decoded =
       if (total == 0) spark.emptyDataFrame
-      else spark.read.format("graftdocs").load(dir.toString)
+      else loadLanded(spark, dir)
     val filtered = residual.foldLeft(decoded)((df, f) =>
       df.where(filterToColumn(f)))
     limit.map(filtered.limit).getOrElse(filtered)
@@ -4431,6 +4436,37 @@ object OpMsg {
       // ServerKey fails here even if it accepted our proof
       cl.verifyServerFinal(bin(field(r2, "payload")))
     }
+  }
+
+  /** Load a landing directory through the graftdocs scan with the
+    * schema the inference job would infer, without the job: each landed
+    * batch file's type tree ([[GraftDocSource.bsonTree]], the job's own
+    * per-file fold) goes into the directory's inference sidecar first,
+    * so the load resolves the schema driver-side
+    * ([[GraftDocSource.sidecarSchema]]). The sidecar is only an
+    * optimisation: if a fold fails (a truncated document), none is
+    * written and the load runs the job, which raises as it always did.
+    * The sidecar is registered for deletion at JVM exit after the
+    * directory, so it goes first and the directory still empties. */
+  private[sources] def loadLanded(spark: SparkSession,
+                                  dir: java.nio.file.Path): DataFrame = {
+    val side = dir.resolve(GraftDocSource.InferSidecarName)
+    try {
+      val files = Option(dir.toFile.listFiles()).toSeq.flatten
+        .filter(_.getName.endsWith(".bson"))
+      val trees = files.map { f =>
+        val in = new BufferedInputStream(
+          java.nio.file.Files.newInputStream(f.toPath), 1 << 16)
+        try f.getName -> GraftDocSource.bsonTree(in) finally in.close()
+      }.toMap
+      side.toFile.deleteOnExit()
+      val out = java.nio.file.Files.newOutputStream(side)
+      try GraftDocSource.writeInferSidecar(out, trees) finally out.close()
+    } catch { case scala.util.control.NonFatal(_) =>
+      try java.nio.file.Files.deleteIfExists(side): Unit
+      catch { case scala.util.control.NonFatal(_) => () }
+    }
+    spark.read.format("graftdocs").load(dir.toString)
   }
 
   /** Drive one command's full cursor (handshake, first reply, getMore
