@@ -258,8 +258,6 @@ private[sources] class GraftWireDataWriter(schema: StructType,
   private val channel = new OpMsg.InsertChannel(conn.host, conn.port,
     conn.db, conn.coll, conn.credentials, conn.tls, conn.compress,
     conn.checksum, conn.compressor)
-  private val MaxDocs = 100000
-  private val MaxBytes = 16L * 1024 * 1024
   private var batch = Seq.newBuilder[Array[Byte]]
   private var nDocs = 0
   private var nBytes = 0L
@@ -271,7 +269,8 @@ private[sources] class GraftWireDataWriter(schema: StructType,
     val doc = graft.bson.BsonBinary.encodeRow(row, schema)
     batch += doc
     nDocs += 1; nBytes += doc.length
-    if (nDocs >= MaxDocs || nBytes >= MaxBytes) flush()
+    if (nDocs >= OpMsg.MaxWriteBatchDocs || nBytes >= OpMsg.MaxBsonObjectSize)
+      flush()
   }
   private def flush(): Unit = {
     // txnNumber = (epochId << 20) + flushIndex: past 2^20 flushes in

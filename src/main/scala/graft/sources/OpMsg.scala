@@ -38,6 +38,9 @@ object OpMsg {
   private val OpMsgCode = 2013
   private val OpCompressedCode = 2012
   private val MaxMessage = 48 * 1024 * 1024 // mongod's maxMessageSizeBytes
+  // mongod's write-batch limits, which the client's insert batching keeps
+  private[sources] val MaxWriteBatchDocs = 100000 // maxWriteBatchSize
+  private[sources] val MaxBsonObjectSize = 16 * 1024 * 1024 // maxBsonObjectSize
 
   // OP_MSG flagBits this implementation speaks (wire spec):
   //   bit 0  checksumPresent — message ends with a CRC-32C of the
@@ -2011,25 +2014,28 @@ object OpMsg {
               if (sys.env.contains("GRAFT_OPMSG_DEBUG")) e.printStackTrace()
               Some(buildErrorReply(String.valueOf(e.getMessage)))
           }
-        handled.foreach { reply =>
-          // mirror the request's compression (same compressor) and
-          // checksumming (negotiation gates the client ever sending
-          // compressed in the first place); every reply — success or
-          // error — carries the cluster-time gossip, mongod-style
-          writeFrame(out, f.requestId + 1000000, f.requestId,
-            gossip(reply),
-            flags = 0, compress = f.wasCompressed,
-            checksum = f.wasChecksummed,
-            compressor = if (f.wasCompressed) f.compressorId
-                         else CompressorZlib)
-        }
+        handled.foreach(r => reply(out, f, r, f.requestId + 1000000))
         next = readFrame(in)
       }
     }
 
+    /** The one reply writer: answers request `f` with `doc` under
+      * `requestId`, mirroring the request's compression (same
+      * compressor) and checksumming (negotiation gates the client ever
+      * sending compressed in the first place). Every reply — success,
+      * error or exhaust stream — carries the cluster-time gossip,
+      * mongod-style. */
+    private def reply(out: OutputStream, f: Frame, doc: Array[Byte],
+                      requestId: Int, flags: Int = 0): Unit =
+      writeFrame(out, requestId, f.requestId, gossip(doc), flags,
+        compress = f.wasCompressed, checksum = f.wasChecksummed,
+        compressor = if (f.wasCompressed) f.compressorId else CompressorZlib)
+
     /** Exhaust getMore (flag bit 16): stream every remaining batch as
       * replies with moreToCome set, final reply (cursor drained)
-      * without it — all responding to the ONE exhaust request. */
+      * without it — all responding to the ONE exhaust request. A
+      * refusal throws before any frame is written, so [[serve]] answers
+      * it like any other command error. */
     private def serveExhaust(f: Frame, cmd: JObject,
                              out: OutputStream): Unit = {
       val fields = cmd.obj.toMap
@@ -2040,36 +2046,16 @@ object OpMsg {
           s"getMore id must be int64, got $other")
       }
       val c = cursors.get(id)
-      if (c == null) {
-        writeFrame(out, f.requestId + 1000000, f.requestId,
-          buildErrorReply(s"cursor id $id not found", CursorNotFound),
-          flags = 0, compress = f.wasCompressed,
-          checksum = f.wasChecksummed,
-          compressor = if (f.wasCompressed) f.compressorId
-                       else CompressorZlib)
-        return
-      }
-      if (c.tail.isDefined || c.capTail.isDefined) {
-        // a tailable cursor never drains — an exhaust stream over it
-        // would never terminate; mongod drivers use awaitData getMore
-        writeFrame(out, f.requestId + 1000000, f.requestId,
-          buildErrorReply("exhaust is not supported on change streams " +
-            "(tailable cursors never drain; drive getMore instead)"),
-          flags = 0, compress = f.wasCompressed,
-          checksum = f.wasChecksummed,
-          compressor = if (f.wasCompressed) f.compressorId
-                       else CompressorZlib)
-        return
-      }
-      if (!c.pinned.compareAndSet(false, true)) {
-        writeFrame(out, f.requestId + 1000000, f.requestId,
-          buildErrorReply(s"cursor id $id is already in use", CursorInUse),
-          flags = 0, compress = f.wasCompressed,
-          checksum = f.wasChecksummed,
-          compressor = if (f.wasCompressed) f.compressorId
-                       else CompressorZlib)
-        return
-      }
+      if (c == null) throw new CommandError(
+        s"cursor id $id not found", CursorNotFound, null)
+      // a tailable cursor never drains — an exhaust stream over it
+      // would never terminate; mongod drivers use awaitData getMore
+      if (c.tail.isDefined || c.capTail.isDefined)
+        throw new IllegalArgumentException(
+          "exhaust is not supported on change streams " +
+            "(tailable cursors never drain; drive getMore instead)")
+      if (!c.pinned.compareAndSet(false, true)) throw new CommandError(
+        s"cursor id $id is already in use", CursorInUse, null)
       try {
         var rid = f.requestId + 1000000
         var more = true
@@ -2078,12 +2064,9 @@ object OpMsg {
           more = c.rows.hasNext
           if (more) c.lastUsed = System.nanoTime()
           else cursors.remove(id): Unit
-          writeFrame(out, rid, f.requestId,
+          reply(out, f,
             buildCursorReply(if (more) id else 0L, c.ns, "nextBatch", batch),
-            flags = if (more) FlagMoreToCome else 0,
-            compress = f.wasCompressed, checksum = f.wasChecksummed,
-            compressor = if (f.wasCompressed) f.compressorId
-                         else CompressorZlib)
+            rid, flags = if (more) FlagMoreToCome else 0)
           rid += 1
         }
       } finally c.pinned.set(false)
@@ -2195,7 +2178,7 @@ object OpMsg {
           "logicalSessionTimeoutMinutes" -> JInt(30),
           "localTime" -> JObject(List(
             "$date" -> JLong(System.currentTimeMillis()))),
-          "maxBsonObjectSize" -> JInt(16777216),
+          "maxBsonObjectSize" -> JInt(MaxBsonObjectSize),
           "maxMessageSizeBytes" -> JInt(MaxMessage),
           "maxWireVersion" -> JInt(17),
           "minWireVersion" -> JInt(0)) ++
@@ -2237,7 +2220,7 @@ object OpMsg {
         return encodeDoc(JObject(List(
           "version" -> JString("7.0.0-graft"),
           "gitVersion" -> JString("graft-opmsg-standin"),
-          "maxBsonObjectSize" -> JInt(16777216),
+          "maxBsonObjectSize" -> JInt(MaxBsonObjectSize),
           "ok" -> JDouble(1.0))))
       // mongosh's connect-time chatter: whatsmyuri / connectionStatus /
       // getParameter / getLog — answered with the stand-in's real
@@ -3744,6 +3727,164 @@ object OpMsg {
   }
 
   // ---- client -------------------------------------------------------------
+  //
+  // Every client entry point talks through one [[Connection]], as the
+  // reference's find/aggregate/insert ride one pymongo connection: it
+  // dials, runs the hello/SCRAM handshake, numbers the requests, checks
+  // that each reply answers its request, drives getMore and killCursors,
+  // and holds the one `ok` check. Cursor replies stay raw bytes for
+  // [[parseCursorReply]]; only non-cursor replies are decoded to a tree.
+
+  /** One client connection. The constructor dials (TLS when `tls` names
+    * a trust store) and runs the [[handshake]]; OP_COMPRESSED switches
+    * on only after it, so hello and SASL always cross uncompressed (wire
+    * spec). With `checksum` every request carries a CRC-32C. */
+  private[sources] final class Connection(
+      host: String, port: Int, db: String,
+      credentials: Option[(String, String)],
+      tls: Option[(String, String)],
+      compress: Boolean = false, checksum: Boolean = false,
+      compressor: String = "zlib") {
+    private val compId = compressorId(compressor)
+    private val sock = clientSocket(host, port, tls)
+    private val in = new BufferedInputStream(sock.getInputStream, 1 << 16)
+    private val out = new BufferedOutputStream(sock.getOutputStream, 1 << 16)
+    private var reqId = 0
+    private var compressOn = false
+    try { handshake(); compressOn = compress }
+    catch { case e: Throwable => sock.close(); throw e }
+
+    /** Send `cmd` as the next request and read the reply answering it.
+      * The reply may carry flag bits only when `flags` allowed an
+      * exhaust stream, whose later frames [[next]] reads. */
+    def roundTrip(cmd: JObject, flags: Int = 0,
+                  sequences: Seq[(String, Seq[Array[Byte]])] = Nil): Frame = {
+      reqId += 1
+      writeFrame(out, reqId, 0, encodeDoc(cmd), flags, compress = compressOn,
+        checksum = checksum, compressor = compId, sequences = sequences)
+      val f = next()
+      if (f.flags != 0 && (flags & FlagExhaustAllowed) == 0)
+        throw new IllegalArgumentException(
+          s"OP_MSG: unexpected flagBits 0x${f.flags.toHexString} " +
+            "on a non-exhaust exchange")
+      f
+    }
+
+    /** The next frame answering the last request. */
+    def next(): Frame = {
+      val f = readFrame(in).getOrElse(
+        throw new EOFException("server closed the connection"))
+      if (f.responseTo != reqId) throw new IllegalStateException(
+        s"responseTo ${f.responseTo} does not match requestID $reqId")
+      f
+    }
+
+    /** One getMore on cursor `id`. `maxTimeMS` > 0 bounds a tailable
+      * cursor's awaitData wait; `exhaust` lets the server stream the
+      * rest of the cursor as moreToCome replies. */
+    def getMore(id: Long, coll: String, batchSize: Int, maxTimeMS: Long = 0L,
+                exhaust: Boolean = false): Frame =
+      roundTrip(JObject(List(
+        "getMore" -> JLong(id),
+        "collection" -> JString(coll),
+        "batchSize" -> JInt(batchSize)) ++
+        (if (maxTimeMS > 0) List("maxTimeMS" -> JLong(maxTimeMS)) else Nil) ++
+        List("$db" -> JString(db))),
+        flags = if (exhaust) FlagExhaustAllowed else 0)
+
+    /** Best-effort killCursors: a failure is swallowed, so it never masks
+      * the error that made the caller give the cursor up. */
+    def kill(id: Long, coll: String): Unit =
+      try roundTrip(JObject(List(
+        "killCursors" -> JString(coll),
+        "cursors" -> JArray(List(JLong(id))),
+        "$db" -> JString(db)))): Unit
+      catch { case scala.util.control.NonFatal(_) => () }
+
+    /** Run one non-cursor command on `db` and return its decoded reply;
+      * a refusal raises IllegalArgumentException (see [[ok]]). */
+    def command(cmd: JObject,
+                sequences: Seq[(String, Seq[Array[Byte]])] = Nil)
+        : Map[String, JValue] =
+      ok(cmd, decodeDoc(roundTrip(JObject(cmd.obj :+ ("$db" -> JString(db))),
+        sequences = sequences).doc).obj.toMap)
+
+    def close(): Unit = sock.close()
+
+    /** The one `ok` check: `reply` unless the server refused `cmd`, in
+      * which case `refused` gets `<command> failed: [codeName] errmsg`
+      * plus `labels=…` when the reply carries errorLabels. */
+    private def ok(cmd: JObject, reply: Map[String, JValue],
+                   refused: String => Exception = new IllegalArgumentException(_))
+        : Map[String, JValue] = {
+      if (reply.get("ok").contains(JDouble(1.0))) return reply
+      def text(k: String): Option[String] =
+        reply.get(k).collect { case JString(s) => s }
+      val labels = reply.get("errorLabels") match {
+        case Some(JArray(ls)) => ls.collect { case JString(s) => s }
+        case _ => Nil
+      }
+      throw refused(s"${cmd.obj.headOption.fold("command")(_._1)} failed: " +
+        text("codeName").fold("")(c => s"[$c] ") +
+        text("errmsg").getOrElse(org.json4s.jackson.JsonMethods.compact(
+          org.json4s.jackson.JsonMethods.render(JObject(reply.toList)))) +
+        (if (labels.isEmpty) "" else labels.mkString(" labels=", ",", "")))
+    }
+
+    /** `hello` compressor negotiation, then SCRAM-SHA-256 mutual auth
+      * when credentialed. Raises if the server refuses the compressor
+      * (IllegalArgumentException) or the authentication
+      * (SecurityException). */
+    private def handshake(): Unit = {
+      if (compress) {
+        val hello = decodeDoc(roundTrip(JObject(List(
+          "hello" -> JInt(1),
+          "compression" -> JArray(List(JString(compressor))),
+          "$db" -> JString(db)))).doc)
+        val granted = hello.obj.toMap.get("compression") match {
+          case Some(JArray(es)) => es.contains(JString(compressor))
+          case _ => false
+        }
+        if (!granted) throw new IllegalArgumentException(
+          s"server did not negotiate $compressor compression")
+      }
+      credentials.foreach { case (user, password) =>
+        def bin(v: Option[JValue]): String = v match {
+          case Some(JObject(List(("$binary", JString(b64))))) =>
+            new String(java.util.Base64.getDecoder.decode(b64), "UTF-8")
+          case other => throw new SecurityException(
+            s"sasl reply payload malformed: $other")
+        }
+        def sasl(cmd: JObject): Map[String, JValue] =
+          ok(cmd, decodeDoc(roundTrip(cmd).doc).obj.toMap,
+            new SecurityException(_))
+        def payload(s: String): JValue =
+          JObject(List("$binary" -> JString(
+            java.util.Base64.getEncoder.encodeToString(s.getBytes("UTF-8")))))
+        val cl = new Scram.Client(user, password)
+        val r1 = sasl(JObject(List(
+          "saslStart" -> JInt(1),
+          "mechanism" -> JString("SCRAM-SHA-256"),
+          "payload" -> payload(cl.clientFirst),
+          "$db" -> JString(db))))
+        val r2 = sasl(JObject(List(
+          "saslContinue" -> JInt(1),
+          "conversationId" -> JInt(1),
+          "payload" -> payload(cl.clientFinal(bin(r1.get("payload")))),
+          "$db" -> JString(db))))
+        // verify the SERVER's signature — a fake server without
+        // ServerKey fails here even if it accepted our proof
+        cl.verifyServerFinal(bin(r2.get("payload")))
+      }
+    }
+  }
+
+  /** The `{lsid, txnNumber}` fields of a retryable write's `session`. */
+  private def sessionFields(session: Option[(String, Long)])
+      : List[(String, JValue)] =
+    session.toList.flatMap { case (sid, txn) => List(
+      "lsid" -> JObject(List("id" -> JString(sid))),
+      "txnNumber" -> JLong(txn)) }
 
   /** OP_MSG `find`: translate the pushed filters, drive the full
     * find → getMore cursor loop on ONE connection, land every batch's
@@ -3886,31 +4027,12 @@ object OpMsg {
         JObject(List("$changeStream" -> csOpts)) :: rest),
       "cursor" -> JObject(List("batchSize" -> JInt(batchSize))),
       "$db" -> JString(db)))
-    val dir = java.nio.file.Files.createTempDirectory("graft_opmsgw")
-    dir.toFile.deleteOnExit()
-    val file = dir.resolve("batches.bson")
-    file.toFile.deleteOnExit()
-    val os = java.nio.file.Files.newOutputStream(file)
-    val conn = clientSocket(host, port, tls)
+    val conn = new Connection(host, port, db, credentials, tls)
+    val (dir, os) = landing("graft_opmsgw")
     var total = 0L
     var token = resumeAfter.getOrElse("")
     try {
-      val cin = new BufferedInputStream(conn.getInputStream, 1 << 16)
-      val cout = new BufferedOutputStream(conn.getOutputStream, 1 << 16)
-      var reqId = 0
-      def roundTrip(c: JObject): Array[Byte] = {
-        reqId += 1
-        writeFrame(cout, reqId, 0, encodeDoc(c), flags = 0,
-          compress = false)
-        val (_, rto, body) = readMessage(cin).getOrElse(
-          throw new EOFException("server closed the connection"))
-        if (rto != reqId) throw new IllegalStateException(
-          s"responseTo $rto does not match requestID $reqId")
-        body
-      }
-      handshake((c, _) => roundTrip(c), db, credentials,
-        compress = false, compressor = "zlib")
-      var reply = roundTrip(cmd)
+      var reply = conn.roundTrip(cmd).doc
       var (cursorId, docs) = parseCursorReply(reply)
       parseResumeToken(reply).foreach(token = _)
       docs.foreach(d => os.write(d)); total += docs.size
@@ -3924,12 +4046,7 @@ object OpMsg {
         // the server's awaitData window stayed quiet — "follow until
         // idle for awaitMs", the driver-side change-stream poll shape
         while (docs.nonEmpty && cursorId != 0L) {
-          reply = roundTrip(JObject(List(
-            "getMore" -> JLong(cursorId),
-            "collection" -> JString(coll),
-            "batchSize" -> JInt(batchSize)) ++
-            (if (awaitMs > 0) List("maxTimeMS" -> JLong(awaitMs)) else Nil) ++
-            List("$db" -> JString(db))))
+          reply = conn.getMore(cursorId, coll, batchSize, awaitMs).doc
           val (nid, more) = parseCursorReply(reply)
           if (nid != 0L && nid != cursorId) throw new IllegalStateException(
             "tailable cursor id changed mid-stream")
@@ -3938,14 +4055,8 @@ object OpMsg {
           docs = more
           cursorId = nid
         }
-      } finally if (cursorId != 0L) {
         // change cursors never drain server-side: always kill
-        try roundTrip(JObject(List(
-          "killCursors" -> JString(coll),
-          "cursors" -> JArray(List(JLong(cursorId))),
-          "$db" -> JString(db)))): Unit
-        catch { case scala.util.control.NonFatal(_) => () }
-      }
+      } finally if (cursorId != 0L) conn.kill(cursorId, coll)
     } finally { os.close(); conn.close() }
     (dir, total, token)
   }
@@ -3964,8 +4075,8 @@ object OpMsg {
              tls: Option[(String, String)] = None,
              compress: Boolean = false, checksum: Boolean = false,
              compressor: String = "zlib",
-             maxBatchDocs: Int = 100000,
-             maxBatchBytes: Long = 16L * 1024 * 1024,
+             maxBatchDocs: Int = MaxWriteBatchDocs,
+             maxBatchBytes: Long = MaxBsonObjectSize,
              perPartition: Boolean = false): Long = {
     require(maxBatchDocs > 0 && maxBatchBytes > 0, "positive batch limits")
     val schema = df.schema
@@ -3992,75 +4103,36 @@ object OpMsg {
     }
   }
 
-  /** One authenticated insert connection: constructor runs the
-    * hello/SCRAM handshake; [[send]] ships one batch as an insert
-    * command with a kind-1 "documents" sequence and returns the
-    * server-acknowledged count. Used by the imperative [[insert]] and
-    * the graftwire DSv2 writer (one channel per task). */
+  /** One insert connection: a [[Connection]] bound to `coll`;
+    * [[send]] ships one batch as an insert command with a kind-1
+    * "documents" sequence and returns the server-acknowledged count.
+    * Used by the imperative [[insert]] and the graftwire DSv2 writer
+    * (one channel per task). */
   private[sources] final class InsertChannel(
       host: String, port: Int, db: String, coll: String,
       credentials: Option[(String, String)],
       tls: Option[(String, String)],
       compress: Boolean, checksum: Boolean, compressor: String) {
-    private val conn = clientSocket(host, port, tls)
-    private val cin = new BufferedInputStream(conn.getInputStream, 1 << 16)
-    private val cout = new BufferedOutputStream(conn.getOutputStream, 1 << 16)
-    private var reqId = 0
-    private var compressOn = false
-    private val compId = compressorId(compressor)
-    private def roundTrip(cmd: JObject, mayCompress: Boolean): Array[Byte] = {
-      reqId += 1
-      writeFrame(cout, reqId, 0, encodeDoc(cmd), flags = 0,
-        compress = compressOn && mayCompress, checksum = checksum,
-        compressor = compId)
-      val (_, rto, body) = readMessage(cin).getOrElse(
-        throw new EOFException("server closed the connection"))
-      if (rto != reqId) throw new IllegalStateException(
-        s"responseTo $rto does not match requestID $reqId")
-      body
-    }
-    handshake(roundTrip, db, credentials, compress, compressor)
-    compressOn = compress
+    private val conn = new Connection(host, port, db, credentials, tls,
+      compress, checksum, compressor)
 
     /** Ship one batch as an insert command. With `session` the command
       * carries {lsid, txnNumber} — the server acknowledges a replayed
       * pair from its transaction log without re-applying (retryable
       * writes; the streaming sink's effectively-once mechanism). */
     def send(batch: Seq[Array[Byte]],
-             session: Option[(String, Long)] = None): Long = {
-      if (batch.isEmpty) return 0L
-      reqId += 1
-      writeFrame(cout, reqId, 0, encodeDoc(JObject(List(
+             session: Option[(String, Long)] = None): Long =
+      if (batch.isEmpty) 0L
+      else replyLong(conn.command(JObject(List(
         "insert" -> JString(coll),
-        "ordered" -> JBool(true)) ++
-        session.toList.flatMap { case (sid, txn) => List(
-          "lsid" -> JObject(List("id" -> JString(sid))),
-          "txnNumber" -> JLong(txn)) } ++
-        List("$db" -> JString(db)))),
-        flags = 0, compress = compressOn, checksum = checksum,
-        compressor = compId, sequences = Seq("documents" -> batch))
-      val (_, rto, body) = readMessage(cin).getOrElse(
-        throw new EOFException("server closed during insert"))
-      if (rto != reqId) throw new IllegalStateException(
-        s"responseTo $rto does not match requestID $reqId")
-      val reply = decodeDoc(body).obj.toMap
-      reply.get("ok") match {
-        case Some(JDouble(1.0)) => ()
-        case _ => throw new IllegalArgumentException(
-          s"insert failed: ${reply.get("errmsg")}")
-      }
-      reply.get("n") match {
-        case Some(JInt(n)) => n.toLong
-        case Some(JLong(n)) => n
-        case _ => 0L
-      }
-    }
+        "ordered" -> JBool(true)) ++ sessionFields(session)),
+        Seq("documents" -> batch)), "n")
     def close(): Unit = conn.close()
   }
 
-  /** One connection's insert loop: handshake, then batched insert
-    * commands with kind-1 "documents" sequences. Runs on the driver or
-    * inside an executor task (perPartition). */
+  /** One [[InsertChannel]]'s insert loop: batched insert commands with
+    * kind-1 "documents" sequences. Runs on the driver or inside an
+    * executor task (perPartition). */
   private def insertIterator(host: String, port: Int, db: String,
                              coll: String,
                              rows: Iterator[org.apache.spark.sql.Row],
@@ -4103,57 +4175,20 @@ object OpMsg {
   final case class UpdateResult(nMatched: Long, nModified: Long,
                                 upsertedIds: Seq[JValue])
 
-  /** One-shot authenticated command round trip on its own connection:
-    * hello (+SCRAM when credentialed), ONE command, decoded reply.
-    * Throws on `ok != 1`. The driver-compat surface behind [[update]] /
-    * [[delete]] / [[findAndModify]]. */
+  /** One command on a fresh [[Connection]], its reply decoded; a
+    * refusal raises `<command> failed: …` (the connection's one `ok`
+    * check). The driver-compat surface behind [[update]] / [[delete]] /
+    * [[findAndModify]] / [[splitBounds]]. */
   def command(host: String, port: Int, db: String, cmd: JObject,
               credentials: Option[(String, String)] = None,
               tls: Option[(String, String)] = None,
               compress: Boolean = false, checksum: Boolean = false,
               compressor: String = "zlib",
               session: Option[(String, Long)] = None): Map[String, JValue] = {
-    val conn = clientSocket(host, port, tls)
-    try {
-      val cin = new BufferedInputStream(conn.getInputStream, 1 << 16)
-      val cout = new BufferedOutputStream(conn.getOutputStream, 1 << 16)
-      var reqId = 0
-      var compressOn = false
-      val compId = compressorId(compressor)
-      def roundTrip(c: JObject, mayCompress: Boolean): Array[Byte] = {
-        reqId += 1
-        writeFrame(cout, reqId, 0, encodeDoc(c), flags = 0,
-          compress = compressOn && mayCompress, checksum = checksum,
-          compressor = compId)
-        val (_, rto, body) = readMessage(cin).getOrElse(
-          throw new EOFException("server closed the connection"))
-        if (rto != reqId) throw new IllegalStateException(
-          s"responseTo $rto does not match requestID $reqId")
-        body
-      }
-      handshake(roundTrip, db, credentials, compress, compressor)
-      compressOn = compress
-      val full = JObject(cmd.obj ++
-        session.toList.flatMap { case (sid, txn) => List(
-          "lsid" -> JObject(List("id" -> JString(sid))),
-          "txnNumber" -> JLong(txn)) } ++
-        List("$db" -> JString(db)))
-      val reply = decodeDoc(roundTrip(full, true)).obj.toMap
-      reply.get("ok") match {
-        case Some(JDouble(ok)) if ok == 1.0 => reply
-        case _ =>
-          val cn = reply.get("codeName")
-            .collect { case JString(s) => s"[$s] " }.getOrElse("")
-          val labels = reply.get("errorLabels") match {
-            case Some(JArray(ls)) => ls.collect { case JString(s) => s }
-            case _ => Nil
-          }
-          throw new IllegalArgumentException(
-            s"command failed: $cn${reply.get("errmsg").getOrElse(reply)}" +
-              (if (labels.isEmpty) ""
-               else labels.mkString(" labels=", ",", "")))
-      }
-    } finally conn.close()
+    val conn = new Connection(host, port, db, credentials, tls, compress,
+      checksum, compressor)
+    try conn.command(JObject(cmd.obj ++ sessionFields(session)))
+    finally conn.close()
   }
 
   private def replyLong(reply: Map[String, JValue], key: String): Long =
@@ -4251,46 +4286,21 @@ object OpMsg {
   def splitBounds(host: String, port: Int, db: String, coll: String,
                   key: String, numSplits: Int,
                   credentials: Option[(String, String)] = None,
-                  tls: Option[(String, String)] = None): Seq[Double] = {
-    val conn = clientSocket(host, port, tls)
-    try {
-      val cin = new BufferedInputStream(conn.getInputStream, 1 << 16)
-      val cout = new BufferedOutputStream(conn.getOutputStream, 1 << 16)
-      var reqId = 0
-      def roundTrip(cmd: JObject, mayCompress: Boolean): Array[Byte] = {
-        reqId += 1
-        writeFrame(cout, reqId, 0, encodeDoc(cmd), flags = 0,
-          compress = false)
-        val (_, rto, body) = readMessage(cin).getOrElse(
-          throw new EOFException("server closed the connection"))
-        if (rto != reqId) throw new IllegalStateException(
-          s"responseTo $rto does not match requestID $reqId")
-        body
-      }
-      handshake(roundTrip, db, credentials, compress = false, "zlib")
-      val reply = decodeDoc(roundTrip(JObject(List(
-        "splitVector" -> JString(coll),
-        "key" -> JString(key),
-        "n" -> JInt(numSplits),
-        "$db" -> JString(db))), true)).obj.toMap
-      reply.get("ok") match {
-        case Some(JDouble(1.0)) => ()
-        case _ => throw new IllegalArgumentException(
-          s"splitVector failed: ${reply.get("errmsg")}")
-      }
-      reply.get("splitKeys") match {
-        case Some(JArray(es)) => es.map {
-          case JDouble(d) => d
-          case JInt(i) => i.toDouble
-          case JLong(l) => l.toDouble
-          case other => throw new IllegalArgumentException(
-            s"splitKeys carries a non-numeric bound: $other")
-        }
+                  tls: Option[(String, String)] = None): Seq[Double] =
+    command(host, port, db, JObject(List(
+      "splitVector" -> JString(coll),
+      "key" -> JString(key),
+      "n" -> JInt(numSplits))), credentials, tls).get("splitKeys") match {
+      case Some(JArray(es)) => es.map {
+        case JDouble(d) => d
+        case JInt(i) => i.toDouble
+        case JLong(l) => l.toDouble
         case other => throw new IllegalArgumentException(
-          s"splitVector reply missing splitKeys: $other")
+          s"splitKeys carries a non-numeric bound: $other")
       }
-    } finally conn.close()
-  }
+      case other => throw new IllegalArgumentException(
+        s"splitVector reply missing splitKeys: $other")
+    }
 
   /** Parallel-cursor `find` over OP_MSG — the reference's thread-pool
     * raw-batch read (api.py:181-199) on authentic framing: plan
@@ -4375,69 +4385,6 @@ object OpMsg {
     limit.map(filtered.limit).getOrElse(filtered)
   }
 
-  /** `hello` compressor negotiation + SCRAM-SHA-256 mutual auth on a
-    * freshly dialed connection — shared by every client entry point.
-    * `roundTrip(cmd, mayCompress=false)` must send UNcompressed (the
-    * wire spec forbids compressing handshake/auth commands). Raises if
-    * the server refuses the compressor or the authentication. */
-  private def handshake(roundTrip: (JObject, Boolean) => Array[Byte],
-                        db: String,
-                        credentials: Option[(String, String)],
-                        compress: Boolean, compressor: String): Unit = {
-    if (compress) {
-      val hello = decodeDoc(roundTrip(JObject(List(
-        "hello" -> JInt(1),
-        "compression" -> JArray(List(JString(compressor))),
-        "$db" -> JString(db))), false))
-      val granted = hello.obj.toMap.get("compression") match {
-        case Some(JArray(es)) => es.contains(JString(compressor))
-        case _ => false
-      }
-      if (!granted) throw new IllegalArgumentException(
-        s"server did not negotiate $compressor compression")
-    }
-    credentials.foreach { case (user, password) =>
-      def bin(v: JValue): String = v match {
-        case JObject(List(("$binary", JString(b64)))) =>
-          new String(java.util.Base64.getDecoder.decode(b64), "UTF-8")
-        case other => throw new SecurityException(
-          s"sasl reply payload malformed: $other")
-      }
-      def field(o: JObject, n: String): JValue =
-        o.obj.find(_._1 == n).map(_._2).getOrElse(
-          throw new SecurityException(s"sasl reply missing '$n'"))
-      val cl = new Scram.Client(user, password)
-      val r1 = decodeDoc(roundTrip(JObject(List(
-        "saslStart" -> JInt(1),
-        "mechanism" -> JString("SCRAM-SHA-256"),
-        "payload" -> JObject(List("$binary" -> JString(
-          java.util.Base64.getEncoder.encodeToString(
-            cl.clientFirst.getBytes("UTF-8"))))),
-        "$db" -> JString(db))), false))
-      field(r1, "ok") match {
-        case JDouble(1.0) => ()
-        case _ => throw new SecurityException(
-          s"authentication failed: ${r1.obj.toMap.get("errmsg")}")
-      }
-      val clientFinal = cl.clientFinal(bin(field(r1, "payload")))
-      val r2 = decodeDoc(roundTrip(JObject(List(
-        "saslContinue" -> JInt(1),
-        "conversationId" -> JInt(1),
-        "payload" -> JObject(List("$binary" -> JString(
-          java.util.Base64.getEncoder.encodeToString(
-            clientFinal.getBytes("UTF-8"))))),
-        "$db" -> JString(db))), false))
-      field(r2, "ok") match {
-        case JDouble(1.0) => ()
-        case _ => throw new SecurityException(
-          s"authentication failed: ${r2.obj.toMap.get("errmsg")}")
-      }
-      // verify the SERVER's signature — a fake server without
-      // ServerKey fails here even if it accepted our proof
-      cl.verifyServerFinal(bin(field(r2, "payload")))
-    }
-  }
-
   /** Load a landing directory through the graftdocs scan with the
     * schema the inference job would infer, without the job: each landed
     * batch file's type tree ([[GraftDocSource.bsonTree]], the job's own
@@ -4469,14 +4416,28 @@ object OpMsg {
     spark.read.format("graftdocs").load(dir.toString)
   }
 
-  /** Drive one command's full cursor (handshake, first reply, getMore
-    * until id=0 — or ONE exhaust getMore whose reply stream runs until
-    * moreToCome clears), landing every raw batch document in a batch
-    * file. With `compress`, a `hello` negotiates zlib first and every
-    * subsequent non-auth message crosses as OP_COMPRESSED both ways.
-    * A failure mid-cursor best-effort kills the server cursor
-    * (killCursors) before rethrowing. Returns (directory, documents
-    * landed). */
+  /** A fresh landing directory and its open batch file. Landed batches
+    * are read lazily by the graftdocs scan, so eager deletion is the
+    * consumer's job (the graftwire partition reader deletes in close());
+    * the JVM-exit hook bounds leakage for driver-side lazy DataFrames
+    * whose lifetime we cannot observe. deleteOnExit runs in reverse
+    * registration order: dir last. */
+  private def landing(prefix: String)
+      : (java.nio.file.Path, java.io.OutputStream) = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    val file = dir.resolve("batches.bson")
+    dir.toFile.deleteOnExit()
+    file.toFile.deleteOnExit()
+    (dir, java.nio.file.Files.newOutputStream(file))
+  }
+
+  /** Drive one command's full cursor on one [[Connection]] (first
+    * reply, getMore until id=0 — or ONE exhaust getMore whose reply
+    * stream runs until moreToCome clears), landing every raw batch
+    * document in a batch file. With `compress`, every message after the
+    * handshake crosses as OP_COMPRESSED both ways. A failure mid-cursor
+    * best-effort kills the server cursor (killCursors) before
+    * rethrowing. Returns (directory, documents landed). */
   private[sources] def cursorFetch(host: String, port: Int, db: String, coll: String,
                           firstCmd: JObject, batchSize: Int,
                           credentials: Option[(String, String)],
@@ -4486,85 +4447,42 @@ object OpMsg {
                           checksum: Boolean = false,
                           compressor: String = "zlib")
       : (java.nio.file.Path, Long) = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_opmsg")
-    val file = dir.resolve("batches.bson")
-    // landed batches are read lazily by the graftdocs scan, so eager
-    // deletion is the consumer's job (the graftwire partition reader
-    // deletes in close()); the JVM-exit hook bounds leakage for
-    // driver-side lazy DataFrames whose lifetime we cannot observe.
-    // deleteOnExit runs in reverse registration order: dir last.
-    dir.toFile.deleteOnExit()
-    file.toFile.deleteOnExit()
-    val os = java.nio.file.Files.newOutputStream(file)
-    val conn = clientSocket(host, port, tls)
+    val conn = new Connection(host, port, db, credentials, tls, compress,
+      checksum, compressor)
+    val (dir, os) = landing("graft_opmsg")
     var total = 0L
-    try {
-      val cin = new BufferedInputStream(conn.getInputStream, 1 << 16)
-      val cout = new BufferedOutputStream(conn.getOutputStream, 1 << 16)
-      var reqId = 0
-      var compressOn = false
-      val compId = compressorId(compressor)
-      def roundTrip(cmd: JObject, mayCompress: Boolean = true): Array[Byte] = {
-        reqId += 1
-        writeFrame(cout, reqId, 0, encodeDoc(cmd), flags = 0,
-          compress = compressOn && mayCompress, checksum = checksum,
-          compressor = compId)
-        val (_, rto, body) = readMessage(cin).getOrElse(
-          throw new EOFException("server closed the connection"))
-        if (rto != reqId) throw new IllegalStateException(
-          s"responseTo $rto does not match requestID $reqId")
-        body
-      }
-      handshake(roundTrip, db, credentials, compress, compressor)
-      compressOn = compress
-      val reply0 = roundTrip(firstCmd)
-      var (cursorId, docs) = parseCursorReply(reply0)
+    def land(docs: Seq[Array[Byte]]): Unit = {
       docs.foreach(d => os.write(d)); total += docs.size
+    }
+    try {
+      var (cursorId, docs) = parseCursorReply(conn.roundTrip(firstCmd).doc)
+      land(docs)
       try {
         if (exhaust && cursorId != 0L) {
           // ONE getMore with exhaustAllowed; the server streams every
           // remaining batch (moreToCome set until the last)
-          reqId += 1
-          writeFrame(cout, reqId, 0, encodeDoc(JObject(List(
-            "getMore" -> JLong(cursorId),
-            "collection" -> JString(coll),
-            "batchSize" -> JInt(batchSize),
-            "$db" -> JString(db)))),
-            flags = FlagExhaustAllowed, compress = compressOn,
-            checksum = checksum, compressor = compId)
+          var fr = conn.getMore(cursorId, coll, batchSize, exhaust = true)
           var streaming = true
           while (streaming) {
-            val fr = readFrame(cin).getOrElse(
-              throw new EOFException("server closed mid-exhaust"))
-            if (fr.responseTo != reqId) throw new IllegalStateException(
-              s"exhaust reply responseTo ${fr.responseTo} != $reqId")
             val (nid, more) = parseCursorReply(fr.doc)
-            more.foreach(d => os.write(d)); total += more.size
+            land(more)
             streaming = fr.moreToCome
-            if (!streaming && nid != 0L) throw new IllegalStateException(
+            if (streaming) fr = conn.next()
+            else if (nid != 0L) throw new IllegalStateException(
               "exhaust stream ended with a live cursor")
           }
           cursorId = 0L
         }
         while (cursorId != 0L) {
-          val rep2 = roundTrip(JObject(List(
-            "getMore" -> JLong(cursorId),
-            "collection" -> JString(coll),
-            "batchSize" -> JInt(batchSize),
-            "$db" -> JString(db))))
-          val (nid, more) = parseCursorReply(rep2)
-          more.foreach(d => os.write(d)); total += more.size
+          val (nid, more) = parseCursorReply(
+            conn.getMore(cursorId, coll, batchSize).doc)
+          land(more)
           cursorId = nid
         }
       } catch { case scala.util.control.NonFatal(e) =>
         // don't leak the server cursor on an aborted drive — a real
         // driver sends killCursors before surfacing the failure
-        if (cursorId != 0L)
-          try roundTrip(JObject(List(
-            "killCursors" -> JString(coll),
-            "cursors" -> JArray(List(JLong(cursorId))),
-            "$db" -> JString(db)))): Unit
-          catch { case scala.util.control.NonFatal(_) => () }
+        if (cursorId != 0L) conn.kill(cursorId, coll)
         throw e
       }
     } finally { os.close(); conn.close() }

@@ -491,6 +491,34 @@ class OpMsgCommandSpec extends AnyFunSuite {
           hello("primary") == JString(me))
         assert(hello("logicalSessionTimeoutMinutes") == JInt(30))
       } finally conn.close()
+      def gossiped(r: Map[String, JValue]): Boolean =
+        r.contains("operationTime") && r.contains("$clusterTime")
+      // exhaust replies gossip too: every frame of a moreToCome stream,
+      // and the refusal of an exhaust getMore on an unknown cursor
+      val ex = new java.net.Socket("127.0.0.1", srv.port)
+      try {
+        val in = new java.io.BufferedInputStream(ex.getInputStream)
+        val out = new java.io.BufferedOutputStream(ex.getOutputStream)
+        def send(rid: Int, flags: Int, doc: (String, JValue)*): Unit =
+          OpMsg.writeFrame(out, rid, 0, OpMsg.encodeDoc(JObject(
+            doc.toList :+ ("$db" -> JString("graft")))), flags, compress = false)
+        send(1, 0, "find" -> JString("items"), "batchSize" -> JInt(1))
+        val (id, _) = OpMsg.parseCursorReply(OpMsg.readFrame(in).get.doc)
+        assert(id != 0L)
+        send(2, 0x10000, "getMore" -> JLong(id),
+          "collection" -> JString("items"), "batchSize" -> JInt(1))
+        var stream = Seq(OpMsg.readFrame(in).get)
+        while (stream.last.moreToCome) stream :+= OpMsg.readFrame(in).get
+        assert(stream.size == 4) // 5 items, 1 in the first batch
+        stream.foreach(f =>
+          assert(gossiped(OpMsg.decodeDoc(f.doc).obj.toMap)))
+        send(3, 0x10000, "getMore" -> JLong(424242L),
+          "collection" -> JString("items"))
+        val refused = OpMsg.readFrame(in).get
+        assert(refused.responseTo == 3 && !refused.moreToCome)
+        val r = OpMsg.decodeDoc(refused.doc).obj.toMap
+        assert(r("ok") == JDouble(0.0) && r("code") == JInt(43) && gossiped(r))
+      } finally ex.close()
       def packed(r: Map[String, JValue]): Long = {
         val ts = r("operationTime").asInstanceOf[JObject].obj.toMap
           .apply("$timestamp").asInstanceOf[JObject].obj.toMap
