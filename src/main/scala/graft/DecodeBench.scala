@@ -4,23 +4,20 @@ import org.apache.spark.sql.{SparkSession, functions => F}
 
 /** Decode-path A/B harness: times a full-column decode of the bulk
   * orders fixture through each reader path — direct (bytes/tokens →
-  * vectors, no tree), tree-columnar (`direct=false`), and the row path
-  * (`columnar=false`) — for both the jsonl and bson layouts, on a flat
-  * and a nested document shape. Prints one JSON line of median seconds
-  * per (shape, format, path).
+  * vectors, no tree) and the row path (`columnar=false`, a JsonNode
+  * tree and a Row per document) — for both the jsonl and bson layouts,
+  * on a flat and a nested document shape. Prints one JSON line of
+  * median seconds per (shape, format, path).
   *
   * Measured on a 4-vCPU VM (sf0.1×10 = 1.5M docs, 8 files, local[4],
   * median of 5 after a warmup sweep; the middle of three runs per
   * reader): the jsonl rows, from the per-byte `BufferedInputStream.read()`
   * line reader to the 64 KiB chunked one (`JsonlRawLines`): flat direct
-  * 3.39 → 1.20 s, tree 3.57 → 1.46, row 3.84 → 1.58; nested direct
-  * 4.39 → 1.41, tree 4.81 → 2.32, row 5.09 → 2.70. With the per-byte
-  * reader every flat jsonl path took the same ~3.4 s: the byte reads,
-  * not Jackson lexing, set that time. bson (reader unchanged, same six
-  * runs): flat direct 0.55–0.85 s vs tree 0.85–1.12; nested direct
-  * 0.69–0.79 vs tree 1.49–1.79 (about 2.2×). The token path's win is
-  * the per-doc tree it stops allocating, so it grows with document
-  * width/nesting.
+  * 3.39 → 1.20 s, row 3.84 → 1.58; nested direct 4.39 → 1.41, row
+  * 5.09 → 2.70. With the per-byte reader every flat jsonl path took
+  * about the same 3.4–3.8 s: the byte reads, not Jackson lexing, set
+  * that time. The direct path's win is the per-doc tree and Row it
+  * stops allocating, so it grows with document width/nesting.
   *
   * Usage: runMain graft.DecodeBench <sfDir> [reps]
   */
@@ -54,10 +51,10 @@ object DecodeBench {
     }
 
     val schema = orders.schema
-    def time(path: String, columnar: Boolean, direct: Boolean): Double = {
+    def time(path: String, columnar: Boolean): Double = {
       val t0 = System.nanoTime()
       val got = spark.read.format("graftdocs").schema(schema)
-        .option("columnar", columnar).option("direct", direct)
+        .option("columnar", columnar)
         .load(path)
         // sum every column so no decode work can be pruned away
         .agg(F.count(F.lit(1)), F.sum(F.col("o_orderkey")),
@@ -72,16 +69,15 @@ object DecodeBench {
     def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.length / 2)
     // one untimed warmup of every config first: JIT compilation otherwise
     // lands entirely on whichever config happens to run first
-    for (format <- Seq("jsonl", "bson"); (col, dir) <- Seq((true, true),
-        (true, false), (false, true)))
-      time(ensure(format), col, dir)
+    val paths = Seq("direct" -> true, "row" -> false)
+    for (format <- Seq("jsonl", "bson"); (_, col) <- paths)
+      time(ensure(format), col)
     val flat = for {
       format <- Seq("jsonl", "bson")
       path = ensure(format)
-      (label, col, dir) <- Seq(("direct", true, true),
-        ("tree", true, false), ("row", false, true))
+      (label, col) <- paths
     } yield {
-      val times = (1 to reps).map(_ => time(path, col, dir))
+      val times = (1 to reps).map(_ => time(path, col))
       s""""${format}_$label": ${f"${median(times)}%.3f"}"""
     }
 
@@ -103,10 +99,10 @@ object DecodeBench {
       }
       dir
     }
-    def timeNested(path: String, columnar: Boolean, direct: Boolean): Double = {
+    def timeNested(path: String, columnar: Boolean): Double = {
       val t0 = System.nanoTime()
       val got = spark.read.format("graftdocs").schema(nestedSchema)
-        .option("columnar", columnar).option("direct", direct)
+        .option("columnar", columnar)
         .load(path)
         .agg(F.count(F.lit(1)), F.sum(F.col("meta.custkey")),
           F.sum(F.length(F.col("meta.inner.p"))),
@@ -116,16 +112,14 @@ object DecodeBench {
       require(got == n, s"decoded $got of $n")
       (System.nanoTime() - t0) / 1e9
     }
-    for (format <- Seq("jsonl", "bson"); (col, dir) <- Seq((true, true),
-        (true, false), (false, true)))
-      timeNested(ensureNested(format), col, dir)
+    for (format <- Seq("jsonl", "bson"); (_, col) <- paths)
+      timeNested(ensureNested(format), col)
     val nestedRes = for {
       format <- Seq("jsonl", "bson")
       path = ensureNested(format)
-      (label, col, dir) <- Seq(("direct", true, true),
-        ("tree", true, false), ("row", false, true))
+      (label, col) <- paths
     } yield {
-      val times = (1 to reps).map(_ => timeNested(path, col, dir))
+      val times = (1 to reps).map(_ => timeNested(path, col))
       s""""nested_${format}_$label": ${f"${median(times)}%.3f"}"""
     }
     println(s"""{"rows": $n, ${(flat ++ nestedRes).mkString(", ")}}""")

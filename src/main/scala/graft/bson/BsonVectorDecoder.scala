@@ -44,6 +44,9 @@ private[graft] object VectorAppend {
 
 private[graft] object BsonVectorDecoder {
 
+  /** The types the direct writers cover — of this decoder and of
+    * [[JsonVectorDecoder]] alike; the graftdocs scan reads any other
+    * declared type on its row path. */
   def supports(dt: DataType): Boolean = dt match {
     case IntegerType | LongType | DoubleType | StringType | BooleanType |
          TimestampType | TimestampNTZType | DateType | BinaryType | NullType => true

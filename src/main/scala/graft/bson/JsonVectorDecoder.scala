@@ -43,11 +43,6 @@ import org.apache.spark.sql.types._
   */
 private[graft] object JsonVectorDecoder {
 
-  /** Same builder-layer coverage as the BSON direct path — one
-    * definition, so the two direct decoders can never drift apart in
-    * what they claim. */
-  def supports(dt: DataType): Boolean = BsonVectorDecoder.supports(dt)
-
   /** NaN/Infinity literals are legal BSON doubles (DocDecoder.newMapper
     * enables the same feature on the tree path). */
   val factory: JsonFactory = {

@@ -117,8 +117,8 @@ object SchemaInference {
     * inference sidecar can stand in for the distributed inference job.
     * It has two users: the DocStore appender (each appended batch
     * file's tree computed once, driver-side, from the bytes already in
-    * hand) and the OP_MSG wire client (each landed cursor batch file's
-    * tree, folded before the frame is loaded — `OpMsg.loadLanded`).
+    * hand) and the OP_MSG wire client (each cursor's tree, folded from
+    * its documents in memory — `OpMsg.localFrame`).
     * NullType seed: the first non-null-typed document wins (an empty
     * StructType seed would swallow scalar top-level values). */
   def typeTree(docs: Iterator[JsonNode]): DataType =

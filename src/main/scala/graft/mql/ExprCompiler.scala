@@ -910,7 +910,7 @@ object ExprCompiler {
         size(array_except(c(0), c(1))) === 0
       case "$setEquals" =>
         if (c.size < 2) throw new MqlException("$setEquals needs >= 2 arrays")
-        c.sliding(2).map { case Seq(a, b) =>
+        c.zip(c.tail).map { case (a, b) =>
           size(array_except(a, b)) === 0 && size(array_except(b, a)) === 0
         }.reduce(_ && _)
       // MQL truthiness: null/false/0 falsy; EVERY string (incl. "false",

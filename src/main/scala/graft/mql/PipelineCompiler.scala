@@ -3197,7 +3197,7 @@ object PipelineCompiler {
               val bs = o.collectFirst { case ("boundaries", JArray(xs)) =>
                 xs.map(numOf(_, s"$ctx.boundaries")) }
                 .getOrElse(throw new MqlException(s"$ctx needs boundaries"))
-              if (bs.length < 2 || bs.sliding(2).exists { case Seq(a, b) => a >= b })
+              if (bs.length < 2 || bs.zip(bs.tail).exists { case (a, b) => a >= b })
                 throw new MqlException(
                   s"$ctx: boundaries must be ≥2 strictly increasing numbers")
               NFacet(name, path, bs,
@@ -3215,7 +3215,7 @@ object PipelineCompiler {
                 } }
                 .getOrElse(throw new MqlException(s"$ctx needs boundaries"))
               if (bs.length < 2 ||
-                  bs.sliding(2).exists { case Seq(a, b) => !a.isBefore(b) })
+                  bs.zip(bs.tail).exists { case (a, b) => !a.isBefore(b) })
                 throw new MqlException(
                   s"$ctx: boundaries must be ≥2 strictly increasing dates")
               DFacet(name, path, bs,
@@ -3905,7 +3905,13 @@ object PipelineCompiler {
           s"$ctx needs a single ascending sortBy")
       }
 
-    output.foldLeft(df) { case (acc, (name, JObject(fspec))) =>
+    output.foldLeft(df) { case (acc, (name, entry)) =>
+      val fspec = entry match {
+        case JObject(fs) => fs
+        case other => throw new MqlException(
+          s"$$setWindowFields: output field $name takes a document, got " +
+            FilterTranslator.render(other))
+      }
       val windowDoc = fspec.collectFirst { case ("window", JObject(w)) => w }
       val opEntry = fspec.collectFirst {
         case (op, arg) if op.startsWith("$") => (op, arg)

@@ -131,14 +131,19 @@ object WriteStages {
     var into: Option[String] = None
     var on: Seq[String] = Seq("_id")
     var lets: List[(String, JValue)] = Nil
-    var whenMatched: JValue = JString("merge")
+    // a mode name, or the update pipeline's stages
+    var whenMatched: Either[String, List[JValue]] = Left("merge")
     var whenNotMatched: String = "insert"
     fields.foreach {
       case ("into", v) => into = Some(collName(v, "$merge.into"))
       case ("on", JString(f)) => on = Seq(f)
       case ("on", JArray(fs)) => on = fs.map(strValue(_, "$merge.on"))
       case ("let", v) => lets = asObj(v, "$merge.let")
-      case ("whenMatched", v @ (JString(_) | JArray(_))) => whenMatched = v
+      case ("whenMatched", JString(m)) => whenMatched = Left(m)
+      case ("whenMatched", JArray(stages)) => whenMatched = Right(stages)
+      case ("whenMatched", v) => throw new MqlException(
+        s"$$merge: whenMatched takes a mode name or a pipeline array, " +
+          s"got ${FilterTranslator.render(v)}")
       case ("whenNotMatched", JString(m)) => whenNotMatched = m
       case (k, v) => throw new MqlException(s"$$merge: bad option $k: $v")
     }
@@ -146,9 +151,9 @@ object WriteStages {
     if (!Set("insert", "discard", "fail")(whenNotMatched))
       throw new MqlException(s"$$merge: bad whenNotMatched '$whenNotMatched'")
     whenMatched match {
-      case JString(m) if Set("replace", "keepExisting", "merge", "fail")(m) =>
-      case JArray(_) =>
-      case other => throw new MqlException(s"$$merge: bad whenMatched $other")
+      case Left(m) if !Set("replace", "keepExisting", "merge", "fail")(m) =>
+        throw new MqlException(s"$$merge: bad whenMatched '$m'")
+      case _ =>
     }
     on.foreach { k =>
       if (k.contains("."))
@@ -228,13 +233,13 @@ object WriteStages {
     val srcOnly = !tP && sP
 
     // -- fail modes: checked before any write ------------------------------
-    if (whenMatched == JString("fail") && !joined.where(matched).isEmpty)
+    if (whenMatched == Left("fail") && !joined.where(matched).isEmpty)
       throw new MqlException("$merge: whenMatched 'fail' and a document matched")
     if (whenNotMatched == "fail" && !joined.where(srcOnly).isEmpty)
       throw new MqlException("$merge: whenNotMatched 'fail' and a document had no match")
 
     val result = whenMatched match {
-      case JString(mode) =>
+      case Left(mode) =>
         // single-pass CASE projection: one shuffle, one output scan
         val outCols = (tCols ++ sCols.filterNot(tCols.contains)).map { c =>
           val sC = if (sCols.contains(c)) col(SP + c) else lit(null)
@@ -249,7 +254,7 @@ object WriteStages {
         val kept = if (whenNotMatched == "insert") joined else joined.where(!srcOnly)
         kept.select(outCols: _*)
 
-      case JArray(stages) =>
+      case Right(stages) =>
         // update-pipeline form: matched rows carry the old document as
         // top-level columns and the new one as $$new (plus let vars)
         val newStruct = struct(sCols.map(c => col(SP + c).as(c)): _*)

@@ -181,11 +181,10 @@ object GraftDocSource {
   }
 
   /** The per-file inference sidecar beside a directory's batch files:
-    * `{"files": {file name → type tree as DataType json}}`. Two writers
-    * keep one: [[graft.sinks.DocStore]]'s append paths (one tree per
-    * batch file, folded as the batch is appended) and the OP_MSG
-    * client's cursor landings ([[OpMsg.loadLanded]]). Both go through
-    * [[writeInferSidecar]]; [[sidecarSchema]] is the one reader. */
+    * `{"files": {file name → type tree as DataType json}}`, kept by
+    * [[graft.sinks.DocStore]]'s append paths (one tree per batch file,
+    * folded as the batch is appended) through [[writeInferSidecar]];
+    * [[sidecarSchema]] is the one reader. */
   val InferSidecarName = "_graft_infer.json"
 
   /** One BSON batch stream's type tree, as DataType json: the per-file
@@ -273,13 +272,12 @@ class GraftDocSource extends TableProvider with DataSourceRegister {
     val maxDocs = options.getLong("infermaxdocs", Long.MaxValue)
     if (maxDocs <= 0) throw new IllegalArgumentException(
       s"graftdocs: inferMaxDocs must be positive, got $maxDocs")
-    // inference sidecar (DocStore's appends and the OP_MSG client's
-    // cursor landings keep a per-FILE type tree beside the batch
-    // files): when every resolved file is covered, merging the stored
-    // trees in file order is byte-identical to the distributed fold
-    // below (same per-file trees, same merge, same order — one task per
-    // file means partition index = file order), so the read-back of an
-    // append-built collection or a wire frame skips the inference job
+    // inference sidecar (DocStore's appends keep a per-FILE type tree
+    // beside the batch files): when every resolved file is covered,
+    // merging the stored trees in file order is byte-identical to the
+    // distributed fold below (same per-file trees, same merge, same
+    // order — one task per file means partition index = file order),
+    // so the read-back of an append-built collection skips the job
     // entirely (guide §6). Any mismatch (extra/missing entries, hive
     // layouts, jsonl, an inferMaxDocs sample bound, parse failure)
     // falls through.
@@ -1155,13 +1153,10 @@ private[sources] class GraftScan(schema: StructType, options: CaseInsensitiveStr
   override def createReaderFactory(): PartitionReaderFactory =
     new GraftReaderFactory(schema, allowInvalid, filters,
       new SerializableConfiguration(GraftDocSource.activeHadoopConf()),
-      // `columnar=false` keeps the row path selectable for A/B and as the
-      // escape hatch for any type the builder layer doesn't cover
+      // `columnar=false` keeps the row path selectable for A/B; it also
+      // serves any type the direct writers don't cover
       columnar = options.getBoolean("columnar", true),
-      limit = limit,
-      // `direct=false` keeps the JsonNode-tree columnar path selectable
-      // for A/B decode benchmarking (see JsonVectorDecoder)
-      direct = options.getBoolean("direct", true))
+      limit = limit)
 
   // continuous document ingest: the streaming twin of the reference's
   // cursor loop — tail the batch directory, each micro-batch decoding
@@ -1530,8 +1525,7 @@ private[sources] class GraftReaderFactory(schema: StructType, allowInvalid: Bool
                                           filters: Array[Filter],
                                           conf: SerializableConfiguration,
                                           columnar: Boolean = true,
-                                          limit: Option[Int] = None,
-                                          direct: Boolean = true)
+                                          limit: Option[Int] = None)
   extends PartitionReaderFactory {
   private val perPartitionLimit: Int = limit.getOrElse(Int.MaxValue)
 
@@ -1553,38 +1547,22 @@ private[sources] class GraftReaderFactory(schema: StructType, allowInvalid: Bool
     (StructType(docFields), docIdx, consts)
   }
 
-  /** Shared per-partition document iterator (both formats yield canonical
-    * ext-JSON nodes, so decode is format-independent). Construction
-    * seeks/reads — close the handle if it throws (the reader's close()
-    * never runs then). */
-  private def openDocs(p: GraftFilePartition)
-      : (org.apache.hadoop.fs.FSDataInputStream,
-         Iterator[com.fasterxml.jackson.databind.JsonNode]) = {
-    val path = new Path(p.path)
-    val fsIn = path.getFileSystem(conf.value).open(path)
-    val docs =
-      try {
-        if (p.path.endsWith(".bson")) BsonBinary.documents(fsIn)
-        else new JsonlLineIterator(fsIn, p.start, p.end)
-      } catch {
-        case e: Throwable => fsIn.close(); throw e
-      }
-    (fsIn, docs)
-  }
-
   // ---- vectorized path -----------------------------------------------------
   // The Spark twin of the reference's columnar builders (lib.pyx:436-870):
   // one pass over the document stream appending straight into per-column
-  // vectors. Coercion semantics are THE SAME CODE as the row path
-  // (DocDecoder.convert — cross-acceptance matrix, NaN→null, overflow
-  // raises, missing-field null catch-up), so the two paths cannot drift;
-  // what the columnar path eliminates is the per-row Row allocation +
-  // CatalystTypeConverters deep-conversion + row-iterator virtual calls.
+  // vectors — .bson streams bytes and .jsonl streams Jackson tokens
+  // through the direct writers (the reference's process_bson_stream /
+  // single-pass builder walk), no JsonNode tree, no per-row Row. Pushed
+  // filters evaluate per row against the freshly decoded vectors
+  // (decode-before-filter, the row path's error-parity contract) and
+  // surviving rows compact into the output batch; Spark re-evaluates
+  // pushed filters post-scan either way. Declared types without a
+  // direct writer take the row path.
   override def supportColumnarReads(partition: InputPartition): Boolean = {
     val pm = partition.asInstanceOf[GraftFilePartition].partitionValues.toMap
     columnar && schema.fields.forall(f =>
       if (pm.contains(f.name)) DocPartitions.castable(f.dataType)
-      else ColumnarDocBuilder.supports(f.dataType))
+      else graft.bson.BsonVectorDecoder.supports(f.dataType))
   }
 
   override def createColumnarReader(partition: InputPartition)
@@ -1595,37 +1573,14 @@ private[sources] class GraftReaderFactory(schema: StructType, allowInvalid: Bool
     val partExternal: Map[String, Any] = schema.fields.zipWithIndex.collect {
       case (f, i) if docIdx(i) < 0 => f.name -> consts(i)
     }.toMap
+    val path = new Path(p.path)
+    val fsIn = path.getFileSystem(conf.value).open(path)
     val inner: PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-      // Both formats take a DIRECT path when every declared type has a
-      // direct writer: .bson streams bytes and .jsonl streams Jackson
-      // tokens straight into per-column builders — no JsonNode tree (the
-      // reference's process_bson_stream / single-pass builder-walk
-      // architecture) — WITH or without pushed filters: real scans are
-      // filtered scans, so losing the direct decode exactly when a
-      // filter is present would surrender the win where it matters.
-      // Pushed filters evaluate per row against the freshly decoded
-      // vectors (decode-before-filter, same error-parity contract as
-      // the tree path) and surviving rows compact into the output
-      // batch; Spark re-evaluates pushed filters post-scan either way.
-      // The JsonNode-tree ColumnarDocReader remains the fallback for
-      // declared types without a direct writer.
-      if (direct && p.path.endsWith(".bson") &&
-          docSchema.fields.forall(f => graft.bson.BsonVectorDecoder.supports(f.dataType))) {
-        val path = new Path(p.path)
-        val fsIn = path.getFileSystem(conf.value).open(path)
+      if (p.path.endsWith(".bson"))
         new BsonColumnarReader(fsIn, docSchema, strict, perPartitionLimit,
           filters, partExternal)
-      } else if (direct && !p.path.endsWith(".bson") &&
-          docSchema.fields.forall(f => graft.bson.JsonVectorDecoder.supports(f.dataType))) {
-        val path = new Path(p.path)
-        val fsIn = path.getFileSystem(conf.value).open(path)
-        new JsonlColumnarReader(fsIn, p.start, p.end, docSchema, strict,
-          perPartitionLimit, filters, partExternal)
-      } else {
-        val (fsIn, docs) = openDocs(p)
-        new ColumnarDocReader(docs, docSchema, strict, filters, () => fsIn.close(),
-          perPartitionLimit, partExternal)
-      }
+      else new JsonlColumnarReader(fsIn, p.start, p.end, docSchema, strict,
+        perPartitionLimit, filters, partExternal)
     if (docIdx.forall(_ >= 0)) inner
     else new PartitionFilledBatchReader(inner, schema, docIdx, consts)
   }
@@ -1645,7 +1600,18 @@ private[sources] class GraftReaderFactory(schema: StructType, allowInvalid: Bool
     val partExternal: Map[String, Any] = schema.fields.zipWithIndex.collect {
       case (f, i) if docIdx(i) < 0 => f.name -> consts(i)
     }.toMap
-    val (fsIn, docs) = openDocs(p)
+    // both formats yield canonical ext-JSON nodes, so decode is
+    // format-independent; construction seeks/reads — close the handle if
+    // it throws (the reader's close() never runs then)
+    val path = new Path(p.path)
+    val fsIn = path.getFileSystem(conf.value).open(path)
+    val docs =
+      try {
+        if (p.path.endsWith(".bson")) BsonBinary.documents(fsIn)
+        else new JsonlLineIterator(fsIn, p.start, p.end)
+      } catch {
+        case e: Throwable => fsIn.close(); throw e
+      }
 
     new PartitionReader[InternalRow] {
       private var current: InternalRow = _
@@ -1684,147 +1650,6 @@ private[sources] class GraftReaderFactory(schema: StructType, allowInvalid: Bool
       override def close(): Unit = fsIn.close()
     }
   }
-}
-
-/** Per-column append functions from decoded document values into
-  * `WritableColumnVector`s — the builder layer of the vectorized scan.
-  * Values arrive from [[DocDecoder.convert]] (external JVM types) and are
-  * written in Catalyst-native form (UTF8String bytes, epoch micros/days,
-  * unscaled decimals) via the canonical `DateTimeUtils` conversions, so
-  * the columnar batch is bit-identical to what the row path's
-  * CatalystTypeConverters would have produced. */
-private[sources] object ColumnarDocBuilder {
-  import org.apache.spark.sql.execution.vectorized.WritableColumnVector
-  import org.apache.spark.sql.catalyst.util.DateTimeUtils
-  import org.apache.spark.sql.types._
-
-  def supports(dt: DataType): Boolean = dt match {
-    case IntegerType | LongType | DoubleType | StringType | BooleanType |
-         TimestampType | TimestampNTZType | DateType | BinaryType | NullType => true
-    case _: DecimalType => true
-    case st: StructType => st.fields.forall(f => supports(f.dataType))
-    case ArrayType(et, _) => supports(et)
-    case _ => false
-  }
-
-  /** Null append honoring the struct-vector contract (a null struct must
-    * null-pad its children to keep them row-aligned). */
-  def appendNull(v: WritableColumnVector, dt: DataType): Unit = dt match {
-    case _: StructType => v.appendStruct(true)
-    case _ => v.appendNull()
-  }
-
-  /** Appender for one non-null value of `dt`. */
-  def appender(dt: DataType): (WritableColumnVector, Any) => Unit = dt match {
-    case IntegerType => (v, x) => v.appendInt(x.asInstanceOf[Int])
-    case LongType    => (v, x) => v.appendLong(x.asInstanceOf[Long])
-    case DoubleType  => (v, x) => v.appendDouble(x.asInstanceOf[Double])
-    case BooleanType => (v, x) => v.appendBoolean(x.asInstanceOf[Boolean])
-    case StringType  => (v, x) => {
-      val b = x.asInstanceOf[String].getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      v.appendByteArray(b, 0, b.length)
-    }
-    case BinaryType => (v, x) => {
-      val b = x.asInstanceOf[Array[Byte]]
-      v.appendByteArray(b, 0, b.length)
-    }
-    case TimestampType => (v, x) =>
-      v.appendLong(DateTimeUtils.fromJavaTimestamp(x.asInstanceOf[java.sql.Timestamp]))
-    case TimestampNTZType => (v, x) =>
-      v.appendLong(DateTimeUtils.localDateTimeToMicros(x.asInstanceOf[java.time.LocalDateTime]))
-    case DateType => (v, x) =>
-      v.appendInt(DateTimeUtils.fromJavaDate(x.asInstanceOf[java.sql.Date]))
-    case d: DecimalType =>
-      (v, x) => graft.bson.VectorAppend.unscaled(d,
-        Decimal(x.asInstanceOf[java.math.BigDecimal]), v)
-    case st: StructType =>
-      val subs = st.fields.map(f => appender(f.dataType))
-      (v, x) => {
-        val row = x.asInstanceOf[org.apache.spark.sql.Row]
-        v.appendStruct(false)
-        var i = 0
-        while (i < subs.length) {
-          val child = v.getChild(i)
-          val value = row.get(i)
-          if (value == null) appendNull(child, st.fields(i).dataType)
-          else subs(i)(child, value)
-          i += 1
-        }
-      }
-    case ArrayType(et, _) =>
-      val sub = appender(et)
-      (v, x) => {
-        val seq = x.asInstanceOf[Seq[Any]]
-        v.appendArray(seq.length)
-        val child = v.arrayData()
-        val it = seq.iterator
-        while (it.hasNext) {
-          val e = it.next()
-          if (e == null) appendNull(child, et) else sub(child, e)
-        }
-      }
-    case NullType => (v, _) => v.appendNull()
-    case other => throw new IllegalStateException(s"no columnar builder for $other")
-  }
-}
-
-/** Vectorized partition reader: decodes up to `capacity` documents per
-  * `ColumnarBatch`. Per row: extract every declared field ONCE through
-  * the shared coercion matrix, evaluate pushed filters on the extracted
-  * values (same order as the row path — the whole row decodes, including
-  * its strict-mode errors, before the filter verdict), then append into
-  * the column vectors. */
-private[sources] class ColumnarDocReader(
-    docs: Iterator[com.fasterxml.jackson.databind.JsonNode],
-    schema: StructType, strict: Boolean, filters: Array[Filter],
-    closeFn: () => Unit, limitRows: Int = Int.MaxValue,
-    // constant partition-column values (external form) so decode-time
-    // filters mixing partition and doc columns keep their skip precision
-    partValues: Map[String, Any] = Map.empty)
-  extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-  import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-
-  private var remaining = limitRows
-  private val capacity = 4096
-  private val vectors = OnHeapColumnVector.allocateColumns(capacity, schema)
-  private val batch = new org.apache.spark.sql.vectorized.ColumnarBatch(
-    vectors.asInstanceOf[Array[org.apache.spark.sql.vectorized.ColumnVector]])
-  private val fields = schema.fields
-  private val appenders = fields.map(f => ColumnarDocBuilder.appender(f.dataType))
-  private val fieldIdx: Map[String, Int] = schema.fieldNames.zipWithIndex.toMap
-  private val values = new Array[Any](fields.length)
-
-  override def next(): Boolean = {
-    var i = 0
-    while (i < vectors.length) { vectors(i).reset(); i += 1 }
-    var n = 0
-    while (n < capacity && n < remaining && docs.hasNext) {
-      val node = docs.next()
-      var j = 0
-      while (j < fields.length) {
-        values(j) = DocDecoder.convert(node.get(fields(j).name), fields(j), strict)
-        j += 1
-      }
-      def get(name: String): Any =
-        fieldIdx.get(name).map(values).getOrElse(partValues.getOrElse(name, null))
-      if (filters.forall(DocFilterEval.eval(_, get))) {
-        j = 0
-        while (j < fields.length) {
-          if (values(j) == null) ColumnarDocBuilder.appendNull(vectors(j), fields(j).dataType)
-          else appenders(j)(vectors(j), values(j))
-          j += 1
-        }
-        GraftScanMetrics.emitted.increment()
-        n += 1
-      } else GraftScanMetrics.skipped.increment()
-    }
-    remaining -= n
-    batch.setNumRows(n)
-    n > 0
-  }
-
-  override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = batch
-  override def close(): Unit = { batch.close(); closeFn() }
 }
 
 /** Read-back and row-copy helpers for evaluating pushed filters against

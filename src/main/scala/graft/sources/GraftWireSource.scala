@@ -40,9 +40,10 @@ import graft.mql.FilterTranslator
   *    find command's include-projection, so unprojected columns never
   *    cross the network (reference api.py:172-173's projection
   *    synthesis, server side).
-  *  - COLUMNAR DECODE: each task lands its cursor's raw BSON batches
-  *    and streams them through the direct bytes→vectors reader
-  *    ([[BsonColumnarReader]]) — no row materialization, no tree.
+  *  - COLUMNAR DECODE: each task streams its cursor's raw BSON batches
+  *    through the direct bytes→vectors reader ([[BsonColumnarReader]]),
+  *    a getMore per batch it needs — no row materialization, no tree,
+  *    nothing written to disk; closing the reader kills the cursor.
   *  - The transport options compose: SCRAM credentials, TLS, zlib,
   *    snappy or zstd compression, CRC-32C checksums, exhaust streaming.
   *
@@ -63,8 +64,8 @@ class GraftWireSource extends TableProvider with DataSourceRegister {
     val c = GraftWireSource.connOf(options)
     val sample = Option(options.get("inferDocs")).map(_.toInt).getOrElse(500)
     require(sample > 0, "graftwire: inferDocs must be positive")
-    // one bounded cursor; the landed docs infer through the normal
-    // graftdocs machinery (first-non-null, int widening, null catch-up).
+    // one bounded cursor; its docs infer by the graftdocs rules
+    // (first-non-null, int widening, null catch-up) — see OpMsg.localFrame.
     // A missing/empty collection infers as the EMPTY schema — the write
     // path creates collections that don't exist yet (Spark asks the
     // provider for a table before building the write), and a read of
@@ -371,19 +372,8 @@ private[sources] class GraftWireScan(required: StructType,
       case _ => Seq.empty
     }
     if (bounds.isEmpty) Seq(pushedDoc)
-    else {
-      import org.apache.spark.sql.sources._
-      val k = splitKey.get
-      val first: Filter = Or(IsNull(k), LessThan(k, bounds.head))
-      val mids = bounds.sliding(2).collect { case Seq(lo, hi) =>
-        And(GreaterThanOrEqual(k, lo), LessThan(k, hi)): Filter
-      }.toSeq
-      val lastR: Filter = GreaterThanOrEqual(k, bounds.last)
-      ((first +: mids) :+ lastR).map { r =>
-        FilterTranslator.render(
-          FilterTranslator.translateAll(pushed :+ r)._1)
-      }
-    }
+    else OpMsg.keyRanges(splitKey.get, bounds).map(r =>
+      FilterTranslator.render(FilterTranslator.translateAll(pushed :+ r)._1))
   }
 
   override def description(): String = {
@@ -420,7 +410,7 @@ private[sources] class GraftWireScan(required: StructType,
         " and aggregate in Spark)")
     // change-stream mode: resume tokens ARE the offsets — each trigger
     // drives the tailable $changeStream cursor to caught-up, spools
-    // the landed raw change documents next to the checkpoint, and the
+    // its raw change documents next to the checkpoint, and the
     // batch reads the spooled files (token sidecars make the tail
     // position recoverable across restarts)
     if (Option(options.get("changeStream")).exists(_.toBoolean)) {
@@ -610,7 +600,7 @@ private[sources] class GraftWireChangeStream(
     // (the store's rename window); a couple of short retries absorb it
     // — genuine errors (bad keyField, dead server) still surface fast,
     // and a failed trigger must not kill a tailable source
-    def fetch(attempt: Int): (java.nio.file.Path, Long, String) =
+    def fetch(attempt: Int): (Seq[Array[Byte]], String) =
       try OpMsg.watchFetch(c.host, c.port, c.db, c.coll,
         keyField = keyField,
         resumeAfter = Some(cur._2).filter(_.nonEmpty),
@@ -619,16 +609,14 @@ private[sources] class GraftWireChangeStream(
         case scala.util.control.NonFatal(e) if attempt < 3 =>
           Thread.sleep(200); fetch(attempt + 1)
       }
-    val (dir, total, tok) = fetch(0)
-    if (total == 0) { OpMsg.deleteDir(dir); WireTokenOffset(cur._1, cur._2) }
+    val (docs, tok) = fetch(0)
+    if (docs.isEmpty) WireTokenOffset(cur._1, cur._2)
     else {
       val n = cur._1 + 1
       val out = fs.create(dataFile(n), true)
-      try java.nio.file.Files.copy(dir.resolve("batches.bson"), out): Unit
-      finally out.close()
+      try docs.foreach(out.write) finally out.close()
       val tout = fs.create(tokenFile(n), true)
       try tout.write(tok.getBytes("UTF-8")) finally tout.close()
-      OpMsg.deleteDir(dir)
       cur = (n, tok)
       compactSpool()
       WireTokenOffset(n, tok)
@@ -831,8 +819,8 @@ private[sources] class GraftWireReaderFactory(required: StructType)
       : PartitionReader[ColumnarBatch] = {
     val p = partition.asInstanceOf[GraftWirePartition]
     val c = p.conn
-    // drive this partition's full cursor; batches land in a task-local
-    // file and stream through the direct BSON→vector decoder
+    // this partition's cursor streams its batches straight into the
+    // direct BSON→vector decoder, a getMore per batch the decoder needs
     val cmd = c.pipeline match {
       case Some(pl) =>
         // pipeline read: the server runs the aggregate; the pruned
@@ -862,32 +850,16 @@ private[sources] class GraftWireReaderFactory(required: StructType)
           else Nil) ++
           List("batchSize" -> JInt(c.batchSize), "$db" -> JString(c.db)))
     }
-    val (dir, total) = OpMsg.cursorFetch(c.host, c.port, c.db, c.coll, cmd,
-      c.batchSize, c.credentials, c.tls, compress = c.compress,
-      exhaust = c.exhaust, checksum = c.checksum, compressor = c.compressor)
-    if (total == 0) {
-      new PartitionReader[ColumnarBatch] {
-        override def next(): Boolean = false
-        override def get(): ColumnarBatch =
-          throw new IllegalStateException("empty partition")
-        override def close(): Unit = ()
-      }
-    } else {
-      val conf = new org.apache.hadoop.conf.Configuration()
-      val fs = org.apache.hadoop.fs.FileSystem.getLocal(conf)
-      val fsIn = fs.open(new org.apache.hadoop.fs.Path(
-        dir.resolve("batches.bson").toString))
-      val inner = new BsonColumnarReader(fsIn, required, strict = false)
-      // the landed batch file is this task's private scratch — delete
-      // it when the scan closes, so long-lived jobs and streaming
-      // micro-batches don't accumulate executor temp dirs
-      new PartitionReader[ColumnarBatch] {
-        override def next(): Boolean = inner.next()
-        override def get(): ColumnarBatch = inner.get()
-        override def close(): Unit = {
-          try inner.close() finally OpMsg.deleteDir(dir)
-        }
-      }
+    val cursor = new OpMsg.Connection(c.host, c.port, c.db, c.credentials,
+      c.tls, c.compress, c.checksum, c.compressor)
+      .cursor(cmd, c.coll, c.batchSize, c.exhaust)
+    val inner = new BsonColumnarReader(OpMsg.docStream(cursor.flatten),
+      required, strict = false)
+    new PartitionReader[ColumnarBatch] {
+      override def next(): Boolean = inner.next()
+      override def get(): ColumnarBatch = inner.get()
+      // kills the server cursor when the scan stops early
+      override def close(): Unit = try inner.close() finally cursor.close()
     }
   }
 }

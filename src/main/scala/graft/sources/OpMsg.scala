@@ -27,13 +27,13 @@ import graft.mql.{FilterCompiler, FilterTranslator}
   * eviction. The only thing this connector has never seen is an
   * actual mongod (zero egress, no mongod binary in the sandbox).
   *
-  * Batch documents cross the wire as raw BSON and are NEVER tree-parsed
-  * client-side: [[parseCursorReply]] slices each `firstBatch`/
-  * `nextBatch` element out of the reply by length-walking, the slices
-  * land in a batch file, and the normal graftdocs scan decodes them on
-  * the direct bytes→vectors path — the `find_raw_batches →
+  * Batch documents cross the wire as raw BSON: [[parseCursorReply]]
+  * slices each `firstBatch`/`nextBatch` element out of the reply by
+  * length-walking, and the slices decode in memory on the direct
+  * bytes→vectors path — into a driver-side frame ([[localFrame]]) or
+  * straight into a `graftwire` task's reader — the `find_raw_batches →
   * process_bson_stream` loop (reference api.py:175, lib.pyx:296-311)
-  * over authentic framing. */
+  * over authentic framing. Nothing the client reads touches disk. */
 object OpMsg {
   private val OpMsgCode = 2013
   private val OpCompressedCode = 2012
@@ -2755,8 +2755,8 @@ object OpMsg {
       fields.get("explain") match {
         case Some(JObject(inner)) =>
           val im = inner.toMap
-          val plan = im.get("find") match {
-            case Some(JString(coll)) =>
+          val plan = (im.get("find"), im.get("aggregate")) match {
+            case (Some(JString(coll)), _) =>
               val filterJson = im.get("filter")
                 .map(f => FilterTranslator.render(f)).getOrElse("{}")
               val base = store.readOrView(coll)
@@ -2764,21 +2764,22 @@ object OpMsg {
                 FilterCompiler.compile(filterJson)))
                 .queryExecution.explainString(
                   org.apache.spark.sql.execution.FormattedMode)
-            case None => im.get("aggregate") match {
-              case Some(JString(coll)) =>
-                val stages = im.get("pipeline") match {
-                  case Some(p) => org.json4s.jackson.JsonMethods.compact(
-                    org.json4s.jackson.JsonMethods.render(p))
-                  case None => "[]"
-                }
-                val resolve: graft.mql.PipelineCompiler.TableResolver =
-                  name => store.readOrView(name)
-                graft.mql.PipelineCompiler.run(store.readOrView(coll), stages,
-                  resolve).queryExecution.explainString(
-                    org.apache.spark.sql.execution.FormattedMode)
-              case _ => throw new IllegalArgumentException(
-                "explain wraps a find or aggregate command")
-            }
+            case (Some(other), _) => throw new IllegalArgumentException(
+              s"explain: find takes a collection name, got ${
+                FilterTranslator.render(other)}")
+            case (None, Some(JString(coll))) =>
+              val stages = im.get("pipeline") match {
+                case Some(p) => org.json4s.jackson.JsonMethods.compact(
+                  org.json4s.jackson.JsonMethods.render(p))
+                case None => "[]"
+              }
+              val resolve: graft.mql.PipelineCompiler.TableResolver =
+                name => store.readOrView(name)
+              graft.mql.PipelineCompiler.run(store.readOrView(coll), stages,
+                resolve).queryExecution.explainString(
+                  org.apache.spark.sql.execution.FormattedMode)
+            case _ => throw new IllegalArgumentException(
+              "explain wraps a find or aggregate command")
           }
           return encodeDoc(JObject(List(
             "queryPlanner" -> JObject(List(
@@ -3756,13 +3757,13 @@ object OpMsg {
 
     /** Send `cmd` as the next request and read the reply answering it.
       * The reply may carry flag bits only when `flags` allowed an
-      * exhaust stream, whose later frames [[next]] reads. */
+      * exhaust stream, whose later frames [[nextFrame]] reads. */
     def roundTrip(cmd: JObject, flags: Int = 0,
                   sequences: Seq[(String, Seq[Array[Byte]])] = Nil): Frame = {
       reqId += 1
       writeFrame(out, reqId, 0, encodeDoc(cmd), flags, compress = compressOn,
         checksum = checksum, compressor = compId, sequences = sequences)
-      val f = next()
+      val f = nextFrame()
       if (f.flags != 0 && (flags & FlagExhaustAllowed) == 0)
         throw new IllegalArgumentException(
           s"OP_MSG: unexpected flagBits 0x${f.flags.toHexString} " +
@@ -3771,7 +3772,7 @@ object OpMsg {
     }
 
     /** The next frame answering the last request. */
-    def next(): Frame = {
+    private def nextFrame(): Frame = {
       val f = readFrame(in).getOrElse(
         throw new EOFException("server closed the connection"))
       if (f.responseTo != reqId) throw new IllegalStateException(
@@ -3810,6 +3811,69 @@ object OpMsg {
         sequences = sequences).doc).obj.toMap)
 
     def close(): Unit = sock.close()
+
+    /** `firstCmd`'s cursor on this connection, which it takes over:
+      * closing the cursor closes the connection. */
+    def cursor(firstCmd: JObject, coll: String, batchSize: Int,
+               exhaust: Boolean = false): Cursor =
+      new Cursor(firstCmd, coll, batchSize, exhaust)
+
+    /** A command's cursor as its raw reply batches, in order: the first
+      * reply's batch, then one getMore per batch, issued only once the
+      * previous batch has been taken. With `exhaust`, ONE getMore with
+      * exhaustAllowed asks the server to stream every remaining batch
+      * as moreToCome replies. A failure mid-cursor best-effort kills the
+      * live server cursor (killCursors) before it surfaces. */
+    final class Cursor private[Connection] (firstCmd: JObject, coll: String,
+                                            batchSize: Int, exhaust: Boolean)
+        extends Iterator[Seq[Array[Byte]]] with java.io.Closeable {
+      private var id = 0L
+      private var streaming = false // inside an exhaust reply stream
+      private var pending: Seq[Array[Byte]] = // the batch not yet taken
+        try { val (i, docs) = parseCursorReply(roundTrip(firstCmd).doc); id = i; docs }
+        catch { case e: Throwable => Connection.this.close(); throw e }
+
+      def hasNext: Boolean = {
+        if (pending == null && id != 0L)
+          pending = try fetch() catch { case scala.util.control.NonFatal(e) =>
+            // a real driver sends killCursors before surfacing the failure
+            val live = id
+            id = 0L; streaming = false
+            kill(live, coll)
+            throw e
+          }
+        pending != null
+      }
+
+      def next(): Seq[Array[Byte]] = {
+        if (!hasNext) throw new NoSuchElementException("cursor exhausted")
+        val b = pending
+        pending = null
+        b
+      }
+
+      private def fetch(): Seq[Array[Byte]] = {
+        val f =
+          if (streaming) nextFrame()
+          else getMore(id, coll, batchSize, exhaust = exhaust)
+        streaming = f.moreToCome
+        val (nid, docs) = parseCursorReply(f.doc)
+        if (exhaust && !streaming && nid != 0L) throw new IllegalStateException(
+          "exhaust stream ended with a live cursor")
+        if (!streaming) id = nid
+        docs
+      }
+
+      /** Give the cursor up: an exhaust stream is read to its end first,
+        * a live cursor is killed, and the connection closes. */
+      def close(): Unit =
+        try {
+          pending = null
+          while (streaming) fetch()
+          if (id != 0L) kill(id, coll)
+        } catch { case scala.util.control.NonFatal(_) => () }
+        finally { id = 0L; Connection.this.close() }
+    }
 
     /** The one `ok` check: `reply` unless the server refused `cmd`, in
       * which case `refused` gets `<command> failed: [codeName] errmsg`
@@ -3887,12 +3951,13 @@ object OpMsg {
       "txnNumber" -> JLong(txn)) }
 
   /** OP_MSG `find`: translate the pushed filters, drive the full
-    * find → getMore cursor loop on ONE connection, land every batch's
-    * raw documents in a batch file, decode through the normal graftdocs
-    * scan, re-apply residuals client-side (limit rides the wire only
-    * with zero residuals — the containment contract OpMsgSpec pins).
-    * The frame's schema is folded from the landed documents before the
-    * load ([[loadLanded]]), so returning it runs no Spark job. */
+    * find → getMore cursor loop on ONE connection, build the frame in
+    * driver memory from the raw batch documents ([[localFrame]]: the
+    * schema the graftdocs inference job would infer, no Spark job),
+    * and re-apply residuals client-side (limit rides the wire only with
+    * zero residuals — the containment contract OpMsgSpec pins). The
+    * result lives in driver memory, as the reference's result tables
+    * do; the partitioned `graftwire` source reads large results. */
   def find(spark: SparkSession, host: String, port: Int, db: String,
            coll: String, filters: Seq[Filter] = Seq.empty,
            limit: Option[Int] = None, batchSize: Int = 101,
@@ -3910,16 +3975,9 @@ object OpMsg {
       "batchSize" -> JInt(batchSize)) ++
       serverLimit.map(n => "limit" -> JInt(n)).toList ++
       List("$db" -> JString(db)))
-    val (dir, total) =
-      cursorFetch(host, port, db, coll, findCmd, batchSize, credentials, tls,
-        compress = compress, exhaust = exhaust, checksum = checksum,
-        compressor = compressor)
-    val decoded =
-      if (total == 0) {
-        // nothing to infer from: an empty frame with no columns (the
-        // caller filters produced no rows — same shape as an empty find)
-        spark.emptyDataFrame
-      } else loadLanded(spark, dir)
+    val decoded = localFrame(spark, Seq(fetchDocs(host, port, db, coll,
+      findCmd, batchSize, credentials, tls, compress, exhaust, checksum,
+      compressor)))
     val filtered = residual.foldLeft(decoded)((df, f) =>
       df.where(filterToColumn(f)))
     if (serverLimit.isEmpty) limit.map(filtered.limit).getOrElse(filtered)
@@ -3930,8 +3988,8 @@ object OpMsg {
     * (aggregate_raw_batches, api.py:252): the pipeline document crosses
     * as BSON inside the aggregate command, the server runs it through
     * the engine's own PipelineCompiler, and the result documents come
-    * back through the same cursor loop and raw-batch decode, the
-    * schema folded from the landed documents as for [[find]]. */
+    * back through the same cursor loop into a driver-side frame, as
+    * for [[find]]. */
   def aggregate(spark: SparkSession, host: String, port: Int, db: String,
                 coll: String, pipelineJson: String, batchSize: Int = 101,
                 credentials: Option[(String, String)] = None,
@@ -3950,20 +4008,15 @@ object OpMsg {
       "pipeline" -> stages,
       "cursor" -> JObject(List("batchSize" -> JInt(batchSize))),
       "$db" -> JString(db)))
-    val (dir, total) =
-      cursorFetch(host, port, db, coll, cmd, batchSize, credentials, tls,
-        compress = compress, exhaust = exhaust, checksum = checksum,
-        compressor = compressor)
-    if (total == 0) spark.emptyDataFrame
-    else loadLanded(spark, dir)
+    localFrame(spark, Seq(fetchDocs(host, port, db, coll, cmd, batchSize,
+      credentials, tls, compress, exhaust, checksum, compressor)))
   }
 
   /** `$changeStream` over the wire — the watch entry point: opens a
     * TAILABLE change cursor via `aggregate([{$changeStream: {...}},
     * ...rest])`, drives getMore until the server reports caught-up (an
-    * empty `nextBatch`), kills the cursor, and decodes the landed
-    * change documents through the normal graftdocs scan (schema folded
-    * from the landed documents, as for [[find]]). Returns the
+    * empty `nextBatch`), kills the cursor, and builds the change
+    * documents' frame in driver memory, as for [[find]]. Returns the
     * frame plus the final `postBatchResumeToken` — persist it and pass
     * it back as `resumeAfter` to continue past this point with no loss
     * or duplication (OpMsgWatchSpec pins the mid-stream-kill replay).
@@ -3982,19 +4035,16 @@ object OpMsg {
             tls: Option[(String, String)] = None,
             startAfter: Option[String] = None,
             tokenFormat: String = "engine"): (DataFrame, String) = {
-    val (dir, total, token) = watchFetch(host, port, db, coll, pipelineJson,
+    val (docs, token) = watchFetch(host, port, db, coll, pipelineJson,
       keyField, resumeAfter, batchSize, awaitMs, credentials, tls,
       startAfter, tokenFormat)
-    val df =
-      if (total == 0) { deleteDir(dir); spark.emptyDataFrame }
-      else loadLanded(spark, dir)
-    (df, token)
+    (localFrame(spark, Seq(docs)), token)
   }
 
   /** The raw half of [[watch]]: drive the change cursor to caught-up
-    * and land the raw BSON change documents, returning (landing dir,
-    * docs landed, final postBatchResumeToken). The graftwire
-    * change-stream SOURCE spools these files per micro-batch. */
+    * and return its raw BSON change documents with the final
+    * postBatchResumeToken. The graftwire change-stream SOURCE spools
+    * them per micro-batch. */
   private[sources] def watchFetch(host: String, port: Int, db: String,
             coll: String, pipelineJson: String = "[]",
             keyField: String = "_id",
@@ -4005,7 +4055,7 @@ object OpMsg {
             tls: Option[(String, String)] = None,
             startAfter: Option[String] = None,
             tokenFormat: String = "engine")
-      : (java.nio.file.Path, Long, String) = {
+      : (Seq[Array[Byte]], String) = {
     require(batchSize > 0, "batchSize must be positive")
     require(resumeAfter.isEmpty || startAfter.isEmpty,
       "resumeAfter and startAfter are mutually exclusive")
@@ -4028,14 +4078,13 @@ object OpMsg {
       "cursor" -> JObject(List("batchSize" -> JInt(batchSize))),
       "$db" -> JString(db)))
     val conn = new Connection(host, port, db, credentials, tls)
-    val (dir, os) = landing("graft_opmsgw")
-    var total = 0L
+    val all = Vector.newBuilder[Array[Byte]]
     var token = resumeAfter.getOrElse("")
     try {
       var reply = conn.roundTrip(cmd).doc
       var (cursorId, docs) = parseCursorReply(reply)
       parseResumeToken(reply).foreach(token = _)
-      docs.foreach(d => os.write(d)); total += docs.size
+      all ++= docs
       // cursor id 0 on ANY reply means the server closed the stream
       // with that batch (an invalidate event is terminal) — nothing to
       // drive or kill past it
@@ -4051,14 +4100,14 @@ object OpMsg {
           if (nid != 0L && nid != cursorId) throw new IllegalStateException(
             "tailable cursor id changed mid-stream")
           parseResumeToken(reply).foreach(token = _)
-          more.foreach(d => os.write(d)); total += more.size
+          all ++= more
           docs = more
           cursorId = nid
         }
         // change cursors never drain server-side: always kill
       } finally if (cursorId != 0L) conn.kill(cursorId, coll)
-    } finally { os.close(); conn.close() }
-    (dir, total, token)
+    } finally conn.close()
+    (all.result(), token)
   }
 
   /** `insert` over the wire — the reference's WRITE path (write() →
@@ -4305,12 +4354,11 @@ object OpMsg {
   /** Parallel-cursor `find` over OP_MSG — the reference's thread-pool
     * raw-batch read (api.py:181-199) on authentic framing: plan
     * half-open key ranges from server-side quantiles (splitVector),
-    * drive ONE full find → getMore cursor per range concurrently, land
-    * every range's batches in one directory, decode through a single
-    * graftdocs scan (one Spark partition per landed batch file; the
-    * schema folded per file, as for [[find]]), and re-apply residuals
-    * client-side. Ranges share endpoints, so their union is exactly the
-    * filtered collection. */
+    * drive ONE full find → getMore cursor per range concurrently, build
+    * one driver-side frame from every range's documents (the schema
+    * folded per cursor and merged in range order, as for [[find]]), and
+    * re-apply residuals client-side. Ranges share endpoints, so their
+    * union is exactly the filtered collection. */
   def findParallel(spark: SparkSession, host: String, port: Int, db: String,
                    coll: String, splitKey: String, numSplits: Int,
                    filters: Seq[Filter] = Seq.empty,
@@ -4328,27 +4376,14 @@ object OpMsg {
       return find(spark, host, port, db, coll, filters, limit, batchSize,
         credentials, tls, compress = compress, checksum = checksum,
         compressor = compressor)
-    import org.apache.spark.sql.sources._
-    val ranges: Seq[Filter] = {
-      val first: Filter =
-        Or(IsNull(splitKey), LessThan(splitKey, bounds.head))
-      val mids = bounds.sliding(2).collect { case Seq(lo, hi) =>
-        And(GreaterThanOrEqual(splitKey, lo),
-          LessThan(splitKey, hi)): Filter
-      }.toSeq
-      val lastR: Filter = GreaterThanOrEqual(splitKey, bounds.last)
-      (first +: mids) :+ lastR
-    }
+    val ranges = keyRanges(splitKey, bounds)
     val (_, residual) = FilterTranslator.translateAll(filters)
-    val dir = java.nio.file.Files.createTempDirectory("graft_opmsgp")
-    dir.toFile.deleteOnExit() // registered FIRST → deleted last at exit
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(ranges.size, 8))
-    var total = 0L
-    try {
-      val futs = ranges.zipWithIndex.map { case (r, i) =>
-        pool.submit(new java.util.concurrent.Callable[Long] {
-          def call(): Long = {
+    val perRange =
+      try ranges.map { r =>
+        pool.submit(new java.util.concurrent.Callable[Seq[Array[Byte]]] {
+          def call(): Seq[Array[Byte]] = {
             // ranges are always translatable, so the residual set is
             // identical across cursors — re-applied once, below
             val (mqlDoc, _) = FilterTranslator.translateAll(filters :+ r)
@@ -4357,138 +4392,91 @@ object OpMsg {
               "filter" -> mqlDoc,
               "batchSize" -> JInt(batchSize),
               "$db" -> JString(db)))
-            val (d, n) = cursorFetch(host, port, db, coll, cmd, batchSize,
-              credentials, tls, compress = compress, checksum = checksum,
-              compressor = compressor)
-            // move the landed batch file under the shared directory —
-            // one file per cursor, one Spark partition per file; the
-            // now-empty per-range dir goes away (its deleteOnExit
-            // registration becomes a no-op), and the moved file is
-            // re-registered at its new path
-            if (n > 0) {
-              val moved = dir.resolve(f"batch-$i%05d.bson")
-              java.nio.file.Files.move(d.resolve("batches.bson"), moved): Unit
-              moved.toFile.deleteOnExit()
-              deleteDir(d)
-            }
-            n
+            fetchDocs(host, port, db, coll, cmd, batchSize, credentials, tls,
+              compress, exhaust = false, checksum, compressor)
           }
         })
-      }
-      total = futs.map(_.get()).sum
-    } finally pool.shutdown()
-    val decoded =
-      if (total == 0) spark.emptyDataFrame
-      else loadLanded(spark, dir)
-    val filtered = residual.foldLeft(decoded)((df, f) =>
+      }.map(_.get())
+      finally pool.shutdown()
+    val filtered = residual.foldLeft(localFrame(spark, perRange))((df, f) =>
       df.where(filterToColumn(f)))
     limit.map(filtered.limit).getOrElse(filtered)
   }
 
-  /** Load a landing directory through the graftdocs scan with the
-    * schema the inference job would infer, without the job: each landed
-    * batch file's type tree ([[GraftDocSource.bsonTree]], the job's own
-    * per-file fold) goes into the directory's inference sidecar first,
-    * so the load resolves the schema driver-side
-    * ([[GraftDocSource.sidecarSchema]]). The sidecar is only an
-    * optimisation: if a fold fails (a truncated document), none is
-    * written and the load runs the job, which raises as it always did.
-    * The sidecar is registered for deletion at JVM exit after the
-    * directory, so it goes first and the directory still empties. */
-  private[sources] def loadLanded(spark: SparkSession,
-                                  dir: java.nio.file.Path): DataFrame = {
-    val side = dir.resolve(GraftDocSource.InferSidecarName)
-    try {
-      val files = Option(dir.toFile.listFiles()).toSeq.flatten
-        .filter(_.getName.endsWith(".bson"))
-      val trees = files.map { f =>
-        val in = new BufferedInputStream(
-          java.nio.file.Files.newInputStream(f.toPath), 1 << 16)
-        try f.getName -> GraftDocSource.bsonTree(in) finally in.close()
-      }.toMap
-      side.toFile.deleteOnExit()
-      val out = java.nio.file.Files.newOutputStream(side)
-      try GraftDocSource.writeInferSidecar(out, trees) finally out.close()
-    } catch { case scala.util.control.NonFatal(_) =>
-      try java.nio.file.Files.deleteIfExists(side): Unit
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
-    spark.read.format("graftdocs").load(dir.toString)
+  /** The half-open ranges of `key` that the sorted, non-empty `bounds`
+    * cut, nulls in the first: one cursor's filter each, their union
+    * every document. */
+  private[sources] def keyRanges(key: String, bounds: Seq[Double]): Seq[Filter] = {
+    import org.apache.spark.sql.sources._
+    val mids = bounds.zip(bounds.tail).map { case (lo, hi) =>
+      And(GreaterThanOrEqual(key, lo), LessThan(key, hi)): Filter }
+    (Or(IsNull(key), LessThan(key, bounds.head)) +: mids) :+
+      GreaterThanOrEqual(key, bounds.last)
   }
 
-  /** A fresh landing directory and its open batch file. Landed batches
-    * are read lazily by the graftdocs scan, so eager deletion is the
-    * consumer's job (the graftwire partition reader deletes in close());
-    * the JVM-exit hook bounds leakage for driver-side lazy DataFrames
-    * whose lifetime we cannot observe. deleteOnExit runs in reverse
-    * registration order: dir last. */
-  private def landing(prefix: String)
-      : (java.nio.file.Path, java.io.OutputStream) = {
-    val dir = java.nio.file.Files.createTempDirectory(prefix)
-    val file = dir.resolve("batches.bson")
-    dir.toFile.deleteOnExit()
-    file.toFile.deleteOnExit()
-    (dir, java.nio.file.Files.newOutputStream(file))
+  /** Every raw document of `firstCmd`'s cursor, in order, on a fresh
+    * [[Connection]]. With `compress`, every message after the handshake
+    * crosses as OP_COMPRESSED both ways. */
+  private def fetchDocs(host: String, port: Int, db: String, coll: String,
+                         firstCmd: JObject, batchSize: Int,
+                         credentials: Option[(String, String)],
+                         tls: Option[(String, String)], compress: Boolean,
+                         exhaust: Boolean, checksum: Boolean,
+                         compressor: String): Seq[Array[Byte]] = {
+    val cursor = new Connection(host, port, db, credentials, tls, compress,
+      checksum, compressor).cursor(firstCmd, coll, batchSize, exhaust)
+    try cursor.flatten.toVector finally cursor.close()
   }
 
-  /** Drive one command's full cursor on one [[Connection]] (first
-    * reply, getMore until id=0 — or ONE exhaust getMore whose reply
-    * stream runs until moreToCome clears), landing every raw batch
-    * document in a batch file. With `compress`, every message after the
-    * handshake crosses as OP_COMPRESSED both ways. A failure mid-cursor
-    * best-effort kills the server cursor (killCursors) before
-    * rethrowing. Returns (directory, documents landed). */
-  private[sources] def cursorFetch(host: String, port: Int, db: String, coll: String,
-                          firstCmd: JObject, batchSize: Int,
-                          credentials: Option[(String, String)],
-                          tls: Option[(String, String)],
-                          compress: Boolean = false,
-                          exhaust: Boolean = false,
-                          checksum: Boolean = false,
-                          compressor: String = "zlib")
-      : (java.nio.file.Path, Long) = {
-    val conn = new Connection(host, port, db, credentials, tls, compress,
-      checksum, compressor)
-    val (dir, os) = landing("graft_opmsg")
-    var total = 0L
-    def land(docs: Seq[Array[Byte]]): Unit = {
-      docs.foreach(d => os.write(d)); total += docs.size
-    }
-    try {
-      var (cursorId, docs) = parseCursorReply(conn.roundTrip(firstCmd).doc)
-      land(docs)
-      try {
-        if (exhaust && cursorId != 0L) {
-          // ONE getMore with exhaustAllowed; the server streams every
-          // remaining batch (moreToCome set until the last)
-          var fr = conn.getMore(cursorId, coll, batchSize, exhaust = true)
-          var streaming = true
-          while (streaming) {
-            val (nid, more) = parseCursorReply(fr.doc)
-            land(more)
-            streaming = fr.moreToCome
-            if (streaming) fr = conn.next()
-            else if (nid != 0L) throw new IllegalStateException(
-              "exhaust stream ended with a live cursor")
-          }
-          cursorId = 0L
-        }
-        while (cursorId != 0L) {
-          val (nid, more) = parseCursorReply(
-            conn.getMore(cursorId, coll, batchSize).doc)
-          land(more)
-          cursorId = nid
-        }
-      } catch { case scala.util.control.NonFatal(e) =>
-        // don't leak the server cursor on an aborted drive — a real
-        // driver sends killCursors before surfacing the failure
-        if (cursorId != 0L) conn.kill(cursorId, coll)
-        throw e
+  /** One frame of cursors' raw documents, held in driver memory as the
+    * reference's result tables are. The schema is the graftdocs
+    * inference job's own fold — one [[graft.bson.SchemaInference.typeTree]]
+    * per cursor, merged in cursor order, as the job folds one task per
+    * batch file — so returning the frame runs no Spark job. The rows
+    * decode once on the direct bytes→vectors path
+    * ([[BsonColumnarReader]], strict like a default graftdocs read)
+    * into a LocalRelation. No documents: the empty frame. */
+  private[sources] def localFrame(spark: SparkSession,
+                                  cursors: Seq[Seq[Array[Byte]]]): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    import graft.bson.{BsonBinary, SchemaInference}
+    if (cursors.forall(_.isEmpty)) return spark.emptyDataFrame
+    val schema = SchemaInference.mergeTrees(cursors.map(docs =>
+      SchemaInference.typeTree(BsonBinary.documents(docStream(docs.iterator)))))
+    val reader = new BsonColumnarReader(docStream(cursors.iterator.flatten),
+      schema, strict = true)
+    val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToScalaConverter(schema)
+    val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
+    try while (reader.next()) reader.get().rowIterator().asScala.foreach(r =>
+      rows.add(toRow(r).asInstanceOf[org.apache.spark.sql.Row]): Unit)
+    finally reader.close()
+    spark.createDataFrame(rows, schema)
+  }
+
+  /** Documents as one BSON byte stream, pulling the next document only
+    * once the previous one has been read — over a [[Connection.Cursor]],
+    * a getMore is sent only when the decoder needs its batch. */
+  private[sources] def docStream(docs: Iterator[Array[Byte]]): InputStream =
+    new InputStream {
+      private var cur = Array.emptyByteArray
+      private var pos = 0
+      private def ready(): Boolean = {
+        while (pos == cur.length && docs.hasNext) { cur = docs.next(); pos = 0 }
+        pos < cur.length
       }
-    } finally { os.close(); conn.close() }
-    if (total == 0) deleteDir(dir) // no caller reads an empty landing dir
-    (dir, total)
-  }
+      override def read(): Int =
+        if (!ready()) -1 else { pos += 1; cur(pos - 1) & 0xFF }
+      override def read(b: Array[Byte], off: Int, len: Int): Int =
+        if (len == 0) 0
+        else if (!ready()) -1
+        else {
+          val n = math.min(len, cur.length - pos)
+          System.arraycopy(cur, pos, b, off, n)
+          pos += n
+          n
+        }
+    }
 
   /** Residual-filter evaluation: the Spark Column form of a pushed
     * Filter the wire could not translate — re-applied client-side
@@ -4516,14 +4504,4 @@ object OpMsg {
         s"unsupported residual filter $other")
     }
   }
-
-  /** Best-effort recursive delete of a landed-batch directory (one
-    * level deep — batch landings never nest). */
-  private[sources] def deleteDir(dir: java.nio.file.Path): Unit =
-    try {
-      val f = dir.toFile
-      val children = f.listFiles()
-      if (children != null) children.foreach(_.delete(): Unit)
-      f.delete(): Unit
-    } catch { case scala.util.control.NonFatal(_) => () }
 }

@@ -182,6 +182,13 @@ class PipelineExtraSpec extends AnyFunSuite {
     assert(rows.map(_.getInt(2)).toSeq == Seq(1, 3))
   }
 
+  test("$setWindowFields output entry that is not a document is refused by name") {
+    val e = intercept[MqlException](PipelineCompiler.run(sales, """[
+      {"$setWindowFields": {"sortBy": {"id": 1}, "output": {"bad": 1}}}]"""))
+    assert(e.getMessage ==
+      "$setWindowFields: output field bad takes a document, got 1", e.getMessage)
+  }
+
   test("$shift looks forward/backward with default") {
     val out = PipelineCompiler.run(sales, """[
       {"$setWindowFields": {"partitionBy": "$grp", "sortBy": {"id": 1},

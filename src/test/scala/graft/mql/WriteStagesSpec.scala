@@ -126,6 +126,18 @@ class WriteStagesSpec extends AnyFunSuite {
     intercept[MqlException](runW(s2, """[{"$merge": {}}]""", store))
   }
 
+  test("$merge whenMatched that is neither a mode nor a pipeline is refused by name") {
+    val store = freshStore()
+    store.write(src, "t")
+    Seq("5", """{"mode":"replace"}""").foreach { v =>
+      val e = intercept[MqlException](runW(src,
+        s"""[{"$$merge": {"into": "t", "whenMatched": $v}}]""", store))
+      assert(e.getMessage ==
+        s"$$merge: whenMatched takes a mode name or a pipeline array, got $v",
+        e.getMessage)
+    }
+  }
+
   test("graftdocs-format store: $out lands as a SQL-queryable collection") {
     val root = java.nio.file.Files.createTempDirectory("graft_dstore").toString
     val store = new DocStore(spark, root, "graftdocs")

@@ -95,7 +95,7 @@ class JsonlRawLinesPropertySpec extends AnyFunSuite {
         assert(read(path, 0L, bytes.length.toLong) == want)
         java.nio.file.Files.delete(file)
       }
-    } finally OpMsg.deleteDir(dir)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 
   test("a split starting inside an empty-line run keeps the next line") {
@@ -114,6 +114,6 @@ class JsonlRawLinesPropertySpec extends AnyFunSuite {
         assert(strs(s, text.length.toLong) == Seq(big, "b"))
       }
       assert(strs(6L, text.length.toLong) == Seq("b")) // mid-line start
-    } finally OpMsg.deleteDir(dir)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 }

@@ -14,7 +14,10 @@ import graft.SparkFixture
   * to the wrong request or a server that hangs up raises, a cursor the
   * client gives up is killed before the failure surfaces, an exhaust
   * stream must end with the cursor closed, and a change cursor keeps
-  * its id and is killed when the drive stops. */
+  * its id and is killed when the drive stops. The `graftwire` partition
+  * reader streams its cursor: it asks for a batch only when it needs
+  * one, kills the cursor on an early close or a failed getMore, and
+  * writes no file. */
 class OpMsgClientSpec extends AnyFunSuite {
   private lazy val spark = SparkFixture.spark
 
@@ -121,6 +124,12 @@ class OpMsgClientSpec extends AnyFunSuite {
   }
   private val findCmd = JObject(List("find" -> JString("t"), "batchSize" -> JInt(1),
     "$db" -> JString("graft")))
+  /** Every document of `findCmd`'s cursor, the cursor closed after. */
+  private def drain(port: Int, exhaust: Boolean = false): Seq[Array[Byte]] = {
+    val c = new OpMsg.Connection("127.0.0.1", port, "graft", None, None)
+      .cursor(findCmd, "t", 1, exhaust)
+    try c.flatten.toVector finally c.close()
+  }
 
   test("a reply answering another request id raises IllegalStateException") {
     scripted { case (0, _) => Answer((1, 0, okReply)) } { (port, _) =>
@@ -158,8 +167,7 @@ class OpMsgClientSpec extends AnyFunSuite {
       case (1, c) if c.contains("getMore") => Answer((0, 0, boom))
       case (2, c) if c.contains("killCursors") => Answer((0, 0, okReply))
     } { (port, seen) =>
-      val e = intercept[IllegalArgumentException](OpMsg.cursorFetch(
-        "127.0.0.1", port, "graft", "t", findCmd, 1, None, None))
+      val e = intercept[IllegalArgumentException](drain(port))
       assert(e.getMessage.contains("getMore exploded"), e.getMessage)
       assert(names(seen) == Seq("find", "getMore", "killCursors"))
       assert(killed(seen) == Seq(JArray(List(JLong(77L)))))
@@ -174,8 +182,7 @@ class OpMsgClientSpec extends AnyFunSuite {
         (0, 0, cursor(77L, first = false, 3)))   // last, yet id 77 lives
       case (2, c) if c.contains("killCursors") => Answer((0, 0, okReply))
     } { (port, seen) =>
-      val e = intercept[IllegalStateException](OpMsg.cursorFetch(
-        "127.0.0.1", port, "graft", "t", findCmd, 1, None, None, exhaust = true))
+      val e = intercept[IllegalStateException](drain(port, exhaust = true))
       assert(e.getMessage.contains("live cursor"), e.getMessage)
       import scala.jdk.CollectionConverters._
       // the getMore asked for the exhaust stream (exhaustAllowed, bit 16)
@@ -204,9 +211,62 @@ class OpMsgClientSpec extends AnyFunSuite {
     scripted(watchScript.orElse {
       case (1, c) if c.contains("getMore") => Answer((0, 0, cursor(77L, first = false)))
     }) { (port, seen) =>
-      val (dir, total, _) = OpMsg.watchFetch("127.0.0.1", port, "graft", "t")
-      try assert(total == 1L) finally OpMsg.deleteDir(dir)
+      val (docs, _) = OpMsg.watchFetch("127.0.0.1", port, "graft", "t")
+      assert(docs.size == 1)
       assert(killed(seen) == Seq(JArray(List(JLong(77L)))))
+    }
+  }
+
+  // ---- the graftwire partition reader ---------------------------------------
+
+  private def wireReader(port: Int) =
+    new GraftWireReaderFactory(StructType(Seq(StructField("_id", IntegerType))))
+      .createColumnarReader(GraftWirePartition(GraftWireSource.Conn(
+        "127.0.0.1", port, "graft", "t", batchSize = 1, credentials = None,
+        tls = None, compress = false, compressor = "zlib", checksum = false,
+        exhaust = false), "{}", Seq("_id")))
+
+  /** Entries of java.io.tmpdir the wire client's landings were named by. */
+  private def landings(): Set[String] =
+    Option(new java.io.File(System.getProperty("java.io.tmpdir")).list())
+      .toSet.flatten.filter(_.startsWith("graft_opmsg"))
+
+  test("graftwire reader: a batch is asked for only when the decoder needs it, " +
+       "and an early close kills the live cursor") {
+    // a first batch larger than one decoded ColumnarBatch (4096 rows)
+    scripted {
+      case (0, _) => Answer((0, 0, cursor(77L, first = true, 1 to 5000: _*)))
+      case (1, c) if c.contains("killCursors") => Answer((0, 0, okReply))
+    } { (port, seen) =>
+      val before = landings()
+      val r = wireReader(port)
+      try {
+        assert(r.next())
+        assert(r.get().numRows() == 4096)
+        assert(r.get().column(0).getInt(4095) == 4096)
+        assert(names(seen) == Seq("find"))
+        assert(landings() == before, "the reader wrote a landing")
+      } finally r.close()
+      assert(names(seen) == Seq("find", "killCursors"))
+      assert(killed(seen) == Seq(JArray(List(JLong(77L)))))
+    }
+  }
+
+  test("graftwire reader: a failing getMore kills the cursor before the error surfaces") {
+    val boom = OpMsg.encodeDoc(JObject(List("ok" -> JDouble(0.0),
+      "errmsg" -> JString("getMore exploded"))))
+    scripted {
+      case (0, _) => Answer((0, 0, cursor(77L, first = true, 1)))
+      case (1, c) if c.contains("getMore") => Answer((0, 0, boom))
+      case (2, c) if c.contains("killCursors") => Answer((0, 0, okReply))
+    } { (port, seen) =>
+      val r = wireReader(port)
+      try {
+        val e = intercept[IllegalArgumentException](r.next())
+        assert(e.getMessage.contains("getMore exploded"), e.getMessage)
+        assert(names(seen) == Seq("find", "getMore", "killCursors"))
+      } finally r.close()
+      assert(names(seen) == Seq("find", "getMore", "killCursors"))
     }
   }
 }

@@ -198,6 +198,17 @@ class OpMsgCommandSpec extends AnyFunSuite {
     } finally srv.stop()
   }
 
+  test("explain of a find that names no collection is refused by name") {
+    val (_, srv) = fixture()
+    try {
+      val e = intercept[IllegalArgumentException](
+        cmd(srv, "explain" -> JObject(List("find" -> JInt(1)))))
+      assert(e.getMessage.startsWith("explain failed: ") &&
+        e.getMessage.contains("explain: find takes a collection name, got 1"),
+        e.getMessage)
+    } finally srv.stop()
+  }
+
   test("drop / renameCollection over the wire ride the DDL journal: " +
        "change streams see the events; missing ns = code 26") {
     val (store, srv) = fixture()

@@ -2,7 +2,6 @@ package graft.sources
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.sources.GreaterThanOrEqual
 import org.apache.spark.sql.types._
 import org.json4s._
@@ -10,14 +9,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkFixture
 
-/** A wire frame carries the schema of its landed cursor batches: the
-  * OP_MSG client folds each landed batch file's type tree into the
-  * landing directory's inference sidecar before loading, so `find` and
-  * `aggregate` return their frame without scheduling a Spark job, and
-  * the frame's schema is exactly what the inference job would infer
-  * from the same directory — first-seen field order, a field whose type
-  * first appears in a getMore batch, int32 widened to int64 by a later
-  * batch. */
+/** A wire frame is built in driver memory from its cursor's documents:
+  * `find` and `aggregate` return it without scheduling a Spark job, and
+  * its schema and rows are exactly what a graftdocs read infers and
+  * decodes from the same bytes written to a batch file — first-seen
+  * field order, a field whose type first appears in a getMore batch,
+  * int32 widened to int64 by a later batch, and the same error for a
+  * truncated document. No client read leaves a file behind. */
 class OpMsgLandedSchemaSpec extends AnyFunSuite {
   private lazy val spark = SparkFixture.spark
 
@@ -49,29 +47,36 @@ class OpMsgLandedSchemaSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(listener)
   }
 
-  private def landingDir(df: DataFrame): String =
-    df.queryExecution.analyzed.collectFirst {
-      case r: DataSourceV2Relation if r.options.containsKey("path") => r.options.get("path")
-    }.getOrElse(fail("frame is not a graftdocs landing"))
+  /** The documents of `cmd`'s cursor, fetched again by the test. */
+  private def wireDocs(port: Int, cmd: String, batchSize: Int): Seq[Array[Byte]] = {
+    val c = new OpMsg.Connection("127.0.0.1", port, "graft", None, None)
+      .cursor(graft.mql.Mql.parse(cmd).asInstanceOf[JObject], "t", batchSize)
+    try c.flatten.toVector finally c.close()
+  }
 
-  /** The schema the inference job infers for the frame's landing dir:
-    * any finite `inferMaxDocs` skips the sidecar, and this one samples
-    * every document. */
-  private def jobInferred(df: DataFrame): DataFrame =
-    spark.read.format("graftdocs")
-      .option("inferMaxDocs", (Long.MaxValue - 1).toString)
-      .load(landingDir(df))
+  /** `docs` written to a batch file and read back by graftdocs with the
+    * inference job (any finite `inferMaxDocs` runs it; this one samples
+    * every document), collected before the file goes. */
+  private def jobInferred(docs: Seq[Array[Byte]]): (StructType, Set[String]) = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_landed_ref")
+    try {
+      java.nio.file.Files.write(dir.resolve("batches.bson"), docs.flatten.toArray)
+      val df = spark.read.format("graftdocs")
+        .option("inferMaxDocs", (Long.MaxValue - 1).toString)
+        .load(dir.toString)
+      (df.schema, rows(df))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
 
   private def rows(df: DataFrame): Set[String] = df.collect().map(_.json).toSet
 
-  private def assertJobFree(what: String)(frame: => DataFrame): Unit = {
+  private def assertJobFree(what: String, docs: => Seq[Array[Byte]])
+                           (frame: => DataFrame): Unit = {
     val (df, jobs) = clientJobs(frame)
     assert(jobs == 0, s"$what: $jobs Spark job(s) ran before the frame returned")
-    assert(new java.io.File(landingDir(df), GraftDocSource.InferSidecarName).isFile)
-    val forced = jobInferred(df)
-    assert(df.schema == forced.schema, s"$what: ${df.schema.treeString} vs ${forced.schema.treeString}")
-    assert(rows(df) == rows(forced))
-    OpMsg.deleteDir(java.nio.file.Paths.get(landingDir(df)))
+    val (schema, want) = jobInferred(docs)
+    assert(df.schema == schema, s"$what: ${df.schema.treeString} vs ${schema.treeString}")
+    assert(rows(df) == want)
   }
 
   test("find and aggregate on a preload server return their frame without a Spark job") {
@@ -86,11 +91,14 @@ class OpMsgLandedSchemaSpec extends AnyFunSuite {
     store.write(spark.createDataFrame(java.util.Arrays.asList(data: _*), schema), "t")
     val server = new OpMsg.Server(spark, store, preload = true)
     try {
-      assertJobFree("find") {
+      assertJobFree("find", wireDocs(server.port, """{"find": "t",
+          "filter": {"_id": {"$gte": 1}}, "batchSize": 16, "$db": "graft"}""", 16)) {
         OpMsg.find(spark, "127.0.0.1", server.port, "graft", "t",
           Seq(GreaterThanOrEqual("_id", 1L)), batchSize = 16)
       }
-      assertJobFree("aggregate") {
+      assertJobFree("aggregate", wireDocs(server.port, """{"aggregate": "t",
+          "pipeline": [{"$match": {"_id": {"$gte": 1}}}],
+          "cursor": {"batchSize": 16}, "$db": "graft"}""", 16)) {
         OpMsg.aggregate(spark, "127.0.0.1", server.port, "graft", "t",
           """[{"$match": {"_id": {"$gte": 1}}}]""", batchSize = 16)
       }
@@ -143,10 +151,10 @@ class OpMsgLandedSchemaSpec extends AnyFunSuite {
         ("tag", s"t$i", StringType))),
       (7 to 9).map(i => doc(("_id", i.toLong, LongType), ("n", 5000000000L + i, LongType))))
     scripted(batches) { port =>
-      assertJobFree("find") {
+      assertJobFree("find", batches.flatten) {
         OpMsg.find(spark, "127.0.0.1", port, "graft", "t", batchSize = 3)
       }
-      assertJobFree("aggregate") {
+      assertJobFree("aggregate", batches.flatten) {
         OpMsg.aggregate(spark, "127.0.0.1", port, "graft", "t", "[]", batchSize = 3)
       }
     }
@@ -157,36 +165,57 @@ class OpMsgLandedSchemaSpec extends AnyFunSuite {
       assert(df.schema.map(f => f.name -> f.dataType) ==
         Seq("_id" -> LongType, "n" -> LongType, "tag" -> StringType))
       assert(df.where("tag is not null").count() == 3)
-      OpMsg.deleteDir(java.nio.file.Paths.get(landingDir(df)))
     }
   }
 
-  test("a landing whose fold fails writes no sidecar and fails on load as before") {
-    def landing(): java.nio.file.Path = {
-      val dir = java.nio.file.Files.createTempDirectory("graft_landed_bad")
-      val good = OpMsg.encodeDoc(JObject(List("a" -> JInt(1))))
-      val cut = OpMsg.encodeDoc(JObject(List("a" -> JString("truncated"))))
-      java.nio.file.Files.write(dir.resolve("batches.bson"),
-        good ++ cut.take(cut.length - 3))
-      dir
-    }
+  test("a truncated document fails with the plain scan's error") {
+    val good = OpMsg.encodeDoc(JObject(List("a" -> JInt(1))))
+    val cut = OpMsg.encodeDoc(JObject(List("a" -> JString("truncated"))))
+    val docs = Seq(good, cut.take(cut.length - 3))
     // the decode error itself, wherever the job failure carries it
     def rootMessage(e: Throwable): String = {
       val all = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
         .map(x => String.valueOf(x.getMessage)).mkString("\n")
       "truncated BSON document[^\n]*".r.findFirstIn(all).getOrElse(all)
     }
-    val viaLoad = landing()
-    val viaScan = landing()
+    val inMemory = intercept[Exception](OpMsg.localFrame(spark, Seq(docs)).collect())
+    val plain = intercept[Exception](jobInferred(docs))
+    assert(rootMessage(inMemory) == rootMessage(plain))
+    assert(rootMessage(inMemory).contains("truncated BSON document"))
+  }
+
+  test("no wire read leaves a file in java.io.tmpdir") {
+    def landings(): Set[String] =
+      Option(new java.io.File(System.getProperty("java.io.tmpdir")).list())
+        .toSet.flatten.filter(_.startsWith("graft_opmsg"))
+    val store = new graft.sinks.DocStore(spark,
+      java.nio.file.Files.createTempDirectory("graft_landed_tmp").toString, "graftdocs")
+    val schema = StructType(Seq(StructField("_id", LongType), StructField("n", IntegerType)))
+    val df = spark.createDataFrame(java.util.Arrays.asList(
+      (1L to 50L).map(i => Row(i, i.toInt)): _*), schema)
+    store.write(df, "t")
+    // change history for watch: the second version inserts 26..50
+    store.writeVersioned(df.where("_id <= 25"), "v"): Unit
+    store.writeVersioned(df, "v"): Unit
+    val server = new OpMsg.Server(spark, store, preload = true)
     try {
-      val landed = intercept[Exception](OpMsg.loadLanded(spark, viaLoad).collect())
-      assert(!java.nio.file.Files.exists(viaLoad.resolve(GraftDocSource.InferSidecarName)))
-      // the plain scan over the same bytes: the error a landing met
-      // before the sidecar existed
-      val plain = intercept[Exception](
-        spark.read.format("graftdocs").load(viaScan.toString).collect())
-      assert(rootMessage(landed) == rootMessage(plain))
-      assert(rootMessage(landed).contains("truncated BSON document"))
-    } finally { OpMsg.deleteDir(viaLoad); OpMsg.deleteDir(viaScan) }
+      val port = server.port
+      val before = landings()
+      def check(what: String)(read: => Long): Unit = {
+        assert(read > 0, what)
+        assert(landings() == before, s"$what left ${landings() -- before}")
+      }
+      check("find")(OpMsg.find(spark, "127.0.0.1", port, "graft", "t",
+        batchSize = 16).count())
+      check("aggregate")(OpMsg.aggregate(spark, "127.0.0.1", port, "graft", "t",
+        "[]", batchSize = 16).count())
+      check("watch")(OpMsg.watch(spark, "127.0.0.1", port, "graft", "v")._1.count())
+      check("findParallel")(OpMsg.findParallel(spark, "127.0.0.1", port, "graft", "t",
+        splitKey = "_id", numSplits = 3, batchSize = 16).count())
+      val wire = spark.read.format("graftwire").option("host", "127.0.0.1")
+        .option("port", port.toLong).option("collection", "t")
+      check("graftwire inferSchema")(wire.load().schema.size.toLong)
+      check("graftwire batch read")(wire.load().collect().length.toLong)
+    } finally server.stop()
   }
 }
