@@ -853,13 +853,17 @@ private[sources] class GraftWireReaderFactory(required: StructType)
     val cursor = new OpMsg.Connection(c.host, c.port, c.db, c.credentials,
       c.tls, c.compress, c.checksum, c.compressor)
       .cursor(cmd, c.coll, c.batchSize, c.exhaust)
-    val inner = new BsonColumnarReader(OpMsg.docStream(cursor.flatten),
-      required, strict = false)
+    val inner =
+      try new BsonColumnarReader(new java.io.SequenceInputStream(
+        cursor.flatten.map(d => new java.io.ByteArrayInputStream(d)
+          : java.io.InputStream).asJavaEnumeration), required, strict = false)
+      catch { case e: Throwable => cursor.close(); throw e }
     new PartitionReader[ColumnarBatch] {
       override def next(): Boolean = inner.next()
       override def get(): ColumnarBatch = inner.get()
-      // kills the server cursor when the scan stops early
-      override def close(): Unit = try inner.close() finally cursor.close()
+      // kills the server cursor when the scan stops early; the cursor
+      // goes first, as SequenceInputStream.close() pulls every element
+      override def close(): Unit = try cursor.close() finally inner.close()
     }
   }
 }

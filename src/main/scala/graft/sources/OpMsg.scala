@@ -4433,50 +4433,52 @@ object OpMsg {
     * inference job's own fold — one [[graft.bson.SchemaInference.typeTree]]
     * per cursor, merged in cursor order, as the job folds one task per
     * batch file — so returning the frame runs no Spark job. The rows
-    * decode once on the direct bytes→vectors path
-    * ([[BsonColumnarReader]], strict like a default graftdocs read)
-    * into a LocalRelation. No documents: the empty frame. */
+    * decode only when a query runs ([[CursorRelation]]). No documents:
+    * the empty frame. */
   private[sources] def localFrame(spark: SparkSession,
                                   cursors: Seq[Seq[Array[Byte]]]): DataFrame = {
-    import scala.jdk.CollectionConverters._
     import graft.bson.{BsonBinary, SchemaInference}
-    if (cursors.forall(_.isEmpty)) return spark.emptyDataFrame
-    val schema = SchemaInference.mergeTrees(cursors.map(docs =>
-      SchemaInference.typeTree(BsonBinary.documents(docStream(docs.iterator)))))
-    val reader = new BsonColumnarReader(docStream(cursors.iterator.flatten),
-      schema, strict = true)
-    val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
-      .createToScalaConverter(schema)
-    val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
-    try while (reader.next()) reader.get().rowIterator().asScala.foreach(r =>
-      rows.add(toRow(r).asInstanceOf[org.apache.spark.sql.Row]): Unit)
-    finally reader.close()
-    spark.createDataFrame(rows, schema)
+    val parts = cursors.filter(_.nonEmpty).map { docs =>
+      val out = new ByteArrayOutputStream(docs.map(_.length).sum)
+      docs.foreach(d => out.write(d, 0, d.length))
+      out.toByteArray
+    }
+    if (parts.isEmpty) return spark.emptyDataFrame
+    val schema = SchemaInference.mergeTrees(parts.map(bytes =>
+      SchemaInference.typeTree(BsonBinary.documents(
+        new java.io.ByteArrayInputStream(bytes)))))
+    spark.baseRelationToDataFrame(
+      new CursorRelation(spark.sqlContext, schema, parts))
   }
 
-  /** Documents as one BSON byte stream, pulling the next document only
-    * once the previous one has been read — over a [[Connection.Cursor]],
-    * a getMore is sent only when the decoder needs its batch. */
-  private[sources] def docStream(docs: Iterator[Array[Byte]]): InputStream =
-    new InputStream {
-      private var cur = Array.emptyByteArray
-      private var pos = 0
-      private def ready(): Boolean = {
-        while (pos == cur.length && docs.hasNext) { cur = docs.next(); pos = 0 }
-        pos < cur.length
-      }
-      override def read(): Int =
-        if (!ready()) -1 else { pos += 1; cur(pos - 1) & 0xFF }
-      override def read(b: Array[Byte], off: Int, len: Int): Int =
-        if (len == 0) 0
-        else if (!ready()) -1
-        else {
-          val n = math.min(len, cur.length - pos)
-          System.arraycopy(cur, pos, b, off, n)
-          pos += n
-          n
-        }
+  /** [[localFrame]]'s relation: one partition per cursor's concatenated
+    * documents, decoded at execution on the direct bytes→vectors path
+    * ([[BsonColumnarReader]], strict like a default graftdocs read) over
+    * only the columns the query reads — a column it never reads is never
+    * decoded, so its type mismatches cannot fail the query. */
+  private class CursorRelation(val sqlContext: org.apache.spark.sql.SQLContext,
+                               val schema: org.apache.spark.sql.types.StructType,
+                               parts: Seq[Array[Byte]])
+    extends org.apache.spark.sql.sources.BaseRelation
+    with org.apache.spark.sql.sources.PrunedScan {
+    override def sizeInBytes: Long = parts.map(_.length.toLong).sum
+    // buildScan returns InternalRows straight from the column vectors
+    override def needConversion: Boolean = false
+    override def buildScan(requiredColumns: Array[String])
+        : org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
+      import scala.jdk.CollectionConverters._
+      val required = org.apache.spark.sql.types.StructType(
+        requiredColumns.map(schema(_)))
+      sqlContext.sparkContext.parallelize(parts, parts.size).flatMap { bytes =>
+        val reader = new BsonColumnarReader(
+          new java.io.ByteArrayInputStream(bytes), required, strict = true)
+        org.apache.spark.TaskContext.get()
+          .addTaskCompletionListener[Unit](_ => reader.close())
+        Iterator.continually(reader.next()).takeWhile(identity)
+          .flatMap(_ => reader.get().rowIterator().asScala)
+      }.asInstanceOf[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]]
     }
+  }
 
   /** Residual-filter evaluation: the Spark Column form of a pushed
     * Filter the wire could not translate — re-applied client-side

@@ -219,8 +219,8 @@ class OpMsgClientSpec extends AnyFunSuite {
 
   // ---- the graftwire partition reader ---------------------------------------
 
-  private def wireReader(port: Int) =
-    new GraftWireReaderFactory(StructType(Seq(StructField("_id", IntegerType))))
+  private def wireReader(port: Int, idType: DataType = IntegerType) =
+    new GraftWireReaderFactory(StructType(Seq(StructField("_id", idType))))
       .createColumnarReader(GraftWirePartition(GraftWireSource.Conn(
         "127.0.0.1", port, "graft", "t", batchSize = 1, credentials = None,
         tls = None, compress = false, compressor = "zlib", checksum = false,
@@ -267,6 +267,18 @@ class OpMsgClientSpec extends AnyFunSuite {
         assert(names(seen) == Seq("find", "getMore", "killCursors"))
       } finally r.close()
       assert(names(seen) == Seq("find", "getMore", "killCursors"))
+    }
+  }
+
+  test("graftwire reader: a declared type it cannot decode kills the cursor it opened") {
+    scripted {
+      case (0, _) => Answer((0, 0, cursor(77L, first = true, 1)))
+      case (1, c) if c.contains("killCursors") => Answer((0, 0, okReply))
+    } { (port, seen) =>
+      val e = intercept[graft.bson.GraftTypeError](wireReader(port, FloatType))
+      assert(e.getMessage.contains("unsupported declared type"), e.getMessage)
+      assert(names(seen) == Seq("find", "killCursors"))
+      assert(killed(seen) == Seq(JArray(List(JLong(77L)))))
     }
   }
 }

@@ -255,6 +255,8 @@ class OpMsgInsertSpec extends AnyFunSuite {
         filters = Seq(org.apache.spark.sql.sources.GreaterThan("value", 0.2)))
       val local = store.read("events").where(col("value") > 0.2)
       assert(canon(wire) == canon(local))
+      // one Spark partition per range cursor
+      assert(wire.rdd.getNumPartitions >= 2)
       // residual (untranslatable) filters re-apply client-side; limit
       // stays client-side when residuals exist
       val withResidual = OpMsg.findParallel(spark, "127.0.0.1", server.port,

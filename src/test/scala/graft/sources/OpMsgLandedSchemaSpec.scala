@@ -168,6 +168,47 @@ class OpMsgLandedSchemaSpec extends AnyFunSuite {
     }
   }
 
+  /** Two documents whose `a` is a string in the first and an int32 in
+    * the second, as mongod serves them; `b` agrees. */
+  private def mixedTypes: Seq[Seq[Array[Byte]]] = {
+    val t = StructType(Seq(StructField("_id", LongType),
+      StructField("a", StringType), StructField("b", IntegerType)))
+    val u = t.copy(fields = t.fields.updated(1, StructField("a", IntegerType)))
+    Seq(Seq(graft.bson.BsonBinary.encodeRow(Row(1L, "x", 10), t),
+      graft.bson.BsonBinary.encodeRow(Row(2L, 7, 20), u)))
+  }
+
+  /** The message of the first GraftTypeError in `e`'s cause chain. */
+  private def typeError(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case x: graft.bson.GraftTypeError => x.getMessage }
+      .getOrElse(fail(s"no GraftTypeError in $e"))
+
+  test("a field typed differently across documents decodes only at execution") {
+    scripted(mixedTypes) { port =>
+      val df = OpMsg.find(spark, "127.0.0.1", port, "graft", "t", batchSize = 3)
+      assert(df.schema.map(f => f.name -> f.dataType) ==
+        Seq("_id" -> LongType, "a" -> StringType, "b" -> IntegerType))
+      // the pruned read never decodes `a`
+      assert(df.select("b").collect().map(_.getInt(0)).toSeq == Seq(10, 20))
+      // a read of `a` fails at execution with the strict graftdocs error
+      val inMemory = intercept[Exception](df.collect())
+      val plain = intercept[Exception](jobInferred(mixedTypes.flatten))
+      assert(typeError(inMemory) == typeError(plain))
+    }
+  }
+
+  test("graftwire infers a field typed differently across documents and nulls the mismatch") {
+    scripted(mixedTypes) { port =>
+      val df = spark.read.format("graftwire").option("host", "127.0.0.1")
+        .option("port", port.toLong).option("collection", "t").load()
+      assert(df.schema.map(f => f.name -> f.dataType) ==
+        Seq("_id" -> LongType, "a" -> StringType, "b" -> IntegerType))
+      assert(df.collect().map(r => (r.getLong(0), Option(r.getString(1)), r.getInt(2)))
+        .toSet == Set((1L, Some("x"), 10), (2L, None, 20)))
+    }
+  }
+
   test("a truncated document fails with the plain scan's error") {
     val good = OpMsg.encodeDoc(JObject(List("a" -> JInt(1))))
     val cut = OpMsg.encodeDoc(JObject(List("a" -> JString("truncated"))))
