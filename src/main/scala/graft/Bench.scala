@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.collection.immutable.ListMap
+
+import org.json4s.{DefaultFormats, Formats}
+import org.json4s.jackson.Serialization
 
 /** Driver-run benchmark: one JSON line with per-query seconds.
   *
@@ -14,41 +17,13 @@ import org.apache.spark.sql.SparkSession
   * measure the queries, not JVM warmup.
   */
 object Bench {
-  private def fmt(v: Double): String = f"$v%.3f"
+  private implicit val formats: Formats = DefaultFormats.withBigDecimal
+  /** Seconds rounded to 3 decimals; a JSON number such as `1.200`. */
+  private def sec(v: Double): BigDecimal = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // AQE partition coalescing sizes partitions by BYTES; CPU-dense
-    // kernels over small text shuffles (1-2 MB at bench scale) were
-    // coalesced to ONE partition, serializing multi-second window /
-    // tokenization stages on one core of local[cpus]. Lowering the
-    // coalescing floor keeps parallelismFirst effective for small
-    // shuffles; at production shuffle sizes the target is
-    // totalBytes/parallelism >> this floor, so behavior is unchanged
-    // at scale (guide §2.2: scale-adaptive partitioning, not a
-    // local-only constant — and parameterized here).
-    val minCoalesce = sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCE", "64k")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", minCoalesce)
-      // streaming checkpoints in these harnesses are per-run scratch on
-      // tmpfs (deleted at query end), so Spark 4.1's checkpoint-file
-      // checksum sidecars (async checksum write awaited on every state
-      // delta close - ChecksumCheckpointFileManager) are pure overhead
-      // here: the cold-path state commit dropped 4s -> 0.5s with them
-      // off. Durable production checkpoints should keep the default.
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      // storage-partitioned joins for co-partitioned graftdocs layouts
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     // warmup: touch the fact table + one full query so codegen/IO pools spin up
     spark.read.parquet(s"$sfDir/lineitem.parquet").count()
     try SparkEntry.queries.head._2(spark, sfDir).count() catch { case _: Throwable => }
@@ -92,39 +67,29 @@ object Bench {
         try { fn(spark, sfDir).queryExecution.toRdd.count() }
         catch { case t: Throwable =>
           errors.getOrElseUpdate(name,
-            (t.getClass.getSimpleName + ": " + String.valueOf(t.getMessage))
-              .replaceAll("[\"\\\\\n\r]", " ").take(160))
+            (t.getClass.getSimpleName + ": " + String.valueOf(t.getMessage)).take(160))
         }
         (System.nanoTime() - t0) / 1e9
       }
-      // dead persisted intermediates (shingle/doc-term tables) would
-      // otherwise accumulate across all queries and drive eviction/GC.
-      // clearCache() only drops DataFrame cache entries — localCheckpoint
-      // RDDs (graphLookup / Components / $lookup-let rounds) live in the
-      // block manager outside the cache manager and must be dropped
-      // explicitly, or 91 queries of leftovers build multi-second
-      // GC/eviction outliers into later queries' timings
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      Session.reset(spark)
       name -> times.min
     }
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
     // full detail to a file (judge-readable), compact subset to stdout
-    val detail = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    val errJson = errors.map { case (k, m) => "\"" + k + "\":\"" + m + "\"" }
-      .mkString("{", ",", "}")
-    val detailLine =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$detail,"errors":$errJson,"sf":"$sfDir"}"""
+    val queries = ListMap(results.map { case (k, v) => k -> sec(v) }: _*)
+    val head = ListMap[String, Any]("metric" -> "total", "value" -> sec(total), "unit" -> "sec",
+      "queries" -> queries)
     java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_DETAIL.json"),
-      (detailLine + "\n").getBytes("UTF-8"))
+      (Serialization.write(head ++ ListMap("errors" -> errors, "sf" -> sfDir)) + "\n")
+        .getBytes("UTF-8"))
     spark.stop()
     // the COMPLETE per-query dict on stdout (one ~8 KB line): the
     // driver parses this line into PERF per_query/scaling — a previous
     // 1300-char "slowest subset" budget (from a stale assumption about
     // the driver's tail capture) left `parsed: null` in every round's
     // BENCH file. BENCH_DETAIL.json stays for redundancy.
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$detail,"n_queries":${results.size},"n_errors":${errors.size},"detail":"BENCH_DETAIL.json","sf":"$sfDir"}""")
+    println(Serialization.write(head ++ ListMap("n_queries" -> results.size,
+      "n_errors" -> errors.size, "detail" -> "BENCH_DETAIL.json", "sf" -> sfDir)))
     if (errors.nonEmpty) {
       System.err.println(s"BENCH FAILURES (${errors.size}): " +
         errors.map { case (k, m) => s"$k -> $m" }.mkString("; "))

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, functions => F}
+import org.apache.spark.sql.{functions => F}
 
 /** Decode-path A/B harness: times a full-column decode of the bulk
   * orders fixture through each reader path — direct (bytes/tokens →
@@ -25,13 +25,7 @@ object DecodeBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val reps = if (args.length > 1) args(1).toInt else 5
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .appName("graft-decode-bench").master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
 
     // replicate 10× so decode work dominates job overhead
     val base = api.Graft.table(spark, sfDir, "orders")

@@ -1999,12 +1999,17 @@ object GraftFunctions {
       copy(child = cs(0), alphaExpr = cs(1))
   }
 
-  /** Register the engine's SQL functions on a session; idempotent. */
-  def register(spark: SparkSession): Unit =
+  /** Register the engine's SQL functions on a session; idempotent: a
+    * name the session already resolves (through [[GraftExtensions]] or
+    * an earlier call) is left as it is. */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     registrations.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, builder, "built-in")
+      if (!registry.functionExists(
+          org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
     }
+  }
 
   /** Column-level form (requires register(spark) on the session). */
   def objectIdToTimestamp(c: Column): Column =

@@ -37,7 +37,7 @@ import org.apache.spark.storage.StorageLevel
   *  - An action that does NOT contain the trigger (e.g. the geometry
   *    metadata probe inside queryBatch) never fires the release.
   *  - RDD-level actions (`queryExecution.toRdd.count()` — Bench,
-  *    QueryProf) bypass QueryExecutionListener; both harnesses already
+  *    Prof) bypass QueryExecutionListener; both harnesses already
   *    clear all caches per query, and an unfired listener costs one
   *    canonicalized-subtree check per subsequent Dataset action.
   *  - Inside `foreachBatch` the per-micro-batch sink write is a normal

@@ -1398,8 +1398,8 @@ object Decode {
         val df = Graft.table(s, dir, "orders")
         val path = java.nio.file.Files.createTempDirectory("graft_bson_q").toString
         // spread the encode input: the single-file fixture otherwise
-        // plans the per-row BSON encode as ONE write task (StageProf
-        // round 12: 0.8 s of the gate on one core)
+        // plans the per-row BSON encode as ONE write task (`Prof
+        // stages`: 0.8 s of the gate on one core)
         graft.operators.Spread.cpuDense(df)
           .write.format("graftdocs").option("format", "bson")
           .mode("overwrite").save(path)

@@ -68,15 +68,18 @@ final class DocStore(val spark: SparkSession, val dir: String,
     val root = new Path(path(name))
     if (!f.exists(root)) return "absent"
     val md = java.security.MessageDigest.getInstance("MD5")
+    // the inference sidecar is written lazily by the first read after
+    // an append: it caches metadata and is no content change
     def walk(p: Path): Unit =
-      f.listStatus(p).sortBy(_.getPath.getName).foreach { st =>
-        md.update(st.getPath.getName.getBytes("UTF-8"))
-        if (st.isDirectory) walk(st.getPath)
-        else {
-          md.update(java.nio.ByteBuffer.allocate(16)
-            .putLong(st.getLen).putLong(st.getModificationTime).array())
+      f.listStatus(p).sortBy(_.getPath.getName)
+        .filter(_.getPath.getName != GraftDocSource.InferSidecarName).foreach { st =>
+          md.update(st.getPath.getName.getBytes("UTF-8"))
+          if (st.isDirectory) walk(st.getPath)
+          else {
+            md.update(java.nio.ByteBuffer.allocate(16)
+              .putLong(st.getLen).putLong(st.getModificationTime).array())
+          }
         }
-      }
     walk(root)
     md.digest().map("%02x".format(_)).mkString
   }
@@ -563,8 +566,12 @@ final class DocStore(val spark: SparkSession, val dir: String,
 
   /** Update the in-memory inference state: add `put` entries, remove
     * `drop` entries. Serialized per collection by the caller
-    * (capMonitor); no file I/O — see [[flushInferSidecar]]. */
-  private def updateInferSidecar(name: String, put: Map[String, String],
+    * (capMonitor); no file I/O — see [[flushInferSidecar]]. `put` is
+    * by-name: callers run after their batch has committed, so a batch
+    * whose type tree cannot be folded drops the collection's entries
+    * (reads fall back to the inference job) instead of failing the
+    * committed write. */
+  private def updateInferSidecar(name: String, put: => Map[String, String],
                                  drop: Seq[String] = Seq.empty): Unit =
     try {
       val prev = inferState.get(name) match {

@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
@@ -1150,6 +1151,8 @@ private[sources] class GraftScan(schema: StructType, options: CaseInsensitiveStr
   override def planInputPartitions(): Array[InputPartition] =
     splitFiles(runtimeFiltered.map(zonePrune).getOrElse(zoneStatic))
 
+  override def supportedCustomMetrics(): Array[CustomMetric] = ScanMetrics.supported
+
   override def createReaderFactory(): PartitionReaderFactory =
     new GraftReaderFactory(schema, allowInvalid, filters,
       new SerializableConfiguration(GraftDocSource.activeHadoopConf()),
@@ -1511,14 +1514,58 @@ private[sources] object DocPartitions {
   }
 }
 
-/** Test-visible decode counters (rows emitted vs rows skipped by
-  * decode-time filters). */
-private[sources] object GraftScanMetrics {
-  val emitted = new java.util.concurrent.atomic.LongAdder
-  val skipped = new java.util.concurrent.atomic.LongAdder
-  /** Documents decoded by the DIRECT bytes→vector BSON path (no
-    * JsonNode tree) — lets specs assert which decode path engaged. */
-  val direct = new java.util.concurrent.atomic.LongAdder
+/** The scan's decode counters as DSv2 custom metrics, declared by
+  * [[GraftScan.supportedCustomMetrics]]: Spark sums each task's reader
+  * values into the scan node's SQL metrics, so the counts are per query.
+  * Spark instantiates each metric class by name on the driver, hence
+  * one no-arg class per metric. */
+private[sources] object ScanMetrics {
+  final val Emitted = "docsEmitted"
+  final val Skipped = "docsSkipped"
+  final val Direct = "docsDirect"
+  class EmittedMetric extends CustomSumMetric {
+    override def name(): String = Emitted
+    override def description(): String = "documents emitted"
+  }
+  class SkippedMetric extends CustomSumMetric {
+    override def name(): String = Skipped
+    override def description(): String = "documents skipped by pushed filters"
+  }
+  /** Documents decoded by a direct bytes/tokens→vector reader (no
+    * JsonNode tree): which decode path engaged. */
+  class DirectMetric extends CustomSumMetric {
+    override def name(): String = Direct
+    override def description(): String = "documents decoded direct"
+  }
+  def supported: Array[CustomMetric] =
+    Array(new EmittedMetric, new SkippedMetric, new DirectMetric)
+}
+
+/** A partition reader's side of [[ScanMetrics]]: plain per-reader
+  * counts, reported through `currentMetricsValues`. When one task reads
+  * several partitions (storage-partitioned key groups), Spark seeds the
+  * next reader with the previous one's values. */
+private[sources] trait ScanCounts { self: PartitionReader[_] =>
+  protected var docsEmitted = 0L
+  protected var docsSkipped = 0L
+  protected var docsDirect = 0L
+
+  private def metric(n: String, v: Long): CustomTaskMetric = new CustomTaskMetric {
+    override def name(): String = n
+    override def value(): Long = v
+  }
+  override def currentMetricsValues(): Array[CustomTaskMetric] = Array(
+    metric(ScanMetrics.Emitted, docsEmitted), metric(ScanMetrics.Skipped, docsSkipped),
+    metric(ScanMetrics.Direct, docsDirect))
+  override def initMetricsValues(metrics: Array[CustomTaskMetric]): Unit =
+    metrics.foreach { m =>
+      m.name() match {
+        case ScanMetrics.Emitted => docsEmitted += m.value()
+        case ScanMetrics.Skipped => docsSkipped += m.value()
+        case ScanMetrics.Direct => docsDirect += m.value()
+        case _ =>
+      }
+    }
 }
 
 private[sources] class GraftReaderFactory(schema: StructType, allowInvalid: Boolean,
@@ -1613,7 +1660,7 @@ private[sources] class GraftReaderFactory(schema: StructType, allowInvalid: Bool
         case e: Throwable => fsIn.close(); throw e
       }
 
-    new PartitionReader[InternalRow] {
+    new PartitionReader[InternalRow] with ScanCounts {
       private var current: InternalRow = _
       private var emitted = 0
       override def next(): Boolean = {
@@ -1639,10 +1686,10 @@ private[sources] class GraftReaderFactory(schema: StructType, allowInvalid: Bool
                 }
                 out
               }
-            GraftScanMetrics.emitted.increment()
+            docsEmitted += 1
             emitted += 1
             return true
-          } else GraftScanMetrics.skipped.increment()
+          } else docsSkipped += 1
         }
         false
       }
@@ -1766,7 +1813,8 @@ private[sources] object VectorRead {
 private[sources] abstract class DirectColumnarReaderBase(
     schema: StructType, limitRows: Int,
     filters: Array[Filter], partValues: Map[String, Any])
-  extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
+  extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch]
+  with ScanCounts {
   import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
 
   private var remaining = limitRows
@@ -1822,9 +1870,9 @@ private[sources] abstract class DirectColumnarReaderBase(
       while (nDec < capacity && nOut < remaining && !eof) {
         if (!decodeOne()) eof = true
         else {
-          GraftScanMetrics.direct.increment()
+          docsDirect += 1
           if (!hasFilters) {
-            GraftScanMetrics.emitted.increment()
+            docsEmitted += 1
             nOut += 1
           } else {
             batch.setNumRows(nDec + 1)
@@ -1839,9 +1887,9 @@ private[sources] abstract class DirectColumnarReaderBase(
                 copiers(j)(row, j, outVectors(j))
                 j += 1
               }
-              GraftScanMetrics.emitted.increment()
+              docsEmitted += 1
               nOut += 1
-            } else GraftScanMetrics.skipped.increment()
+            } else docsSkipped += 1
           }
           nDec += 1
         }
@@ -1998,6 +2046,9 @@ private[sources] class PartitionFilledBatchReader(
   private var outBatch: org.apache.spark.sql.vectorized.ColumnarBatch = _
 
   override def next(): Boolean = inner.next()
+  override def currentMetricsValues(): Array[CustomTaskMetric] = inner.currentMetricsValues()
+  override def initMetricsValues(metrics: Array[CustomTaskMetric]): Unit =
+    inner.initMetricsValues(metrics)
 
   override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = {
     val b = inner.get()

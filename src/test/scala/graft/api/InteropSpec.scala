@@ -13,7 +13,7 @@ class InteropSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft_io").toString
+    graft.TestDirs.temp("graft_io").toString
 
   test("parquet round-trip preserves schema and values") {
     val df = spark.read.parquet("/root/testdata/sf0.001/nation.parquet")
@@ -118,7 +118,7 @@ class InteropSpec extends AnyFunSuite {
     import graft.bson.DocDecoder
     val df = spark.range(5).select($"id",
       ($"id".cast("decimal(20,4)") / lit(3).cast("decimal(20,4)")).as("d"))
-    val p = java.nio.file.Files.createTempDirectory("graft_dec").toString
+    val p = graft.TestDirs.temp("graft_dec").toString
     DocWriter.write(df, p)
     val back = DocDecoder.decode(spark.read.textFile(s"$p/*.jsonl"), df.schema)
     assert(back.orderBy("id").collect().toSeq == df.orderBy("id").collect().toSeq)

@@ -80,7 +80,7 @@ class LayoutSpec extends AnyFunSuite {
     val df = (0 until n).map { i =>
       (i.toLong, (i % 128).toLong, ((i / 128) % 128).toLong) }
       .toDF("id", "x", "y")
-    val base = java.nio.file.Files.createTempDirectory("zorder").toString
+    val base = graft.TestDirs.temp("zorder").toString
     // baseline: the same rows hash-sprayed (every file spans the full
     // x/y domain, so min/max stats prune nothing)
     df.repartition(8, $"id").write.mode("overwrite")

@@ -21,7 +21,7 @@ class BsonVectorParitySpec extends AnyFunSuite {
   private def bothPaths(rows: Seq[Row], writeSchema: StructType,
                         readSchema: StructType, allowInvalid: Boolean = false)
       : (Seq[String], Seq[String]) = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bvd")
+    val dir = graft.TestDirs.temp("graft_bvd")
     val out = new java.io.ByteArrayOutputStream()
     rows.foreach(r => out.write(BsonBinary.encodeRow(r, writeSchema)))
     java.nio.file.Files.write(dir.resolve("docs.bson"), out.toByteArray)
@@ -104,7 +104,7 @@ class BsonVectorParitySpec extends AnyFunSuite {
     val r = StructType(Seq(StructField("v", IntegerType)))
     val rows = Seq(Row("not-an-int"))
     def msg(columnar: Boolean): String = {
-      val dir = java.nio.file.Files.createTempDirectory("graft_bvd_strict")
+      val dir = graft.TestDirs.temp("graft_bvd_strict")
       val out = new java.io.ByteArrayOutputStream()
       rows.foreach(x => out.write(BsonBinary.encodeRow(x, w)))
       java.nio.file.Files.write(dir.resolve("d.bson"), out.toByteArray)
@@ -195,7 +195,7 @@ class BsonVectorParitySpec extends AnyFunSuite {
       metadata = new MetadataBuilder()
         .putString(MSchema.BsonTypeKey, "date32").build())))
     def rootCause(ms: Long, columnar: Boolean): String = {
-      val dir = java.nio.file.Files.createTempDirectory("graft_bvd_date")
+      val dir = graft.TestDirs.temp("graft_bvd_date")
       val out = new java.io.ByteArrayOutputStream()
       out.write(BsonBinary.encodeRow(Row(new java.sql.Timestamp(ms)), w))
       java.nio.file.Files.write(dir.resolve("d.bson"), out.toByteArray)

@@ -20,7 +20,7 @@ class JsonVectorParitySpec extends AnyFunSuite {
     * token path (columnar) and the tree path (row), compare canonical. */
   private def bothPaths(lines: Seq[String], readSchema: StructType,
                         allowInvalid: Boolean = false): (Seq[String], Seq[String]) = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_jvd")
+    val dir = graft.TestDirs.temp("graft_jvd")
     java.nio.file.Files.write(dir.resolve("docs.jsonl"),
       lines.mkString("", "\n", "\n").getBytes("UTF-8"))
     def read(columnar: Boolean) =
@@ -113,7 +113,7 @@ class JsonVectorParitySpec extends AnyFunSuite {
 
   test("strict-mode mismatch raises the same error both ways") {
     def msg(line: String, readSchema: StructType, columnar: Boolean): String = {
-      val dir = java.nio.file.Files.createTempDirectory("graft_jvd_strict")
+      val dir = graft.TestDirs.temp("graft_jvd_strict")
       java.nio.file.Files.write(dir.resolve("d.jsonl"), (line + "\n").getBytes("UTF-8"))
       val e = intercept[org.apache.spark.SparkException] {
         spark.read.format("graftdocs").schema(readSchema)
@@ -170,7 +170,7 @@ class JsonVectorParitySpec extends AnyFunSuite {
       metadata = new MetadataBuilder()
         .putString(MSchema.BsonTypeKey, "date32").build())))
     def rootCause(line: String, columnar: Boolean): String = {
-      val dir = java.nio.file.Files.createTempDirectory("graft_jvd_date")
+      val dir = graft.TestDirs.temp("graft_jvd_date")
       java.nio.file.Files.write(dir.resolve("d.jsonl"), (line + "\n").getBytes("UTF-8"))
       val e = intercept[org.apache.spark.SparkException] {
         spark.read.format("graftdocs").schema(schema)
@@ -205,7 +205,7 @@ class JsonVectorParitySpec extends AnyFunSuite {
     assert(direct == tree && direct.length == 3)
     // and the sub-ms digits actually survived (Row.json renders without
     // fractions — read the epoch micros directly)
-    val dir = java.nio.file.Files.createTempDirectory("graft_jvd_subms")
+    val dir = graft.TestDirs.temp("graft_jvd_subms")
     java.nio.file.Files.write(dir.resolve("docs.jsonl"),
       lines.mkString("", "\n", "\n").getBytes("UTF-8"))
     def micros(columnar: Boolean): Seq[Long] =
@@ -294,7 +294,7 @@ class JsonVectorParitySpec extends AnyFunSuite {
         StructField(s"c$i", sample(typeGen(2)))))
       val rows = (1 to 20).map(_ =>
         Row.fromSeq(schema.fields.toSeq.map(f => sample(nullableGen(f.dataType)))))
-      val dir = java.nio.file.Files.createTempDirectory("graft_jvd_fuzz")
+      val dir = graft.TestDirs.temp("graft_jvd_fuzz")
       spark.createDataFrame(
         new java.util.ArrayList[Row](scala.jdk.CollectionConverters
           .SeqHasAsJava(rows).asJava), schema)

@@ -108,7 +108,7 @@ class PartitionInvarianceSpec extends AnyFunSuite {
   test("binary BSON round trip is partition-invariant end to end") {
     val df = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
     val results = Seq(1, 4, 32).map { parts =>
-      val path = java.nio.file.Files.createTempDirectory("graft_pinv").toString
+      val path = graft.TestDirs.temp("graft_pinv").toString
       df.repartition(parts).write.format("graftdocs")
         .option("format", "bson").mode("overwrite").save(path)
       val back = spark.read.format("graftdocs").schema(df.schema).load(path)

@@ -68,7 +68,7 @@ class TopKPropertySpec extends AnyFunSuite {
       (new java.math.BigDecimal("4999.1000"), "x�"))
       .toDF("bal", "name")
       .select(col("bal").cast("decimal(18,4)").as("bal"), col("name"))
-    val path = java.nio.file.Files.createTempDirectory("graft_fprop").toString
+    val path = graft.TestDirs.temp("graft_fprop").toString
     DocWriter.write(df, path)
     val back = spark.read.format("graftdocs").schema(df.schema).load(path)
     assert(back.where(col("bal") > 5000.0).count()

@@ -114,7 +114,7 @@ class CurationPropertySpec extends AnyFunSuite {
 
   test("diffVersions ≡ local multiset model over 25 random version pairs") {
     val store = new graft.sinks.DocStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_vprop").toString,
+      graft.TestDirs.temp("graft_vprop").toString,
       "graftdocs")
     (1 to 25).foreach { draw =>
       def randRows() = (0 to rnd.nextInt(12)).map(_ =>

@@ -20,7 +20,7 @@ class EpochFoldPropertySpec extends AnyFunSuite {
   private val rnd = new scala.util.Random(0xF01D)
 
   private def newStore() = new graft.sinks.DocStore(spark,
-    java.nio.file.Files.createTempDirectory("graft_efold").toString,
+    graft.TestDirs.temp("graft_efold").toString,
     "graftdocs")
 
   test("near-dup index: random fold splits ≡ one-shot build (5 draws)") {

@@ -49,7 +49,7 @@ class IndexScaleSoakSpec extends AnyFunSuite {
     val batch = docs.select((col("doc_id") + lit(99000000L)).as("doc_id"),
       concat(col("text"), lit(" fresh")).as("text"))
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_soak").toString
+    val dir = graft.TestDirs.temp("graft_soak").toString
     val store = new graft.sinks.DocStore(spark, dir, "graftdocs")
     NearDupIndex.writePartitioned(store,
       NearDupIndex.build(history, "doc_id", "text"), "ndi")
@@ -60,7 +60,7 @@ class IndexScaleSoakSpec extends AnyFunSuite {
       epoch = 1, "doc_id", "text")
 
     // materialize the batch source ON DISK so its read cost is measurable
-    val batchDir = java.nio.file.Files.createTempDirectory("graft_soak_b").toString
+    val batchDir = graft.TestDirs.temp("graft_soak_b").toString
     batch.write.mode("overwrite").parquet(batchDir)
     val batchSrc = spark.read.parquet(batchDir)
     val batchSrcBytes = fileState(batchDir).values.map(_._1).sum
@@ -137,7 +137,7 @@ class IndexScaleSoakSpec extends AnyFunSuite {
       .select((col("doc_id") + lit(99000000L)).as("doc_id"),
         concat(col("text"), lit(" fresh")).as("text"))
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_soak_lf").toString
+    val dir = graft.TestDirs.temp("graft_soak_lf").toString
     val store = new graft.sinks.DocStore(spark, dir, "graftdocs")
     LineFreqIndex.writePartitioned(store,
       LineFreqIndex.build(history, "doc_id", "text"), "lfi")

@@ -15,7 +15,7 @@ class LineFreqIndexSpec extends AnyFunSuite {
     spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
 
   private def newStore() = new graft.sinks.DocStore(spark,
-    java.nio.file.Files.createTempDirectory("graft_lfi").toString, "graftdocs")
+    graft.TestDirs.temp("graft_lfi").toString, "graftdocs")
 
   private def freqMap(store: graft.sinks.DocStore): Map[String, Long] =
     LineFreqIndex.lineFreq(store, "lf")
@@ -92,7 +92,7 @@ class LineFreqIndexSpec extends AnyFunSuite {
 
   test("lineFreqStream: streamed folds ≡ one-shot; fresh-checkpoint replay skips") {
     import org.apache.spark.sql.streaming.Trigger
-    val feed = java.nio.file.Files.createTempDirectory("graft_lffeed").toString
+    val feed = graft.TestDirs.temp("graft_lffeed").toString
     val odd = docs.where($"doc_id" % 2 === 1).select("doc_id", "text")
     val even = docs.where($"doc_id" % 2 === 0).select("doc_id", "text")
     odd.coalesce(1).write.parquet(s"$feed/f1")
@@ -104,7 +104,7 @@ class LineFreqIndexSpec extends AnyFunSuite {
       .option("maxFilesPerTrigger", "1")
       .option("recursiveFileLookup", "true").parquet(feed)
     def run(): Unit = {
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_lfckpt").toString
+      val ckpt = graft.TestDirs.temp("graft_lfckpt").toString
       val q = graft.streaming.EventStream
         .lineFreqStream(stream, "doc_id", "text", "lf", store, sep = " ")
         .option("checkpointLocation", ckpt)

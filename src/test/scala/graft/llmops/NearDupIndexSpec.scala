@@ -35,7 +35,7 @@ class NearDupIndexSpec extends AnyFunSuite {
 
   test("nearDupStream drops dups against the LIVE index (cross-batch) and skips replays") {
     import org.apache.spark.sql.streaming.Trigger
-    val feed = java.nio.file.Files.createTempDirectory("graft_ndfeed").toString
+    val feed = graft.TestDirs.temp("graft_ndfeed").toString
     val base = "the quick brown fox jumps over the lazy dog again and again tonight"
     // batch 1: a near-dup of HISTORY (dropped) + a novel doc (folded)
     Seq((10L, base + " ok"), (11L, "completely different text about spark shuffles and joins here"))
@@ -45,13 +45,13 @@ class NearDupIndexSpec extends AnyFunSuite {
     Seq((12L, "completely different text about spark shuffles and joins here!"))
       .toDF("doc_id", "text").coalesce(1).write.parquet(s"$feed/f2")
     val store = new graft.sinks.DocStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_ndsstore").toString)
+      graft.TestDirs.temp("graft_ndsstore").toString)
     store.write(NearDupIndex.build(
       Seq((1L, base)).toDF("doc_id", "text"), "doc_id", "text"), "nd")
     val stream = spark.readStream.schema("doc_id long, text string")
       .option("maxFilesPerTrigger", "1")
       .option("recursiveFileLookup", "true").parquet(feed)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ndckpt").toString
+    val ckpt = graft.TestDirs.temp("graft_ndckpt").toString
     val q = graft.streaming.EventStream
       .nearDupStream(stream, "doc_id", "text", "nd", store, threshold = 0.7)
       .option("checkpointLocation", ckpt)
@@ -61,7 +61,7 @@ class NearDupIndexSpec extends AnyFunSuite {
       .select("doc_id").as[Long].collect().toSet
     assert(indexed() == Set(1L, 11L), s"got ${indexed()}") // 10 dup-of-1, 12 dup-of-11
     // fresh-checkpoint replay: batch ids restart ≤ the committed tag → skipped
-    val ckpt2 = java.nio.file.Files.createTempDirectory("graft_ndckpt2").toString
+    val ckpt2 = graft.TestDirs.temp("graft_ndckpt2").toString
     val q2 = graft.streaming.EventStream
       .nearDupStream(stream, "doc_id", "text", "nd", store, threshold = 0.7)
       .option("checkpointLocation", ckpt2)
@@ -129,7 +129,7 @@ class NearDupIndexSpec extends AnyFunSuite {
   }
 
   test("index persists through a graftdocs store round-trip") {
-    val path = java.nio.file.Files.createTempDirectory("graft_ndi").toString
+    val path = graft.TestDirs.temp("graft_ndi").toString
     val idx = NearDupIndex.build(corpus, "doc_id", "text")
     idx.write.format("graftdocs").mode("overwrite").save(path)
     val back = spark.read.format("graftdocs").schema(idx.schema).load(path)

@@ -16,7 +16,7 @@ class NearDupPartSpec extends AnyFunSuite {
     spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
 
   private def newStore() = new graft.sinks.DocStore(spark,
-    java.nio.file.Files.createTempDirectory("graft_ndpart").toString,
+    graft.TestDirs.temp("graft_ndpart").toString,
     format = "graftdocs")
 
   /** (path, length, mtime) of every data file under the collection. */
@@ -127,7 +127,7 @@ class NearDupPartSpec extends AnyFunSuite {
 
   test("nearDupStreamPartitioned: cross-batch dedup, per-epoch layout, replay skip") {
     import org.apache.spark.sql.streaming.Trigger
-    val feed = java.nio.file.Files.createTempDirectory("graft_ndpfeed").toString
+    val feed = graft.TestDirs.temp("graft_ndpfeed").toString
     val base = "the quick brown fox jumps over the lazy dog again and again tonight"
     Seq((10L, base + " ok"),
         (11L, "completely different text about spark shuffles and joins here"))
@@ -140,7 +140,7 @@ class NearDupPartSpec extends AnyFunSuite {
     val stream = spark.readStream.schema("doc_id long, text string")
       .option("maxFilesPerTrigger", "1")
       .option("recursiveFileLookup", "true").parquet(feed)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ndpckpt").toString
+    val ckpt = graft.TestDirs.temp("graft_ndpckpt").toString
     val q = graft.streaming.EventStream
       .nearDupStreamPartitioned(stream, "doc_id", "text", "nd", store,
         threshold = 0.7)
@@ -157,7 +157,7 @@ class NearDupPartSpec extends AnyFunSuite {
       .toSet.filter(_.startsWith("epoch="))
     assert(epochs == Set("epoch=0", "epoch=1"), s"got $epochs")
     // fresh-checkpoint replay: batch ids restart ≤ committed tag → skipped
-    val ckpt2 = java.nio.file.Files.createTempDirectory("graft_ndpckpt2").toString
+    val ckpt2 = graft.TestDirs.temp("graft_ndpckpt2").toString
     val q2 = graft.streaming.EventStream
       .nearDupStreamPartitioned(stream, "doc_id", "text", "nd", store,
         threshold = 0.7)

@@ -383,7 +383,7 @@ class FilterCompilerSpec extends AnyFunSuite {
     assert(ids("""{"tags": {"$nin": [2, 99]}}""") == Seq(3, 4))
     assert(ids("""{"tags": {"$nin": [null]}}""") == Seq(1, 2, 3))
     // scalar $eq still reaches the parquet reader as a pushed filter
-    val dir = java.nio.file.Files.createTempDirectory("graft_meq").toString
+    val dir = graft.TestDirs.temp("graft_meq").toString
     df.select("id", "a").write.mode("overwrite").parquet(dir)
     val q = spark.read.parquet(dir).where(FilterCompiler.compile("""{"a": 5}"""))
     val scan = q.queryExecution.executedPlan.toString

@@ -147,7 +147,7 @@ class FilterTranslatorSpec extends AnyFunSuite {
   test("scan description surfaces the MQL wire form") {
     import org.apache.spark.sql.types._
     val df = corpus
-    val dir = java.nio.file.Files.createTempDirectory("graft_mqlpush").toString
+    val dir = graft.TestDirs.temp("graft_mqlpush").toString
     df.write.format("graftdocs").mode("overwrite").save(dir)
     val q = spark.read.format("graftdocs").schema(df.schema).load(dir)
       .where(col("i") > 1L && col("s") === "alpha")

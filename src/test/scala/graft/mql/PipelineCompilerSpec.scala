@@ -243,7 +243,7 @@ class PipelineCompilerSpec extends AnyFunSuite {
   }
 
   test("filter pushdown reaches the parquet scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pd").toString
+    val dir = graft.TestDirs.temp("graft_pd").toString
     people.write.mode("overwrite").parquet(dir)
     val scan = spark.read.parquet(dir)
     val out = scan.where(FilterCompiler.compile("""{"score": {"$gt": 15.0}, "dept": "eng"}"""))

@@ -19,7 +19,7 @@ class VectorIndexSpec extends AnyFunSuite {
 
   private def withStore[T](f: graft.sinks.DocStore => T): T =
     f(new graft.sinks.DocStore(spark,
-      java.nio.file.Files.createTempDirectory("vidx_spec").toString))
+      graft.TestDirs.temp("vidx_spec").toString))
 
   test("centroidFrame round-trips through a store and answers queries") {
     withStore { store =>
@@ -66,7 +66,7 @@ class VectorIndexSpec extends AnyFunSuite {
   }
 
   test("partitioned IVF: probed cells only — unprobed partitions never opened") {
-    val root = java.nio.file.Files.createTempDirectory("pivf_spec").toString
+    val root = graft.TestDirs.temp("pivf_spec").toString
     val store = new graft.sinks.DocStore(spark, root, "graftdocs")
     val idx = Similarity.buildIvf(emb, nCells = 2, lloydIters = 0,
       persistIndex = false)
@@ -96,7 +96,7 @@ class VectorIndexSpec extends AnyFunSuite {
   }
 
   test("fold into partitioned IVF rewrites ONLY the touched cell") {
-    val root = java.nio.file.Files.createTempDirectory("pivf_fold").toString
+    val root = graft.TestDirs.temp("pivf_fold").toString
     val store = new graft.sinks.DocStore(spark, root, "graftdocs")
     val idx = Similarity.buildIvf(emb, nCells = 2, lloydIters = 0,
       persistIndex = false)
@@ -134,7 +134,7 @@ class VectorIndexSpec extends AnyFunSuite {
     // foreachBatch replay after a crash mid-commit re-runs the fold; the
     // anti-join on the batch's ids and the touched-cell recount must
     // make the second run a no-op in final state
-    val root = java.nio.file.Files.createTempDirectory("pivf_replay").toString
+    val root = graft.TestDirs.temp("pivf_replay").toString
     val store = new graft.sinks.DocStore(spark, root, "graftdocs")
     val idx = Similarity.buildIvf(emb, nCells = 2, lloydIters = 0,
       persistIndex = false)

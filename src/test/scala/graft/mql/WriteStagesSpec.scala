@@ -13,7 +13,7 @@ class WriteStagesSpec extends AnyFunSuite {
 
   private def freshStore(): DocStore =
     new DocStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_store").toString)
+      graft.TestDirs.temp("graft_store").toString)
 
   private lazy val src = Seq(
     (1, "ann", 10.0), (2, "bob", 20.0), (3, "cat", 30.0)
@@ -139,7 +139,7 @@ class WriteStagesSpec extends AnyFunSuite {
   }
 
   test("graftdocs-format store: $out lands as a SQL-queryable collection") {
-    val root = java.nio.file.Files.createTempDirectory("graft_dstore").toString
+    val root = graft.TestDirs.temp("graft_dstore").toString
     val store = new DocStore(spark, root, "graftdocs")
     runW(src, """[{"$match": {"score": {"$gte": 20}}}, {"$out": "hot"}]""", store)
     // schema-exact read-back through the sidecar
@@ -158,7 +158,7 @@ class WriteStagesSpec extends AnyFunSuite {
   }
 
   test("partition-scoped $merge rewrites only the touched partitions") {
-    val root = java.nio.file.Files.createTempDirectory("graft_pmerge").toString
+    val root = graft.TestDirs.temp("graft_pmerge").toString
     val store = new DocStore(spark, root, "graftdocs")
     store.overwritePartitions(
       Seq(("a", 1L, 10.0), ("a", 2L, 20.0), ("b", 3L, 30.0))
@@ -189,7 +189,7 @@ class WriteStagesSpec extends AnyFunSuite {
     // a replay against a partially-folded target double-counts); the
     // atomic path rewrites through ONE staged swap, preserving both the
     // result and the partition layout
-    val root = java.nio.file.Files.createTempDirectory("graft_amerge").toString
+    val root = graft.TestDirs.temp("graft_amerge").toString
     val store = new DocStore(spark, root, "graftdocs")
     store.overwritePartitions(
       Seq(("a", 1L, 10.0), ("a", 2L, 20.0), ("b", 3L, 30.0))

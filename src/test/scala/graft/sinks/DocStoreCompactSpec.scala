@@ -21,7 +21,7 @@ class DocStoreCompactSpec extends AnyFunSuite {
   }
 
   test("unpartitioned: 16-file spray → 1 file, rows and tags intact") {
-    val root = java.nio.file.Files.createTempDirectory("cpt_flat").toString
+    val root = graft.TestDirs.temp("cpt_flat").toString
     val store = new DocStore(spark, root, "graftdocs")
     val df = (1 to 500).map(i => (i.toLong, s"v$i")).toDF("id", "s")
     store.write(df.repartition(16), "c", tags = Map("batchId" -> "42"))
@@ -34,7 +34,7 @@ class DocStoreCompactSpec extends AnyFunSuite {
   }
 
   test("drop and rename: Mongo admin-command semantics") {
-    val root = java.nio.file.Files.createTempDirectory("cpt_admin").toString
+    val root = graft.TestDirs.temp("cpt_admin").toString
     val store = new DocStore(spark, root, "graftdocs")
     val df = Seq((1L, "a"), (2L, "b")).toDF("id", "s")
     store.write(df, "x", tags = Map("batchId" -> "3"))
@@ -55,7 +55,7 @@ class DocStoreCompactSpec extends AnyFunSuite {
   }
 
   test("partitioned: per-partition compaction keeps the hive layout") {
-    val root = java.nio.file.Files.createTempDirectory("cpt_part").toString
+    val root = graft.TestDirs.temp("cpt_part").toString
     val store = new DocStore(spark, root, "graftdocs")
     val df = (1 to 300).map(i => (i.toLong, (i % 3).toString, i * 1.5))
       .toDF("id", "k", "v")

@@ -14,7 +14,7 @@ class DocStoreVersionSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def newStore(format: String) = new DocStore(spark,
-    java.nio.file.Files.createTempDirectory("graft_ver").toString, format)
+    graft.TestDirs.temp("graft_ver").toString, format)
 
   private def df(xs: (Long, String)*) = xs.toDF("id", "v")
 
@@ -72,7 +72,7 @@ class DocStoreVersionSpec extends AnyFunSuite {
 
   test("a versioned store retains history through plain write (the $out path)") {
     val s = new DocStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_verw").toString,
+      graft.TestDirs.temp("graft_verw").toString,
       "graftdocs", versioned = true)
     s.write(df(1L -> "a"), "c")
     s.write(df(2L -> "b"), "c", tags = Map("batchId" -> "1"))

@@ -11,7 +11,7 @@ class DocWriterSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def tmpDir(): String =
-    java.nio.file.Files.createTempDirectory("graft_sink").toString
+    graft.TestDirs.temp("graft_sink").toString
 
   test("write → decode round-trip preserves values (test_arrow.py round_trip)") {
     val df = spark.read.parquet("/root/testdata/sf0.001/orders.parquet").limit(500)

@@ -59,7 +59,7 @@ class ColumnarReadSpec extends AnyFunSuite {
       // NaN → null on numeric targets
       """{"i": NaN, "l": NaN, "d": NaN}"""
     ).map(_.replaceAll("\n\\s*", " "))
-    val dir = java.nio.file.Files.createTempDirectory("graft_columnar")
+    val dir = graft.TestDirs.temp("graft_columnar")
     java.nio.file.Files.write(dir.resolve("docs.jsonl"),
       docs.mkString("", "\n", "\n").getBytes("UTF-8"))
     dir.toString
@@ -91,10 +91,9 @@ class ColumnarReadSpec extends AnyFunSuite {
 
   test("decode-time filter skip works on the columnar path") {
     val path = writeFixture()
-    GraftScanMetrics.emitted.reset(); GraftScanMetrics.skipped.reset()
-    val got = read(path, columnar = true).where($"i" === 2).collect()
-    assert(got.length == 1)
-    assert(GraftScanMetrics.skipped.sum() > 0)
+    val q = read(path, columnar = true).where($"i" === 2)
+    assert(q.collect().length == 1)
+    assert(ScanCountsOf(q).skipped > 0)
   }
 
   test("direct BSON decode engages under pushed filters, with skips") {
@@ -102,7 +101,7 @@ class ColumnarReadSpec extends AnyFunSuite {
     // path, surrendering the 2.3× direct decode exactly on the filtered
     // scans real workloads run. Now the direct reader evaluates pushed
     // filters against the decoded vectors and compacts survivors.
-    val dir = java.nio.file.Files.createTempDirectory("graft_direct_filter")
+    val dir = graft.TestDirs.temp("graft_direct_filter")
     val n = 5000
     spark.range(n).selectExpr("id", "cast(id % 7 as double) as d",
         "concat('row', id) as s",
@@ -123,15 +122,14 @@ class ColumnarReadSpec extends AnyFunSuite {
       .option("columnar", columnar).load(dir.toString)
       .where($"d" === 3.0 && $"id" >= 100)
 
-    GraftScanMetrics.emitted.reset(); GraftScanMetrics.skipped.reset()
-    GraftScanMetrics.direct.reset()
     // no orderBy here: a range sort samples the source in a second scan
     // pass, which would double every counter — sort driver-side instead
-    val colRows = rd(columnar = true).collect().toSeq.sortBy(_.getLong(0))
-    assert(GraftScanMetrics.direct.sum() == n,
-      s"direct path did not engage: direct=${GraftScanMetrics.direct.sum()}")
-    assert(GraftScanMetrics.skipped.sum() > 0, "no decode-time skips counted")
-    assert(GraftScanMetrics.emitted.sum() == colRows.length.toLong)
+    val q = rd(columnar = true)
+    val colRows = q.collect().toSeq.sortBy(_.getLong(0))
+    val counts = ScanCountsOf(q)
+    assert(counts.direct == n, s"direct path did not engage: direct=${counts.direct}")
+    assert(counts.skipped > 0, "no decode-time skips counted")
+    assert(counts.emitted == colRows.length.toLong)
     // value parity with the row path under the same filter
     val rowRows = rd(columnar = false).collect().toSeq.sortBy(_.getLong(0))
     assert(colRows.nonEmpty && colRows.map(_.json) == rowRows.map(_.json))
@@ -143,7 +141,7 @@ class ColumnarReadSpec extends AnyFunSuite {
   }
 
   test("strict-mode type errors still raise on the columnar path") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_columnar_strict")
+    val dir = graft.TestDirs.temp("graft_columnar_strict")
     java.nio.file.Files.write(dir.resolve("bad.jsonl"),
       """{"i": "not-an-int"}""".getBytes("UTF-8"))
     val e = intercept[org.apache.spark.SparkException] {
@@ -156,40 +154,38 @@ class ColumnarReadSpec extends AnyFunSuite {
   }
 
   test("limit pushdown stops decode after n rows per partition") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_limit")
+    val dir = graft.TestDirs.temp("graft_limit")
     val sb = new StringBuilder
     (1 to 20000).foreach(i => sb.append(s"""{"i": $i}\n"""))
     java.nio.file.Files.write(dir.resolve("big.jsonl"), sb.toString.getBytes("UTF-8"))
     val schema = StructType(Seq(StructField("i", LongType)))
     for (columnar <- Seq(true, false)) {
-      GraftScanMetrics.emitted.reset()
       val q = spark.read.format("graftdocs").schema(schema)
         .option("columnar", columnar).load(dir.toString).limit(5)
       assert(q.queryExecution.executedPlan.toString.contains("PushedLimit: 5"))
       assert(q.collect().length == 5)
       // one partition here: the decoder must have stopped at the limit,
       // not decoded all 20000 documents
-      assert(GraftScanMetrics.emitted.sum() <= 5L,
-        s"columnar=$columnar decoded ${GraftScanMetrics.emitted.sum()} rows")
+      val emitted = ScanCountsOf(q).emitted
+      assert(emitted > 0 && emitted <= 5L, s"columnar=$columnar decoded $emitted rows")
     }
   }
 
   test("count(*) pushdown never decodes a document") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cnt")
+    val dir = graft.TestDirs.temp("graft_cnt")
     val sb = new StringBuilder
     (1 to 12345).foreach(i => sb.append(s"""{"i": $i, "s": "row$i"}\n"""))
     sb.append("\n") // blank line: excluded from the row set, and from the count
     java.nio.file.Files.write(dir.resolve("a.jsonl"), sb.toString.getBytes("UTF-8"))
     val schema = StructType(Seq(StructField("i", LongType), StructField("s", StringType)))
     val df = spark.read.format("graftdocs").schema(schema).load(dir.toString)
-    GraftScanMetrics.emitted.reset()
     val q = df.groupBy().count()
     assert(q.queryExecution.executedPlan.toString.contains("PushedAggregation"),
       q.queryExecution.executedPlan.toString)
-    assert(q.head.getLong(0) == 12345)
-    assert(GraftScanMetrics.emitted.sum() == 0, "count decoded documents")
+    assert(q.collect().head.getLong(0) == 12345)
+    assert(ScanCountsOf(q).emitted == 0, "count decoded documents")
     // bson format: length-prefix hops
-    val bdir = java.nio.file.Files.createTempDirectory("graft_cnt_b")
+    val bdir = graft.TestDirs.temp("graft_cnt_b")
     spark.range(777).selectExpr("id").write.format("graftdocs")
       .option("format", "bson").mode("overwrite").save(bdir.toString)
     val bs = StructType(Seq(StructField("id", LongType)))
@@ -203,7 +199,7 @@ class ColumnarReadSpec extends AnyFunSuite {
   }
 
   test("count(*) pushdown is exact across byte-split boundaries") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cnt_split")
+    val dir = graft.TestDirs.temp("graft_cnt_split")
     val sb = new StringBuilder
     (1 to 5000).foreach(i => sb.append(s"""{"i": $i}\n"""))
     java.nio.file.Files.write(dir.resolve("a.jsonl"), sb.toString.getBytes("UTF-8"))
@@ -218,7 +214,7 @@ class ColumnarReadSpec extends AnyFunSuite {
   }
 
   test("inferMaxDocs bounds the inference sample per file") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_infer")
+    val dir = graft.TestDirs.temp("graft_infer")
     val sb = new StringBuilder
     // field "late" appears only after the first 100 docs
     (1 to 100).foreach(i => sb.append(s"""{"i": $i}\n"""))
@@ -233,7 +229,7 @@ class ColumnarReadSpec extends AnyFunSuite {
   }
 
   test("multi-batch reads (capacity rollover) keep every row") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_columnar_big")
+    val dir = graft.TestDirs.temp("graft_columnar_big")
     val sb = new StringBuilder
     (1 to 10000).foreach(i => sb.append(s"""{"i": $i, "s": "row$i"}\n"""))
     java.nio.file.Files.write(dir.resolve("big.jsonl"), sb.toString.getBytes("UTF-8"))

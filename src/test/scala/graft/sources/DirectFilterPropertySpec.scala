@@ -68,7 +68,7 @@ class DirectFilterPropertySpec extends AnyFunSuite {
 
   private def writeRows(rows: Seq[Row], format: String,
                         partitioned: Boolean): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dfp").toString + "/t"
+    val dir = graft.TestDirs.temp("graft_dfp").toString + "/t"
     val df = spark.createDataFrame(
       new java.util.ArrayList[Row](scala.jdk.CollectionConverters
         .SeqHasAsJava(rows).asJava), schema)
@@ -88,18 +88,18 @@ class DirectFilterPropertySpec extends AnyFunSuite {
       })
       val dir = writeRows(rows, format, partitioned)
       val pred = sample(predGen(2))
-      def run(columnar: Boolean): Seq[String] =
-        spark.read.format("graftdocs").schema(schema)
+      def run(columnar: Boolean): (Seq[String], Long) = {
+        val q = spark.read.format("graftdocs").schema(schema)
           .option("columnar", columnar).option("allowInvalid", true)
           .load(dir).where(pred)
-          .collect().toSeq.map(_.json).sorted
-      GraftScanMetrics.direct.reset()
-      val direct = run(columnar = true)
+        (q.collect().toSeq.map(_.json).sorted, ScanCountsOf(q).direct)
+      }
+      val (direct, decodedDirect) = run(columnar = true)
       // zone maps may prune EVERY file for an always-false predicate —
       // then no reader runs at all, which is the correct outcome
-      assert(GraftScanMetrics.direct.sum() > 0 || direct.isEmpty,
+      assert(decodedDirect > 0 || direct.isEmpty,
         s"round $round [$format]: direct path did not engage for `$pred`")
-      val row = run(columnar = false)
+      val (row, _) = run(columnar = false)
       assert(direct == row,
         s"round $round [$format, partitioned=$partitioned] diverged on `$pred`")
     }
@@ -111,13 +111,13 @@ class DirectFilterPropertySpec extends AnyFunSuite {
         java.time.LocalDateTime.parse("2024-01-01T00:00:00")))
     for (format <- Seq("jsonl", "bson")) {
       val dir = writeRows(rows, format, partitioned = false)
-      GraftScanMetrics.emitted.reset(); GraftScanMetrics.skipped.reset()
-      val got = spark.read.format("graftdocs").schema(schema)
+      val q = spark.read.format("graftdocs").schema(schema)
         .option("columnar", true).load(dir)
-        .where("l = 3 AND s = 's1'").collect().length
-      assert(GraftScanMetrics.emitted.sum() == got.toLong, format)
-      assert(GraftScanMetrics.emitted.sum() + GraftScanMetrics.skipped.sum()
-        == 500L, format)
+        .where("l = 3 AND s = 's1'")
+      val got = q.collect().length
+      val counts = ScanCountsOf(q)
+      assert(counts.emitted == got.toLong, format)
+      assert(counts.emitted + counts.skipped == 500L, format)
     }
   }
 }

@@ -14,7 +14,7 @@ class DocIdIndexSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft_idx").toString
+    graft.TestDirs.temp("graft_idx").toString
 
   private lazy val orders =
     spark.read.parquet("/root/testdata/sf0.001/orders.parquet")

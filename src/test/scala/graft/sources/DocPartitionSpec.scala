@@ -16,7 +16,7 @@ class DocPartitionSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft_part").toString
+    graft.TestDirs.temp("graft_part").toString
 
   private lazy val customer =
     spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
@@ -259,7 +259,6 @@ class DocPartitionSpec extends AnyFunSuite {
     customer.write.format("graftdocs").option("partitionBy", "c_nationkey")
       .mode("overwrite").save(path)
     val docs = spark.read.format("graftdocs").schema(customer.schema).load(path)
-    GraftScanMetrics.emitted.reset(); GraftScanMetrics.skipped.reset()
     val q = docs.agg(min("c_nationkey").as("mn"), max("c_nationkey").as("mx"))
     val desc = q.queryExecution.executedPlan.toString
     assert(desc.contains("PushedAggregation: [MIN(c_nationkey), MAX(c_nationkey)] (metadata-only)"), desc)
@@ -267,7 +266,7 @@ class DocPartitionSpec extends AnyFunSuite {
     val expect = customer.agg(min("c_nationkey"), max("c_nationkey")).collect().head
     assert(r == expect)
     // nothing decoded: the answer came from directory names alone
-    assert(GraftScanMetrics.emitted.sum() == 0)
+    assert(ScanCountsOf(q).emitted == 0)
 
     // count(*) composes: counts hop prefixes, min/max ride the dir values
     val q2 = docs.where($"c_nationkey" >= 10)
@@ -282,12 +281,11 @@ class DocPartitionSpec extends AnyFunSuite {
 
     // a min/max over a DOC column pushes too — answered from the .zmap
     // sidecars, still zero decodes (ZoneMapSpec proves the provenance)
-    GraftScanMetrics.emitted.reset()
     val q3 = docs.agg(min("c_acctbal"))
     assert(q3.queryExecution.executedPlan.toString.contains("MIN(c_acctbal) zmap"),
       q3.queryExecution.executedPlan.toString)
     assert(q3.collect().head == customer.agg(min("c_acctbal")).collect().head)
-    assert(GraftScanMetrics.emitted.sum() == 0)
+    assert(ScanCountsOf(q3).emitted == 0)
 
     // the metadata-only plan bundles files into FEW tasks (not one per file)
     val finalPlan = q.queryExecution.executedPlan match {
@@ -351,7 +349,6 @@ class DocPartitionSpec extends AnyFunSuite {
 
     // metadata-only: MIN/MAX of a doc column per group from sidecars,
     // zero documents decoded
-    GraftScanMetrics.emitted.reset(); GraftScanMetrics.skipped.reset()
     val q2 = docs.groupBy("c_mktsegment")
       .agg(min("c_acctbal").as("lo"), max("c_acctbal").as("hi"))
     val desc2 = q2.queryExecution.executedPlan.toString
@@ -363,7 +360,7 @@ class DocPartitionSpec extends AnyFunSuite {
       .agg(min("c_acctbal"), max("c_acctbal"))
       .collect().map(r => (r.getString(0), r.getDouble(1), r.getDouble(2))).toSet
     assert(got2 == expect2)
-    assert(GraftScanMetrics.emitted.sum() == 0, "grouped stats must not decode")
+    assert(ScanCountsOf(q2).emitted == 0, "grouped stats must not decode")
 
     // partition filters compose with grouped pushdown
     val q3 = docs.where($"c_mktsegment" =!= "BUILDING")

@@ -22,7 +22,7 @@ class GraftArrowSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft_arrow").toString
+    graft.TestDirs.temp("graft_arrow").toString
 
   private def files(dir: String): Seq[java.io.File] =
     new java.io.File(dir).listFiles().toSeq

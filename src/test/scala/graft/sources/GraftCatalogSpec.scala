@@ -11,7 +11,7 @@ class GraftCatalogSpec extends AnyFunSuite {
   /** Fresh catalog over a fresh root dir (catalog instances cache per
     * name, so every test registers its own). */
   private def freshCatalog(): (String, String) = {
-    val root = java.nio.file.Files.createTempDirectory("graft_catspec").toString
+    val root = graft.TestDirs.temp("graft_catspec").toString
     val cat = s"gc${System.nanoTime()}"
     spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
     spark.conf.set(s"spark.sql.catalog.$cat.dir", root)
@@ -114,7 +114,7 @@ class GraftCatalogSpec extends AnyFunSuite {
   test("readStream.table tails a catalog collection (MICRO_BATCH_READ)") {
     val (cat, root) = freshCatalog()
     seed(root, "feed")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_catstream").toString
+    val ckpt = graft.TestDirs.temp("graft_catstream").toString
     val name = s"catstream${System.nanoTime()}"
     val q = spark.readStream.table(s"$cat.feed")
       .groupBy().count()
@@ -215,7 +215,7 @@ class GraftCatalogSpec extends AnyFunSuite {
     val (cat, root) = freshCatalog()
     seed(root, "people")
     val db = graft.api.Graft.Db(spark, cat)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_watch").toString
+    val ckpt = graft.TestDirs.temp("graft_watch").toString
     val got = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, String)]()
     def drain(): Unit = {
       val q = db.watch("people", """[
@@ -259,7 +259,7 @@ class GraftCatalogSpec extends AnyFunSuite {
         {"$project": {"operationType": 1, "name": "$fullDocument.name"}}]""")
     assert(agg.isStreaming)
     val got = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_aggcs").toString
+    val ckpt = graft.TestDirs.temp("graft_aggcs").toString
     val q = agg.writeStream
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
         b.collect().foreach(r => got.add((r.getString(0), r.getString(1)))): Unit
@@ -333,7 +333,7 @@ class GraftCatalogSpec extends AnyFunSuite {
   }
 
   test("DocStore.vacuum removes orphaned stage dirs, never collections") {
-    val root = java.nio.file.Files.createTempDirectory("graft_vac").toString
+    val root = graft.TestDirs.temp("graft_vac").toString
     val store = new graft.sinks.DocStore(spark, root)
     store.write(Seq((1, "x")).toDF("_id", "v"), "keep")
     new java.io.File(s"$root/.graft_stage_dead_123").mkdirs()

@@ -16,7 +16,7 @@ class GraftDocSourceSpec extends AnyFunSuite {
 
   private def writeDocs(): (String, org.apache.spark.sql.DataFrame) = {
     val df = spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
-    val path = java.nio.file.Files.createTempDirectory("graft_dsv2").toString
+    val path = graft.TestDirs.temp("graft_dsv2").toString
     DocWriter.write(df, path)
     (path, df)
   }
@@ -43,19 +43,59 @@ class GraftDocSourceSpec extends AnyFunSuite {
 
   test("filters skip rows at decode time; results stay correct") {
     val (path, df) = writeDocs()
-    GraftScanMetrics.emitted.reset(); GraftScanMetrics.skipped.reset()
-    val got = spark.read.format("graftdocs").schema(df.schema).load(path)
-      .where($"c_acctbal" > 5000.0).count()
+    val q = spark.read.format("graftdocs").schema(df.schema).load(path)
+      .where($"c_acctbal" > 5000.0)
+    val got = q.collect().length.toLong
     assert(got == df.where($"c_acctbal" > 5000.0).count())
     // the predicate reached the decoder: non-matching rows were skipped
     // before Catalyst conversion, matching ones emitted
-    assert(GraftScanMetrics.skipped.sum() == df.count() - got)
-    assert(GraftScanMetrics.emitted.sum() == got)
+    val counts = ScanCountsOf(q)
+    assert(counts.skipped == df.count() - got)
+    assert(counts.emitted == got)
     // a Not-wrapped filter is not pushed (conservative-keep would
     // invert into a wrong drop) but still evaluates correctly post-scan
     val neq = spark.read.format("graftdocs").schema(df.schema).load(path)
       .where(!($"c_mktsegment" === "BUILDING")).count()
     assert(neq == df.where($"c_mktsegment" =!= "BUILDING").count())
+  }
+
+  test("decode counters are per query: two scans over different files, " +
+       "run at the same time, each count only their own documents") {
+    val sizes = Seq(300L, 700L)
+    val schema = StructType(Seq(StructField("id", LongType), StructField("k", LongType)))
+    val queries = sizes.map { n =>
+      val dir = graft.TestDirs.temp("graft_scan_metrics").toString
+      spark.range(n).selectExpr("id", "id % 3 as k").repartition(2)
+        .write.format("graftdocs").option("format", "bson").mode("overwrite").save(dir)
+      spark.read.format("graftdocs").schema(schema).load(dir).where($"k" === 0)
+    }
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val got = Await.result(Future.sequence(
+      queries.map(q => Future(q.collect().length.toLong))),
+      scala.concurrent.duration.Duration(2, "min"))
+    for (((q, n), rows) <- queries.zip(sizes).zip(got)) {
+      val counts = ScanCountsOf(q)
+      assert(rows == (n + 2) / 3)
+      assert(counts == ScanCountsOf.Counts(emitted = rows, skipped = n - rows, direct = n),
+        s"$n documents: $counts")
+    }
+  }
+
+  test("decode counters sum over every reader of a storage-partitioned " +
+       "key group") {
+    // a hive layout reports key-grouped partitioning: each task reads
+    // all files of one partition value, one reader after another
+    val dir = graft.TestDirs.temp("graft_scan_metrics_spj").toString
+    spark.range(600).selectExpr("id", "id % 3 as k").repartition(4)
+      .write.format("graftdocs").option("format", "bson").option("partitionBy", "k")
+      .mode("overwrite").save(dir)
+    val q = spark.read.format("graftdocs")
+      .schema(StructType(Seq(StructField("id", LongType), StructField("k", LongType))))
+      .load(dir)
+    assert(q.rdd.getNumPartitions == 3)
+    assert(q.collect().length == 600)
+    assert(ScanCountsOf(q) == ScanCountsOf.Counts(emitted = 600, skipped = 0, direct = 600))
   }
 
   test("schema inference over the files (inferred mode)") {
@@ -68,7 +108,7 @@ class GraftDocSourceSpec extends AnyFunSuite {
   }
 
   test("allowInvalid option nulls mismatches instead of failing") {
-    val path = java.nio.file.Files.createTempDirectory("graft_dsv2b").toString
+    val path = graft.TestDirs.temp("graft_dsv2b").toString
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(path, "batch.jsonl"),
       """{"a": 1}
@@ -98,7 +138,7 @@ class GraftDocSourceSpec extends AnyFunSuite {
 
   test("DSv2 write: df.write.format(graftdocs) round trips; overwrite truncates") {
     val df = spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
-    val path = java.nio.file.Files.createTempDirectory("graft_dsv2w").toString
+    val path = graft.TestDirs.temp("graft_dsv2w").toString
     df.write.format("graftdocs").mode("append").save(path)
     val back = spark.read.format("graftdocs").schema(df.schema).load(path)
     assert(back.orderBy("c_custkey").collect().toSeq ==
@@ -114,7 +154,7 @@ class GraftDocSourceSpec extends AnyFunSuite {
 
   test("binary BSON files: write format=bson, read back through the same scan") {
     val df = spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
-    val path = java.nio.file.Files.createTempDirectory("graft_bson").toString
+    val path = graft.TestDirs.temp("graft_bson").toString
     df.write.format("graftdocs").option("format", "bson").mode("append").save(path)
     val files = new java.io.File(path).listFiles().map(_.getName)
       .filterNot(_.startsWith(".")) // local-FS checksum shadows
@@ -130,7 +170,7 @@ class GraftDocSourceSpec extends AnyFunSuite {
   }
 
   test("Hadoop path resolution: file: URIs and glob patterns") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_glob")
+    val dir = graft.TestDirs.temp("graft_glob")
     java.nio.file.Files.writeString(dir.resolve("a-1.jsonl"), "{\"a\": 1}\n")
     java.nio.file.Files.writeString(dir.resolve("a-2.jsonl"), "{\"a\": 2}\n")
     java.nio.file.Files.writeString(dir.resolve("b-1.jsonl"), "{\"a\": 3}\n")
@@ -144,7 +184,7 @@ class GraftDocSourceSpec extends AnyFunSuite {
   }
 
   test("multi-path load: inference and scan resolve the same file list") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dsv2p")
+    val dir = graft.TestDirs.temp("graft_dsv2p")
     val p1 = dir.resolve("a.jsonl"); val p2 = dir.resolve("b.jsonl")
     java.nio.file.Files.writeString(p1, "{\"a\": 1}\n")
     java.nio.file.Files.writeString(p2, "{\"a\": 2}\n")

@@ -14,7 +14,7 @@ class GraftWireSourceSpec extends AnyFunSuite {
   private def fixture(auth: Option[(String, String)] = None)
       : (graft.sinks.DocStore, OpMsg.Server) = {
     val store = new graft.sinks.DocStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_wsrc").toString,
+      graft.TestDirs.temp("graft_wsrc").toString,
       "graftdocs")
     store.write(
       graft.api.Graft.table(spark, "/root/testdata/sf0.001", "events")
@@ -189,7 +189,7 @@ class GraftWireSourceSpec extends AnyFunSuite {
         .option("collection", "stream_sink")
         .option("streamId", "spec-stream")
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("graft_wsw").toString)
+          graft.TestDirs.temp("graft_wsw").toString)
         .outputMode("append").start()
       try {
         in.addData(1L to 100L: _*)
@@ -278,8 +278,7 @@ class GraftWireSourceSpec extends AnyFunSuite {
         "documents").select("doc_id", "source", "n_chars")
       store.writeVersioned(docs.where(col("doc_id") < 60), "vcoll"): Unit
       store.writeVersioned(docs.where(col("doc_id") < 40), "vcoll"): Unit
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_csrc_ck").toString
+      val ckpt = graft.TestDirs.temp("graft_csrc_ck").toString
       def reader() = spark.readStream.format("graftwire")
         .option("host", "127.0.0.1").option("port", server.port)
         .option("collection", "vcoll")
@@ -334,8 +333,7 @@ class GraftWireSourceSpec extends AnyFunSuite {
           .schema(org.apache.spark.sql.types.StructType(Nil)).load()
           .writeStream.format("memory")
           .queryName(s"bad_${System.nanoTime()}")
-          .option("checkpointLocation", java.nio.file.Files
-            .createTempDirectory("graft_csrc_bad").toString)
+          .option("checkpointLocation", graft.TestDirs.temp("graft_csrc_bad").toString)
           .start().processAllAvailable()
       }.getMessage != null)
     } finally server.stop()
@@ -376,7 +374,7 @@ class GraftWireSourceSpec extends AnyFunSuite {
         case other => fail(s"unexpected $other")
       }
     val store = new graft.sinks.DocStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_wrt").toString,
+      graft.TestDirs.temp("graft_wrt").toString,
       "graftdocs")
     val server = new OpMsg.Server(spark, store)
     try {
@@ -425,8 +423,7 @@ class GraftWireSourceSpec extends AnyFunSuite {
         "documents").select("doc_id", "source", "n_chars")
       store.writeVersioned(docs.where(col("doc_id") < 5), "ccoll"): Unit
       store.writeVersioned(docs.where(col("doc_id") < 10), "ccoll"): Unit
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_spoolc").toString
+      val ckpt = graft.TestDirs.temp("graft_spoolc").toString
       val conn = GraftWireSource.Conn("127.0.0.1", server.port, "graft",
         "ccoll", batchSize = 1000, None, None, false, "zlib", false, false)
       val required = StructType(Seq(
@@ -500,8 +497,7 @@ class GraftWireSourceSpec extends AnyFunSuite {
         "documents").select("doc_id", "source", "n_chars")
       store.writeVersioned(docs.where(col("doc_id") < 8), "dcoll"): Unit
       store.writeVersioned(docs.where(col("doc_id") < 12), "dcoll"): Unit
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_csinv").toString
+      val ckpt = graft.TestDirs.temp("graft_csinv").toString
       val buf = new java.util.concurrent.ConcurrentLinkedQueue[
         org.apache.spark.sql.Row]()
       val q = spark.readStream.format("graftwire")

@@ -77,7 +77,7 @@ class JsonlRawLinesPropertySpec extends AnyFunSuite {
   }
 
   test("splits partition a file's non-empty lines exactly, across chunk boundaries") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_jsonl_lines")
+    val dir = graft.TestDirs.temp("graft_jsonl_lines")
     try {
       for (iter <- 1 to 60) {
         val rng = new scala.util.Random(iter)
@@ -99,7 +99,7 @@ class JsonlRawLinesPropertySpec extends AnyFunSuite {
   }
 
   test("a split starting inside an empty-line run keeps the next line") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_jsonl_lines")
+    val dir = graft.TestDirs.temp("graft_jsonl_lines")
     try {
       val big = "x" * (chunk + 5)
       val text = s"a\n\n\n\n$big\nb\n\n"

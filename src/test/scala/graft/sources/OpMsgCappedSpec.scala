@@ -17,7 +17,7 @@ class OpMsgCappedSpec extends AnyFunSuite {
 
   private def fixture(): (graft.sinks.DocStore, OpMsg.Server) = {
     val store = new graft.sinks.DocStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_opmsg_cap").toString,
+      graft.TestDirs.temp("graft_opmsg_cap").toString,
       "graftdocs")
     (store, new OpMsg.Server(spark, store))
   }

@@ -29,7 +29,7 @@ class OpMsgClientSpec extends AnyFunSuite {
 
   test("a refused command and a refused insert raise the server's plain errmsg") {
     val store = new graft.sinks.DocStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_opmsg_client").toString,
+      graft.TestDirs.temp("graft_opmsg_client").toString,
       "graftdocs")
     val schema = StructType(Seq(StructField("_id", IntegerType),
       StructField("kind", StringType)))

@@ -23,7 +23,7 @@ class OpMsgCommandSpec extends AnyFunSuite {
 
   private def fixture(): (graft.sinks.DocStore, OpMsg.Server) = {
     val store = new graft.sinks.DocStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_opmsg_cmd").toString,
+      graft.TestDirs.temp("graft_opmsg_cmd").toString,
       "graftdocs")
     val items = Seq(
       Row(1, "a", 10L, Seq("x", "y")),

@@ -26,7 +26,7 @@ class OpMsgCompressSpec extends AnyFunSuite {
   private def fixture(timeoutMs: Long = 600000L)
       : (graft.sinks.DocStore, OpMsg.Server) = {
     val store = new graft.sinks.DocStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_opmsg_z").toString,
+      graft.TestDirs.temp("graft_opmsg_z").toString,
       "graftdocs")
     val ev = graft.api.Graft.table(spark, "/root/testdata/sf0.001", "events")
       .select(col("event_id"), col("user_id"), col("event_type"),

@@ -17,7 +17,7 @@ class OpMsgInsertSpec extends AnyFunSuite {
 
   private def emptyStore(): graft.sinks.DocStore =
     new graft.sinks.DocStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_ins_srv").toString,
+      graft.TestDirs.temp("graft_ins_srv").toString,
       "graftdocs")
 
   private def events(n: Int) =

@@ -58,7 +58,7 @@ class OpMsgLandedSchemaSpec extends AnyFunSuite {
     * inference job (any finite `inferMaxDocs` runs it; this one samples
     * every document), collected before the file goes. */
   private def jobInferred(docs: Seq[Array[Byte]]): (StructType, Set[String]) = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_landed_ref")
+    val dir = graft.TestDirs.temp("graft_landed_ref")
     try {
       java.nio.file.Files.write(dir.resolve("batches.bson"), docs.flatten.toArray)
       val df = spark.read.format("graftdocs")
@@ -81,7 +81,7 @@ class OpMsgLandedSchemaSpec extends AnyFunSuite {
 
   test("find and aggregate on a preload server return their frame without a Spark job") {
     val store = new graft.sinks.DocStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_landed_srv").toString, "graftdocs")
+      graft.TestDirs.temp("graft_landed_srv").toString, "graftdocs")
     // `late` is null through the first batch: its type first appears in
     // a getMore batch
     val schema = StructType(Seq(StructField("_id", LongType),
@@ -230,7 +230,7 @@ class OpMsgLandedSchemaSpec extends AnyFunSuite {
       Option(new java.io.File(System.getProperty("java.io.tmpdir")).list())
         .toSet.flatten.filter(_.startsWith("graft_opmsg"))
     val store = new graft.sinks.DocStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_landed_tmp").toString, "graftdocs")
+      graft.TestDirs.temp("graft_landed_tmp").toString, "graftdocs")
     val schema = StructType(Seq(StructField("_id", LongType), StructField("n", IntegerType)))
     val df = spark.createDataFrame(java.util.Arrays.asList(
       (1L to 50L).map(i => Row(i, i.toInt)): _*), schema)

@@ -24,7 +24,7 @@ class OpMsgSpec extends AnyFunSuite {
 
   private def fixture(): (graft.sinks.DocStore, OpMsg.Server) = {
     val store = new graft.sinks.DocStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_opmsg_srv").toString,
+      graft.TestDirs.temp("graft_opmsg_srv").toString,
       "graftdocs")
     val ev = graft.api.Graft.table(spark, "/root/testdata/sf0.001", "events")
       .select(col("event_id"), col("user_id"), col("event_type"),
@@ -235,13 +235,17 @@ class OpMsgSpec extends AnyFunSuite {
         s"limit leaked onto the wire with residuals: $req3")
       assert(wire3.count() == 5 &&
         wire3.where(col("event_type") === "view").count() == 0)
-      // fully-translated limit rides; landed batches decode direct
-      GraftScanMetrics.direct.reset()
+      // fully-translated limit rides; the frame scans the in-memory
+      // cursor relation, whose one decoder is the direct BSON reader
       val wire4 = OpMsg.find(spark, "127.0.0.1", server.port, "graft",
         "events", Seq(IsNotNull("value")), limit = Some(7))
       assert(wire4.count() == 7)
-      assert(GraftScanMetrics.direct.sum() > 0,
-        "wire batches did not decode through the direct BSON path")
+      val relations = ScanCountsOf.collect(wire4.queryExecution.executedPlan) {
+        case s: org.apache.spark.sql.execution.RowDataSourceScanExec =>
+          s.relation.getClass.getSimpleName
+      }
+      assert(relations == Seq("CursorRelation"),
+        s"wire batches did not scan the cursor relation: $relations")
       assert(server.requests.filter(_.contains("\"find\"")).last
         .contains("\"limit\":7"))
     } finally server.stop()

@@ -18,7 +18,7 @@ class OpMsgTlsSpec extends AnyFunSuite {
   private lazy val spark = SparkFixture.spark
 
   private lazy val keystore: (String, String) = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tls")
+    val dir = graft.TestDirs.temp("graft_tls")
     val path = dir.resolve("server.p12").toString
     val pw = "graft-test-pw"
     val keytool = new java.io.File(
@@ -37,7 +37,7 @@ class OpMsgTlsSpec extends AnyFunSuite {
 
   private def fixture(tls: Option[(String, String)]) = {
     val store = new graft.sinks.DocStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_tls_srv").toString,
+      graft.TestDirs.temp("graft_tls_srv").toString,
       "graftdocs")
     store.write(graft.api.Graft.table(spark, "/root/testdata/sf0.001", "events")
       .select(col("event_id"), col("event_type"), col("value")), "events")
@@ -70,7 +70,7 @@ class OpMsgTlsSpec extends AnyFunSuite {
   test("an untrusting client refuses the server certificate") {
     val (_, server) = fixture(Some(keystore))
     // a DIFFERENT self-signed store: the server's cert chains to nothing
-    val otherDir = java.nio.file.Files.createTempDirectory("graft_tls2")
+    val otherDir = graft.TestDirs.temp("graft_tls2")
     val other = otherDir.resolve("other.p12").toString
     val keytool = new java.io.File(
       System.getProperty("java.home"), "bin/keytool").getAbsolutePath

@@ -25,7 +25,7 @@ class OpMsgTxnSpec extends AnyFunSuite {
 
   private def fixture(): (graft.sinks.DocStore, OpMsg.Server) = {
     val store = new graft.sinks.DocStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_opmsg_txn").toString,
+      graft.TestDirs.temp("graft_opmsg_txn").toString,
       "graftdocs")
     val items = Seq(
       Row(1, "a", 10L), Row(2, "b", 20L), Row(3, "a", 30L))
@@ -219,6 +219,24 @@ class OpMsgTxnSpec extends AnyFunSuite {
     } finally srv.stop()
   }
 
+  test("a transaction that reads a collection right after an insert " +
+       "commits: the inference sidecar the read writes is no content change") {
+    val (_, srv) = fixture()
+    try {
+      cmd(srv, "insert" -> JString("items"),
+        "documents" -> JArray(List(JObject(List(
+          "_id" -> JInt(4), "kind" -> JString("b"), "n" -> JLong(40L))))))
+      val sid = "txn-sess-sidecar"
+      txnCmd(srv, sid, 1L, start = true, "find" -> JString("items"))
+      txnCmd(srv, sid, 1L, start = false,
+        "insert" -> JString("aux"),
+        "documents" -> JArray(List(JObject(List(
+          "_id" -> JInt(12), "kind" -> JString("s"), "n" -> JLong(2L))))))
+      assert(commit(srv, sid, 1L)("ok") == JDouble(1.0))
+      assert(ns(srv, "aux") == List((9, 1), (12, 2)))
+    } finally srv.stop()
+  }
+
   test("read/write concern validation: levels accepted incl. snapshot " +
        "on the first txn op, unknown level refuses, readConcern on a " +
        "NON-first txn op and writeConcern on a non-commit txn op " +
@@ -266,7 +284,7 @@ class OpMsgTxnSpec extends AnyFunSuite {
        "next touch and the commit answer NoSuchTransaction, staged " +
        "writes never land") {
     val store = new graft.sinks.DocStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_txn_ttl").toString,
+      graft.TestDirs.temp("graft_txn_ttl").toString,
       "graftdocs")
     store.write(spark.createDataFrame(
       java.util.Arrays.asList(org.apache.spark.sql.Row(1, "a", 10L)),

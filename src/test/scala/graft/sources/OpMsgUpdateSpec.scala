@@ -30,7 +30,7 @@ class OpMsgUpdateSpec extends AnyFunSuite {
 
   private def fixture(): (graft.sinks.DocStore, OpMsg.Server) = {
     val store = new graft.sinks.DocStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_opmsg_upd").toString,
+      graft.TestDirs.temp("graft_opmsg_upd").toString,
       "graftdocs")
     store.write(spark.createDataFrame(
       java.util.Arrays.asList(seed(): _*), schema), "items")
@@ -273,7 +273,7 @@ class OpMsgUpdateSpec extends AnyFunSuite {
         StructField("sku", StringType),
         StructField("qty", LongType)))))))
     val store = new graft.sinks.DocStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_opmsg_pos").toString,
+      graft.TestDirs.temp("graft_opmsg_pos").toString,
       "graftdocs")
     store.write(spark.createDataFrame(java.util.Arrays.asList(
       Row(1, Seq(95L, 92L, 60L), Seq(Row("a", 1L), Row("b", 5L))),
@@ -347,7 +347,7 @@ class OpMsgUpdateSpec extends AnyFunSuite {
 
   test("update refreshes a PRELOADED collection (stale LocalRelation)") {
     val store = new graft.sinks.DocStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_opmsg_updp").toString,
+      graft.TestDirs.temp("graft_opmsg_updp").toString,
       "graftdocs")
     store.write(spark.createDataFrame(
       java.util.Arrays.asList(seed(): _*), schema), "items")

@@ -19,7 +19,7 @@ class OpMsgWatchSpec extends AnyFunSuite {
     * 20..39), inserts (40..49). */
   private def fixture(): (graft.sinks.DocStore, OpMsg.Server) = {
     val store = new graft.sinks.DocStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_watch_srv").toString)
+      graft.TestDirs.temp("graft_watch_srv").toString)
     val docs = graft.api.Graft.table(spark, "/root/testdata/sf0.001",
         "documents")
       .select("doc_id", "source", "n_chars")
@@ -457,7 +457,7 @@ class OpMsgWatchSpec extends AnyFunSuite {
        "getMores — the server never collects more than one reply batch " +
        "at once (row-count-asserted), with no loss or duplication") {
     val store = new graft.sinks.DocStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_watch_big").toString)
+      graft.TestDirs.temp("graft_watch_big").toString)
     val docs = spark.range(0, 3000).selectExpr("id AS doc_id",
       "id * 3 AS n_chars")
     store.writeVersioned(docs.where(col("doc_id") < 100), "big"): Unit

@@ -80,7 +80,7 @@ class ScramSpec extends AnyFunSuite {
   test("authenticated OP_MSG find: handshake then cursor loop; " +
        "unauthenticated and wrongly-authenticated commands refuse") {
     val store = new graft.sinks.DocStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_scram_srv").toString,
+      graft.TestDirs.temp("graft_scram_srv").toString,
       "graftdocs")
     store.write(graft.api.Graft.table(spark, "/root/testdata/sf0.001", "events")
       .select(col("event_id"), col("event_type"), col("value")), "events")

@@ -15,7 +15,7 @@ class StoragePartitionJoinSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft_spj").toString
+    graft.TestDirs.temp("graft_spj").toString
 
   private lazy val orders =
     spark.read.parquet("/root/testdata/sf0.001/orders.parquet")

@@ -23,7 +23,7 @@ class StreamingDocSourceSpec extends AnyFunSuite {
   }
 
   test("readStream tails the directory; later files arrive in later batches") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_src")
+    val dir = graft.TestDirs.temp("graft_stream_src")
     writeWave(dir, "w1.jsonl", 0 until 100, "a")
 
     val q = spark.readStream.format("graftdocs").schema(schema)
@@ -47,9 +47,9 @@ class StreamingDocSourceSpec extends AnyFunSuite {
   }
 
   test("restart from checkpoint resumes at the watermark (no reprocessing)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_ckpt")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_ckpt_loc")
-    val out = java.nio.file.Files.createTempDirectory("graft_stream_ckpt_out")
+    val dir = graft.TestDirs.temp("graft_stream_ckpt")
+    val ckpt = graft.TestDirs.temp("graft_stream_ckpt_loc")
+    val out = graft.TestDirs.temp("graft_stream_ckpt_out")
     writeWave(dir, "w1.jsonl", 0 until 60, "a")
     // memory sink can't recover a checkpoint — use the file sink
     def start() = spark.readStream.format("graftdocs").schema(schema)
@@ -74,7 +74,7 @@ class StreamingDocSourceSpec extends AnyFunSuite {
   }
 
   test("maxFilesPerTrigger paces a backfill into bounded micro-batches") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_paced")
+    val dir = graft.TestDirs.temp("graft_stream_paced")
     // five pre-existing files: the all-available default would own them
     // all in ONE first batch; the paced read admits one per trigger
     (0 until 5).foreach(i => writeWave(dir, f"w$i.jsonl", i * 10 until (i + 1) * 10, s"g$i"))
@@ -95,7 +95,7 @@ class StreamingDocSourceSpec extends AnyFunSuite {
   }
 
   test("maxBytesPerTrigger admits a contiguous prefix and always drains") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_bytes")
+    val dir = graft.TestDirs.temp("graft_stream_bytes")
     writeWave(dir, "w1.jsonl", 0 until 300, "a")   // ~300 lines, > budget
     writeWave(dir, "w2.jsonl", 0 until 10, "b")
     writeWave(dir, "w3.jsonl", 0 until 10, "c")
@@ -115,7 +115,7 @@ class StreamingDocSourceSpec extends AnyFunSuite {
   }
 
   test("streamed decode equals batch decode over the same files") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_eq")
+    val dir = graft.TestDirs.temp("graft_stream_eq")
     writeWave(dir, "w1.jsonl", 0 until 500, "x")
     writeWave(dir, "w2.jsonl", 500 until 800, "y")
 

@@ -17,7 +17,7 @@ class ZoneMapPropertySpec extends AnyFunSuite {
   import spark.implicits._
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft_zprop").toString
+    graft.TestDirs.temp("graft_zprop").toString
 
   test("pruned and unpruned scans agree on 40 random corpus × filter draws") {
     val rnd = new scala.util.Random(20260814L)

@@ -17,7 +17,7 @@ class ZoneMapSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft_zmap").toString
+    graft.TestDirs.temp("graft_zmap").toString
 
   private lazy val orders =
     spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
@@ -416,7 +416,7 @@ class ZoneMapSpec extends AnyFunSuite {
     }
     rows.foreach(coll.update)
     val bytes = coll.encode(123L)
-    val dir = java.nio.file.Files.createTempDirectory("graft_bloom_u")
+    val dir = graft.TestDirs.temp("graft_bloom_u")
     val dataF = dir.resolve("d.jsonl"); val zF = dir.resolve("d.jsonl.zmap")
     java.nio.file.Files.write(dataF, Array.fill[Byte](123)('x'))
     java.nio.file.Files.write(zF, bytes)
@@ -446,7 +446,7 @@ class ZoneMapSpec extends AnyFunSuite {
         org.apache.spark.sql.types.LongType)))
     val coll = new ZoneMaps.Collector(schema, Set("k"))
     Seq(5L, 7L).foreach(v => coll.update(org.apache.spark.sql.Row(v))) // gap at 6
-    val dir = java.nio.file.Files.createTempDirectory("graft_bloom_x")
+    val dir = graft.TestDirs.temp("graft_bloom_x")
     val dataF = dir.resolve("d.jsonl")
     java.nio.file.Files.write(dataF, Array.fill[Byte](9)('x'))
     java.nio.file.Files.write(dir.resolve("d.jsonl.zmap"), coll.encode(9L))
@@ -478,7 +478,7 @@ class ZoneMapSpec extends AnyFunSuite {
         java.sql.Date.valueOf(s),
         java.sql.Timestamp.valueOf(s + " 10:00:00")))
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_bloom_d")
+    val dir = graft.TestDirs.temp("graft_bloom_d")
     val dataF = dir.resolve("d.jsonl")
     java.nio.file.Files.write(dataF, Array.fill[Byte](9)('x'))
     java.nio.file.Files.write(dir.resolve("d.jsonl.zmap"), coll.encode(9L))

@@ -268,7 +268,7 @@ class ZstdSpec extends AnyFunSuite {
     val spark = graft.SparkFixture.spark
     import org.apache.spark.sql.functions._
     val store = new graft.sinks.DocStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_zstd_srv").toString,
+      graft.TestDirs.temp("graft_zstd_srv").toString,
       "graftdocs")
     val ev = graft.api.Graft.table(spark, "/root/testdata/sf0.001", "events")
       .select(col("event_id"), col("event_type"), col("value"))

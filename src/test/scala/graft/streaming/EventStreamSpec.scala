@@ -70,8 +70,8 @@ class EventStreamSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = MemoryStream[(Long, String)]
-    val out = java.nio.file.Files.createTempDirectory("graft_stream_sink").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_ckpt").toString
+    val out = graft.TestDirs.temp("graft_stream_sink").toString
+    val ckpt = graft.TestDirs.temp("graft_stream_ckpt").toString
     val q = EventStream.writeToDocSink(
         input.toDS().toDF("id", "name"), out)
       .option("checkpointLocation", ckpt)
@@ -90,7 +90,7 @@ class EventStreamSpec extends AnyFunSuite {
 
   test("doc-sink batches replay exactly-once: marker skip + crashed-attempt cleanup") {
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("graft_sink_replay").toString
+    val out = graft.TestDirs.temp("graft_sink_replay").toString
     val b0 = Seq((1L, "a"), (2L, "b")).toDF("id", "name")
     val b1 = Seq((3L, "c")).toDF("id", "name")
     def count(): Long = spark.read.format("graftdocs")
@@ -113,7 +113,7 @@ class EventStreamSpec extends AnyFunSuite {
   }
 
   test("mergeStream folds multiple micro-batches into the standing collection") {
-    val feed = java.nio.file.Files.createTempDirectory("graft_msfeed").toString
+    val feed = graft.TestDirs.temp("graft_msfeed").toString
     // 2 files → 2 paced micro-batches; key "a" spans both (must fold),
     // key "b" and "c" arrive in one batch each (insert path)
     Seq(("a", 1.0), ("a", 5.0), ("b", 2.0)).toDF("k", "v")
@@ -121,7 +121,7 @@ class EventStreamSpec extends AnyFunSuite {
     Seq(("a", 9.0), ("c", 3.0)).toDF("k", "v")
       .coalesce(1).write.parquet(s"$feed/f2")
     val store = new graft.sinks.DocStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_msstore").toString)
+      graft.TestDirs.temp("graft_msstore").toString)
     val stream = spark.readStream
       .schema("k string, v double")
       .option("maxFilesPerTrigger", "1")
@@ -132,7 +132,7 @@ class EventStreamSpec extends AnyFunSuite {
         "whenMatched": [{"$set": {"n": {"$add": ["$n", "$$new.n"]},
                                   "maxv": {"$max": ["$maxv", "$$new.maxv"]}}}],
         "whenNotMatched": "insert"}}]"""
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_msckpt").toString
+    val ckpt = graft.TestDirs.temp("graft_msckpt").toString
     val q = EventStream.mergeStream(stream, pipeline, store)
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow()).start()
@@ -149,7 +149,7 @@ class EventStreamSpec extends AnyFunSuite {
     // with batchIds starting at 0 — every batch id ≤ the committed tag
     // must be skipped, leaving the fold unchanged (no double counting)
     assert(store.readTag("t", "batchId").map(_.toLong).exists(_ >= 1))
-    val ckpt2 = java.nio.file.Files.createTempDirectory("graft_msckpt2").toString
+    val ckpt2 = graft.TestDirs.temp("graft_msckpt2").toString
     val q2 = EventStream.mergeStream(stream, pipeline, store)
       .option("checkpointLocation", ckpt2)
       .trigger(Trigger.AvailableNow()).start()
@@ -162,18 +162,18 @@ class EventStreamSpec extends AnyFunSuite {
 
   test("indexStream folds per-batch and skips replayed batches") {
     import spark.implicits._
-    val feed = java.nio.file.Files.createTempDirectory("graft_isfeed").toString
+    val feed = graft.TestDirs.temp("graft_isfeed").toString
     Seq((1L, "spark rocks"), (2L, "spark queries"))
       .toDF("doc_id", "text").coalesce(1).write.parquet(s"$feed/f1")
     Seq((3L, "window functions"))
       .toDF("doc_id", "text").coalesce(1).write.parquet(s"$feed/f2")
     val store = new graft.sinks.DocStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_isstore").toString)
+      graft.TestDirs.temp("graft_isstore").toString)
     val stream = spark.readStream
       .schema("doc_id long, text string")
       .option("maxFilesPerTrigger", "1")
       .option("recursiveFileLookup", "true").parquet(feed)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_isckpt").toString
+    val ckpt = graft.TestDirs.temp("graft_isckpt").toString
     val q = EventStream.indexStream(stream, Seq("text"), "idx", store)
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow()).start()
@@ -190,7 +190,7 @@ class EventStreamSpec extends AnyFunSuite {
     // fresh-checkpoint replay: batch ids restart at 0, every one is ≤
     // the committed tag → skipped, dfs unchanged (no double counting)
     assert(store.readTag("idx", "batchId").map(_.toLong).exists(_ >= 1))
-    val ckpt2 = java.nio.file.Files.createTempDirectory("graft_isckpt2").toString
+    val ckpt2 = graft.TestDirs.temp("graft_isckpt2").toString
     val q2 = EventStream.indexStream(stream, Seq("text"), "idx", store)
       .option("checkpointLocation", ckpt2)
       .trigger(Trigger.AvailableNow()).start()
