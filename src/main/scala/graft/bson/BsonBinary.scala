@@ -38,36 +38,77 @@ object BsonBinary {
 
   // ---- parse -------------------------------------------------------------
 
-  /** Iterate the documents of a BSON stream (concatenated length-prefixed
-    * documents, the `.bson` dump layout). Reads lazily; the caller owns
-    * the stream. */
-  def documents(in: InputStream): Iterator[ObjectNode] = new Iterator[ObjectNode] {
-    private var nextDoc: ObjectNode = _
-    private var done = false
+  /** The framing rule of a stream of concatenated BSON documents, the one
+    * copy every reader of such a stream uses: an int32 little-endian
+    * length prefix, at least 5 and at most [[MaxDocBytes]], counting
+    * itself, then the document body. The prefix is read byte by byte, so
+    * `in` should be buffered. Bodies land in one reused buffer that grows
+    * to the largest document. */
+  final class Frames(in: InputStream) {
+    private var buf = Array.emptyByteArray
 
-    private def readFully(n: Int): Array[Byte] = {
-      val buf = new Array[Byte](n)
-      var off = 0
-      while (off < n) {
-        val r = in.read(buf, off, n - off)
-        if (r < 0) throw new EOFException(
-          s"truncated BSON document: expected $n bytes, got $off")
-        off += r
-      }
-      buf
-    }
+    /** The body [[next]] last read (length prefix excluded, trailing 0x00
+      * included); valid up to the length it returned. */
+    def body: Array[Byte] = buf
 
-    private def advance(): Unit = {
+    /** Body length of the next document, or -1 at a clean end of stream. */
+    private def bodyLength(): Int = {
       val b0 = in.read()
-      if (b0 < 0) { done = true; return }
+      if (b0 < 0) return -1
       val b1 = in.read(); val b2 = in.read(); val b3 = in.read()
       if (b3 < 0) throw new EOFException("truncated BSON length prefix")
       val len = b0 | (b1 << 8) | (b2 << 16) | (b3 << 24)
       if (len < 5 || len > MaxDocBytes) throw new GraftTypeError(
         s"invalid BSON document length $len")
-      val body = readFully(len - 4)
-      val buf = ByteBuffer.wrap(body).order(ByteOrder.LITTLE_ENDIAN)
-      nextDoc = parseDoc(buf)
+      len - 4
+    }
+
+    private def truncated(n: Int, got: Long) =
+      new EOFException(s"truncated BSON document: expected $n bytes, got $got")
+
+    /** Read the next document's body into [[body]]; its length, or -1 at
+      * a clean end of stream. */
+    def next(): Int = {
+      val n = bodyLength()
+      if (n > 0) {
+        if (buf.length < n) buf = new Array[Byte](Integer.highestOneBit(n) * 2)
+        var off = 0
+        while (off < n) {
+          val r = in.read(buf, off, n - off)
+          if (r < 0) throw truncated(n, off)
+          off += r
+        }
+      }
+      n
+    }
+
+    /** Step over the next document without reading its body; false at a
+      * clean end of stream. */
+    def skip(): Boolean = {
+      val n = bodyLength()
+      var left = n.toLong
+      while (left > 0) {
+        val s = in.skip(left)
+        if (s > 0) left -= s
+        else if (in.read() < 0) throw truncated(n, n - left)
+        else left -= 1
+      }
+      n >= 0
+    }
+  }
+
+  /** Iterate the documents of a BSON stream (concatenated length-prefixed
+    * documents, the `.bson` dump layout). Reads lazily; the caller owns
+    * the stream. */
+  def documents(in: InputStream): Iterator[ObjectNode] = new Iterator[ObjectNode] {
+    private val frames = new Frames(in)
+    private var nextDoc: ObjectNode = _
+    private var done = false
+
+    private def advance(): Unit = {
+      val n = frames.next()
+      if (n < 0) { done = true; return }
+      nextDoc = parseBody(frames.body, n)
     }
 
     override def hasNext: Boolean = {
@@ -80,8 +121,11 @@ object BsonBinary {
     }
   }
 
-  /** Parse one document given its body (everything after the int32
-    * length, including the trailing 0x00). */
+  /** Parse one document from the first `n` bytes of `body` (everything
+    * after the int32 length, including the trailing 0x00). */
+  def parseBody(body: Array[Byte], n: Int): ObjectNode =
+    parseDoc(ByteBuffer.wrap(body, 0, n).order(ByteOrder.LITTLE_ENDIAN))
+
   private def parseDoc(buf: ByteBuffer): ObjectNode = {
     val doc = F.objectNode()
     var t = buf.get()

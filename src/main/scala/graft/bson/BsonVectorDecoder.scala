@@ -11,9 +11,9 @@ import java.nio.ByteBuffer
   * undeclared fields are SKIPPED as byte ranges without materializing
   * anything (column pruning at the wire level). This is the reference's
   * exact architecture — `process_bson_stream` walking a `bson_reader_t`
-  * into per-column Arrow builders (lib.pyx:296-311, 436-870) — where
-  * the tree-based path (BsonBinary → DocDecoder) trades speed for a
-  * single code path shared with extended JSON.
+  * into per-column Arrow builders (lib.pyx:296-311, 436-870). The
+  * tree-based decode (BsonBinary → DocDecoder) is the per-document
+  * reference it is specified and tested against.
   *
   * SEMANTIC CONTRACT: every (declared type × BSON element type) cell
   * must behave exactly like `DocDecoder.convert` on the ext-JSON node
@@ -43,18 +43,6 @@ private[graft] object VectorAppend {
 }
 
 private[graft] object BsonVectorDecoder {
-
-  /** The types the direct writers cover — of this decoder and of
-    * [[JsonVectorDecoder]] alike; the graftdocs scan reads any other
-    * declared type on its row path. */
-  def supports(dt: DataType): Boolean = dt match {
-    case IntegerType | LongType | DoubleType | StringType | BooleanType |
-         TimestampType | TimestampNTZType | DateType | BinaryType | NullType => true
-    case _: DecimalType => true
-    case st: StructType => st.fields.forall(f => supports(f.dataType))
-    case ArrayType(et, _) => supports(et)
-    case _ => false
-  }
 
   // BSON element type bytes
   private final val TDouble = 0x01.toByte

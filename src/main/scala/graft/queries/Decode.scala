@@ -92,7 +92,7 @@ object Decode {
     QueryDef("q_connector_roundtrip",
       (s, dir) => {
         val df = Graft.table(s, dir, "customer")
-        val path = java.nio.file.Files.createTempDirectory("graft_conn").toString
+        val path = Staging.scratch("graft_conn").toString
         df.write.format("graftdocs").mode("overwrite").save(path)
         s.read.format("graftdocs").schema(df.schema).load(path)
           .groupBy(col("c_mktsegment"))
@@ -117,7 +117,7 @@ object Decode {
     QueryDef("q_wire_find",
       (s, dir) => {
         val store = new graft.sinks.DocStore(s,
-          java.nio.file.Files.createTempDirectory("graft_wireq").toString,
+          Staging.scratch("graft_wireq").toString,
           "graftdocs")
         store.write(Graft.table(s, dir, "customer")
           .select("c_custkey", "c_mktsegment", "c_acctbal"), "customer")
@@ -151,7 +151,7 @@ object Decode {
     QueryDef("q_wire_opmsg",
       (s, dir) => {
         val store = new graft.sinks.DocStore(s,
-          java.nio.file.Files.createTempDirectory("graft_opmsgq").toString,
+          Staging.scratch("graft_opmsgq").toString,
           "graftdocs")
         store.write(Graft.table(s, dir, "customer")
           .select("c_custkey", "c_mktsegment", "c_acctbal"), "customer")
@@ -182,7 +182,7 @@ object Decode {
     QueryDef("q_wire_opmsg_auth",
       (s, dir) => {
         val store = new graft.sinks.DocStore(s,
-          java.nio.file.Files.createTempDirectory("graft_opmsga").toString,
+          Staging.scratch("graft_opmsga").toString,
           "graftdocs")
         store.write(Graft.table(s, dir, "customer")
           .select("c_custkey", "c_mktsegment", "c_acctbal"), "customer")
@@ -216,7 +216,7 @@ object Decode {
     QueryDef("q_wire_opmsg_agg",
       (s, dir) => {
         val store = new graft.sinks.DocStore(s,
-          java.nio.file.Files.createTempDirectory("graft_opmsgg").toString,
+          Staging.scratch("graft_opmsgg").toString,
           "graftdocs")
         store.write(Graft.table(s, dir, "customer")
           .select("c_custkey", "c_mktsegment", "c_acctbal"), "customer")
@@ -249,7 +249,7 @@ object Decode {
     QueryDef("q_wire_opmsg_zlib",
       (s, dir) => {
         val store = new graft.sinks.DocStore(s,
-          java.nio.file.Files.createTempDirectory("graft_opmsgz").toString,
+          Staging.scratch("graft_opmsgz").toString,
           "graftdocs")
         store.write(Graft.table(s, dir, "customer")
           .select("c_custkey", "c_mktsegment", "c_acctbal"), "customer")
@@ -279,7 +279,7 @@ object Decode {
     QueryDef("q_wire_opmsg_zstd",
       (s, dir) => {
         val store = new graft.sinks.DocStore(s,
-          java.nio.file.Files.createTempDirectory("graft_opmsgzs").toString,
+          Staging.scratch("graft_opmsgzs").toString,
           "graftdocs")
         store.write(Graft.table(s, dir, "customer")
           .select("c_custkey", "c_mktsegment", "c_acctbal"), "customer")
@@ -310,7 +310,7 @@ object Decode {
     QueryDef("q_wire_opmsg_exhaust",
       (s, dir) => {
         val store = new graft.sinks.DocStore(s,
-          java.nio.file.Files.createTempDirectory("graft_opmsgx").toString,
+          Staging.scratch("graft_opmsgx").toString,
           "graftdocs")
         store.write(Graft.table(s, dir, "customer")
           .select("c_custkey", "c_mktsegment", "c_acctbal"), "customer")
@@ -343,7 +343,7 @@ object Decode {
     QueryDef("q_wire_opmsg_insert",
       (s, dir) => {
         val store = new graft.sinks.DocStore(s,
-          java.nio.file.Files.createTempDirectory("graft_opmsgi").toString,
+          Staging.scratch("graft_opmsgi").toString,
           "graftdocs")
         val server = new graft.sources.OpMsg.Server(s, store)
         try {
@@ -375,7 +375,7 @@ object Decode {
     QueryDef("q_wire_opmsg_parallel",
       (s, dir) => {
         val store = new graft.sinks.DocStore(s,
-          java.nio.file.Files.createTempDirectory("graft_opmsgpq").toString,
+          Staging.scratch("graft_opmsgpq").toString,
           "graftdocs")
         store.write(Graft.table(s, dir, "customer")
           .select("c_custkey", "c_mktsegment", "c_acctbal"), "customer")
@@ -408,7 +408,7 @@ object Decode {
     QueryDef("q_wire_find_parallel",
       (s, dir) => {
         val store = new graft.sinks.DocStore(s,
-          java.nio.file.Files.createTempDirectory("graft_wirepq").toString,
+          Staging.scratch("graft_wirepq").toString,
           "graftdocs")
         store.write(Graft.table(s, dir, "customer")
           .select("c_custkey", "c_mktsegment", "c_acctbal"), "customer")
@@ -440,7 +440,7 @@ object Decode {
     QueryDef("q_wire_source",
       (s, dir) => {
         val store = new graft.sinks.DocStore(s,
-          java.nio.file.Files.createTempDirectory("graft_wsrcq").toString,
+          Staging.scratch("graft_wsrcq").toString,
           "graftdocs")
         store.write(Graft.table(s, dir, "customer")
           .select("c_custkey", "c_mktsegment", "c_acctbal"), "customer")
@@ -481,7 +481,7 @@ object Decode {
     QueryDef("q_wire_source_agg",
       (s, dir) => {
         val store = new graft.sinks.DocStore(s,
-          java.nio.file.Files.createTempDirectory("graft_wsrca").toString,
+          Staging.scratch("graft_wsrca").toString,
           "graftdocs")
         store.write(Graft.table(s, dir, "customer")
           .select("c_custkey", "c_mktsegment", "c_acctbal"), "customer")
@@ -520,7 +520,7 @@ object Decode {
     QueryDef("q_wire_stream",
       (s, dir) => {
         val store = new graft.sinks.DocStore(s,
-          java.nio.file.Files.createTempDirectory("graft_wstr").toString,
+          Staging.scratch("graft_wstr").toString,
           "graftdocs")
         store.write(Graft.table(s, dir, "customer")
           .select("c_custkey", "c_mktsegment", "c_acctbal"), "customer")
@@ -555,7 +555,7 @@ object Decode {
     QueryDef("q_wire_out",
       (s, dir) => {
         val store = new graft.sinks.DocStore(s,
-          java.nio.file.Files.createTempDirectory("graft_wout").toString,
+          Staging.scratch("graft_wout").toString,
           "graftdocs")
         store.write(Graft.table(s, dir, "customer")
           .select("c_custkey", "c_mktsegment", "c_acctbal"), "customer")
@@ -591,7 +591,7 @@ object Decode {
     QueryDef("q_wire_find_page",
       (s, dir) => {
         val store = new graft.sinks.DocStore(s,
-          java.nio.file.Files.createTempDirectory("graft_wpag").toString,
+          Staging.scratch("graft_wpag").toString,
           "graftdocs")
         store.write(Graft.table(s, dir, "customer")
           .select("c_custkey", "c_name", "c_mktsegment", "c_acctbal"),
@@ -650,7 +650,7 @@ object Decode {
     QueryDef("q_wire_txn",
       (s, dir) => {
         val store = new graft.sinks.DocStore(s,
-          java.nio.file.Files.createTempDirectory("graft_wtxn").toString,
+          Staging.scratch("graft_wtxn").toString,
           "graftdocs")
         // bounded seed (ORDER BY + LIMIT): the gate measures the
         // transaction protocol, not rewrite throughput — its cost
@@ -739,7 +739,7 @@ object Decode {
     QueryDef("q_wire_collation",
       (s, dir) => {
         val store = new graft.sinks.DocStore(s,
-          java.nio.file.Files.createTempDirectory("graft_wcoll").toString,
+          Staging.scratch("graft_wcoll").toString,
           "graftdocs")
         store.write(Graft.table(s, dir, "customer")
           .select("c_custkey", "c_mktsegment", "c_acctbal"), "customer")
@@ -786,7 +786,7 @@ object Decode {
     QueryDef("q_wire_docs_agg",
       (s, dir) => {
         val store = new graft.sinks.DocStore(s,
-          java.nio.file.Files.createTempDirectory("graft_wdocs").toString,
+          Staging.scratch("graft_wdocs").toString,
           "graftdocs")
         val server = new graft.sources.OpMsg.Server(s, store)
         try {
@@ -841,7 +841,7 @@ object Decode {
     QueryDef("q_wire_capped",
       (s, dir) => {
         val store = new graft.sinks.DocStore(s,
-          java.nio.file.Files.createTempDirectory("graft_wcap").toString,
+          Staging.scratch("graft_wcap").toString,
           "graftdocs")
         val server = new graft.sources.OpMsg.Server(s, store)
         try {
@@ -899,7 +899,7 @@ object Decode {
     QueryDef("q_wire_tail",
       (s, dir) => {
         val store = new graft.sinks.DocStore(s,
-          java.nio.file.Files.createTempDirectory("graft_wtail").toString,
+          Staging.scratch("graft_wtail").toString,
           "graftdocs")
         val server = new graft.sources.OpMsg.Server(s, store)
         try {
@@ -969,7 +969,7 @@ object Decode {
     QueryDef("q_wire_view",
       (s, dir) => {
         val store = new graft.sinks.DocStore(s,
-          java.nio.file.Files.createTempDirectory("graft_wview").toString,
+          Staging.scratch("graft_wview").toString,
           "graftdocs")
         store.write(Graft.table(s, dir, "customer")
           .select("c_custkey", "c_nationkey", "c_mktsegment", "c_acctbal"),
@@ -1011,7 +1011,7 @@ object Decode {
     QueryDef("q_wire_bulk",
       (s, dir) => {
         val store = new graft.sinks.DocStore(s,
-          java.nio.file.Files.createTempDirectory("graft_wblk").toString,
+          Staging.scratch("graft_wblk").toString,
           "graftdocs")
         store.write(Graft.table(s, dir, "part")
           .select("p_partkey", "p_size", "p_retailprice"), "part")
@@ -1065,7 +1065,7 @@ object Decode {
     QueryDef("q_wire_update_positional",
       (s, dir) => {
         val store = new graft.sinks.DocStore(s,
-          java.nio.file.Files.createTempDirectory("graft_wupp").toString,
+          Staging.scratch("graft_wupp").toString,
           "graftdocs")
         store.write(Graft.table(s, dir, "lineitem")
           .where(col("l_orderkey") < 2000)
@@ -1102,7 +1102,7 @@ object Decode {
     QueryDef("q_wire_distinct",
       (s, dir) => {
         val store = new graft.sinks.DocStore(s,
-          java.nio.file.Files.createTempDirectory("graft_wdst").toString,
+          Staging.scratch("graft_wdst").toString,
           "graftdocs")
         store.write(Graft.table(s, dir, "orders")
           .select("o_orderkey", "o_orderpriority", "o_totalprice"),
@@ -1134,7 +1134,7 @@ object Decode {
     QueryDef("q_wire_count",
       (s, dir) => {
         val store = new graft.sinks.DocStore(s,
-          java.nio.file.Files.createTempDirectory("graft_wcnt").toString,
+          Staging.scratch("graft_wcnt").toString,
           "graftdocs")
         store.write(Graft.table(s, dir, "customer")
           .select("c_custkey", "c_mktsegment", "c_acctbal"), "customer")
@@ -1180,7 +1180,7 @@ object Decode {
     QueryDef("q_wire_update",
       (s, dir) => {
         val store = new graft.sinks.DocStore(s,
-          java.nio.file.Files.createTempDirectory("graft_wupd").toString,
+          Staging.scratch("graft_wupd").toString,
           "graftdocs")
         store.write(Graft.table(s, dir, "supplier")
           .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal"),
@@ -1222,7 +1222,7 @@ object Decode {
     QueryDef("q_wire_delete",
       (s, dir) => {
         val store = new graft.sinks.DocStore(s,
-          java.nio.file.Files.createTempDirectory("graft_wdel").toString,
+          Staging.scratch("graft_wdel").toString,
           "graftdocs")
         store.write(Graft.table(s, dir, "customer")
           .select("c_custkey", "c_mktsegment", "c_acctbal"), "customer")
@@ -1253,7 +1253,7 @@ object Decode {
     QueryDef("q_wire_find_modify",
       (s, dir) => {
         val store = new graft.sinks.DocStore(s,
-          java.nio.file.Files.createTempDirectory("graft_wfam").toString,
+          Staging.scratch("graft_wfam").toString,
           "graftdocs")
         store.write(Graft.table(s, dir, "nation")
           .select(col("n_nationkey").as("_id"), col("n_name"),
@@ -1291,7 +1291,7 @@ object Decode {
     QueryDef("q_wire_stream_write",
       (s, dir) => {
         val store = new graft.sinks.DocStore(s,
-          java.nio.file.Files.createTempDirectory("graft_wsw").toString,
+          Staging.scratch("graft_wsw").toString,
           "graftdocs")
         val server = new graft.sources.OpMsg.Server(s, store)
         try {
@@ -1307,8 +1307,7 @@ object Decode {
             .option("host", "127.0.0.1").option("port", server.port)
             .option("collection", "cust_stream")
             .option("streamId", "q-wire-stream-write")
-            .option("checkpointLocation", java.nio.file.Files
-              .createTempDirectory("graft_wsw_ck").toString)
+            .option("checkpointLocation", Staging.scratch("graft_wsw_ck").toString)
             .outputMode("append").start()
           try {
             val rows = half.collect()
@@ -1338,7 +1337,7 @@ object Decode {
     // pushdowns exactly like the format("graftdocs") path
     QueryDef("q_sql_catalog",
       (s, dir) => {
-        val root = java.nio.file.Files.createTempDirectory("graft_cat").toString
+        val root = Staging.scratch("graft_cat").toString
         Graft.table(s, dir, "customer")
           .write.format("graftdocs").mode("overwrite").save(s"$root/customer_docs")
         val cat = s"graftcat${System.nanoTime()}"
@@ -1360,7 +1359,7 @@ object Decode {
     // The oracle replays the curation filter per branch.
     QueryDef("q_sql_time_travel",
       (s, dir) => {
-        val root = java.nio.file.Files.createTempDirectory("graft_tt").toString
+        val root = Staging.scratch("graft_tt").toString
         val store = new graft.sinks.DocStore(s, root, "graftdocs")
         val cust = Graft.table(s, dir, "customer")
         store.writeVersioned(cust, "cust"): Unit
@@ -1396,7 +1395,7 @@ object Decode {
     QueryDef("q_decode_bson",
       (s, dir) => {
         val df = Graft.table(s, dir, "orders")
-        val path = java.nio.file.Files.createTempDirectory("graft_bson_q").toString
+        val path = Staging.scratch("graft_bson_q").toString
         // spread the encode input: the single-file fixture otherwise
         // plans the per-row BSON encode as ONE write task (`Prof
         // stages`: 0.8 s of the gate on one core)
@@ -1423,7 +1422,7 @@ object Decode {
     QueryDef("q_stream_docs",
       (s, dir) => {
         val df = Graft.table(s, dir, "customer")
-        val path = java.nio.file.Files.createTempDirectory("graft_stream_q").toString
+        val path = Staging.scratch("graft_stream_q").toString
         df.write.format("graftdocs").mode("overwrite").save(path)
         val qName = "graft_stream_docs_sink"
         val q = s.readStream.format("graftdocs").schema(df.schema).load(path)
@@ -1446,7 +1445,7 @@ object Decode {
     QueryDef("q_doc_count",
       (s, dir) => {
         val df = Graft.table(s, dir, "supplier")
-        val path = java.nio.file.Files.createTempDirectory("graft_cnt_q").toString
+        val path = Staging.scratch("graft_cnt_q").toString
         df.limit(1000).write.format("graftdocs").mode("overwrite").save(path)
         df.limit(1000).write.format("graftdocs").option("format", "bson")
           .mode("append").save(path) // mixed-format dir: both counters
@@ -1491,7 +1490,7 @@ object Decode {
         // row-order independent)
         val df = graft.operators.Spread.cpuDense(Graft.table(s, dir, "lineitem")
           .select("l_orderkey", "l_quantity", "l_returnflag", "l_shipdate"))
-        val path = java.nio.file.Files.createTempDirectory("graft_mqldoc").toString
+        val path = Staging.scratch("graft_mqldoc").toString
         df.write.format("graftdocs").mode("overwrite").save(path)
         val docs = s.read.format("graftdocs").schema(df.schema).load(path)
         Graft.aggregate(docs, """[
@@ -1520,7 +1519,7 @@ object Decode {
     QueryDef("q_doc_partition_prune",
       (s, dir) => {
         val df = Graft.table(s, dir, "customer")
-        val path = java.nio.file.Files.createTempDirectory("graft_part_q").toString
+        val path = Staging.scratch("graft_part_q").toString
         df.write.format("graftdocs").option("partitionBy", "c_mktsegment")
           .mode("overwrite").save(path)
         s.read.format("graftdocs").schema(df.schema).load(path)
@@ -1549,7 +1548,7 @@ object Decode {
     QueryDef("q_zonemap_prune",
       (s, dir) => {
         val df = Graft.table(s, dir, "orders")
-        val path = java.nio.file.Files.createTempDirectory("graft_zmap_q").toString
+        val path = Staging.scratch("graft_zmap_q").toString
         df.repartitionByRange(8, col("o_orderkey"))
           .sortWithinPartitions(col("o_orderkey"))
           .write.format("graftdocs").mode("overwrite").save(path)
@@ -1578,7 +1577,7 @@ object Decode {
     QueryDef("q_bloom_prune",
       (s, dir) => {
         val df = Graft.table(s, dir, "orders")
-        val path = java.nio.file.Files.createTempDirectory("graft_bloom_q").toString
+        val path = Staging.scratch("graft_bloom_q").toString
         df.repartition(8, col("o_orderkey"))
           .write.format("graftdocs").option("bloomColumns", "o_orderkey")
           .mode("overwrite").save(path)
@@ -1599,7 +1598,7 @@ object Decode {
     QueryDef("q_zonemap_minmax",
       (s, dir) => {
         val df = Graft.table(s, dir, "orders")
-        val path = java.nio.file.Files.createTempDirectory("graft_zmm_q").toString
+        val path = Staging.scratch("graft_zmm_q").toString
         df.repartitionByRange(8, col("o_orderkey"))
           .sortWithinPartitions(col("o_orderkey"))
           .write.format("graftdocs").mode("overwrite").save(path)
@@ -1628,8 +1627,8 @@ object Decode {
     QueryDef("q_point_fetch",
       (s, dir) => {
         val df = Graft.table(s, dir, "orders")
-        val data = java.nio.file.Files.createTempDirectory("graft_pf_d").toString
-        val idx = java.nio.file.Files.createTempDirectory("graft_pf_i").toString
+        val data = Staging.scratch("graft_pf_d").toString
+        val idx = Staging.scratch("graft_pf_i").toString
         df.repartition(8).write.format("graftdocs").option("format", "bson")
           .mode("overwrite").save(data)
         graft.sources.DocIdIndex.build(s, data, "o_orderkey", df.schema, idx)
@@ -1652,7 +1651,7 @@ object Decode {
       (s, dir) => {
         val df = Graft.table(s, dir, "documents").select(
           col("doc_id"), col("lang"), col("source"), col("n_chars"))
-        val path = java.nio.file.Files.createTempDirectory("graft_gagg_q").toString
+        val path = Staging.scratch("graft_gagg_q").toString
         df.write.format("graftdocs").option("partitionBy", "lang")
           .mode("overwrite").save(path)
         s.read.format("graftdocs").schema(df.schema).load(path)
@@ -1674,8 +1673,8 @@ object Decode {
     QueryDef("q_spj_join",
       (s, dir) => {
         val df = Graft.table(s, dir, "orders")
-        val factPath = java.nio.file.Files.createTempDirectory("graft_spj_f").toString
-        val dimPath = java.nio.file.Files.createTempDirectory("graft_spj_d").toString
+        val factPath = Staging.scratch("graft_spj_f").toString
+        val dimPath = Staging.scratch("graft_spj_d").toString
         df.write.format("graftdocs").option("partitionBy", "o_orderstatus")
           .mode("overwrite").save(factPath)
         df.groupBy("o_orderstatus")
@@ -1706,7 +1705,7 @@ object Decode {
       (s, dir) => {
         import graft.api.implicits._
         val df = Graft.table(s, dir, "nation")
-        val path = java.nio.file.Files.createTempDirectory("graft_csv").toString
+        val path = Staging.scratch("graft_csv").toString
         df.write.mode("overwrite").option("header", "true").csv(path)
         s.read.schema(df.schema).option("header", "true").csv(path)
           .mqlAggregate("""[

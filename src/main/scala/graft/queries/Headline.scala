@@ -864,7 +864,7 @@ object Headline {
     QueryDef("q_out_stage",
       (s, dir) => {
         val store = new graft.sinks.DocStore(s,
-          java.nio.file.Files.createTempDirectory("graft_out").toString)
+          Staging.scratch("graft_out").toString)
         Graft.aggregateTo(s, dir, "orders", """[
           {"$group": {"_id": "$o_orderpriority",
              "n": {"$count": {}},
@@ -887,7 +887,7 @@ object Headline {
     QueryDef("q_out_versioned",
       (s, dir) => {
         val store = new graft.sinks.DocStore(s,
-          java.nio.file.Files.createTempDirectory("graft_outv").toString,
+          Staging.scratch("graft_outv").toString,
           "graftdocs", versioned = true)
         Graft.aggregateTo(s, dir, "orders", """[
           {"$group": {"_id": "$o_orderpriority", "n": {"$count": {}}}},
@@ -923,7 +923,7 @@ object Headline {
     QueryDef("q_doc_versions",
       (s, dir) => {
         val store = new graft.sinks.DocStore(s,
-          java.nio.file.Files.createTempDirectory("graft_vers").toString)
+          Staging.scratch("graft_vers").toString)
         val docs = Graft.table(s, dir, "documents")
           .select("doc_id", "source", "n_chars")
         store.writeVersioned(docs, "corpus"): Unit
@@ -957,7 +957,7 @@ object Headline {
     QueryDef("q_version_diff",
       (s, dir) => {
         val store = new graft.sinks.DocStore(s,
-          java.nio.file.Files.createTempDirectory("graft_vdiff").toString)
+          Staging.scratch("graft_vdiff").toString)
         val docs = Graft.table(s, dir, "documents")
           .select("doc_id", "source", "n_chars")
         store.writeVersioned(docs, "corpus"): Unit
@@ -983,7 +983,7 @@ object Headline {
     QueryDef("q_watch_ops",
       (s, dir) => {
         val store = new graft.sinks.DocStore(s,
-          java.nio.file.Files.createTempDirectory("graft_watch").toString)
+          Staging.scratch("graft_watch").toString)
         val docs = Graft.table(s, dir, "documents")
           .select("doc_id", "source", "n_chars")
         store.writeVersioned(docs.where(col("doc_id") < 400), "coll"): Unit
@@ -1033,7 +1033,7 @@ object Headline {
     QueryDef("q_wire_watch",
       (s, dir) => {
         val store = new graft.sinks.DocStore(s,
-          java.nio.file.Files.createTempDirectory("graft_wwatch").toString)
+          Staging.scratch("graft_wwatch").toString)
         val docs = Graft.table(s, dir, "documents")
           .select("doc_id", "source", "n_chars")
         store.writeVersioned(docs.where(col("doc_id") < 400), "coll"): Unit
@@ -1092,7 +1092,7 @@ object Headline {
     QueryDef("q_wire_watch_stream",
       (s, dir) => {
         val store = new graft.sinks.DocStore(s,
-          java.nio.file.Files.createTempDirectory("graft_wwstr").toString)
+          Staging.scratch("graft_wwstr").toString)
         val docs = Graft.table(s, dir, "documents")
           .select("doc_id", "source", "n_chars")
         store.writeVersioned(docs.where(col("doc_id") < 400), "coll"): Unit
@@ -1117,8 +1117,7 @@ object Headline {
               array_join(col("updatedFields"), ",").as("updated"),
               col("txnVersion").as("v"))
             .writeStream.format("memory").queryName(qn)
-            .option("checkpointLocation", java.nio.file.Files
-              .createTempDirectory("graft_wwstr_ck").toString)
+            .option("checkpointLocation", Staging.scratch("graft_wwstr_ck").toString)
             .outputMode("append").start()
           try q.processAllAvailable() finally q.stop()
           val out = s.table(qn).orderBy("doc_id", "operationType")
@@ -1156,7 +1155,7 @@ object Headline {
     QueryDef("q_wire_watch_db",
       (s, dir) => {
         val store = new graft.sinks.DocStore(s,
-          java.nio.file.Files.createTempDirectory("graft_wwdb").toString)
+          Staging.scratch("graft_wwdb").toString)
         val docs = Graft.table(s, dir, "documents")
           .select("doc_id", "source", "n_chars")
         store.writeVersioned(docs.where(col("doc_id") < 400), "coll"): Unit
@@ -1233,7 +1232,7 @@ object Headline {
     QueryDef("q_watch_invalidate",
       (s, dir) => {
         val store = new graft.sinks.DocStore(s,
-          java.nio.file.Files.createTempDirectory("graft_winv").toString)
+          Staging.scratch("graft_winv").toString)
         val docs = Graft.table(s, dir, "documents").select("doc_id", "n_chars")
         store.writeVersioned(docs.where(col("doc_id") < 300), "coll"): Unit
         store.writeVersioned(docs.where(col("doc_id") < 400), "coll"): Unit
@@ -1290,7 +1289,7 @@ object Headline {
     QueryDef("q_watch_dropdb",
       (s, dir) => {
         val store = new graft.sinks.DocStore(s,
-          java.nio.file.Files.createTempDirectory("graft_wdd").toString)
+          Staging.scratch("graft_wdd").toString)
         val docs = Graft.table(s, dir, "documents").select("doc_id", "n_chars")
         store.writeVersioned(docs.where(col("doc_id") < 200), "c1"): Unit
         store.writeVersioned(docs.where(col("doc_id") < 250), "c1"): Unit
@@ -1342,7 +1341,7 @@ object Headline {
     // win is spec-proven in LayoutSpec with scan metrics)
     QueryDef("q_zorder",
       (s, dir) => {
-        val path = java.nio.file.Files.createTempDirectory("graft_zq").toString
+        val path = Staging.scratch("graft_zq").toString
         graft.api.Layout.writeZOrdered(
           Graft.table(s, dir, "events")
             .select(col("event_id"), col("user_id"), col("value")),
@@ -1363,7 +1362,7 @@ object Headline {
     QueryDef("q_compact",
       (s, dir) => {
         val store = new graft.sinks.DocStore(s,
-          java.nio.file.Files.createTempDirectory("graft_cpt").toString,
+          Staging.scratch("graft_cpt").toString,
           "graftdocs")
         val ev = Graft.table(s, dir, "events")
           .select(col("event_id"), col("user_id"), col("event_type"),
@@ -1383,7 +1382,7 @@ object Headline {
     QueryDef("q_merge_upsert",
       (s, dir) => {
         val store = new graft.sinks.DocStore(s,
-          java.nio.file.Files.createTempDirectory("graft_merge").toString)
+          Staging.scratch("graft_merge").toString)
         store.write(Graft.table(s, dir, "customer")
           .where(col("c_custkey") <= 750)
           .select(col("c_custkey").as("_id"), col("c_name"), col("c_acctbal")),
@@ -1415,7 +1414,7 @@ object Headline {
     QueryDef("q_merge_pipeline",
       (s, dir) => {
         val store = new graft.sinks.DocStore(s,
-          java.nio.file.Files.createTempDirectory("graft_mergep").toString)
+          Staging.scratch("graft_mergep").toString)
         Graft.aggregateTo(s, dir, "orders", """[
           {"$match": {"o_orderkey": {"$mod": [2, 0]}}},
           {"$group": {"_id": "$o_custkey", "n": {"$count": {}},
@@ -1457,7 +1456,7 @@ object Headline {
     QueryDef("q_merge_partitioned",
       (s, dir) => {
         val store = new graft.sinks.DocStore(s,
-          java.nio.file.Files.createTempDirectory("graft_pmq").toString,
+          Staging.scratch("graft_pmq").toString,
           "graftdocs")
         def half(rem: Int) = s"""[
           {"$$match": {"o_orderkey": {"$$mod": [2, $rem]}}},
@@ -1486,7 +1485,7 @@ object Headline {
     // the drained stream must equal the batch filter over the table
     QueryDef("q_watch",
       (s, dir) => {
-        val root = java.nio.file.Files.createTempDirectory("graft_watchq").toString
+        val root = Staging.scratch("graft_watchq").toString
         Graft.table(s, dir, "events")
           .select(col("event_id"), col("user_id"), col("event_type"))
           .write.format("graftdocs").mode("overwrite").save(s"$root/events_docs")

@@ -364,7 +364,7 @@ object LlmOps {
       (s, dir) => {
         val docs = Graft.table(s, dir, "documents")
         val store = new graft.sinks.DocStore(s,
-          java.nio.file.Files.createTempDirectory("graft_lfidx").toString,
+          Staging.scratch("graft_lfidx").toString,
           format = "graftdocs")
         LineFreqIndex.writePartitioned(store, LineFreqIndex.build(
           docs.where(col("doc_id") % 3 === 0), "doc_id", "text", " "), "lf")
@@ -980,7 +980,7 @@ object LlmOps {
     // (values, nulls, list boundaries) breaks the hash
     QueryDef("q_arrow_roundtrip",
       (s, dir) => {
-        val tgt = java.nio.file.Files.createTempDirectory("graft_ipc").toString
+        val tgt = Staging.scratch("graft_ipc").toString
         Graft.table(s, dir, "orders")
           .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
             "o_orderdate")
@@ -1036,7 +1036,7 @@ object LlmOps {
     // the hash against the oracle's flat join
     QueryDef("q_arrow_nested",
       (s, dir) => {
-        val tgt = java.nio.file.Files.createTempDirectory("graft_ipcn").toString
+        val tgt = Staging.scratch("graft_ipcn").toString
         val o = Graft.table(s, dir, "orders")
         val li = Graft.table(s, dir, "lineitem")
         o.where(col("o_orderkey") % 7 === 0)
@@ -1076,7 +1076,7 @@ object LlmOps {
     // against the same flat-join oracle as q_arrow_nested
     QueryDef("q_arrow_stream",
       (s, dir) => {
-        val tgt = java.nio.file.Files.createTempDirectory("graft_ipcs").toString
+        val tgt = Staging.scratch("graft_ipcs").toString
         val o = Graft.table(s, dir, "orders")
         val li = Graft.table(s, dir, "lineitem")
         o.where(col("o_orderkey") % 7 === 0)
@@ -1125,13 +1125,11 @@ object LlmOps {
         // is driver-side by nature (pyarrow stand-in), not a data path
         val rows = docs.orderBy("doc_id").collect()
           .map(r => (r.getLong(0), r.getString(1))).toSeq
-        val foreignDir = java.nio.file.Files
-          .createTempDirectory("graft_dict").toString
+        val foreignDir = Staging.scratch("graft_dict").toString
         graft.sources.ArrowForeign.write(foreignDir, rows,
           Some(org.apache.arrow.vector.compression
             .CompressionUtil.CodecType.ZSTD), batches = 4)
-        val ownDir = java.nio.file.Files
-          .createTempDirectory("graft_dictown").toString
+        val ownDir = Staging.scratch("graft_dictown").toString
         docs.write.format("graftarrow").option("codec", "zstd")
           .mode("overwrite").save(ownDir)
         val foreign = s.read.format("graftarrow").load(foreignDir)
@@ -1166,8 +1164,7 @@ object LlmOps {
         val rows = docs.orderBy("doc_id").collect().map(r =>
           (r.getLong(0), r.getString(1), r.getLong(2),
             Seq(r.getString(3), r.getString(1)))).toSeq
-        val foreignDir = java.nio.file.Files
-          .createTempDirectory("graft_dictn").toString
+        val foreignDir = Staging.scratch("graft_dictn").toString
         graft.sources.ArrowForeign.writeNested(foreignDir, rows)
         s.read.format("graftarrow").load(foreignDir)
           .select(col("doc_id"), col("meta.source").as("source"),
@@ -1190,7 +1187,7 @@ object LlmOps {
     // (sidecar soundness), which is exactly what the hash checks
     QueryDef("q_arrow_prune",
       (s, dir) => {
-        val tgt = java.nio.file.Files.createTempDirectory("graft_ipcz").toString
+        val tgt = Staging.scratch("graft_ipcz").toString
         Graft.table(s, dir, "orders")
           .select("o_orderkey", "o_custkey", "o_totalprice")
           .repartitionByRange(8, col("o_orderkey"))
@@ -3246,7 +3243,7 @@ object LlmOps {
     QueryDef("q_search_analyzer_index",
       (s, dir) => {
         val store = new graft.sinks.DocStore(s,
-          java.nio.file.Files.createTempDirectory("graft_aidx").toString)
+          Staging.scratch("graft_aidx").toString)
         val cust = Graft.table(s, dir, "customer")
         store.write(graft.llmops.TextIndex.build(cust, Seq("c_name"),
           Map("c_name" -> "lucene.standard")), "cust_name")

@@ -855,7 +855,7 @@ object Relational {
     // (plan-asserted in GraftCatalogSpec); same oracle as the twins
     QueryDef("q_lookup_catalog",
       (s, dir) => {
-        val root = java.nio.file.Files.createTempDirectory("graft_lkcat")
+        val root = Staging.scratch("graft_lkcat")
           .toString
         val st = new graft.sinks.DocStore(s, root, "graftdocs")
         st.write(Graft.table(s, dir, "events")

@@ -44,6 +44,12 @@ object Staging {
     f.delete(): Unit
   }
 
+  /** A fresh directory under the per-process root: the scratch space of
+    * declared queries (their input batches, stores, checkpoints and
+    * outputs), removed with the root on JVM exit. */
+  def scratch(prefix: String): java.nio.file.Path =
+    java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get(processRoot), prefix)
+
   def dir(gate: String, sfDir: String): String =
     processRoot + s"/${gate}_${math.abs(sfDir.hashCode)}"
 

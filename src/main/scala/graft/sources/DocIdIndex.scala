@@ -119,40 +119,26 @@ object DocIdIndex {
         try in.close() catch { case _: Exception => () }
       })
     if (path.endsWith(".bson")) {
-      val buf = new java.io.BufferedInputStream(in, 1 << 16)
+      val frames = new graft.bson.BsonBinary.Frames(
+        new java.io.BufferedInputStream(in, 1 << 16))
       var offset = 0L
       new Iterator[Row] {
         private var nextDoc: Row = _
-        private def readFully(n: Int): Array[Byte] = {
-          val a = new Array[Byte](n)
-          var got = 0
-          while (got < n) {
-            val r = buf.read(a, got, n - got)
-            if (r < 0) throw new java.io.EOFException(
-              s"doc-id index: truncated BSON document in $path")
-            got += r
-          }
-          a
-        }
         private def advance(): Unit = {
-          val b0 = buf.read()
-          if (b0 < 0) { nextDoc = null; in.close(); return }
-          val rest = readFully(3)
-          val len = b0 | ((rest(0) & 0xff) << 8) | ((rest(1) & 0xff) << 16) |
-            ((rest(2) & 0xff) << 24)
-          if (len < 5 || len > graft.bson.BsonBinary.MaxDocBytes)
-            throw new graft.bson.GraftTypeError(
-              s"doc-id index: invalid BSON document length $len in $path")
-          val body = readFully(len - 4)
-          val whole = new Array[Byte](len)
-          whole(0) = b0.toByte; whole(1) = rest(0); whole(2) = rest(1); whole(3) = rest(2)
-          System.arraycopy(body, 0, whole, 4, len - 4)
-          val node = graft.bson.BsonBinary.documents(
-            new java.io.ByteArrayInputStream(whole)).next()
+          val n =
+            try frames.next()
+            catch {
+              case e: java.io.EOFException => throw new java.io.EOFException(
+                s"doc-id index: ${e.getMessage} in $path")
+              case e: graft.bson.GraftTypeError => throw new graft.bson.GraftTypeError(
+                s"doc-id index: ${e.getMessage} in $path")
+            }
+          if (n < 0) { nextDoc = null; in.close(); return }
+          val node = graft.bson.BsonBinary.parseBody(frames.body, n)
           val id = graft.bson.DocDecoder.convert(node.get(idCol), idField,
             strict = true)
-          nextDoc = Row(render(id), path, offset, len, fileLen, part)
-          offset += len
+          nextDoc = Row(render(id), path, offset, n + 4, fileLen, part)
+          offset += n + 4
         }
         advance()
         override def hasNext: Boolean = nextDoc != null

@@ -26,13 +26,16 @@ import scala.jdk.CollectionConverters._
   * `write()` (reference api.py:602-713) becomes
   * `df.write.format("graftdocs").mode("append").save(path)`.
   *
-  * Two file formats share one decode path:
-  *  - `*.jsonl` — extended-JSON lines (one document per line);
+  * Two file formats, each with its own direct columnar reader:
+  *  - `*.jsonl` — extended-JSON lines (one document per line), streamed
+  *    as Jackson tokens by [[JsonlColumnarReader]];
   *  - `*.bson`  — raw concatenated BSON documents (the mongodump layout,
   *    the reference's native input: `process_bson_stream` over a
-  *    `bson_reader_t`, lib.pyx:296-311), parsed by [[BsonBinary]] into
-  *    the same canonical node shape, so coercion semantics are format-
-  *    independent by construction.
+  *    `bson_reader_t`, lib.pyx:296-311), streamed as bytes by
+  *    [[BsonColumnarReader]].
+  * Both append straight into column vectors. The per-document decoder
+  * [[graft.bson.DocDecoder]] is the reference their coercion semantics
+  * are specified and tested against.
   *
   * Pushdown parity (reference api.py:172-175):
   *  - **column pruning IS the projection synthesis**: the decoder only
@@ -51,8 +54,9 @@ import scala.jdk.CollectionConverters._
   * deployment does not keep batches on local disk.
   *
   * Options: `allowInvalid` (default false) — the reference's
-  * strict-vs-null coercion switch (api.py:148-149); `maxSplitBytes`;
-  * write-side `format` = `jsonl` (default) | `bson`.
+  * strict-vs-null coercion switch (api.py:148-149); `maxSplitBytes`
+  * (positive; see [[GraftDocSource.splitFiles]]); write-side `format` =
+  * `jsonl` (default) | `bson`.
   */
 object GraftDocSource {
   private[sources] case class FileRef(path: String, length: Long,
@@ -63,6 +67,33 @@ object GraftDocSource {
 
   /** Hive's null-partition directory marker. */
   private[sources] val NullPartitionValue = "__HIVE_DEFAULT_PARTITION__"
+
+  /** The `maxSplitBytes` option (default 128 MiB), refused unless positive. */
+  private[sources] def maxSplitBytes(options: CaseInsensitiveStringMap): Long = {
+    val v = options.getLong("maxsplitbytes", 128L * 1024 * 1024)
+    if (v <= 0) throw new IllegalArgumentException(
+      s"graftdocs: maxSplitBytes must be positive, got $v")
+    v
+  }
+
+  /** Input partitions of a file list, for the row scan and the aggregate
+    * scan alike. A `.jsonl` file longer than `maxSplit` splits into
+    * newline-aligned byte ranges (0x0A never occurs inside a UTF-8
+    * multibyte sequence): a split owns every line whose FIRST byte lies
+    * in [start, end), so one 100 GB file is ~800 tasks, not one. A
+    * `.bson` file reads whole (no sync marker to align on). */
+  private[sources] def splitFiles(files: Seq[FileRef], maxSplit: Long,
+                                  keyVals: FileRef => Array[Any] = _ => null)
+      : Array[InputPartition] =
+    files.toArray.flatMap { ref =>
+      val kv = keyVals(ref)
+      if (ref.isBson || ref.length <= maxSplit)
+        Array(GraftFilePartition(ref.path, 0L, math.max(ref.length, 1L),
+          ref.partitionValues, kv))
+      else (0L until ref.length by maxSplit).map(s =>
+        GraftFilePartition(ref.path, s, math.min(s + maxSplit, ref.length),
+          ref.partitionValues, kv)).toArray
+    }
 
   /** Escape a partition value for use as a path segment: every byte of
     * the UTF-8 encoding outside [A-Za-z0-9_.-] becomes %XX, so values
@@ -643,7 +674,7 @@ private[sources] class GraftAggScan(options: CaseInsensitiveStringMap,
        else "")
   }
 
-  private val maxSplitBytes = options.getLong("maxsplitbytes", 128L * 1024 * 1024)
+  private val maxSplitBytes = GraftDocSource.maxSplitBytes(options)
   private def needsCount: Boolean = aggs.contains(AggCountStar)
 
   override def planInputPartitions(): Array[InputPartition] =
@@ -659,14 +690,7 @@ private[sources] class GraftAggScan(options: CaseInsensitiveStringMap,
           ref.partitionValues))
         .grouped(512).map(g => GraftAggGroupPartition(g.toSeq))
         .toArray[InputPartition]
-    else files.toArray.flatMap { ref =>
-      if (ref.isBson || ref.length <= maxSplitBytes)
-        Array(GraftFilePartition(ref.path, 0L, math.max(ref.length, 1L),
-          ref.partitionValues))
-      else (0L until ref.length by maxSplitBytes).map(s =>
-        GraftFilePartition(ref.path, s, math.min(s + maxSplitBytes, ref.length),
-          ref.partitionValues)).toArray
-    }
+    else GraftDocSource.splitFiles(files, maxSplitBytes)
 
   override def createReaderFactory(): PartitionReaderFactory =
     new GraftAggReaderFactory(aggs,
@@ -881,29 +905,9 @@ private[sources] class GraftAggReaderFactory(aggs: Seq[PushedAgg],
 
   /** Count concatenated BSON documents by hopping length prefixes. */
   private def countBson(fsIn: org.apache.hadoop.fs.FSDataInputStream): Long = {
-    val in = new java.io.BufferedInputStream(fsIn, 1 << 16)
+    val frames = new BsonBinary.Frames(new java.io.BufferedInputStream(fsIn, 1 << 16))
     var n = 0L
-    var done = false
-    while (!done) {
-      val b0 = in.read()
-      if (b0 < 0) done = true
-      else {
-        val b1 = in.read(); val b2 = in.read(); val b3 = in.read()
-        if (b3 < 0) throw new java.io.EOFException("truncated BSON length prefix")
-        val len = b0 | (b1 << 8) | (b2 << 16) | (b3 << 24)
-        if (len < 5 || len > graft.bson.BsonBinary.MaxDocBytes)
-          throw new graft.bson.GraftTypeError(s"invalid BSON document length $len")
-        var toSkip = (len - 4).toLong
-        while (toSkip > 0) {
-          val s = in.skip(toSkip)
-          if (s <= 0) {
-            if (in.read() < 0) throw new java.io.EOFException("truncated BSON document")
-            toSkip -= 1
-          } else toSkip -= s
-        }
-        n += 1
-      }
-    }
+    while (frames.skip()) n += 1
     n
   }
 }
@@ -1123,30 +1127,13 @@ private[sources] class GraftScan(schema: StructType, options: CaseInsensitiveStr
 
   private val allowInvalid = options.getBoolean("allowinvalid", false)
 
-  // Large .jsonl files split into newline-aligned byte ranges (0x0A
-  // never occurs inside a UTF-8 multibyte sequence): a split owns every
-  // line whose FIRST byte lies in [start, end). One 100 GB file is ~800
-  // tasks, not one. .bson files read whole (no sync marker to align on).
-  private val maxSplitBytes = {
-    val v = options.getLong("maxsplitbytes", 128L * 1024 * 1024)
-    if (v <= 0) throw new IllegalArgumentException(
-      s"graftdocs: maxSplitBytes must be positive, got $v")
-    v
-  }
+  private val maxSplitBytes = GraftDocSource.maxSplitBytes(options)
 
+  // byte-range splits of one file share its partition key — Spark's SPJ
+  // grouping folds them back into one key group
   private[sources] def splitFiles(files: Seq[GraftDocSource.FileRef])
       : Array[InputPartition] =
-    files.toArray.flatMap { ref =>
-      // byte-range splits of one file share its partition key — Spark's
-      // SPJ grouping folds them back into one key group
-      val kv = keyValsOf(ref)
-      if (ref.isBson || ref.length <= maxSplitBytes)
-        Array(GraftFilePartition(ref.path, 0L, math.max(ref.length, 1L),
-          ref.partitionValues, kv))
-      else (0L until ref.length by maxSplitBytes).map(s =>
-        GraftFilePartition(ref.path, s, math.min(s + maxSplitBytes, ref.length),
-          ref.partitionValues, kv)).toArray
-    }
+    GraftDocSource.splitFiles(files, maxSplitBytes, keyValsOf)
 
   override def planInputPartitions(): Array[InputPartition] =
     splitFiles(runtimeFiltered.map(zonePrune).getOrElse(zoneStatic))
@@ -1155,11 +1142,7 @@ private[sources] class GraftScan(schema: StructType, options: CaseInsensitiveStr
 
   override def createReaderFactory(): PartitionReaderFactory =
     new GraftReaderFactory(schema, allowInvalid, filters,
-      new SerializableConfiguration(GraftDocSource.activeHadoopConf()),
-      // `columnar=false` keeps the row path selectable for A/B; it also
-      // serves any type the direct writers don't cover
-      columnar = options.getBoolean("columnar", true),
-      limit = limit)
+      new SerializableConfiguration(GraftDocSource.activeHadoopConf()), limit)
 
   // continuous document ingest: the streaming twin of the reference's
   // cursor loop — tail the batch directory, each micro-batch decoding
@@ -1522,7 +1505,6 @@ private[sources] object DocPartitions {
 private[sources] object ScanMetrics {
   final val Emitted = "docsEmitted"
   final val Skipped = "docsSkipped"
-  final val Direct = "docsDirect"
   class EmittedMetric extends CustomSumMetric {
     override def name(): String = Emitted
     override def description(): String = "documents emitted"
@@ -1531,14 +1513,7 @@ private[sources] object ScanMetrics {
     override def name(): String = Skipped
     override def description(): String = "documents skipped by pushed filters"
   }
-  /** Documents decoded by a direct bytes/tokens→vector reader (no
-    * JsonNode tree): which decode path engaged. */
-  class DirectMetric extends CustomSumMetric {
-    override def name(): String = Direct
-    override def description(): String = "documents decoded direct"
-  }
-  def supported: Array[CustomMetric] =
-    Array(new EmittedMetric, new SkippedMetric, new DirectMetric)
+  def supported: Array[CustomMetric] = Array(new EmittedMetric, new SkippedMetric)
 }
 
 /** A partition reader's side of [[ScanMetrics]]: plain per-reader
@@ -1548,21 +1523,18 @@ private[sources] object ScanMetrics {
 private[sources] trait ScanCounts { self: PartitionReader[_] =>
   protected var docsEmitted = 0L
   protected var docsSkipped = 0L
-  protected var docsDirect = 0L
 
   private def metric(n: String, v: Long): CustomTaskMetric = new CustomTaskMetric {
     override def name(): String = n
     override def value(): Long = v
   }
   override def currentMetricsValues(): Array[CustomTaskMetric] = Array(
-    metric(ScanMetrics.Emitted, docsEmitted), metric(ScanMetrics.Skipped, docsSkipped),
-    metric(ScanMetrics.Direct, docsDirect))
+    metric(ScanMetrics.Emitted, docsEmitted), metric(ScanMetrics.Skipped, docsSkipped))
   override def initMetricsValues(metrics: Array[CustomTaskMetric]): Unit =
     metrics.foreach { m =>
       m.name() match {
         case ScanMetrics.Emitted => docsEmitted += m.value()
         case ScanMetrics.Skipped => docsSkipped += m.value()
-        case ScanMetrics.Direct => docsDirect += m.value()
         case _ =>
       }
     }
@@ -1571,7 +1543,6 @@ private[sources] trait ScanCounts { self: PartitionReader[_] =>
 private[sources] class GraftReaderFactory(schema: StructType, allowInvalid: Boolean,
                                           filters: Array[Filter],
                                           conf: SerializableConfiguration,
-                                          columnar: Boolean = true,
                                           limit: Option[Int] = None)
   extends PartitionReaderFactory {
   private val perPartitionLimit: Int = limit.getOrElse(Int.MaxValue)
@@ -1601,16 +1572,15 @@ private[sources] class GraftReaderFactory(schema: StructType, allowInvalid: Bool
   // through the direct writers (the reference's process_bson_stream /
   // single-pass builder walk), no JsonNode tree, no per-row Row. Pushed
   // filters evaluate per row against the freshly decoded vectors
-  // (decode-before-filter, the row path's error-parity contract) and
+  // (decode-before-filter, so strict-mode errors raise as DocDecoder's do) and
   // surviving rows compact into the output batch; Spark re-evaluates
-  // pushed filters post-scan either way. Declared types without a
-  // direct writer take the row path.
-  override def supportColumnarReads(partition: InputPartition): Boolean = {
-    val pm = partition.asInstanceOf[GraftFilePartition].partitionValues.toMap
-    columnar && schema.fields.forall(f =>
-      if (pm.contains(f.name)) DocPartitions.castable(f.dataType)
-      else graft.bson.BsonVectorDecoder.supports(f.dataType))
-  }
+  // pushed filters post-scan either way. A declared type no writer
+  // supports fails when the reader is built; so does a partition value
+  // its declared type cannot cast (fillPlan).
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
+
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException("graftdocs reads are columnar")
 
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
@@ -1622,85 +1592,25 @@ private[sources] class GraftReaderFactory(schema: StructType, allowInvalid: Bool
     }.toMap
     val path = new Path(p.path)
     val fsIn = path.getFileSystem(conf.value).open(path)
+    // construction builds the writers and seeks: close the handle if it
+    // throws (the reader's close() never runs then)
     val inner: PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-      if (p.path.endsWith(".bson"))
-        new BsonColumnarReader(fsIn, docSchema, strict, perPartitionLimit,
-          filters, partExternal)
-      else new JsonlColumnarReader(fsIn, p.start, p.end, docSchema, strict,
-        perPartitionLimit, filters, partExternal)
-    if (docIdx.forall(_ >= 0)) inner
-    else new PartitionFilledBatchReader(inner, schema, docIdx, consts)
-  }
-
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[GraftFilePartition]
-    val strict = !allowInvalid
-    val (docSchema, docIdx, consts) = fillPlan(p)
-    val hasPart = docIdx.exists(_ < 0)
-    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(docSchema)
-    // partition constants pre-converted to Catalyst form once per split
-    val constCatalyst: Array[Any] = schema.fields.zipWithIndex.map { case (f, i) =>
-      if (docIdx(i) >= 0) null
-      else CatalystTypeConverters.createToCatalystConverter(f.dataType)(consts(i))
-    }
-    val fieldIdx: Map[String, Int] = docSchema.fieldNames.zipWithIndex.toMap
-    val partExternal: Map[String, Any] = schema.fields.zipWithIndex.collect {
-      case (f, i) if docIdx(i) < 0 => f.name -> consts(i)
-    }.toMap
-    // both formats yield canonical ext-JSON nodes, so decode is
-    // format-independent; construction seeks/reads — close the handle if
-    // it throws (the reader's close() never runs then)
-    val path = new Path(p.path)
-    val fsIn = path.getFileSystem(conf.value).open(path)
-    val docs =
       try {
-        if (p.path.endsWith(".bson")) BsonBinary.documents(fsIn)
-        else new JsonlLineIterator(fsIn, p.start, p.end)
+        if (p.path.endsWith(".bson"))
+          new BsonColumnarReader(fsIn, docSchema, strict, perPartitionLimit,
+            filters, partExternal)
+        else new JsonlColumnarReader(fsIn, p.start, p.end, docSchema, strict,
+          perPartitionLimit, filters, partExternal)
       } catch {
         case e: Throwable => fsIn.close(); throw e
       }
-
-    new PartitionReader[InternalRow] with ScanCounts {
-      private var current: InternalRow = _
-      private var emitted = 0
-      override def next(): Boolean = {
-        if (emitted >= perPartitionLimit) return false // pushed LIMIT
-        while (docs.hasNext) {
-          val node = docs.next()
-          val row = DocDecoder.decodeStruct(node, docSchema, strict)
-          def get(name: String): Any =
-            fieldIdx.get(name).map(row.get).getOrElse(partExternal.getOrElse(name, null))
-          if (filters.forall(DocFilterEval.eval(_, get))) {
-            val inner = toCatalyst(row).asInstanceOf[InternalRow]
-            current =
-              if (!hasPart) inner
-              else {
-                val out = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-                  schema.length)
-                var i = 0
-                while (i < schema.length) {
-                  out.update(i,
-                    if (docIdx(i) >= 0) inner.get(docIdx(i), schema.fields(i).dataType)
-                    else constCatalyst(i))
-                  i += 1
-                }
-                out
-              }
-            docsEmitted += 1
-            emitted += 1
-            return true
-          } else docsSkipped += 1
-        }
-        false
-      }
-      override def get(): InternalRow = current
-      override def close(): Unit = fsIn.close()
-    }
+    if (docIdx.forall(_ >= 0)) inner
+    else new PartitionFilledBatchReader(inner, schema, docIdx, consts)
   }
 }
 
 /** Read-back and row-copy helpers for evaluating pushed filters against
-  * freshly decoded column vectors (the direct BSON path's filter step).
+  * freshly decoded column vectors (the direct readers' filter step).
   * Both operate through `SpecializedGetters` (`ColumnarBatch.getRow`
   * hands one out per row), so one recursive implementation covers
   * top-level columns, struct fields, and array elements alike. */
@@ -1718,7 +1628,7 @@ private[sources] object VectorRead {
 
   /** (row, ordinal) → external JVM value in the exact class
     * DocDecoder.convert produces for `dt` — the forms DocFilterEval.cmp
-    * dispatches on (the row path's filter contract). */
+    * dispatches on. */
   def external(dt: DataType): (SpecializedGetters, Int) => Any = dt match {
     case IntegerType => (g, o) => if (g.isNullAt(o)) null else Int.box(g.getInt(o))
     case LongType    => (g, o) => if (g.isNullAt(o)) null else Long.box(g.getLong(o))
@@ -1798,18 +1708,19 @@ private[sources] object VectorRead {
   *
   * Pushed filters (when present) evaluate per document against the
   * just-decoded row — decode-BEFORE-filter, so strict-mode type errors
-  * raise exactly as on the tree path — and surviving rows compact into a
-  * second vector set that becomes the output batch.
+  * raise exactly as [[graft.bson.DocDecoder]] raises them — and surviving
+  * rows compact into a second vector set that becomes the output batch.
   *
-  * Documented divergence: the direct decode writes straight into
-  * vectors, so APPENDER-stage narrowing (date32 day-count toIntExact,
-  * decimal precision, timestamp micros overflow) runs for every decoded
-  * row — including rows a decode-time filter then drops. The tree path
-  * converts to external values first and never appends dropped rows, so
-  * a poison value of that narrow class in a filtered-out row raises
+  * Documented divergence from DocDecoder's rows filtered afterwards: the
+  * direct decode writes straight into vectors, so APPENDER-stage
+  * narrowing (date32 day-count toIntExact, decimal precision, timestamp
+  * micros overflow) runs for every decoded row — including rows a
+  * decode-time filter then drops. DocDecoder yields external values, and
+  * a row dropped before its conversion to Catalyst form never narrows,
+  * so a poison value of that narrow class in a filtered-out row raises
   * here but not there. Convert-stage errors (the whole coercion matrix)
-  * behave identically on both paths; replicating the tree's accidental
-  * leniency would need per-row vector rollback, rejected by design. */
+  * behave identically; matching the leniency would need per-row vector
+  * rollback, rejected by design. */
 private[sources] abstract class DirectColumnarReaderBase(
     schema: StructType, limitRows: Int,
     filters: Array[Filter], partValues: Map[String, Any])
@@ -1870,7 +1781,6 @@ private[sources] abstract class DirectColumnarReaderBase(
       while (nDec < capacity && nOut < remaining && !eof) {
         if (!decodeOne()) eof = true
         else {
-          docsDirect += 1
           if (!hasFilters) {
             docsEmitted += 1
             nOut += 1
@@ -1922,42 +1832,21 @@ private[sources] class BsonColumnarReader(
   extends DirectColumnarReaderBase(schema, limitRows, filters, partValues) {
   import graft.bson.BsonVectorDecoder
 
-  private val in = new java.io.BufferedInputStream(fsIn, 1 << 16)
   private val writers = schema.fields.map(BsonVectorDecoder.writerFor(_, strict))
+  private val in = new java.io.BufferedInputStream(fsIn, 1 << 16)
+  private val frames = new BsonBinary.Frames(in)
   private val fieldIdx = {
     val m = new java.util.HashMap[String, Integer]()
     schema.fieldNames.zipWithIndex.foreach { case (n, i) => m.put(n, i) }
     m
   }
   private val seen = new Array[Boolean](schema.length)
-  private var body = new Array[Byte](1 << 12) // grows to the largest doc
-
-  /** Next document body length, or -1 at clean EOF. */
-  private def readDocInto(): Int = {
-    val b0 = in.read()
-    if (b0 < 0) return -1
-    val b1 = in.read(); val b2 = in.read(); val b3 = in.read()
-    if (b3 < 0) throw new java.io.EOFException("truncated BSON length prefix")
-    val len = b0 | (b1 << 8) | (b2 << 16) | (b3 << 24)
-    if (len < 5 || len > graft.bson.BsonBinary.MaxDocBytes)
-      throw new graft.bson.GraftTypeError(s"invalid BSON document length $len")
-    val n = len - 4
-    if (body.length < n) body = new Array[Byte](Integer.highestOneBit(n) * 2)
-    var off = 0
-    while (off < n) {
-      val r = in.read(body, off, n - off)
-      if (r < 0) throw new java.io.EOFException(
-        s"truncated BSON document: expected $n bytes, got $off")
-      off += r
-    }
-    n
-  }
 
   override protected def decodeOne(): Boolean = {
-    val len = readDocInto()
+    val len = frames.next()
     if (len < 0) false
     else {
-      val buf = java.nio.ByteBuffer.wrap(body, 0, len)
+      val buf = java.nio.ByteBuffer.wrap(frames.body, 0, len)
         .order(java.nio.ByteOrder.LITTLE_ENDIAN)
       BsonVectorDecoder.walkDocument(buf, writers, fieldIdx, vectors, seen)
       true
@@ -2076,8 +1965,8 @@ private[sources] class PartitionFilledBatchReader(
   * The stream is read in [[JsonlRawLines.ChunkBytes]] chunks with
   * `read(byte[])`; an array loop finds each `'\n'` and the line is
   * copied out with `System.arraycopy` into a reused buffer as raw UTF-8
-  * — the direct token decoder parses it without a String alloc, the
-  * tree path wraps it into a JsonNode. Closing closes `fsIn`. */
+  * — the direct token decoder parses it without a String alloc. Closing
+  * closes `fsIn`. */
 private[sources] final class JsonlRawLines(
     fsIn: org.apache.hadoop.fs.FSDataInputStream, start: Long, end: Long) {
   private val chunk = new Array[Byte](JsonlRawLines.ChunkBytes)
@@ -2152,25 +2041,6 @@ private[sources] final class JsonlRawLines(
 
 private[sources] object JsonlRawLines {
   val ChunkBytes: Int = 1 << 16
-}
-
-private[sources] class JsonlLineIterator(
-    fsIn: org.apache.hadoop.fs.FSDataInputStream, start: Long, end: Long)
-  extends Iterator[com.fasterxml.jackson.databind.JsonNode] {
-  private val mapper = DocDecoder.newMapper()
-  private val lines = new JsonlRawLines(fsIn, start, end)
-  private var nextLen = -2 // -2 = not fetched
-
-  override def hasNext: Boolean = {
-    if (nextLen == -2) nextLen = lines.nextNonEmpty()
-    nextLen >= 0
-  }
-  override def next(): com.fasterxml.jackson.databind.JsonNode = {
-    if (!hasNext) throw new NoSuchElementException
-    val n = nextLen; nextLen = -2
-    mapper.readTree(new String(lines.buffer, 0, n,
-      java.nio.charset.StandardCharsets.UTF_8))
-  }
 }
 
 // ---- write path ------------------------------------------------------------

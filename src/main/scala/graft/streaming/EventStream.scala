@@ -161,7 +161,7 @@ object EventStream {
     * DocWriter.jsonValue). The sink directory is per-run scratch under
     * java.io.tmpdir. */
   def runDocSinkOnFixture(spark: SparkSession, dir: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_docsink").toString
+    val out = graft.queries.Staging.scratch("graft_docsink").toString
     val ckptBase = if (new java.io.File("/dev/shm").canWrite) "/dev/shm" else
       System.getProperty("java.io.tmpdir")
     val name = s"graft_docsink_${System.nanoTime()}"
@@ -321,12 +321,12 @@ object EventStream {
     * full-corpus build (q_index_merge's oracle). */
   def runIndexStreamOnFixture(spark: SparkSession, dir: String): DataFrame = {
     val store = new graft.sinks.DocStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_istore").toString)
+      graft.queries.Staging.scratch("graft_istore").toString)
     val docs = graft.api.Graft.table(spark, dir, "documents")
     store.write(graft.llmops.TextIndex.build(
       docs.where(col("doc_id") % 2 === 0), Seq("text")), "docs_idx")
     val odd = docs.where(col("doc_id") % 2 =!= 0)
-    val srcPath = java.nio.file.Files.createTempDirectory("graft_istream").toString
+    val srcPath = graft.queries.Staging.scratch("graft_istream").toString
     odd.write.format("graftdocs").mode("overwrite").save(srcPath)
     val stream = spark.readStream.format("graftdocs")
       .schema(odd.schema).load(srcPath)
@@ -380,7 +380,7 @@ object EventStream {
     // `into`: a caller-provided (memoized) store — the gate's staging
     // protocol; default stays a throwaway temp store
     val store = into.getOrElse(new graft.sinks.DocStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_vstore").toString,
+      graft.queries.Staging.scratch("graft_vstore").toString,
       "graftdocs"))
     val emb = graft.api.Graft.table(spark, dir, "embeddings")
     val idx = graft.llmops.Similarity.buildIvf(
@@ -390,7 +390,7 @@ object EventStream {
     // the doc codec carries doubles, not floats — widen before staging
     val odd = emb.where(col("vec_id") % 2 =!= 0)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-    val srcPath = java.nio.file.Files.createTempDirectory("graft_vstream").toString
+    val srcPath = graft.queries.Staging.scratch("graft_vstream").toString
     odd.write.format("graftdocs").mode("overwrite").save(srcPath)
     val stream = spark.readStream.format("graftdocs")
       .schema(odd.schema).load(srcPath)
@@ -518,13 +518,13 @@ object EventStream {
     * oracle replays the exact-jaccard ground truth in SQL). */
   def runNearDupStreamOnFixture(spark: SparkSession, dir: String): DataFrame = {
     val store = new graft.sinks.DocStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_ndstore").toString)
+      graft.queries.Staging.scratch("graft_ndstore").toString)
     val docs = graft.api.Graft.table(spark, dir, "documents")
     store.write(graft.llmops.NearDupIndex.build(
       docs.where(col("doc_id") % 5 =!= 0), "doc_id", "text"), "nd_idx")
     val shard = docs.where(col("doc_id") % 5 === 0)
       .select("doc_id", "text")
-    val srcPath = java.nio.file.Files.createTempDirectory("graft_ndstream").toString
+    val srcPath = graft.queries.Staging.scratch("graft_ndstream").toString
     shard.write.format("graftdocs").mode("overwrite").save(srcPath)
     val stream = spark.readStream.format("graftdocs")
       .schema(shard.schema).load(srcPath)
@@ -566,7 +566,7 @@ object EventStream {
     * cost, not operator cost.) */
   def runMergeStreamOnFixture(spark: SparkSession, dir: String): DataFrame = {
     val store = new graft.sinks.DocStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_mstore").toString)
+      graft.queries.Staging.scratch("graft_mstore").toString)
     // seed the standing collection from a disjoint half of the corpus
     // (the backfill), then stream the OTHER half into it — so the
     // streamed merge exercises both the matched fold and the insert

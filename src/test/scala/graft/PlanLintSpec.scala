@@ -154,6 +154,24 @@ class PlanLintSpec extends AnyFunSuite {
   // cannot run twice in one JVM.
   private val skip: Set[String] = Set.empty
 
+  // directories only: codec jars (snappy-java, zstd-jni) extract their
+  // native library to a temp FILE on first use and delete it on exit
+  private def tmpDirs(): Set[String] =
+    Option(new java.io.File(System.getProperty("java.io.tmpdir")).listFiles())
+      .toSet.flatten.filter(_.isDirectory).map(_.getName)
+
+  /** Every declared query built once, in name order (a builder that
+    * throws is kept as its error), and the top-level `java.io.tmpdir`
+    * directories the builds added. */
+  private lazy val sweep
+      : (Seq[(String, Either[Throwable, org.apache.spark.sql.DataFrame])], Set[String]) = {
+    val before = tmpDirs()
+    val built = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      name -> (try Right(fn(spark, sfDir)) catch { case e: Throwable => Left(e) })
+    }
+    (built, tmpDirs() -- before)
+  }
+
   test("gate query names are unique across defs") {
     // SparkEntry.queries/oracleSql are name-keyed maps — a duplicate
     // QueryDef name silently SHADOWS the earlier query and its oracle
@@ -172,9 +190,9 @@ class PlanLintSpec extends AnyFunSuite {
     // strings (q_emb_truncate's ×1e6 BIGINT join) or exploded rows.
     import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
     val failures = scala.collection.mutable.ArrayBuffer.empty[String]
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try {
-        fn(spark, sfDir).schema.fields.foreach { f =>
+    sweep._1.foreach {
+      case (name, Right(df)) =>
+        df.schema.fields.foreach { f =>
           f.dataType match {
             case _: ArrayType | _: MapType | _: StructType =>
               failures += s"$name.${f.name}: ${f.dataType.simpleString} is " +
@@ -182,19 +200,17 @@ class PlanLintSpec extends AnyFunSuite {
             case _ => ()
           }
         }
-      } catch {
-        case e: Throwable => failures += s"$name: failed to build: ${e.getMessage}"
-      }
+      case (name, Left(e)) => failures += s"$name: failed to build: ${e.getMessage}"
     }
     assert(failures.isEmpty, s"\n${failures.mkString("\n")}")
   }
 
   test("every gate query plans clean at 100 TB shape rules") {
     val failures = scala.collection.mutable.ArrayBuffer.empty[String]
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    sweep._1.foreach { case (name, built) =>
       if (!skip(name)) {
         try {
-          val df = fn(spark, sfDir)
+          val df = built.fold(throw _, identity)
           failures ++= lint(name, df.queryExecution.executedPlan)
         } catch {
           case e: Throwable =>
@@ -203,5 +219,12 @@ class PlanLintSpec extends AnyFunSuite {
       }
     }
     assert(failures.isEmpty, s"\n${failures.mkString("\n")}")
+  }
+
+  test("building every declared query leaves no temp directory outside the staging root") {
+    // declared queries take their scratch directories from
+    // Staging.scratch, under the per-process root a shutdown hook deletes
+    val stray = sweep._2.filterNot(_.startsWith("graft_stage_"))
+    assert(stray.isEmpty, s"new java.io.tmpdir directories: ${stray.toSeq.sorted.mkString(", ")}")
   }
 }

@@ -5,31 +5,42 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkFixture
 import graft.schema.MSchema
+import graft.sources.DocReference
 
-/** The direct BSON→vector decode path must agree cell-for-cell with the
-  * tree path (BsonBinary → DocDecoder) — the coercion matrix, strict
-  * errors, missing-field null catch-up, nested recursion, wire-level
-  * pruning. Fixtures are written with one schema (natural types) and
-  * read with another (declared types) to force every cross-acceptance
-  * cell through both paths.
+/** The graftdocs scan's direct BSON→vector decode must agree
+  * cell-for-cell with the tree decode (BsonBinary → DocDecoder) of the
+  * same bytes — the coercion matrix, strict errors, missing-field null
+  * catch-up, nested recursion, wire-level pruning. Fixtures are written
+  * with one schema (natural types) and read with another (declared
+  * types) to force every cross-acceptance cell through both decoders.
   */
 class BsonVectorParitySpec extends AnyFunSuite {
   private lazy val spark = SparkFixture.spark
 
-  /** Write rows under writeSchema as .bson, read under readSchema via
-    * both columnar (direct) and row (tree) paths, compare canonical. */
-  private def bothPaths(rows: Seq[Row], writeSchema: StructType,
-                        readSchema: StructType, allowInvalid: Boolean = false)
-      : (Seq[String], Seq[String]) = {
-    val dir = graft.TestDirs.temp("graft_bvd")
+  /** `rows` encoded under `writeSchema` as one .bson file; its
+    * directory and bytes. */
+  private def bsonFile(rows: Seq[Row], writeSchema: StructType,
+                       prefix: String): (String, Array[Byte]) = {
+    val dir = graft.TestDirs.temp(prefix)
     val out = new java.io.ByteArrayOutputStream()
     rows.foreach(r => out.write(BsonBinary.encodeRow(r, writeSchema)))
     java.nio.file.Files.write(dir.resolve("docs.bson"), out.toByteArray)
-    def read(columnar: Boolean) =
-      spark.read.format("graftdocs").schema(readSchema)
-        .option("columnar", columnar).option("allowInvalid", allowInvalid)
-        .load(dir.toString).collect().toSeq.map(_.json)
-    (read(true), read(false))
+    (dir.toString, out.toByteArray)
+  }
+
+  /** Write rows under writeSchema as .bson, then read them under
+    * readSchema through the scan (direct) and through DocDecoder (tree);
+    * compare canonical. */
+  private def bothPaths(rows: Seq[Row], writeSchema: StructType,
+                        readSchema: StructType, allowInvalid: Boolean = false)
+      : (Seq[String], Seq[String]) = {
+    val (dir, bytes) = bsonFile(rows, writeSchema, "graft_bvd")
+    val direct = spark.read.format("graftdocs").schema(readSchema)
+      .option("allowInvalid", allowInvalid).load(dir).collect().toSeq.map(_.json)
+    val tree = DocReference.frame(spark,
+      DocReference.bson(bytes, readSchema, strict = !allowInvalid), readSchema)
+      .collect().toSeq.map(_.json)
+    (direct, tree)
   }
 
   test("cross-acceptance matrix: direct ≡ tree") {
@@ -103,20 +114,12 @@ class BsonVectorParitySpec extends AnyFunSuite {
     val w = StructType(Seq(StructField("v", StringType)))
     val r = StructType(Seq(StructField("v", IntegerType)))
     val rows = Seq(Row("not-an-int"))
-    def msg(columnar: Boolean): String = {
-      val dir = graft.TestDirs.temp("graft_bvd_strict")
-      val out = new java.io.ByteArrayOutputStream()
-      rows.foreach(x => out.write(BsonBinary.encodeRow(x, w)))
-      java.nio.file.Files.write(dir.resolve("d.bson"), out.toByteArray)
-      val e = intercept[org.apache.spark.SparkException] {
-        spark.read.format("graftdocs").schema(r)
-          .option("columnar", columnar).load(dir.toString).collect()
-      }
-      Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
-        .collectFirst { case g: GraftTypeError => g.getMessage }
-        .getOrElse(fail(s"no GraftTypeError in $e"))
+    val (dir, bytes) = bsonFile(rows, w, "graft_bvd_strict")
+    val e = intercept[org.apache.spark.SparkException] {
+      spark.read.format("graftdocs").schema(r).load(dir).collect()
     }
-    assert(msg(true) == msg(false))
+    assert(DocReference.rootMessage[GraftTypeError](e) ==
+      intercept[GraftTypeError](DocReference.bson(bytes, r)).getMessage)
     // permissive mode nulls instead, identically
     val (direct, tree) = bothPaths(rows, w, r, allowInvalid = true)
     assert(direct == tree && direct.length == 1)
@@ -194,22 +197,18 @@ class BsonVectorParitySpec extends AnyFunSuite {
     val r = StructType(Seq(StructField("d", DateType,
       metadata = new MetadataBuilder()
         .putString(MSchema.BsonTypeKey, "date32").build())))
-    def rootCause(ms: Long, columnar: Boolean): String = {
-      val dir = graft.TestDirs.temp("graft_bvd_date")
-      val out = new java.io.ByteArrayOutputStream()
-      out.write(BsonBinary.encodeRow(Row(new java.sql.Timestamp(ms)), w))
-      java.nio.file.Files.write(dir.resolve("d.bson"), out.toByteArray)
-      val e = intercept[org.apache.spark.SparkException] {
+    for (ms <- Seq(4000000000000000000L, -4000000000000000000L)) {
+      val (dir, bytes) = bsonFile(Seq(Row(new java.sql.Timestamp(ms))), w, "graft_bvd_date")
+      val direct = intercept[org.apache.spark.SparkException] {
         spark.read.format("graftdocs").schema(r)
-          .option("columnar", columnar).option("allowInvalid", true)
-          .load(dir.toString).collect()
+          .option("allowInvalid", true).load(dir).collect()
       }
-      Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
-        .collectFirst { case a: ArithmeticException => a.getMessage }
-        .getOrElse(fail(s"no ArithmeticException in $e"))
+      val tree = intercept[Exception] {
+        DocReference.frame(spark, DocReference.bson(bytes, r, strict = false), r).collect()
+      }
+      assert(DocReference.rootMessage[ArithmeticException](direct) ==
+        DocReference.rootMessage[ArithmeticException](tree))
     }
-    for (ms <- Seq(4000000000000000000L, -4000000000000000000L))
-      assert(rootCause(ms, columnar = true) == rootCause(ms, columnar = false))
     // sane values still decode identically
     val (direct, tree) = bothPaths(
       Seq(Row(java.sql.Timestamp.valueOf("2021-06-15 00:00:00"))), w, r)

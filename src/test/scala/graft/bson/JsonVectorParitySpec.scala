@@ -5,29 +5,38 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkFixture
 import graft.schema.MSchema
+import graft.sources.DocReference
 
-/** The direct ext-JSON→vector token decode (JsonVectorDecoder, no
-  * JsonNode tree) must agree cell-for-cell with the tree path
-  * (ObjectMapper.readTree → DocDecoder.convert) — coercion matrix,
-  * $-wrapper forms, wrapper-vs-document sniffing, strict errors,
-  * malformed-payload rule, missing-field null catch-up, nested
-  * recursion. Fixtures are raw ext-JSON lines (to pin exact wire shapes
+/** The graftdocs scan's direct ext-JSON→vector token decode
+  * (JsonVectorDecoder, no JsonNode tree) must agree cell-for-cell with
+  * the tree decode (ObjectMapper.readTree → DocDecoder) of the same
+  * lines — coercion matrix, $-wrapper forms, wrapper-vs-document
+  * sniffing, strict errors, malformed-payload rule, missing-field null
+  * catch-up, nested recursion. Fixtures are raw ext-JSON lines (to pin exact wire shapes
   * incl. pathological ones) plus engine-written round-trips. */
 class JsonVectorParitySpec extends AnyFunSuite {
   private lazy val spark = SparkFixture.spark
 
-  /** Write raw jsonl lines, read under `readSchema` via both the direct
-    * token path (columnar) and the tree path (row), compare canonical. */
-  private def bothPaths(lines: Seq[String], readSchema: StructType,
-                        allowInvalid: Boolean = false): (Seq[String], Seq[String]) = {
-    val dir = graft.TestDirs.temp("graft_jvd")
+  /** `lines` as one .jsonl file; its directory. */
+  private def jsonlFile(lines: Seq[String], prefix: String): String = {
+    val dir = graft.TestDirs.temp(prefix)
     java.nio.file.Files.write(dir.resolve("docs.jsonl"),
       lines.mkString("", "\n", "\n").getBytes("UTF-8"))
-    def read(columnar: Boolean) =
-      spark.read.format("graftdocs").schema(readSchema)
-        .option("columnar", columnar).option("allowInvalid", allowInvalid)
-        .load(dir.toString).collect().toSeq.map(_.json)
-    (read(true), read(false))
+    dir.toString
+  }
+
+  /** Write raw jsonl lines, read them under `readSchema` through the
+    * scan (direct token path) and through DocDecoder (tree), compare
+    * canonical. */
+  private def bothPaths(lines: Seq[String], readSchema: StructType,
+                        allowInvalid: Boolean = false): (Seq[String], Seq[String]) = {
+    val direct = spark.read.format("graftdocs").schema(readSchema)
+      .option("allowInvalid", allowInvalid).load(jsonlFile(lines, "graft_jvd"))
+      .collect().toSeq.map(_.json)
+    val tree = DocReference.frame(spark,
+      DocReference.jsonl(lines, readSchema, strict = !allowInvalid), readSchema)
+      .collect().toSeq.map(_.json)
+    (direct, tree)
   }
 
   test("cross-acceptance + wrapper matrix: direct ≡ tree") {
@@ -112,16 +121,14 @@ class JsonVectorParitySpec extends AnyFunSuite {
   }
 
   test("strict-mode mismatch raises the same error both ways") {
-    def msg(line: String, readSchema: StructType, columnar: Boolean): String = {
-      val dir = graft.TestDirs.temp("graft_jvd_strict")
-      java.nio.file.Files.write(dir.resolve("d.jsonl"), (line + "\n").getBytes("UTF-8"))
+    def sameError(line: String, readSchema: StructType): Unit = {
       val e = intercept[org.apache.spark.SparkException] {
         spark.read.format("graftdocs").schema(readSchema)
-          .option("columnar", columnar).load(dir.toString).collect()
+          .load(jsonlFile(Seq(line), "graft_jvd_strict")).collect()
       }
-      Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
-        .collectFirst { case g: GraftTypeError => g.getMessage }
-        .getOrElse(fail(s"no GraftTypeError in $e"))
+      assert(DocReference.rootMessage[GraftTypeError](e) ==
+        intercept[GraftTypeError](DocReference.jsonl(Seq(line), readSchema)).getMessage,
+        line)
     }
     val cases = Seq(
       ("""{"v": "nope"}""", StructType(Seq(StructField("v", IntegerType)))),
@@ -132,14 +139,9 @@ class JsonVectorParitySpec extends AnyFunSuite {
       ("""{"v": {"$numberLong": "1"}}""", StructType(Seq(
         StructField("v", StructType(Seq(StructField("x", LongType))))))),
       ("""{"v": 3.5}""", StructType(Seq(StructField("v", BooleanType)))))
-    cases.foreach { case (line, rs) =>
-      assert(msg(line, rs, columnar = true) == msg(line, rs, columnar = false), line)
-    }
+    cases.foreach { case (line, rs) => sameError(line, rs) }
     // integer overflow raises unconditionally, identically
-    val ovLine = """{"v": 3000000000}"""
-    val ovSchema = StructType(Seq(StructField("v", IntegerType)))
-    assert(msg(ovLine, ovSchema, columnar = true) ==
-      msg(ovLine, ovSchema, columnar = false))
+    sameError("""{"v": 3000000000}""", StructType(Seq(StructField("v", IntegerType))))
   }
 
   test("permissive malformed payloads null identically (matrix sweep)") {
@@ -169,21 +171,19 @@ class JsonVectorParitySpec extends AnyFunSuite {
     val schema = StructType(Seq(StructField("d", DateType,
       metadata = new MetadataBuilder()
         .putString(MSchema.BsonTypeKey, "date32").build())))
-    def rootCause(line: String, columnar: Boolean): String = {
-      val dir = graft.TestDirs.temp("graft_jvd_date")
-      java.nio.file.Files.write(dir.resolve("d.jsonl"), (line + "\n").getBytes("UTF-8"))
-      val e = intercept[org.apache.spark.SparkException] {
-        spark.read.format("graftdocs").schema(schema)
-          .option("columnar", columnar).option("allowInvalid", true)
-          .load(dir.toString).collect()
-      }
-      Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
-        .collectFirst { case a: ArithmeticException => a.getMessage }
-        .getOrElse(fail(s"no ArithmeticException in $e"))
-    }
     for (line <- Seq("""{"d": {"$date": 4000000000000000000}}""",
-                     """{"d": {"$date": -4000000000000000000}}"""))
-      assert(rootCause(line, columnar = true) == rootCause(line, columnar = false))
+                     """{"d": {"$date": -4000000000000000000}}""")) {
+      val direct = intercept[org.apache.spark.SparkException] {
+        spark.read.format("graftdocs").schema(schema).option("allowInvalid", true)
+          .load(jsonlFile(Seq(line), "graft_jvd_date")).collect()
+      }
+      val tree = intercept[Exception] {
+        DocReference.frame(spark,
+          DocReference.jsonl(Seq(line), schema, strict = false), schema).collect()
+      }
+      assert(DocReference.rootMessage[ArithmeticException](direct) ==
+        DocReference.rootMessage[ArithmeticException](tree))
+    }
     // sane values still decode identically
     val (direct, tree) =
       bothPaths(Seq("""{"d": {"$date": 1623715200000}}"""), schema)
@@ -205,18 +205,14 @@ class JsonVectorParitySpec extends AnyFunSuite {
     assert(direct == tree && direct.length == 3)
     // and the sub-ms digits actually survived (Row.json renders without
     // fractions — read the epoch micros directly)
-    val dir = graft.TestDirs.temp("graft_jvd_subms")
-    java.nio.file.Files.write(dir.resolve("docs.jsonl"),
-      lines.mkString("", "\n", "\n").getBytes("UTF-8"))
-    def micros(columnar: Boolean): Seq[Long] =
-      spark.read.format("graftdocs").schema(schema)
-        .option("columnar", columnar).load(dir.toString)
-        .orderBy("i")
+    def micros(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+      df.orderBy("i")
         .select(org.apache.spark.sql.functions.unix_micros(
           org.apache.spark.sql.functions.col("ltz")))
         .collect().toSeq.map(_.getLong(0))
-    val md = micros(columnar = true)
-    assert(md == micros(columnar = false))
+    val md = micros(spark.read.format("graftdocs").schema(schema)
+      .load(jsonlFile(lines, "graft_jvd_subms")))
+    assert(md == micros(DocReference.frame(spark, DocReference.jsonl(lines, schema), schema)))
     assert(md(0) % 1000 == 123L, s"sub-ms truncated: $md")
     assert(md(1) % 1000000 == 123456L, s"sub-ms truncated: $md")
   }
@@ -300,12 +296,12 @@ class JsonVectorParitySpec extends AnyFunSuite {
           .SeqHasAsJava(rows).asJava), schema)
         .repartition(1)
         .write.format("graftdocs").mode("overwrite").save(dir.toString)
-      def read(columnar: Boolean) =
-        spark.read.format("graftdocs").schema(schema)
-          .option("columnar", columnar).load(dir.toString)
-          .collect().toSeq.map(_.json).sorted
-      assert(read(true) == read(false),
-        s"round $round schema ${schema.simpleString}")
+      val direct = spark.read.format("graftdocs").schema(schema).load(dir.toString)
+        .collect().toSeq.map(_.json).sorted
+      val tree = DocReference.frame(spark,
+        DocReference.files(dir.toString, schema), schema)
+        .collect().toSeq.map(_.json).sorted
+      assert(direct == tree, s"round $round schema ${schema.simpleString}")
     }
   }
 

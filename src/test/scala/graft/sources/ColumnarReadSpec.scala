@@ -6,12 +6,12 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkFixture
 import graft.schema.MSchema
 
-/** Vectorized scan path of the graftdocs source: the plan goes columnar,
-  * and the ColumnarBatch decode is value-identical to the row path over
-  * the full declared-type matrix (nested structs, arrays of structs,
-  * decimal128, binary/objectId, timestamps incl. NTZ, date32, code) —
-  * the Spark twin of the reference's columnar-builder equivalence
-  * (process_bson_stream builders, lib.pyx:436-870).
+/** Vectorized scan of the graftdocs source: the plan goes columnar, and
+  * the ColumnarBatch decode is value-identical to DocDecoder's
+  * per-document rows over the full declared-type matrix (nested structs,
+  * arrays of structs, decimal128, binary/objectId, timestamps incl. NTZ,
+  * date32, code) — the Spark twin of the reference's columnar-builder
+  * equivalence (process_bson_stream builders, lib.pyx:436-870).
   */
 class ColumnarReadSpec extends AnyFunSuite {
   private lazy val spark = SparkFixture.spark
@@ -40,8 +40,7 @@ class ColumnarReadSpec extends AnyFunSuite {
     StructField("structs", ArrayType(StructType(Seq(
       StructField("k", LongType), StructField("v", StringType)))))))
 
-  private def writeFixture(): String = {
-    val docs = Seq(
+  private val fixtureLines = Seq(
       """{"i": 1, "l": {"$numberLong": "9007199254740993"}, "d": 1.5, "s": "a b", "b": true,
          "ts": {"$date": 1700000000123}, "dt": {"$date": 1700003600000},
          "dec": {"$numberDecimal": "12345.6789012345"},
@@ -59,28 +58,30 @@ class ColumnarReadSpec extends AnyFunSuite {
       // NaN → null on numeric targets
       """{"i": NaN, "l": NaN, "d": NaN}"""
     ).map(_.replaceAll("\n\\s*", " "))
+
+  private def writeFixture(): String = {
     val dir = graft.TestDirs.temp("graft_columnar")
     java.nio.file.Files.write(dir.resolve("docs.jsonl"),
-      docs.mkString("", "\n", "\n").getBytes("UTF-8"))
+      fixtureLines.mkString("", "\n", "\n").getBytes("UTF-8"))
     dir.toString
   }
 
-  private def read(path: String, columnar: Boolean) =
+  private def read(path: String) =
     spark.read.format("graftdocs").schema(fullSchema)
-      .option("columnar", columnar).option("allowInvalid", true).load(path)
+      .option("allowInvalid", true).load(path)
 
-  test("plan reads columnar batches by default; row path behind the option") {
-    val path = writeFixture()
-    val colPlan = read(path, columnar = true).queryExecution.executedPlan.toString
-    assert(colPlan.contains("ColumnarToRow"), s"not columnar:\n$colPlan")
-    val rowPlan = read(path, columnar = false).queryExecution.executedPlan.toString
-    assert(!rowPlan.contains("ColumnarToRow"), s"row path lost:\n$rowPlan")
+  test("the plan reads columnar batches") {
+    val plan = read(writeFixture()).queryExecution.executedPlan.toString
+    assert(plan.contains("ColumnarToRow"), s"not columnar:\n$plan")
   }
 
   test("columnar decode ≡ row decode over the full type matrix") {
-    val path = writeFixture()
-    val colRows = read(path, columnar = true).orderBy("i").collect().toSeq
-    val rowRows = read(path, columnar = false).orderBy("i").collect().toSeq
+    // the row decode: DocDecoder's per-document rows of the same lines;
+    // one file, one split: both keep line order
+    val colRows = read(writeFixture()).collect().toSeq
+    val rowRows = DocReference.frame(spark,
+      DocReference.jsonl(fixtureLines, fullSchema, strict = false), fullSchema)
+      .collect().toSeq
     assert(colRows.length == 4)
     // Row.equals on binary columns compares array identity — compare a
     // canonical rendering instead (json covers every nested field)
@@ -91,7 +92,7 @@ class ColumnarReadSpec extends AnyFunSuite {
 
   test("decode-time filter skip works on the columnar path") {
     val path = writeFixture()
-    val q = read(path, columnar = true).where($"i" === 2)
+    val q = read(path).where($"i" === 2)
     assert(q.collect().length == 1)
     assert(ScanCountsOf(q).skipped > 0)
   }
@@ -118,20 +119,20 @@ class ColumnarReadSpec extends AnyFunSuite {
         StructField("x", DoubleType),
         StructField("tags", ArrayType(StringType))))),
       StructField("arr", ArrayType(LongType))))
-    def rd(columnar: Boolean) = spark.read.format("graftdocs").schema(schema)
-      .option("columnar", columnar).load(dir.toString)
-      .where($"d" === 3.0 && $"id" >= 100)
+    val pred = $"d" === 3.0 && $"id" >= 100
 
     // no orderBy here: a range sort samples the source in a second scan
     // pass, which would double every counter — sort driver-side instead
-    val q = rd(columnar = true)
+    val q = spark.read.format("graftdocs").schema(schema).load(dir.toString).where(pred)
     val colRows = q.collect().toSeq.sortBy(_.getLong(0))
     val counts = ScanCountsOf(q)
-    assert(counts.direct == n, s"direct path did not engage: direct=${counts.direct}")
+    assert(counts.emitted + counts.skipped == n,
+      s"decoded ${counts.emitted + counts.skipped} of $n documents")
     assert(counts.skipped > 0, "no decode-time skips counted")
     assert(counts.emitted == colRows.length.toLong)
-    // value parity with the row path under the same filter
-    val rowRows = rd(columnar = false).collect().toSeq.sortBy(_.getLong(0))
+    // value parity with DocDecoder's rows under the same filter
+    val rowRows = DocReference.frame(spark, DocReference.files(dir.toString, schema), schema)
+      .where(pred).collect().toSeq.sortBy(_.getLong(0))
     assert(colRows.nonEmpty && colRows.map(_.json) == rowRows.map(_.json))
     // and with the no-filter direct read filtered post-hoc
     val all = spark.read.format("graftdocs").schema(schema).load(dir.toString)
@@ -153,22 +154,40 @@ class ColumnarReadSpec extends AnyFunSuite {
       Option(e.getCause).exists(_.getMessage.contains("unexpected type")))
   }
 
+  test("a declared type no decoder supports fails when the reader is built") {
+    // FloatType and MapType have no direct writer and no DocDecoder case:
+    // the read fails by name, even where no document carries the field
+    val dir = graft.TestDirs.temp("graft_unsupported")
+    java.nio.file.Files.write(dir.resolve("a.jsonl"), "{\"i\": 1}\n".getBytes("UTF-8"))
+    val out = new java.io.ByteArrayOutputStream()
+    out.write(graft.bson.BsonBinary.encodeRow(org.apache.spark.sql.Row(1L),
+      StructType(Seq(StructField("i", LongType)))))
+    java.nio.file.Files.write(dir.resolve("b.bson"), out.toByteArray)
+    for (file <- Seq("a.jsonl", "b.bson");
+         dt <- Seq(FloatType, MapType(StringType, LongType))) {
+      val e = intercept[org.apache.spark.SparkException] {
+        spark.read.format("graftdocs")
+          .schema(StructType(Seq(StructField("i", LongType), StructField("f", dt))))
+          .load(dir.resolve(file).toString).collect()
+      }
+      assert(DocReference.rootMessage[graft.bson.GraftTypeError](e) ==
+        s"unsupported declared type $dt", s"$file ${dt.simpleString}")
+    }
+  }
+
   test("limit pushdown stops decode after n rows per partition") {
     val dir = graft.TestDirs.temp("graft_limit")
     val sb = new StringBuilder
     (1 to 20000).foreach(i => sb.append(s"""{"i": $i}\n"""))
     java.nio.file.Files.write(dir.resolve("big.jsonl"), sb.toString.getBytes("UTF-8"))
     val schema = StructType(Seq(StructField("i", LongType)))
-    for (columnar <- Seq(true, false)) {
-      val q = spark.read.format("graftdocs").schema(schema)
-        .option("columnar", columnar).load(dir.toString).limit(5)
-      assert(q.queryExecution.executedPlan.toString.contains("PushedLimit: 5"))
-      assert(q.collect().length == 5)
-      // one partition here: the decoder must have stopped at the limit,
-      // not decoded all 20000 documents
-      val emitted = ScanCountsOf(q).emitted
-      assert(emitted > 0 && emitted <= 5L, s"columnar=$columnar decoded $emitted rows")
-    }
+    val q = spark.read.format("graftdocs").schema(schema).load(dir.toString).limit(5)
+    assert(q.queryExecution.executedPlan.toString.contains("PushedLimit: 5"))
+    assert(q.collect().length == 5)
+    // one partition here: the decoder must have stopped at the limit,
+    // not decoded all 20000 documents
+    val emitted = ScanCountsOf(q).emitted
+    assert(emitted > 0 && emitted <= 5L, s"decoded $emitted rows")
   }
 
   test("count(*) pushdown never decodes a document") {
@@ -210,6 +229,24 @@ class ColumnarReadSpec extends AnyFunSuite {
         .option("maxSplitBytes", split).load(dir.toString).groupBy().count()
       assert(q.queryExecution.executedPlan.toString.contains("PushedAggregation"))
       assert(q.head.getLong(0) == 5000, s"split=$split")
+    }
+  }
+
+  test("a non-positive maxSplitBytes is refused by name, by a pushed count(*) too") {
+    val dir = graft.TestDirs.temp("graft_split_neg")
+    java.nio.file.Files.write(dir.resolve("a.jsonl"),
+      "{\"i\": 1}\n{\"i\": 2}\n".getBytes("UTF-8"))
+    val schema = StructType(Seq(StructField("i", LongType)))
+    for (split <- Seq(-1L, 0L)) {
+      val df = spark.read.format("graftdocs").schema(schema)
+        .option("maxSplitBytes", split).load(dir.toString)
+      for ((what, action) <- Seq[(String, () => Any)](
+             "count" -> (() => df.count()), "read" -> (() => df.collect()))) {
+        val e = intercept[Exception](action())
+        assert(Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+          .exists(c => String.valueOf(c.getMessage).contains(
+            s"maxSplitBytes must be positive, got $split")), s"$what, $split: $e")
+      }
     }
   }
 

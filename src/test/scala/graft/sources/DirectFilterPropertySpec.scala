@@ -10,8 +10,9 @@ import graft.SparkFixture
 /** Property sweep for the direct readers' decode-time filter machinery
   * (DirectColumnarReaderBase): random datasets × random predicate trees,
   * pushed through the REAL scan (so the in-reader evaluation + row
-  * compaction runs), must return exactly what the row path returns for
-  * the same query — for both formats. The predicate shapes cover
+  * compaction runs), must return exactly what Spark's own filter returns
+  * over DocDecoder's per-document rows of the same files — for both
+  * formats. The predicate shapes cover
   * everything DocFilterEval claims (=, <, <=, >, >=, IS NULL, IS NOT
   * NULL, IN, AND, OR) over long/double/string/bool/timestamp columns
   * with nulls, plus partition-mixing via a hive-partitioned variant. */
@@ -43,7 +44,7 @@ class DirectFilterPropertySpec extends AnyFunSuite {
   }
 
   /** Random predicate over the generated columns, as a SQL string so the
-    * same text drives both paths through Catalyst's own pushdown. */
+    * same text drives the scan's pushdown and the reference's filter. */
   private def predGen(depth: Int): Gen[String] = {
     val leafs: Seq[Gen[String]] = Seq(
       Gen.chooseNum(-50L, 50L).map(v => s"l > $v"),
@@ -78,7 +79,7 @@ class DirectFilterPropertySpec extends AnyFunSuite {
     dir
   }
 
-  test("random filters: direct scan ≡ row scan, both formats (30 draws)") {
+  test("random filters: direct scan ≡ DocDecoder rows filtered by Spark, both formats (30 draws)") {
     for (round <- 1 to 30) {
       val format = if (round % 2 == 0) "bson" else "jsonl"
       val partitioned = round % 3 == 0
@@ -88,18 +89,17 @@ class DirectFilterPropertySpec extends AnyFunSuite {
       })
       val dir = writeRows(rows, format, partitioned)
       val pred = sample(predGen(2))
-      def run(columnar: Boolean): (Seq[String], Long) = {
-        val q = spark.read.format("graftdocs").schema(schema)
-          .option("columnar", columnar).option("allowInvalid", true)
-          .load(dir).where(pred)
-        (q.collect().toSeq.map(_.json).sorted, ScanCountsOf(q).direct)
-      }
-      val (direct, decodedDirect) = run(columnar = true)
+      val q = spark.read.format("graftdocs").schema(schema)
+        .option("allowInvalid", true).load(dir).where(pred)
+      val direct = q.collect().toSeq.map(_.json).sorted
+      val counts = ScanCountsOf(q)
       // zone maps may prune EVERY file for an always-false predicate —
       // then no reader runs at all, which is the correct outcome
-      assert(decodedDirect > 0 || direct.isEmpty,
-        s"round $round [$format]: direct path did not engage for `$pred`")
-      val (row, _) = run(columnar = false)
+      assert(counts.emitted + counts.skipped > 0 || direct.isEmpty,
+        s"round $round [$format]: no document decoded for `$pred`")
+      val row = DocReference.frame(spark,
+        DocReference.files(dir, schema, strict = false), schema)
+        .where(pred).collect().toSeq.map(_.json).sorted
       assert(direct == row,
         s"round $round [$format, partitioned=$partitioned] diverged on `$pred`")
     }
@@ -111,8 +111,7 @@ class DirectFilterPropertySpec extends AnyFunSuite {
         java.time.LocalDateTime.parse("2024-01-01T00:00:00")))
     for (format <- Seq("jsonl", "bson")) {
       val dir = writeRows(rows, format, partitioned = false)
-      val q = spark.read.format("graftdocs").schema(schema)
-        .option("columnar", true).load(dir)
+      val q = spark.read.format("graftdocs").schema(schema).load(dir)
         .where("l = 3 AND s = 's1'")
       val got = q.collect().length
       val counts = ScanCountsOf(q)

@@ -77,7 +77,7 @@ class GraftDocSourceSpec extends AnyFunSuite {
     for (((q, n), rows) <- queries.zip(sizes).zip(got)) {
       val counts = ScanCountsOf(q)
       assert(rows == (n + 2) / 3)
-      assert(counts == ScanCountsOf.Counts(emitted = rows, skipped = n - rows, direct = n),
+      assert(counts == ScanCountsOf.Counts(emitted = rows, skipped = n - rows),
         s"$n documents: $counts")
     }
   }
@@ -95,7 +95,7 @@ class GraftDocSourceSpec extends AnyFunSuite {
       .load(dir)
     assert(q.rdd.getNumPartitions == 3)
     assert(q.collect().length == 600)
-    assert(ScanCountsOf(q) == ScanCountsOf.Counts(emitted = 600, skipped = 0, direct = 600))
+    assert(ScanCountsOf(q) == ScanCountsOf.Counts(emitted = 600, skipped = 0))
   }
 
   test("schema inference over the files (inferred mode)") {

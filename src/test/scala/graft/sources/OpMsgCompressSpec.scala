@@ -105,6 +105,22 @@ class OpMsgCompressSpec extends AnyFunSuite {
       .getMessage.contains("originalOpcode"))
   }
 
+  test("a snappy payload whose preamble exceeds uncompressedSize is refused " +
+       "before its output is allocated") {
+    // snappy-java writes as many bytes as the preamble names: the check
+    // against the envelope's size must come before the output exists.
+    // The second payload pins that order: its preamble names 4096 bytes,
+    // then a copy before any literal, which snappy refuses as corrupt
+    val valid = org.xerial.snappy.Snappy.compress(
+      Array.tabulate[Byte](4096)(i => (i % 7).toByte))
+    val corruptBody = Array[Byte](0x80.toByte, 0x20, 0x01, 0x00)
+    for (payload <- Seq(valid, corruptBody)) {
+      val e = intercept[IllegalArgumentException](
+        OpMsg.decompressPayload(OpMsg.CompressorSnappy, payload, 64))
+      assert(e.getMessage == "OP_COMPRESSED: snappy inflated to 4096 bytes, declared 64")
+    }
+  }
+
   // ---- CRC-32C checksums (flag bit 0) ---------------------------------------
 
   test("checksumPresent: round-trip, corruption detection, and the " +

@@ -9,11 +9,11 @@ import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
   * Dataset the action ran on: `df.count()` and `df.head` execute a
   * derived plan, `df.collect()` runs `df`'s own. */
 object ScanCountsOf extends AdaptiveSparkPlanHelper {
-  case class Counts(emitted: Long, skipped: Long, direct: Long)
+  case class Counts(emitted: Long, skipped: Long)
 
   def apply(df: DataFrame): Counts = {
     val scans = collect(df.queryExecution.executedPlan) { case s: BatchScanExec => s.metrics }
     def sum(name: String): Long = scans.flatMap(_.get(name)).map(_.value).sum
-    Counts(sum(ScanMetrics.Emitted), sum(ScanMetrics.Skipped), sum(ScanMetrics.Direct))
+    Counts(sum(ScanMetrics.Emitted), sum(ScanMetrics.Skipped))
   }
 }
