@@ -1408,27 +1408,19 @@ object DocStore {
   final case class DdlEvent(op: String, coll: String, to: Option[String],
                             txnVersion: Long, at: Long)
 
-  /** The store's FileSystem for metadata/append/commit operations. For
-    * `file:` paths this is the RAW local filesystem: Hadoop's default
-    * client-side ChecksumFileSystem writes (and renames, and deletes) a
-    * `.crc` sidecar per file, roughly DOUBLING the filesystem-op count
-    * of every append/rename-commit — measured 1.9 s vs 0.8 s for a
-    * 182-batch wire-insert append loop. Distributed filesystems (hdfs,
-    * s3a, …) keep their native integrity machinery — this only strips
-    * the local-mode duplicate. `spark.hadoop.graft.store.localChecksums
-    * =true` restores the checksummed local fs for deployments that
-    * want client-side .crc files on local stores. */
+  /** The store's FileSystem for metadata/append/commit operations: the
+    * RAW local filesystem for `file:` paths, the path's native
+    * filesystem otherwise. Hadoop's default client-side
+    * ChecksumFileSystem writes (and renames, and deletes) a `.crc`
+    * sidecar per file, roughly DOUBLING the filesystem-op count of every
+    * append/rename-commit — measured 1.9 s vs 0.8 s for a 182-batch
+    * wire-insert append loop. Distributed filesystems (hdfs, s3a, …)
+    * keep their native integrity machinery — this only strips the
+    * local-mode duplicate. */
   def storeFs(p: Path, conf: org.apache.hadoop.conf.Configuration)
-      : org.apache.hadoop.fs.FileSystem = {
-    val f = p.getFileSystem(conf)
-    val scheme = Option(p.toUri.getScheme).getOrElse(
-      org.apache.hadoop.fs.FileSystem.getDefaultUri(conf).getScheme)
-    if ((scheme == "file" || scheme == null) &&
-        !conf.getBoolean("graft.store.localChecksums", false))
-      f match {
-        case lf: org.apache.hadoop.fs.LocalFileSystem => lf.getRaw
-        case other => other
-      }
-    else f
-  }
+      : org.apache.hadoop.fs.FileSystem =
+    p.getFileSystem(conf) match {
+      case lf: org.apache.hadoop.fs.LocalFileSystem => lf.getRaw
+      case other => other
+    }
 }

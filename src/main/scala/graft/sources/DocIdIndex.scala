@@ -281,12 +281,13 @@ object DocIdIndex {
           if (verified(path) != fileLen) throw new IllegalStateException(
             s"doc-id index: $path changed since indexing " +
               s"(${verified(path)} bytes, indexed $fileLen) — rebuild the index")
-          val bytes = new Array[Byte](len)
-          in.readFully(offset, bytes, 0, len)
+          // a bson hit's length counts its int32 prefix: read the body
+          // alone and parse it in place
+          val skip = if (path.endsWith(".bson")) 4 else 0
+          val bytes = new Array[Byte](len - skip)
+          in.readFully(offset + skip, bytes, 0, bytes.length)
           val node =
-            if (path.endsWith(".bson"))
-              graft.bson.BsonBinary.documents(
-                new java.io.ByteArrayInputStream(bytes)).next()
+            if (skip > 0) graft.bson.BsonBinary.parseBody(bytes, bytes.length)
             else mapper.readTree(bytes)
           if (part.isEmpty)
             graft.bson.DocDecoder.decodeStruct(node, schema, strict = true)

@@ -41,8 +41,9 @@ import org.apache.spark.util.SerializableConfiguration
   *    conversion cost is pruned).
   *  - WRITE streams fixed-size record batches (default 4096 rows) per
   *    task into ONE staged hidden file, renamed visible at job commit —
-  *    the graftdocs hidden-rename protocol (task abort deletes its own
-  *    staging; truncate deletes old data only after the new commits).
+  *    the hidden-rename protocol graftdocs shares ([[StagedCommit]]; task
+  *    abort deletes its own staging; truncate deletes old data only after
+  *    the new commits).
   *
   * Type surface (refusals are loud): boolean, byte/short/int/long,
   * float/double, decimal(p,s), string, binary, date, timestamp (UTC
@@ -564,23 +565,8 @@ private[sources] class GraftArrowReaderFactory(
   }
 
   override def createReader(partition: InputPartition)
-      : PartitionReader[InternalRow] = {
-    // row-based fallback (Spark uses the columnar path when offered; this
-    // keeps non-columnar consumers correct)
-    val inner = createColumnarReader(partition)
-    new PartitionReader[InternalRow] {
-      private var rows: java.util.Iterator[InternalRow] = null
-      override def next(): Boolean = {
-        while (rows == null || !rows.hasNext) {
-          if (!inner.next()) return false
-          rows = inner.get().rowIterator()
-        }
-        true
-      }
-      override def get(): InternalRow = rows.next().copy()
-      override def close(): Unit = inner.close()
-    }
-  }
+      : PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException("graftarrow reads are columnar")
 }
 
 // ---- write side ----------------------------------------------------------
@@ -625,9 +611,6 @@ private[sources] class GraftArrowWriteBuilder(info: LogicalWriteInfo,
   }
 }
 
-private[sources] case class GraftArrowCommit(staged: Seq[String])
-  extends WriterCommitMessage
-
 private[sources] class GraftArrowBatchWrite(schema: StructType, path: String,
                                             truncate: Boolean, batchRows: Int,
                                             zoneMaps: Boolean,
@@ -638,57 +621,22 @@ private[sources] class GraftArrowBatchWrite(schema: StructType, path: String,
                                             conf: SerializableConfiguration)
   extends BatchWrite {
   private val jobToken = java.util.UUID.randomUUID().toString.take(8)
-  private var preExisting: Seq[Path] = Seq.empty
+  // data files and their zone-map sidecars; `_`-prefixed names are not
+  // this sink's (listArrowRefs skips them too)
+  private val staging = new StagedCommit(path, conf.value, "graftarrow",
+    n => !n.startsWith("_") &&
+      (n.endsWith(".arrow") || n.endsWith(".arrows") || n.endsWith(".zmap")))
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(conf.value)
-    if (truncate && fs.exists(dir)) {
-      // old data + its sidecars go only after the new commit
-      preExisting = GraftArrowSource.listArrowRefs(path, conf.value)
-        .flatMap { case (f, _) =>
-          Seq(new Path(f), new Path(f + ".zmap")) }
-      // staged garbage from crashed writers (no abort ever ran)
-      val it = fs.listFiles(dir, true)
-      while (it.hasNext) {
-        val p = it.next().getPath
-        val n = p.getName
-        if (n.startsWith(".") &&
-            (n.endsWith(".arrow") || n.endsWith(".arrows") ||
-             n.endsWith(".zmap")))
-          fs.delete(p, false): Unit
-      }
-    }
-    fs.mkdirs(dir)
+    staging.prepare(truncate)
     new GraftArrowWriterFactory(schema, path, jobToken, batchRows, zoneMaps,
       streamFormat, codec, conf)
   }
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(conf.value)
-    val done = scala.collection.mutable.ArrayBuffer.empty[(Path, Path)]
-    try {
-      messages.collect { case c: GraftArrowCommit => c }.flatMap(_.staged)
-        .foreach { staged =>
-          val p = new Path(staged)
-          val dest = new Path(p.getParent, p.getName.stripPrefix("."))
-          if (!fs.rename(p, dest)) throw new java.io.IOException(
-            s"graftarrow commit: rename $p -> $dest failed")
-          done += ((p, dest))
-        }
-    } catch {
-      case e: Throwable =>
-        done.foreach { case (staged, dest) => fs.rename(dest, staged) }
-        throw e
-    }
-    preExisting.foreach(p => if (fs.exists(p)) fs.delete(p, false): Unit)
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(conf.value)
-    messages.collect { case c: GraftArrowCommit => c }.flatMap(_.staged)
-      .foreach(s => fs.delete(new Path(s), false))
-  }
+  override def commit(messages: Array[WriterCommitMessage]): Unit =
+    staging.commit(messages)
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    staging.abort(messages)
 }
 
 private[sources] class GraftArrowWriterFactory(schema: StructType, path: String,
@@ -706,8 +654,9 @@ private[sources] class GraftArrowWriterFactory(schema: StructType, path: String,
 }
 
 /** Per-task writer: one staged hidden `.arrow` file, record batches of
-  * `batchRows` rows, values copied straight from InternalRow into arrow
-  * memory (no Row conversion). */
+  * `batchRows` rows, filled from InternalRow by Spark's own
+  * [[org.apache.spark.sql.execution.arrow.ArrowWriter]] (no Row
+  * conversion). */
 private[sources] class GraftArrowDataWriter(schema: StructType, path: String,
                                             jobToken: String, partitionId: Int,
                                             taskId: Long, batchRows: Int,
@@ -728,11 +677,13 @@ private[sources] class GraftArrowDataWriter(schema: StructType, path: String,
   private val staged = new Path(path,
     s".part-$jobToken-$partitionId-$taskId.arrow" +
       (if (streamFormat) "s" else ""))
-  private val fs = staged.getFileSystem(conf)
+  private val fs = graft.sinks.DocStore.storeFs(staged, conf)
   private val out = fs.create(staged, true)
   private val alloc = new RootAllocator()
   private val arrowSchema = GraftArrowSource.toArrowSchema(schema)
   private val root = VectorSchemaRoot.create(arrowSchema, alloc)
+  private val values =
+    org.apache.spark.sql.execution.arrow.ArrowWriter.create(root)
   private val writer: ArrowWriter = {
     val ch = java.nio.channels.Channels.newChannel(out)
     val fac = org.apache.arrow.compression.CommonsCompressionFactory.INSTANCE
@@ -747,144 +698,12 @@ private[sources] class GraftArrowDataWriter(schema: StructType, path: String,
     }
   }
   writer.start()
-  root.allocateNew()
-
-  /** per-list-vector running child index (reset each batch) */
-  private val listChildIdx = new java.util.IdentityHashMap[ListVector, Integer]()
-
-  private def setScalar(v: FieldVector, dt: DataType,
-                        value: Any, i: Int): Unit = {
-    (v, dt) match {
-      case (b: BitVector, BooleanType) =>
-        b.setSafe(i, if (value.asInstanceOf[Boolean]) 1 else 0)
-      case (b: TinyIntVector, ByteType) => b.setSafe(i, value.asInstanceOf[Byte])
-      case (b: SmallIntVector, ShortType) => b.setSafe(i, value.asInstanceOf[Short])
-      case (b: IntVector, IntegerType) => b.setSafe(i, value.asInstanceOf[Int])
-      case (b: BigIntVector, LongType) => b.setSafe(i, value.asInstanceOf[Long])
-      case (b: Float4Vector, FloatType) => b.setSafe(i, value.asInstanceOf[Float])
-      case (b: Float8Vector, DoubleType) => b.setSafe(i, value.asInstanceOf[Double])
-      case (b: DecimalVector, _: DecimalType) =>
-        b.setSafe(i, value.asInstanceOf[org.apache.spark.sql.types.Decimal]
-          .toJavaBigDecimal)
-      case (b: VarCharVector, StringType) =>
-        b.setSafe(i, value.asInstanceOf[org.apache.spark.unsafe.types.UTF8String]
-          .getBytes)
-      case (b: VarBinaryVector, BinaryType) =>
-        b.setSafe(i, value.asInstanceOf[Array[Byte]])
-      case (b: DateDayVector, DateType) => b.setSafe(i, value.asInstanceOf[Int])
-      case (b: TimeStampMicroTZVector, TimestampType) =>
-        b.setSafe(i, value.asInstanceOf[Long])
-      case (b: TimeStampMicroVector, TimestampNTZType) =>
-        b.setSafe(i, value.asInstanceOf[Long])
-      case (other, t) => throw new IllegalStateException(
-        s"graftarrow: vector/type mismatch ${other.getClass.getSimpleName}/$t")
-    }
-  }
-
-  private def setNull(v: FieldVector, i: Int): Unit = v match {
-    case b: BaseFixedWidthVector => b.setNull(i)
-    case b: BaseVariableWidthVector => b.setNull(i)
-    case b: ListVector => b.setNull(i)
-    case b: org.apache.arrow.vector.complex.StructVector => b.setNull(i)
-    case other => throw new IllegalStateException(
-      s"graftarrow: cannot null ${other.getClass.getSimpleName}")
-  }
-
-  /** Catalyst value at `ord` of any SpecializedGetters (an InternalRow
-    * or an ArrayData — rows and list elements share one access path). */
-  private def valueOf(
-      g: org.apache.spark.sql.catalyst.expressions.SpecializedGetters,
-      ord: Int, dt: DataType): Any =
-    if (g.isNullAt(ord)) null else dt match {
-      case BooleanType => g.getBoolean(ord)
-      case ByteType => g.getByte(ord)
-      case ShortType => g.getShort(ord)
-      case IntegerType | DateType => g.getInt(ord)
-      case LongType | TimestampType | TimestampNTZType => g.getLong(ord)
-      case FloatType => g.getFloat(ord)
-      case DoubleType => g.getDouble(ord)
-      case d: DecimalType => g.getDecimal(ord, d.precision, d.scale)
-      case StringType => g.getUTF8String(ord)
-      case BinaryType => g.getBinary(ord)
-      case ArrayType(_, _) => g.getArray(ord)
-      case st: StructType => g.getStruct(ord, st.fields.length)
-      case _: MapType => g.getMap(ord)
-      case other => throw new IllegalStateException(other.sql)
-    }
-
-  /** Recursive value writer: scalars via setScalar; lists append their
-    * elements at the list's running child index (per-vector, reset each
-    * batch); structs write each child at the SAME index i (struct
-    * children are parallel arrays in Arrow). A null struct leaves its
-    * child slots unset — setValueCount propagation nulls them. */
-  private def writeValue(v: FieldVector, dt: DataType, value: Any,
-                         i: Int): Unit = {
-    if (value == null) { setNull(v, i); return }
-    dt match {
-      case ArrayType(el, _) =>
-        val list = v.asInstanceOf[ListVector]
-        val arr = value.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-        val child = list.getDataVector.asInstanceOf[FieldVector]
-        var ci = Option(listChildIdx.get(list)).map(_.intValue).getOrElse(0)
-        list.startNewValue(i)
-        val n = arr.numElements()
-        var e = 0
-        while (e < n) {
-          writeValue(child, el, valueOf(arr, e, el), ci)
-          ci += 1; e += 1
-        }
-        list.endValue(i, n)
-        listChildIdx.put(list, ci): Unit
-      case st: StructType =>
-        val sv = v.asInstanceOf[org.apache.arrow.vector.complex.StructVector]
-        sv.setIndexDefined(i)
-        val row = value.asInstanceOf[InternalRow]
-        var f = 0
-        while (f < st.fields.length) {
-          writeValue(sv.getChildByOrdinal(f).asInstanceOf[FieldVector],
-            st.fields(f).dataType,
-            valueOf(row, f, st.fields(f).dataType), i)
-          f += 1
-        }
-      case mt: MapType =>
-        // MapVector IS a ListVector over an entries struct — entries
-        // append at the map's running child index like list elements
-        val mv = v.asInstanceOf[org.apache.arrow.vector.complex.MapVector]
-        val md = value.asInstanceOf[org.apache.spark.sql.catalyst.util.MapData]
-        val keys = md.keyArray()
-        val vals = md.valueArray()
-        val entries = mv.getDataVector
-          .asInstanceOf[org.apache.arrow.vector.complex.StructVector]
-        var ci = Option(listChildIdx.get(mv)).map(_.intValue).getOrElse(0)
-        mv.startNewValue(i)
-        val n = md.numElements()
-        var e = 0
-        while (e < n) {
-          entries.setIndexDefined(ci)
-          writeValue(entries.getChildByOrdinal(0).asInstanceOf[FieldVector],
-            mt.keyType, valueOf(keys, e, mt.keyType), ci)
-          writeValue(entries.getChildByOrdinal(1).asInstanceOf[FieldVector],
-            mt.valueType, valueOf(vals, e, mt.valueType), ci)
-          ci += 1; e += 1
-        }
-        mv.endValue(i, n)
-        listChildIdx.put(mv, ci): Unit
-      case _ => setScalar(v, dt, value, i)
-    }
-  }
 
   private var rowIdx = 0
-  private var batches = 0L
   private var total = 0L
 
   override def write(record: InternalRow): Unit = {
-    var f = 0
-    while (f < schema.fields.length) {
-      val field = schema.fields(f)
-      writeValue(root.getVector(f), field.dataType,
-        valueOf(record, f, field.dataType), rowIdx)
-      f += 1
-    }
+    values.write(record)
     stats.foreach(_.update(
       toScala(record).asInstanceOf[org.apache.spark.sql.Row]))
     rowIdx += 1
@@ -893,12 +712,9 @@ private[sources] class GraftArrowDataWriter(schema: StructType, path: String,
   }
 
   private def flush(): Unit = if (rowIdx > 0) {
-    // list child value counts ride setValueCount via the offset buffers
-    root.setRowCount(rowIdx)
+    values.finish() // value counts and the root's row count
     writer.writeBatch()
-    batches += 1
-    root.allocateNew() // fresh zeroed buffers for the next batch
-    listChildIdx.clear()
+    values.reset()
     rowIdx = 0
   }
 
@@ -907,7 +723,7 @@ private[sources] class GraftArrowDataWriter(schema: StructType, path: String,
     writer.end(); writer.close(); out.close()
     root.close(); alloc.close()
     // an all-empty task stages nothing (no empty files in the output)
-    if (total == 0) { fs.delete(staged, false); GraftArrowCommit(Seq.empty) }
+    if (total == 0) { fs.delete(staged, false); StagedFiles(Seq.empty) }
     else {
       val names = Seq.newBuilder[String]
       names += staged.toString
@@ -918,7 +734,7 @@ private[sources] class GraftArrowDataWriter(schema: StructType, path: String,
         finally zout.close()
         names += side.toString
       }
-      GraftArrowCommit(names.result())
+      StagedFiles(names.result())
     }
   }
 

@@ -2148,10 +2148,71 @@ private[sources] class GraftWriteBuilder(info: LogicalWriteInfo)
   }
 }
 
-/** Staged (hidden) batch-file names a task committed, plus counts. */
-private[sources] case class GraftCommit(inserted: Long, batches: Long,
-                                        stagedFiles: Seq[String])
+/** The staged (hidden) files a file-sink task committed. */
+private[sources] case class StagedFiles(paths: Seq[String])
   extends WriterCommitMessage
+
+/** The hidden-rename commit both file sinks (graftdocs, graftarrow)
+  * share. Tasks stage every file under its final name with a `.` prefix,
+  * which every reader skips, and reports them as [[StagedFiles]]; the
+  * driver's commit unhides them. `owned`
+  * picks, by file name, the files under `path` that belong to the sink;
+  * `label` names it in errors. All operations go through
+  * [[graft.sinks.DocStore.storeFs]]. */
+private[sources] final class StagedCommit(path: String, conf: Configuration,
+                                          label: String,
+                                          owned: String => Boolean) {
+  private val fs = graft.sinks.DocStore.storeFs(new Path(path), conf)
+  // visible files a truncate replaces: deleted only after the new commit
+  private var replaced: Seq[Path] = Seq.empty
+
+  /** Driver side, before any task stages: make the directory and, on
+    * truncate, reclaim what crashed writers staged (no abort ever ran
+    * for them) and note the visible files to delete after the commit. */
+  def prepare(truncate: Boolean): Unit = {
+    val dir = new Path(path)
+    if (truncate && fs.exists(dir)) {
+      // recursive: a partitioned layout keeps its files in k=v subdirs
+      val it = fs.listFiles(dir, true)
+      val all = scala.collection.mutable.ArrayBuffer.empty[Path]
+      while (it.hasNext) {
+        val p = it.next().getPath
+        if (owned(p.getName)) all += p
+      }
+      val (hidden, visible) = all.toSeq.partition(_.getName.startsWith("."))
+      replaced = visible
+      hidden.foreach(fs.delete(_, false))
+    }
+    fs.mkdirs(dir): Unit
+  }
+
+  private def staged(messages: Array[WriterCommitMessage]): Seq[String] =
+    messages.toSeq.collect { case StagedFiles(paths) => paths }.flatten
+
+  /** Unhide the winning attempts' staged files (the commit coordinator
+    * arbitrates), then delete what a truncate replaces. Hadoop rename
+    * signals most failures by returning false; that is an error too, and
+    * any failure renames the files already unhidden back to their staged
+    * names, so a failed commit never leaves old and new data mixed. */
+  def commit(messages: Array[WriterCommitMessage]): Unit = {
+    val done = scala.collection.mutable.ArrayBuffer.empty[(Path, Path)]
+    try staged(messages).foreach { s =>
+      val p = new Path(s)
+      val dest = new Path(p.getParent, p.getName.stripPrefix("."))
+      if (!fs.rename(p, dest)) throw new java.io.IOException(
+        s"$label commit: rename $p -> $dest failed")
+      done += ((p, dest))
+    } catch {
+      case e: Throwable =>
+        done.foreach { case (p, dest) => fs.rename(dest, p) }
+        throw e
+    }
+    replaced.foreach(fs.delete(_, false))
+  }
+
+  def abort(messages: Array[WriterCommitMessage]): Unit =
+    staged(messages).foreach(s => fs.delete(new Path(s), false))
+}
 
 private[sources] class GraftBatchWrite(schema: StructType, path: String,
                                        format: String, truncate: Boolean,
@@ -2168,65 +2229,19 @@ private[sources] class GraftBatchWrite(schema: StructType, path: String,
   // streaming appends clean their own prefix before retrying).
   private val jobToken =
     tokenOverride.getOrElse(java.util.UUID.randomUUID().toString.take(8))
-  private var preExisting: Seq[Path] = Seq.empty
+  private val staging = new StagedCommit(path, conf.value, "graftdocs",
+    n => n.endsWith(".jsonl") || n.endsWith(".bson") || n.endsWith(".zmap"))
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    // driver-side, before any task launches: prepare the target dir and
-    // record what truncate must remove at commit time
-    val dir = new Path(path)
-    // raw local fs for file: targets (no client-side .crc sidecars on
-    // the staged-rename commit protocol) — see DocStore.storeFs
-    val fs = graft.sinks.DocStore.storeFs(dir, conf.value)
-    if (truncate && fs.exists(dir)) {
-      // recursive: a partitioned layout keeps its batch files in k=v subdirs
-      val it = fs.listFiles(dir, true)
-      val all = scala.collection.mutable.ArrayBuffer.empty[Path]
-      while (it.hasNext) {
-        val p = it.next().getPath
-        if (p.getName.endsWith(".jsonl") || p.getName.endsWith(".bson") ||
-            p.getName.endsWith(".zmap")) all += p
-      }
-      val (hidden, visible) = all.toSeq.partition(_.getName.startsWith("."))
-      preExisting = visible // deleted only after the new data commits
-      // staged garbage from crashed writers (no abort ever ran for them)
-      // is reclaimed now, before this job stages anything
-      hidden.foreach(fs.delete(_, false))
-    }
-    fs.mkdirs(dir)
+    staging.prepare(truncate)
     new GraftDataWriterFactory(schema, path, format, jobToken,
       maxBatchBytes, maxBatchDocs, conf, partitionBy, zoneMaps, bloomColumns)
   }
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = graft.sinks.DocStore.storeFs(new Path(path), conf.value)
-    // winning attempts only (the commit coordinator arbitrates): unhide.
-    // Hadoop rename signals most failures by returning FALSE — treat
-    // that as an error, and roll already-renamed files back to staged on
-    // any failure so a partial commit never leaves mixed old+new data.
-    val done = scala.collection.mutable.ArrayBuffer.empty[(Path, Path)]
-    try {
-      messages.collect { case c: GraftCommit => c }.flatMap(_.stagedFiles)
-        .foreach { staged =>
-          val p = new Path(staged)
-          val dest = new Path(p.getParent, p.getName.stripPrefix("."))
-          if (!fs.rename(p, dest)) throw new java.io.IOException(
-            s"graftdocs commit: rename $p -> $dest failed")
-          done += ((p, dest))
-        }
-    } catch {
-      case e: Throwable =>
-        done.foreach { case (staged, dest) => fs.rename(dest, staged) }
-        throw e
-    }
-    // truncate semantics: old data disappears only after the new commits
-    preExisting.foreach(fs.delete(_, false))
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = graft.sinks.DocStore.storeFs(new Path(path), conf.value)
-    messages.collect { case c: GraftCommit => c }.flatMap(_.stagedFiles)
-      .foreach(s => fs.delete(new Path(s), false))
-  }
+  override def commit(messages: Array[WriterCommitMessage]): Unit =
+    staging.commit(messages)
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    staging.abort(messages)
 }
 
 private[sources] class GraftDataWriterFactory(schema: StructType, path: String,
@@ -2269,8 +2284,6 @@ private[sources] class GraftDataWriter(schema: StructType, path: String,
     if (partIdx.isEmpty) schema else StructType(dataIdx.map(schema.fields))
 
   private var batchIdx = 0
-  private var inserted = 0L
-  private var batches = 0L
   private val staged = scala.collection.mutable.ArrayBuffer.empty[Path]
 
   private class ByteBatch {
@@ -2340,7 +2353,6 @@ private[sources] class GraftDataWriter(schema: StructType, path: String,
       try zout.write(buf.stats.encode(buf.size)) finally zout.close()
       staged += zf // unhidden by the same job commit as its data file
     }
-    inserted += buf.docs; batches += 1
     batchIdx += 1
     totalBuffered -= buf.size
     open.remove(relDir)
@@ -2348,7 +2360,7 @@ private[sources] class GraftDataWriter(schema: StructType, path: String,
 
   override def commit(): WriterCommitMessage = {
     open.keys.toSeq.foreach(flush)
-    GraftCommit(inserted, batches, staged.map(_.toString).toSeq)
+    StagedFiles(staged.map(_.toString).toSeq)
   }
   override def abort(): Unit = staged.foreach(fs.delete(_, false))
   override def close(): Unit = ()

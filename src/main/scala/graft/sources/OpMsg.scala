@@ -796,7 +796,8 @@ object OpMsg {
       // signature and the next poll rebuilds — mid-watch mutations
       // surface exactly as before, but an idle or paging cursor stops
       // re-executing the whole version-diff subtree on every getMore.
-      // Freed by reference drop (cursor removal → ContextCleaner).
+      // Unpersisted when a rebuild replaces it and when the cursor
+      // retires.
       @volatile var frame: DataFrame = null
       @volatile var frameSig: String = null
     }
@@ -815,6 +816,23 @@ object OpMsg {
     }
     private val cursors =
       new java.util.concurrent.ConcurrentHashMap[Long, Cursor]()
+
+    /** Remove cursor `id` and unpersist the event frame it pins; false
+      * when no such cursor is open. Every cursor removal goes through
+      * here. */
+    private def retire(id: Long): Boolean = {
+      val c = cursors.remove(id)
+      if (c != null) c.tail.foreach(t => release(t.frame))
+      c != null
+    }
+
+    /** Unpersist a [[tailFrame]]: its plan is the checkpointed RDD. */
+    private def release(frame: DataFrame): Unit =
+      if (frame != null) frame.queryExecution.logical match {
+        case r: org.apache.spark.sql.execution.LogicalRDD =>
+          r.rdd.unpersist(blocking = false): Unit
+        case _ => ()
+      }
 
     /** Retryable-write transaction log: per session (lsid), the last
       * 4096 (txnNumber → the acknowledged REPLY, byte-exact) — enough
@@ -1357,8 +1375,7 @@ object OpMsg {
       * (a map walk over the handful of live cursors, not a thread). */
     private def sweepCursors(): Unit = {
       val deadline = System.nanoTime() - cursorTimeoutMillis * 1000000L
-      val it = cursors.entrySet().iterator()
-      while (it.hasNext) if (it.next().getValue.lastUsed < deadline) it.remove()
+      cursors.forEach((id, c) => if (c.lastUsed < deadline) retire(id): Unit)
       // mongod's transactionLifetimeLimitSeconds (default 60): an
       // active transaction left open past the limit aborts server-side
       // — its staged overlays drop, and the session's next touch or
@@ -1694,14 +1711,16 @@ object OpMsg {
       * never the driver heap — the bounded-collect contract is
       * untouched), truncates the per-poll plan to a small scan, and
       * stays out of the CacheManager, so a stale frame can never be
-      * substituted into another cursor's fresh build. Freed when the
-      * cursor dies (reference drop → ContextCleaner). */
+      * substituted into another cursor's fresh build. A rebuild
+      * unpersists the frame it replaces; [[retire]] frees the last. */
     private def tailFrame(t: ChangeTail): DataFrame = {
       val sig = changeSig(t.coll)
       if (t.frame == null || t.frameSig != sig) {
+        val old = t.frame
         t.frame = changeStreamBase(t.coll, t.keyField, t.lastToken)
           .localCheckpoint(true)
         t.frameSig = sig
+        release(old)
       }
       t.frame
     }
@@ -1963,7 +1982,7 @@ object OpMsg {
       // an invalidate in the first batch closes the cursor with it
       // (mongod: nothing follows an invalidate)
       val id =
-        if (t.invalidated) 0L
+        if (t.invalidated) { release(t.frame); 0L }
         else { val i = nextCursor.incrementAndGet(); cursors.put(i, c); i }
       buildCursorReply(id, ns, "firstBatch", first,
         postBatchResumeToken = Some(outToken(c.tail.get)))
@@ -2063,7 +2082,7 @@ object OpMsg {
           val batch = pull(c)
           more = c.rows.hasNext
           if (more) c.lastUsed = System.nanoTime()
-          else cursors.remove(id): Unit
+          else retire(id): Unit
           reply(out, f,
             buildCursorReply(if (more) id else 0L, c.ns, "nextBatch", batch),
             rid, flags = if (more) FlagMoreToCome else 0)
@@ -2302,7 +2321,7 @@ object OpMsg {
               s"killCursors needs a cursors array, got $other")
           }
           val (killed, notFound) =
-            ids.partition(id => cursors.remove(id) != null)
+            ids.partition(retire)
           return encodeDoc(JObject(List(
             "cursorsKilled" -> JArray(killed.map(JLong.apply)),
             "cursorsNotFound" -> JArray(notFound.map(JLong.apply)),
@@ -3689,7 +3708,7 @@ object OpMsg {
               if (c.capTail.exists(_.lost)) {
                 // the cap's eviction frontier overtook this cursor's
                 // position — mongod kills the tailer (code 136)
-                cursors.remove(id): Unit
+                retire(id): Unit
                 return buildErrorReply(
                   s"tailable cursor $id position was overwritten by " +
                     "the capped collection's eviction",
@@ -3699,7 +3718,7 @@ object OpMsg {
               if (c.tail.exists(_.invalidated)) {
                 // the invalidate event closed the stream: this batch
                 // is the cursor's last (id 0) and the cursor is gone
-                cursors.remove(id): Unit
+                retire(id): Unit
                 buildCursorReply(0L, c.ns, "nextBatch", batch,
                   postBatchResumeToken = Some(outToken(c.tail.get)))
               } else if (c.tail.isDefined)
@@ -3712,7 +3731,7 @@ object OpMsg {
                 buildCursorReply(id, c.ns, "nextBatch", batch)
               else {
                 val more = c.rows.hasNext
-                if (!more) cursors.remove(id): Unit
+                if (!more) retire(id): Unit
                 buildCursorReply(if (more) id else 0L, c.ns, "nextBatch",
                   batch)
               }
@@ -3724,7 +3743,10 @@ object OpMsg {
       }
     }
 
-    def stop(): Unit = { running = false; socket.close() }
+    def stop(): Unit = {
+      running = false; socket.close()
+      cursors.keySet().forEach(id => retire(id): Unit)
+    }
   }
 
   // ---- client -------------------------------------------------------------

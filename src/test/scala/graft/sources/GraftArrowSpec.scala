@@ -244,12 +244,24 @@ class GraftArrowSpec extends AnyFunSuite {
     assert(spark.read.format("graftarrow").load(dir).count() == 15)
     spark.range(3).write.format("graftarrow").mode("overwrite").save(dir)
     assert(spark.read.format("graftarrow").load(dir).count() == 3)
-    // no staged leftovers (.part-*.arrow; a visible file's Hadoop
-    // checksum twin is named .<name>.crc and is NOT staging)
+    // no staged leftovers (.part-*.arrow)
     val leftovers = new java.io.File(dir).listFiles()
       .filter(f => f.getName.startsWith(".part-") &&
         f.getName.endsWith(".arrow"))
     assert(leftovers.isEmpty, s"staged leftovers: ${leftovers.mkString(", ")}")
+  }
+
+  test("a write to file: leaves no .crc checksum file (the raw local fs)") {
+    val dir = tmp()
+    spark.range(100).selectExpr("id", "id * 2 AS v")
+      .write.format("graftarrow").mode("overwrite").save(dir)
+    spark.range(100, 105).selectExpr("id", "id * 2 AS v")
+      .write.format("graftarrow").mode("append").save("file://" + dir)
+    val names = new java.io.File(dir).listFiles().toSeq.map(_.getName)
+    assert(names.exists(_.endsWith(".arrow")) &&
+      names.exists(_.endsWith(".zmap")), names)
+    assert(!names.exists(_.endsWith(".crc")), names)
+    assert(spark.read.format("graftarrow").load(dir).count() == 105)
   }
 
   test("zone-map sidecars: pushed filters skip files; stale/missing " +

@@ -541,4 +541,52 @@ class OpMsgWatchSpec extends AnyFunSuite {
         .toSeq.sorted == Seq("drop", "invalidate"))
     } finally server.stop()
   }
+
+  test("a watch cursor's checkpointed event frame is unpersisted when a " +
+       "rebuild replaces it, on killCursors and on server stop") {
+    val (store, server) = fixture()
+    def pinned: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    /** wait for the persisted RDDs to equal `want`, then report them */
+    def settle(want: Set[Int]): Set[Int] = {
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (pinned != want && System.nanoTime() < deadline) Thread.sleep(20)
+      pinned
+    }
+    def cmd(doc: (String, JValue)*): Map[String, JValue] =
+      OpMsg.command("127.0.0.1", server.port, "graft", JObject(doc.toList))
+    def cursorId(reply: Map[String, JValue]): Long =
+      reply("cursor").asInstanceOf[JObject].obj.toMap.apply("id") match {
+        case JLong(l) => l; case JInt(i) => i.toLong
+        case other => fail(s"bad cursor id $other")
+      }
+    def watch(): Long = cursorId(cmd("aggregate" -> JString("coll"),
+      "pipeline" -> JArray(List(JObject(List("$changeStream" ->
+        JObject(List("keyField" -> JString("doc_id"))))))),
+      "cursor" -> JObject(List("batchSize" -> JInt(5)))))
+    def getMore(id: Long): Long = cursorId(cmd("getMore" -> JLong(id),
+      "collection" -> JString("coll"), "batchSize" -> JInt(5)))
+    try {
+      val before = pinned
+      val id = watch()
+      val first = pinned -- before
+      assert(id != 0L && first.size == 1)
+      assert(getMore(id) == id && pinned -- before == first)
+      // new history moves the change signature: the next getMore
+      // rebuilds the frame, and the one it replaces goes
+      val cur = store.read("coll")
+      store.writeVersioned(spark.createDataFrame(java.util.List.of(
+        cur.where(col("doc_id") < 30).collect().toSeq: _*), cur.schema),
+        "coll"): Unit
+      assert(getMore(id) == id)
+      val rebuilt = pinned -- before
+      assert(rebuilt.size == 1 && rebuilt != first, rebuilt)
+      cmd("killCursors" -> JString("coll"),
+        "cursors" -> JArray(List(JLong(id)))): Unit
+      assert(settle(before) == before)
+      // stop() retires every live cursor
+      assert(watch() != 0L && (pinned -- before).size == 1)
+      server.stop()
+      assert(settle(before) == before)
+    } finally server.stop()
+  }
 }
